@@ -61,16 +61,7 @@ object ForeignKeys {
     val fks = scala.collection.mutable.Map.empty[String, Vector[SqlDml.Fk]]
   }
 
-  private val states =
-    java.util.Collections.synchronizedMap(
-      new java.util.WeakHashMap[SparkSession, State]())
-
-  private def state(spark: SparkSession): State =
-    states.synchronized {
-      var s = states.get(spark)
-      if (s == null) { s = new State; states.put(spark, s) }
-      s
-    }
+  private val state = graft.SessionLocal(new State)
 
   def register(spark: SparkSession, table: String,
                fks: Seq[SqlDml.Fk]): Unit = {

@@ -414,24 +414,14 @@ object Pragma {
     * engine's single session namespace bumps for them too. */
   def bumpSchemaVersion(spark: SparkSession): Unit =
     // read-modify-write on the conf cookie: guarded by a session-scoped
-    // lock (WeakHashMap like SessionKeys.State) so concurrent DDL on a
-    // shared session can't lose increments — the FK/trigger registries
-    // synchronize; the cookie must too
+    // lock so concurrent DDL on a shared session can't lose increments
+    // — the FK/trigger registries synchronize; the cookie must too
     versionLock(spark).synchronized {
       val v = tracked(spark, "schema_version", "0").toLong
       spark.conf.set(confKey("schema_version"), ((v + 1).toInt).toString)
     }
 
-  private val versionLocks =
-    java.util.Collections.synchronizedMap(
-      new java.util.WeakHashMap[SparkSession, Object]())
-
-  private def versionLock(spark: SparkSession): Object =
-    versionLocks.synchronized {
-      var l = versionLocks.get(spark)
-      if (l == null) { l = new Object; versionLocks.put(spark, l) }
-      l
-    }
+  private val versionLock = graft.SessionLocal(new Object)
 
   private def tracked(spark: SparkSession, name: String, dflt: String): String =
     spark.conf.get(confKey(name), dflt)

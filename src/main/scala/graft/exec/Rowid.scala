@@ -44,16 +44,7 @@ object Rowid {
     val tables = scala.collection.mutable.Map.empty[String, Option[String]]
   }
 
-  private val states =
-    java.util.Collections.synchronizedMap(
-      new java.util.WeakHashMap[SparkSession, State]())
-
-  private def state(spark: SparkSession): State =
-    states.synchronized {
-      var s = states.get(spark)
-      if (s == null) { s = new State; states.put(spark, s) }
-      s
-    }
+  private val state = graft.SessionLocal(new State)
 
   /** Enabled AND the binding still carries the column (a view re-bound
     * outside the DML path drops enablement — stale entries clear). */

@@ -15,10 +15,10 @@ import org.apache.spark.sql.SparkSession
   * old binding) and after scratch caches unpersist (lineage recompute);
   * superseded generation files are never deleted within a session.
   *
-  * Keyed weakly per SparkSession like [[SessionKeys]] — a dead
+  * One State per SparkSession ([[graft.SessionLocal]]) — a stopped
   * session's counters (and the plan closures its thunks hold) are
-  * garbage-collectable; the deferred list is bounded (oldest counts
-  * fold once 64 statements back up).
+  * released; the deferred list is bounded (oldest counts fold once 64
+  * statements back up).
   */
 object SessionChanges {
 
@@ -38,6 +38,9 @@ object SessionChanges {
     // trigger-body DML: counts toward total_changes() only (SQLite
     // lang_corefunc — changes() excludes trigger-program changes)
     var pendingTrig = Vector.empty[Entry]
+    // last_insert_rowid(): folded value and deferred INSERT entries
+    var rowidFolded: Option[Long] = None
+    var rowidPending = Vector.empty[RowidEntry]
   }
 
   /** Depth of trigger-body execution on this thread. While > 0,
@@ -54,16 +57,7 @@ object SessionChanges {
     try f finally triggerDepth.set(triggerDepth.get - 1)
   }
 
-  private val states =
-    java.util.Collections.synchronizedMap(
-      new java.util.WeakHashMap[SparkSession, State]())
-
-  private def state(spark: SparkSession): State =
-    states.synchronized {
-      var s = states.get(spark)
-      if (s == null) { s = new State; states.put(spark, s) }
-      s
-    }
+  private val state = graft.SessionLocal(new State)
 
   /** Record a DML statement's affected-row count (deferred). A count
     * recorded inside a trigger body lands in the total-only bucket. */
@@ -119,18 +113,17 @@ object SessionChanges {
       private[SessionChanges] val rowidPending: Vector[RowidEntry])
 
   def snapshot(spark: SparkSession): Snapshot = {
-    val s = state(spark); val rs = rowidState(spark)
-    val (a, p) = s.synchronized((s.accMain, s.pending))
-    val (f, rp) = rs.synchronized((rs.folded, rs.pending))
-    new Snapshot(a, p, f, rp)
+    val s = state(spark)
+    s.synchronized {
+      new Snapshot(s.accMain, s.pending, s.rowidFolded, s.rowidPending)
+    }
   }
 
   def restore(spark: SparkSession, snap: Snapshot): Unit = {
     val s = state(spark)
-    s.synchronized { s.accMain = snap.accMain; s.pending = snap.pending }
-    val rs = rowidState(spark)
-    rs.synchronized {
-      rs.folded = snap.rowidFolded; rs.pending = snap.rowidPending
+    s.synchronized {
+      s.accMain = snap.accMain; s.pending = snap.pending
+      s.rowidFolded = snap.rowidFolded; s.rowidPending = snap.rowidPending
     }
   }
 
@@ -140,22 +133,6 @@ object SessionChanges {
     lazy val value: Option[Long] = thunk()
   }
 
-  private val rowidStates =
-    java.util.Collections.synchronizedMap(
-      new java.util.WeakHashMap[SparkSession, RowidState]())
-
-  private final class RowidState {
-    var folded: Option[Long] = None
-    var pending = Vector.empty[RowidEntry]
-  }
-
-  private def rowidState(spark: SparkSession): RowidState =
-    rowidStates.synchronized {
-      var s = rowidStates.get(spark)
-      if (s == null) { s = new RowidState; rowidStates.put(spark, s) }
-      s
-    }
-
   /** Record an INSERT's max assigned rowid (deferred — the thunk runs
     * only if `last_insert_rowid()` is actually asked). `None` = the
     * statement inserted no rows (e.g. OR IGNORE all-conflict), which
@@ -164,14 +141,14 @@ object SessionChanges {
     // a trigger-body INSERT does not move the session value — SQLite
     // reverts last_insert_rowid() when the trigger completes
     if (triggerDepth.get > 0) return
-    val s = rowidState(spark)
+    val s = state(spark)
     s.synchronized {
-      s.pending :+= new RowidEntry(thunk)
-      while (s.pending.size > 64) {
+      s.rowidPending :+= new RowidEntry(thunk)
+      while (s.rowidPending.size > 64) {
         // same deferred-list bound as the change counters: the oldest
         // entry folds (paying its job) once 64 statements back up
-        s.folded = s.pending.head.value.orElse(s.folded)
-        s.pending = s.pending.tail
+        s.rowidFolded = s.rowidPending.head.value.orElse(s.rowidFolded)
+        s.rowidPending = s.rowidPending.tail
       }
     }
   }
@@ -181,8 +158,8 @@ object SessionChanges {
     * only statements newer than the last successful insert pay their
     * deferred job. */
   def lastInsertRowid(spark: SparkSession): Long = {
-    val s = rowidState(spark)
-    val (folded, pend) = s.synchronized((s.folded, s.pending))
+    val s = state(spark)
+    val (folded, pend) = s.synchronized((s.rowidFolded, s.rowidPending))
     pend.reverseIterator.flatMap(_.value).nextOption()
       .orElse(folded).getOrElse(0L)
   }

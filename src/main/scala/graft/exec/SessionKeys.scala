@@ -94,18 +94,8 @@ object SessionKeys {
     var indexSeq = 0L
   }
 
-  // weak keys: a dead session's declarations are collectable; all
-  // access goes through state()'s lock plus per-State synchronization
-  private val states =
-    java.util.Collections.synchronizedMap(
-      new java.util.WeakHashMap[SparkSession, State]())
-
-  private def state(spark: SparkSession): State =
-    states.synchronized {
-      var s = states.get(spark)
-      if (s == null) { s = new State; states.put(spark, s) }
-      s
-    }
+  // all access goes through per-State synchronization
+  private val state = graft.SessionLocal(new State)
 
   /** Declare a table's PRIMARY KEY (CREATE TABLE with a PK/UNIQUE
     * constraint). */

@@ -7,26 +7,13 @@ import org.apache.spark.sql.SparkSession
   * engine's materialized tables as temporary views, so SQLite's
   * table-vs-view distinctions (DML refusal, DROP TABLE/VIEW keyword
   * matching, ALTER refusal, INSTEAD OF trigger targeting) need the
-  * engine's own record. Weakly keyed per session like [[SessionKeys]].
+  * engine's own record, one per session ([[graft.SessionLocal]]).
   * Relations registered through the raw Spark API are treated as
   * tables — the same generated-SQL-path scoping as triggers. */
 object SessionViews {
 
-  private val states =
-    java.util.Collections.synchronizedMap(
-      new java.util.WeakHashMap[SparkSession,
-        scala.collection.mutable.LinkedHashMap[String, String]]())
-
-  private def state(spark: SparkSession)
-      : scala.collection.mutable.LinkedHashMap[String, String] =
-    states.synchronized {
-      var s = states.get(spark)
-      if (s == null) {
-        s = scala.collection.mutable.LinkedHashMap.empty[String, String]
-        states.put(spark, s)
-      }
-      s
-    }
+  private val state = graft.SessionLocal(
+    scala.collection.mutable.LinkedHashMap.empty[String, String])
 
   /** Register a view with its CREATE text (shown by sqlite_master). */
   def add(spark: SparkSession, name: String, sql: String): Unit = {

@@ -79,18 +79,12 @@ object Triggers {
     // lowercased trigger name -> descriptor; creation order in seq
     val trigs = scala.collection.mutable.LinkedHashMap.empty[String, Trig]
     var nextSeq = 0L
+    // lowercased table -> DML re-bind count (see bumpVersion); guarded
+    // by its own lock, not the State's
+    val versions = scala.collection.mutable.Map.empty[String, Long]
   }
 
-  private val states =
-    java.util.Collections.synchronizedMap(
-      new java.util.WeakHashMap[SparkSession, State]())
-
-  private def state(spark: SparkSession): State =
-    states.synchronized {
-      var s = states.get(spark)
-      if (s == null) { s = new State; states.put(spark, s) }
-      s
-    }
+  private val state = graft.SessionLocal(new State)
 
   /** Trigger names currently firing on this thread — re-entrant
     * firings are skipped (recursive_triggers OFF, SQLite's default). */
@@ -694,31 +688,15 @@ object Triggers {
     * table's triggers — the CREATE-time direct-target check cannot see
     * that chain (the closing trigger may be registered after the
     * BEFORE one). */
-  private val versions =
-    java.util.Collections.synchronizedMap(
-      new java.util.WeakHashMap[SparkSession,
-        scala.collection.mutable.Map[String, Long]]())
-
-  private def versionMap(spark: SparkSession)
-      : scala.collection.mutable.Map[String, Long] =
-    versions.synchronized {
-      var m = versions.get(spark)
-      if (m == null) {
-        m = scala.collection.mutable.Map.empty[String, Long]
-        versions.put(spark, m)
-      }
-      m
-    }
-
   private[exec] def bumpVersion(spark: SparkSession, table: String): Unit = {
-    val m = versionMap(spark)
+    val m = state(spark).versions
     m.synchronized {
       m(table.toLowerCase) = m.getOrElse(table.toLowerCase, 0L) + 1L
     }
   }
 
   private def versionOf(spark: SparkSession, table: String): Long = {
-    val m = versionMap(spark)
+    val m = state(spark).versions
     m.synchronized(m.getOrElse(table.toLowerCase, 0L))
   }
 

@@ -10,15 +10,12 @@ import org.apache.spark.sql.types._
 
 /** Row-local MinHash signature of a pre-hashed shingle array: for each
   * of k seeds, the minimum of `XXH64.hashLong(shingle, seed)` over the
-  * array — bit-identical to aggregating the exploded shingle stream
-  * through [[MinHashAgg]] (same per-seed re-mix), but with ZERO
-  * shuffle: when the per-document shingle set is already in-row
-  * ([[ShingleHashes]] output), the signature is a projection, not an
-  * aggregation, so the explode + groupBy(id) exchange and its
-  * aggregate hash map disappear from the plan. At 100 TB that removes
-  * the one full-corpus shuffle the signature stage used to pay;
-  * [[MinHashAgg]] remains the right tool when shingles arrive as a
-  * stream of (id, shingle) rows rather than per-doc arrays.
+  * array, with ZERO shuffle: when the per-document shingle set is
+  * already in-row ([[ShingleHashes]] output), the signature is a
+  * projection, not an aggregation. Signatures straight from text use
+  * the fused [[ShingleMinHash]] kernel, which is bit-identical to this
+  * over `shingle_hashes(text)`; this form serves callers that already
+  * hold the set (the incremental probe reuses it for verification).
   *
   * An EMPTY array yields NULL (not a degenerate all-MaxValue
   * signature): a document whose shingles were all removed (e.g. the

@@ -50,17 +50,6 @@ object Dedup {
       sh.join(broadcast(hot), Seq("s"), "left_anti")
     }
 
-  /** MinHash signature per document as one array<bigint> column,
-    * computed by the imperative MinHashAgg aggregate
-    * (graft.functions.MinHashAgg): one buffer, k seeded XXH64 hashes
-    * per shingle, mergeable element-wise-min partials. Single scan,
-    * partial aggregation — the canonical distributed minhash without
-    * k separate aggregate columns.
-    */
-  def minHashSignatures(sh: DataFrame, numHashes: Int = 64): DataFrame =
-    sh.groupBy("id")
-      .agg(graft.functions.MinHashAgg.minhash(col("s"), numHashes).as("sig"))
-
   /** (id, bk struct(band, h)) band-bucket keys for a signature table —
     * the banding step shared by pair generation and the materialized
     * index: the signature array is sliced into `bands` bands and each
@@ -146,20 +135,10 @@ object Dedup {
           size(array_union(col("set1"), col("set2")))).as("jaccard"))
   }
 
-  /** Distinct shingles kept as ONE ARRAY COLUMN per document — the
-    * shuffle-free representation: the shingle data never leaves its
-    * document row, so signatures become a row-local projection and
-    * Jaccard verification an array intersect/union, with no
-    * shingle-level explode+groupBy shuffle anywhere. */
-  def shingleSets(docs: DataFrame, idCol: String, textCol: String,
-                  shingleLen: Int = 8): DataFrame =
-    docs.select(col(idCol).as("id"), lower(col(textCol)).as("t"))
-      .filter(length(col("t")) >= shingleLen)
-      .select(col("id"), expr(
-        s"array_distinct(transform(sequence(1, length(t) - ${shingleLen - 1}), i -> substring(t, i, $shingleLen)))")
-        .as("sset"))
-
-  /** [[shingleSets]] in the compact HASHED representation: one fused
+  /** Distinct shingles kept as ONE ARRAY COLUMN per document, in the
+    * compact HASHED representation: the shingle data never leaves its
+    * document row, so Jaccard verification is a row-local array merge
+    * with no shingle-level explode+groupBy shuffle anywhere. One fused
     * codegen loop ([[graft.functions.ShingleHashes]]) emits the
     * distinct 64-bit shingle hashes per document — 8 bytes per shingle
     * through every downstream cache, shuffle, and array op instead of
@@ -317,19 +296,23 @@ object Dedup {
     val candIds = cand.select(col("id1").as("cand_id"))
       .unionAll(cand.select(col("id2").as("cand_id")))
       .distinct()
+    // the broadcast hints hold only while the bucket cap bounds the
+    // sliver; uncapped, its size is unknown and AQE chooses the join
+    def small(df: DataFrame) =
+      if (maxBucket == Int.MaxValue) df else broadcast(df)
     // slot-persisted for the same reason as cand: the sliver's sets
     // feed BOTH sides of the verification join — one pruned scan +
     // shingle pass instead of one per side, bounded by the candidate
     // count
     val candSets = hashedShingleSets(
-        docs.join(broadcast(candIds), col(idCol) === col("cand_id"),
+        docs.join(small(candIds), col(idCol) === col("cand_id"),
           "left_semi"),
         idCol, textCol, shingleLen)
       .persistSlot("dedup.minHashPairs.candSets")
     cand
-      .join(broadcast(candSets.as("c1")), col("id1") === col("c1.id"))
+      .join(small(candSets.as("c1")), col("id1") === col("c1.id"))
       .withColumnRenamed("sset", "set1").select("id1", "id2", "set1")
-      .join(broadcast(candSets.as("c2")), col("id2") === col("c2.id"))
+      .join(small(candSets.as("c2")), col("id2") === col("c2.id"))
       .withColumnRenamed("sset", "set2").select("id1", "id2", "set1", "set2")
       // shingle-hash sets are sorted distinct by construction → the
       // fused merge-pass expression (one loop, zero allocation) replaces
@@ -468,9 +451,10 @@ object Dedup {
     // declared incremental-fuzzy key) would build an unbounded index.
     // 1000 matches simHashPairs; pass Int.MaxValue explicitly to opt
     // out on a corpus known to be exact-deduped already.
-    val sets = hashedShingleSets(corpus, idCol, textCol, shingleLen)
-    val sigs = sets.select(col("id"),
-        graft.functions.MinHashArray.minhash_array(col("sset"), numHashes).as("sig"))
+    val sigs = corpus.select(col(idCol).as("id"),
+        graft.functions.ShingleMinHash.shingle_minhash(lower(col(textCol)),
+          typedLit[Array[Long]](Array.emptyLongArray), shingleLen, numHashes)
+          .as("sig"))
       .filter(col("sig").isNotNull)
     val keys = bandKeys(sigs, numHashes, bands)
       .select(col("id"), col("bk.band").as("band"), col("bk.h").as("h"))
@@ -494,23 +478,9 @@ object Dedup {
   // — visible as ~2.3 s of constant overhead on every
   // ext_dedup_incr_fuzzy_full bench iteration (r9 finding). The
   // narrow (id, band, h) projection persists once per (session, path)
-  // and every later probe reads cached blocks. WeakHashMap: dies with
-  // the session.
-  private val idxCache =
-    java.util.Collections.synchronizedMap(
-      new java.util.WeakHashMap[org.apache.spark.sql.SparkSession,
-        java.util.concurrent.ConcurrentHashMap[String, DataFrame]]())
-
-  private def idxCacheFor(spark: org.apache.spark.sql.SparkSession)
-      : java.util.concurrent.ConcurrentHashMap[String, DataFrame] =
-    idxCache.synchronized {
-      var m = idxCache.get(spark)
-      if (m == null) {
-        m = new java.util.concurrent.ConcurrentHashMap[String, DataFrame]()
-        idxCache.put(spark, m)
-      }
-      m
-    }
+  // and every later probe reads cached blocks.
+  private val idxCacheFor = graft.SessionLocal(
+    new java.util.concurrent.ConcurrentHashMap[String, DataFrame]())
 
   private def loadIndex(spark: org.apache.spark.sql.SparkSession,
                         path: String): DataFrame =

@@ -22,28 +22,20 @@ import org.apache.spark.storage.StorageLevel
   * new invocation whose plan canonicalizes differently from the slot's
   * current occupant unpersists the old blocks first, while a same-plan
   * reinvocation keeps them (unpersisting would drop the very blocks
-  * the CacheManager is about to serve it). Session-keyed weakly, so a
-  * stopped session's slots die with it. Unpersist is non-blocking and
-  * safe under concurrency: a dropped block is recomputed from lineage
-  * by any in-flight reader, so interleaving two corpora on one slot
-  * costs recomputation, never correctness.
+  * the CacheManager is about to serve it). Slots are per session
+  * ([[graft.SessionLocal]]): once a session's SparkContext stops, its
+  * slots are dropped the next time a new session is seen, so they no
+  * longer pin the session or its DataFrames. A live but abandoned
+  * child session is not released: Spark's own CacheManager holds its
+  * persisted plans, and so the session, while their blocks are cached.
+  * Unpersist is non-blocking and safe under concurrency: a dropped
+  * block is recomputed from lineage by any in-flight reader, so
+  * interleaving two corpora on one slot costs recomputation, never
+  * correctness.
   */
 object PlanSlots {
-  private val slots =
-    java.util.Collections.synchronizedMap(
-      new java.util.WeakHashMap[SparkSession,
-        java.util.concurrent.ConcurrentHashMap[String, DataFrame]]())
-
-  private def forSession(s: SparkSession)
-      : java.util.concurrent.ConcurrentHashMap[String, DataFrame] =
-    slots.synchronized {
-      var m = slots.get(s)
-      if (m == null) {
-        m = new java.util.concurrent.ConcurrentHashMap[String, DataFrame]()
-        slots.put(s, m)
-      }
-      m
-    }
+  private val forSession = graft.SessionLocal(
+    new java.util.concurrent.ConcurrentHashMap[String, DataFrame]())
 
   /** Persist `df` at `level` as slot `slot`'s live intermediate,
     * releasing the slot's previous occupant iff its plan differs. */

@@ -50,10 +50,8 @@ object Tables {
     } else df
   }
 
-  // weak keys: entries die with their session; no identity-hash reuse
-  private val registered =
-    java.util.Collections.synchronizedMap(
-      new java.util.WeakHashMap[SparkSession, java.util.Set[String]]())
+  private val registered = graft.SessionLocal(
+    java.util.concurrent.ConcurrentHashMap.newKeySet[String]())
 
   /** Register every test table as a temp view so `spark.sql` queries
     * (subqueries, CTEs, SQL-dialect keys) can refer to them by name —
@@ -62,11 +60,7 @@ object Tables {
     * (session, dir): repeat calls don't re-list or re-read footers.
     */
   def registerAll(spark: SparkSession, dir: String): Unit = {
-    val dirs = registered.synchronized {
-      registered.computeIfAbsent(spark,
-        _ => java.util.concurrent.ConcurrentHashMap.newKeySet[String]())
-    }
-    if (dirs.add(dir))
+    if (registered(spark).add(dir))
       all.foreach(n => t(spark, dir, n).createOrReplaceTempView(n))
   }
 }

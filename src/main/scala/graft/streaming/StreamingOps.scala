@@ -172,9 +172,8 @@ object StreamingOps {
     val src = if (isStreaming) docs.withWatermark("ts", watermark) else docs
     val rowsPerBand = numHashes / bands
     val sigs = src.select(col("doc_id").cast("long"), col("ts"),
-        graft.functions.MinHashArray.minhash_array(
-          array_distinct(graft.functions.ShingleHashes
-            .shingle_hashes(lower(col("text")), shingleLen)), numHashes)
+        graft.functions.ShingleMinHash.shingle_minhash(lower(col("text")),
+          typedLit[Array[Long]](Array.emptyLongArray), shingleLen, numHashes)
           .as("sig"))
       .filter(col("sig").isNotNull)
     val bandCols = (0 until bands).map { b =>

@@ -68,6 +68,14 @@ class ShingleMinHashSpec extends SparkSpec {
     assert(allHot.isNullAt(2), "all-hot document must yield a NULL signature")
   }
 
+  test("MinHashArray yields NULL on an empty array (doc drops out of banding)") {
+    val df = Seq(("d1", Seq.empty[Long]), ("d2", Seq(1L, 2L, 3L)))
+      .toDF("id", "sset")
+      .select(col("id"), MinHashArray.minhash_array(col("sset"), 8).as("sig"))
+    assert(df.filter(col("sig").isNull).select("id").as[String].collect().toSeq == Seq("d1"))
+    assert(df.filter(col("sig").isNotNull).select("id").as[String].collect().toSeq == Seq("d2"))
+  }
+
   test("minHashPairs end-to-end output is unchanged by the fusion " +
       "(planted near-dups at 313-doc scale)") {
     // mirror of the ext_dedup_minhash corpus shape on a local frame:

@@ -6,6 +6,13 @@ import org.apache.spark.sql.functions._
 class DedupSpec extends SparkSpec {
   import spark.implicits._
 
+  // (id, sig) signature table of the fused kernel, no hot subtraction
+  private def signatures(docs: org.apache.spark.sql.DataFrame, numHashes: Int) =
+    docs.select(col("doc_id").as("id"),
+        graft.functions.ShingleMinHash.shingle_minhash(lower(col("text")),
+          typedLit[Array[Long]](Array.emptyLongArray), 8, numHashes).as("sig"))
+      .filter(col("sig").isNotNull)
+
   private def corpus = Seq(
     (1L, "the quick brown fox jumps over the lazy dog again and again"),
     (2L, "the quick brown fox jumps over the lazy dog again and again!"), // near-dup of 1
@@ -76,8 +83,7 @@ class DedupSpec extends SparkSpec {
     val clones = (1 to 40).map(i =>
       (i.toLong, "exactly the same text in every single clone document here"))
       .toDF("doc_id", "text")
-    val sigs = Dedup.minHashSignatures(
-      Dedup.shingles(clones, "doc_id", "text"), numHashes = 32)
+    val sigs = signatures(clones, numHashes = 32)
     val uncapped = Dedup.lshCandidates(sigs, 32, 8).count()
     assert(uncapped == 40L * 39 / 2, s"uncapped $uncapped")
     val capped = Dedup.lshCandidates(sigs, 32, 8, maxBucket = 8).count()
@@ -86,8 +92,7 @@ class DedupSpec extends SparkSpec {
     val small = (1 to 5).map(i =>
       (i.toLong, "another identical cluster of documents for the cap test"))
       .toDF("doc_id", "text")
-    val sigsSmall = Dedup.minHashSignatures(
-      Dedup.shingles(small, "doc_id", "text"), numHashes = 32)
+    val sigsSmall = signatures(small, numHashes = 32)
     assert(Dedup.lshCandidates(sigsSmall, 32, 8, maxBucket = 8).count() == 10L)
   }
 
@@ -98,6 +103,21 @@ class DedupSpec extends SparkSpec {
         maxShingleDf = 3, maxBucket = 16)
       .select("id1", "id2").as[(Long, Long)].collect().toSet
     assert(plain == guarded)
+  }
+
+  test("minHashPairs forces no broadcast when the bucket cap is unbounded") {
+    import org.apache.spark.sql.catalyst.plans.logical.{BROADCAST, ResolvedHint}
+    def broadcastHints(df: org.apache.spark.sql.DataFrame) =
+      df.queryExecution.analyzed.collect {
+        case h: ResolvedHint if h.hints.strategy.contains(BROADCAST) => h
+      }.size
+    // default cap: the candidate sliver is unbounded, so neither the
+    // candIds semi-join nor the two candSets joins carries a hint
+    assert(broadcastHints(Dedup.minHashPairs(corpus, "doc_id", "text")) == 0)
+    // a finite cap bounds the sliver: both candSets join sides are
+    // hinted, and each copy's candIds semi-join inside them
+    assert(broadcastHints(Dedup.minHashPairs(corpus, "doc_id", "text",
+      maxBucket = 16)) == 4)
   }
 
   test("simHashPairs and lshNearDupPairs bound a 500-copy cluster's buckets") {
@@ -157,8 +177,7 @@ class DedupSpec extends SparkSpec {
     // generation; every surviving bucket holds ≤ maxBucket ids
     val maxBucket = 100
     val bands = 16
-    val sigs = Dedup.minHashSignatures(
-      Dedup.shingles(docs, "doc_id", "text"), numHashes = 64)
+    val sigs = signatures(docs, numHashes = 64)
     val cand = Dedup.lshCandidates(sigs, 64, bands, maxBucket)
       .as[(Long, Long)].collect()
     assert(!cand.exists(p => p._1 <= 2000 && p._2 <= 2000),

@@ -28,9 +28,6 @@ class MinHashPerfProbe extends SparkSpec {
     }
     // warm
     corpus.count()
-    t("string sets build+persist") {
-      Dedup.shingleSets(corpus, "doc_id", "text").persist().count()
-    }
     t("hashed sets build+persist") {
       Dedup.hashedShingleSets(corpus, "doc_id", "text").persist().count()
     }
@@ -42,7 +39,10 @@ class MinHashPerfProbe extends SparkSpec {
     }
     val capped = t("anti-join count") { Dedup.dropHotShingles(sh, 150).count() }
     println(s"[probe] capped rows: $capped")
-    val sigs = Dedup.minHashSignatures(Dedup.dropHotShingles(sh, 150), 32)
+    val sigs = corpus.select(col("doc_id").as("id"),
+        graft.functions.ShingleMinHash.shingle_minhash(lower(col("text")),
+          typedLit[Array[Long]](Array.emptyLongArray), 8, 32).as("sig"))
+      .filter(col("sig").isNotNull)
     t("signatures") { sigs.count() }
     val cand = Dedup.lshCandidates(sigs, 32, 8, maxBucket = 64)
     t("candidates") { cand.count() }
