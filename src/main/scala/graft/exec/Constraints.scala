@@ -216,11 +216,69 @@ object Constraints {
     (pkKeys ++ colKeys ++ exprKeys).distinct
   }
 
+  /** The declared unique keys an UPDATE assigning `assigned` can
+    * break: those whose item expressions or partial-index `WHERE` read
+    * a column the statement can change — the assigned columns, plus
+    * every generated column once the table has any (a generated value
+    * may read an assigned column, directly or through another one).
+    * SQLite's rule (`sqlite3GenerateConstraintChecks` skips an index
+    * none of whose columns changed): an UPDATE adds no rows, the base
+    * was unique on an unreached key, and every row keeps its old
+    * value of it. A key text that does not parse counts as reached,
+    * so the filter fails toward checking. */
+  def keysChangedBy(spark: SparkSession, table: String,
+                    tableCols: Seq[String],
+                    assigned: Iterable[String]): Seq[UniqueKey] = {
+    val changed = changeableCols(spark, table, assigned)
+    uniqueKeys(spark, table, tableCols).filter { k =>
+      (k.exprs ++ k.where).exists(t => columnsRead(t).forall(_.exists(changed)))
+    }
+  }
+
+  /** The lowercased columns an UPDATE assigning `assigned` can change
+    * (see [[keysChangedBy]]). */
+  def changeableCols(spark: SparkSession, table: String,
+                     assigned: Iterable[String]): Set[String] =
+    assigned.map(_.toLowerCase).toSet ++
+      SessionKeys.generatedFor(spark, table).map(_._1.toLowerCase)
+
+  /** Every name part an executable expression text references,
+    * lowercased (a qualified `t.c` or a field path contributes each
+    * part — over-inclusion only adds checks); None when the text does
+    * not parse or reads a star. */
+  private def columnsRead(sqlText: String): Option[Set[String]] = {
+    import org.apache.spark.sql.catalyst.analysis.{UnresolvedAttribute,
+      UnresolvedRegex, UnresolvedStar}
+    try {
+      val e = org.apache.spark.sql.catalyst.parser.CatalystSqlParser
+        .parseExpression(sqlText)
+      val star = e.exists {
+        case _: UnresolvedStar | _: UnresolvedRegex => true
+        case _ => false
+      }
+      if (star) None
+      else Some(e.collect {
+        case a: UnresolvedAttribute => a.nameParts.map(_.toLowerCase)
+      }.flatten.toSet)
+    } catch { case scala.util.control.NonFatal(_) => None }
+  }
+
   /** SQLite's `UNIQUE constraint failed: <label>` over the
     * POST-STATEMENT state: any fully-non-NULL key tuple appearing
     * twice aborts (NULL members never conflict — measured; two NULL
     * keys coexist). One narrow group-count per declared key, bounded
     * by the statement's write — session-declared tables only.
+    *
+    * Which keys a write re-checks follows SQLite, which probes only
+    * the indexes a statement can change: INSERTs and upserts check
+    * every declared key here; the UPDATE routes call [[assertUniqueOn]]
+    * with [[keysChangedBy]], so an UPDATE assigning no key column (nor
+    * a column a key's expression or partial `WHERE` reads) issues no
+    * probe job. The bare `INSERT OR REPLACE` merge is unique by
+    * construction — every declared key is deduplicated in the batch
+    * and every conflicting base row displaced — so [[Upsert]] skips
+    * the check there (REPLACE resolution never raises UNIQUE in
+    * SQLite either).
     *
     * Divergence (error choice, not values): with a single row
     * violating both a CHECK and a UNIQUE constraint, SQLite reports
@@ -229,8 +287,13 @@ object Constraints {
     * constraint error. */
   def assertUnique(spark: SparkSession, table: String,
                    merged: DataFrame,
-                   probe0: => Option[DataFrame] = None): Unit = {
-    val keys = uniqueKeys(spark, table, merged.columns.toSeq)
+                   probe0: => Option[DataFrame] = None): Unit =
+    assertUniqueOn(uniqueKeys(spark, table, merged.columns.toSeq), merged,
+      probe0)
+
+  /** [[assertUnique]] over the given keys only. */
+  def assertUniqueOn(keys: Seq[UniqueKey], merged: DataFrame,
+                     probe0: => Option[DataFrame] = None): Unit = {
     if (keys.isEmpty) return
     val probe = probe0 // forced once, only when keys exist
     keys.foreach { k =>

@@ -876,6 +876,15 @@ object ForeignKeys {
     !hit.isEmpty
   }
 
+  /** True when none of the parent-key columns `fk` references is in
+    * `changed`; false when the key cannot be named (no parent columns
+    * and no declared PRIMARY KEY — the check then stays). */
+  private def parentKeyUnchanged(spark: SparkSession, fk: SqlDml.Fk,
+                                 changed: Set[String]): Boolean =
+    (if (fk.parentCols.nonEmpty) Some(fk.parentCols)
+     else SessionKeys.declaredPk(spark, fk.parent))
+      .exists(_.forall(c => !changed(c.toLowerCase)))
+
   /** Parent-side check before `table` rebinds from `oldDf` to `newDf`:
     * key tuples the statement REMOVES must not be referenced by any
     * child row — evaluated against the child's POST-statement state
@@ -887,10 +896,19 @@ object ForeignKeys {
   def assertParentTransition(spark: SparkSession, table: String,
                              oldDf: DataFrame, newDf: DataFrame,
                              verb: String,
-                             actionsApplied: Boolean = false): Unit = {
+                             actionsApplied: Boolean = false,
+                             assigned: Option[Iterable[String]] = None)
+      : Unit = {
     import org.apache.spark.sql.functions.col
     if (!enforcing(spark)) return
-    val refs = referencing(spark, table)
+    // an UPDATE re-checks only the FKs whose parent key it can change
+    // (SQLite's fkParentIsModified); once actions ran, or for a
+    // delete, every reference is checked
+    val changed = assigned.filter(_ => verb == "update" && !actionsApplied)
+      .map(Constraints.changeableCols(spark, table, _))
+    val refs = referencing(spark, table).filterNot { case (_, fk) =>
+      changed.exists(ch => parentKeyUnchanged(spark, fk, ch))
+    }
     if (refs.isEmpty) return
     refs.foreach { case (childName, fk) =>
       val childState =

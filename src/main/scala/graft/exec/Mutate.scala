@@ -251,6 +251,11 @@ object Mutate {
           })
         }
       }
+    // the declared unique keys these assignments can break
+    // ([[Constraints.keysChangedBy]]): every other key keeps each row's
+    // value, so no route below re-checks or resolves it
+    val reachedKeys = Constraints.keysChangedBy(spark, u.table,
+      base.columns.toSeq, assigns.keys)
     val gens = Ddl.generatedForWrite(spark, u.table)
     val cond0 = foldWhere(spark, u.table, u.where)
       .map(w => s"coalesce(($w), false)").getOrElse("true")
@@ -266,17 +271,17 @@ object Mutate {
     }
     // UPDATE OR IGNORE on a unique-keyed table: the set-expressible
     // route (guards above declined the per-row-interleaved
-    // compositions)
-    if (u.orAction.contains("IGNORE") && declaredKeysExist)
-      return runUpdateIgnoreKeys(spark, u, base, assigns, cond,
-        Constraints.uniqueKeys(spark, u.table, base.columns.toSeq))
+    // compositions); with no key reached nothing can conflict, so the
+    // statement is the plain route below
+    if (u.orAction.contains("IGNORE") && reachedKeys.nonEmpty)
+      return runUpdateIgnoreKeys(spark, u, base, assigns, cond, reachedKeys)
     // UPDATE OR FAIL: probe for a would-violation — none makes the
     // statement a plain UPDATE (SQLite: OR FAIL differs only when a
     // violation occurs); one declines named (its rowid-order partial
     // effects have no set-based equivalent)
     if (u.orAction.contains("FAIL") &&
-        (declaredKeysExist || Constraints.has(spark, u.table)))
-      failWouldViolate(spark, u, base, assigns, cond0)
+        (reachedKeys.nonEmpty || Constraints.has(spark, u.table)))
+      failWouldViolate(spark, u, base, assigns, cond0, reachedKeys)
     val proj = base.schema.fields.map { f =>
       assigns.get(f.name.toLowerCase) match {
         case Some(e) =>
@@ -301,6 +306,14 @@ object Mutate {
         s"SELECT ${cols.mkString(", ")} FROM ($inner)"
       }
     val innerSel = s"SELECT ${proj.mkString(", ")} FROM ${q(u.table)}"
+    // the new images of the WHERE-true rows, generated columns
+    // recomputed — what the displacement, the child-FK check and the
+    // uniqueness probe read
+    lazy val updatedNew = {
+      val updInner = s"$innerSel WHERE $cond"
+      spark.sql((u.withPrefix + " " + (
+        if (gens.isEmpty) updInner else chainGen(updInner, Nil))).trim)
+    }
     // UPDATE OR REPLACE on a table with declared unique keys: SQLite
     // deletes every existing row a re-keyed row collides with and
     // completes the update (lang_conflict.html). Set-based: the
@@ -308,20 +321,13 @@ object Mutate {
     // key (SQLite's row-at-a-time outcome), then untouched rows
     // conflicting with it on ANY declared key drop — the same
     // displacement shape INSERT OR REPLACE uses ([[Upsert]]).
-    val replaceKeys =
-      if (u.orAction.contains("REPLACE"))
-        Constraints.uniqueKeys(spark, u.table, base.columns.toSeq)
-      else Nil
+    val replaceKeys = if (u.orAction.contains("REPLACE")) reachedKeys else Nil
     val merged =
       if (replaceKeys.isEmpty)
         spark.sql((u.withPrefix + " " + (
           if (gens.isEmpty) innerSel else chainGen(innerSel, Nil))).trim)
       else {
         import org.apache.spark.sql.functions.col
-        val updInner =
-          s"SELECT ${proj.mkString(", ")} FROM ${q(u.table)} WHERE $cond"
-        val updatedNew = spark.sql((u.withPrefix + " " + (
-          if (gens.isEmpty) updInner else chainGen(updInner, Nil))).trim)
         // batch-internal collision winner: SQLite keeps the LAST row
         // in rowid order. With a materialized rowid the order is
         // exact; without one the post-shuffle scan order of the
@@ -422,9 +428,7 @@ object Mutate {
         // its argument is strict)
         if (ForeignKeys.childFksOf(spark, u.table)
             .exists(_.cols.exists(c => assigns.contains(c.toLowerCase))))
-          ForeignKeys.assertChildRows(spark, u.table,
-            spark.sql((s"${u.withPrefix} SELECT ${proj.mkString(", ")} " +
-              s"FROM ${q(u.table)} WHERE $cond").trim), merged,
+          ForeignKeys.assertChildRows(spark, u.table, updatedNew, merged,
             Some(assigns.keySet))
         // with executing ON UPDATE actions the parent check moves
         // AFTER the cascades (SQLite's sequencing); the Atomic
@@ -432,14 +436,12 @@ object Mutate {
         // failure
         if (!fkMapNeeded)
           ForeignKeys.assertParentTransition(spark, u.table, base, merged,
-            "update")
+            "update", assigned = Some(assigns.keys))
       }
       // re-keying into a collision aborts with SQLite's UNIQUE error;
       // probed by the updated slice (new images of WHERE-true rows),
       // so the scan is O(touched), never O(table)
-      Constraints.assertUnique(spark, u.table, merged,
-        Some(spark.sql((s"${u.withPrefix} SELECT ${proj.mkString(", ")} " +
-          s"FROM ${q(u.table)} WHERE $cond").trim)))
+      Constraints.assertUniqueOn(reachedKeys, merged, Some(updatedNew))
       val out = rebind(spark, u.table, merged, ret)
       if (fkMapNeeded) {
         slice.foreach(sl =>
@@ -460,12 +462,12 @@ object Mutate {
     * updates. changes() and RETURNING cover only the applied rows, and
     * a key tuple with any NULL member never conflicts — all three
     * measured. The skip/keep split is ONE anti-join of the matched
-    * slice's new key images against the untouched slice per declared
-    * key (the same displacement join OR REPLACE builds, direction
-    * reversed); what stays declined — checked here, named — are the
-    * intra-statement interactions whose outcome depends on SQLite's
-    * rowid processing order: two updated rows landing on the same key
-    * value, or one landing on another's pre-update key.
+    * slice's new key images against the untouched slice per key the
+    * assignments reach (the same displacement join OR REPLACE builds,
+    * direction reversed); what stays declined — checked here, named —
+    * are the intra-statement interactions whose outcome depends on
+    * SQLite's rowid processing order: two updated rows landing on the
+    * same key value, or one landing on another's pre-update key.
     *
     * At 100 TB: every job here is bounded by the statement's matched
     * slice (pairs), except the untouched-side key projection, which is
@@ -557,9 +559,9 @@ object Mutate {
           ForeignKeys.assertChildRows(spark, u.table, appliedNew, merged,
             Some(assigns.keySet))
         ForeignKeys.assertParentTransition(spark, u.table, base, merged,
-          "update")
+          "update", assigned = Some(assigns.keys))
       }
-      Constraints.assertUnique(spark, u.table, merged, Some(appliedNew))
+      Constraints.assertUniqueOn(keys, merged, Some(appliedNew))
       rebind(spark, u.table, merged, ret)
     } finally pairs.unpersist()
   }
@@ -571,16 +573,17 @@ object Mutate {
     * statement executes as a plain UPDATE exactly when NO violation
     * would occur, and declines named otherwise — checked here before
     * the rewrite: (a) a matched row whose post-assignment image fails
-    * NOT NULL/CHECK, (b) any declared-key conflict the assignments
-    * would create (against the untouched slice, two matched rows on
-    * one new key, or a matched row landing on another's pre-update
-    * key). All probes are bounded by the statement's matched slice
-    * plus the same narrow untouched-key projection the OR IGNORE /
-    * OR REPLACE routes pay. */
+    * NOT NULL/CHECK, (b) any conflict the assignments would create on
+    * a key they reach (`keys`): against the untouched slice, two
+    * matched rows on one new key, or a matched row landing on
+    * another's pre-update key. All probes are bounded by the
+    * statement's matched slice plus the same narrow untouched-key
+    * projection the OR IGNORE / OR REPLACE routes pay. */
   private def failWouldViolate(spark: SparkSession, u: SqlDml.Update,
                                base: DataFrame,
                                assigns: Map[String, String],
-                               cond0: String): Unit = {
+                               cond0: String,
+                               keys: Seq[Constraints.UniqueKey]): Unit = {
     import org.apache.spark.sql.functions._
     import org.apache.spark.sql.types.BooleanType
     def decline(what: String): Nothing =
@@ -595,7 +598,6 @@ object Mutate {
         " LIMIT 1").trim)
       if (!bad.isEmpty) decline("a NOT NULL/CHECK violation")
     }
-    val keys = Constraints.uniqueKeys(spark, u.table, base.columns.toSeq)
     if (keys.isEmpty) return
     val oldS = base.schema.fields
       .map(f => s"'${esc(f.name)}', ${q(f.name)}").mkString(", ")
@@ -758,10 +760,12 @@ object Mutate {
           ForeignKeys.assertChildRows(spark, u.table,
             matched.drop("__rid"), merged, Some(assigns.keySet))
           ForeignKeys.assertParentTransition(spark, u.table, base, merged,
-            "update")
+            "update", assigned = Some(assigns.keys))
         }
-        Constraints.assertUnique(spark, u.table, merged,
-          Some(matched.drop("__rid")))
+        Constraints.assertUniqueOn(
+          Constraints.keysChangedBy(spark, u.table, base.columns.toSeq,
+            assigns.keys),
+          merged, Some(matched.drop("__rid")))
         val out = rebind(spark, u.table, merged, ret)
         slice.foreach(sl => Triggers.fire(spark, u.table, "update",
           setColNames, "after", sl))
@@ -1008,9 +1012,12 @@ object Mutate {
             ForeignKeys.assertChildRows(spark, u.table, updated, merged,
               Some(assigns.keySet))
             ForeignKeys.assertParentTransition(spark, u.table, base, merged,
-              "update")
+              "update", assigned = Some(assigns.keys))
           }
-          Constraints.assertUnique(spark, u.table, merged, Some(updated))
+          Constraints.assertUniqueOn(
+            Constraints.keysChangedBy(spark, u.table, base.columns.toSeq,
+              assigns.keys),
+            merged, Some(updated))
           rebind(spark, u.table, merged, ret)
       }
     } finally {

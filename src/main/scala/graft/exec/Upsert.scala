@@ -509,7 +509,8 @@ object Upsert {
         if (effReplace ||
             (chainAll.exists(_.assigns.nonEmpty) && !fkMapNeeded))
           ForeignKeys.assertParentTransition(spark, stmt.table, base,
-            merged, if (effReplace) "delete" else "update")
+            merged, if (effReplace) "delete" else "update",
+            assigned = Some(updAssignCols))
         // OR REPLACE's internal delete runs ON DELETE actions for the
         // DISPLACED rows (SQLite cascades even though the key is
         // re-inserted — measured; NO ACTION children are satisfied by
@@ -528,9 +529,14 @@ object Upsert {
         // `UNIQUE constraint failed: t.c` (plain INSERT duplicates, a
         // DO UPDATE re-keying into a collision, a targeted DO NOTHING
         // conflicting on another key — all abort here); probed by the
-        // statement's own written slice, so the scan is O(batch)
-        Constraints.assertUnique(spark, stmt.table, mergedFk,
-          Some(affected))
+        // statement's own written slice, so the scan is O(batch). The
+        // bare REPLACE merge is unique by construction: the batch keeps
+        // one in-scope row per value of every declared key, and every
+        // base row sharing one is displaced — unless a self-FK action
+        // rewrote the merged image, which is checked like any write
+        if (!(effReplace && (mergedFk eq merged)))
+          Constraints.assertUnique(spark, stmt.table, mergedFk,
+            Some(affected))
         // the NOT NULL/CHECK guard rides the materializing write — a
         // violating row raises SQLite's error and Atomic rolls back
         Constraints.guard(spark, stmt.table, mergedFk)

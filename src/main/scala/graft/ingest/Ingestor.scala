@@ -72,7 +72,11 @@ object Ingestor {
     // calls that actually hit the model). The cache key is the DATA
     // content; a caller-supplied context overrides the cached one so
     // new documentation is never silently dropped.
-    val cached = loadCache(spark, dfsHash, cacheDir)
+    // the table hash covers each frame's schema, so a hit's payloads
+    // are read with the schema already in hand — no per-table footer
+    // inference job
+    val schemas = tableHashes.zip(sanitized.map(_.schema)).toMap
+    val cached = loadCache(spark, dfsHash, cacheDir, schemas.get)
     if (cached.isDefined) {
       val results =
         if (context.isDefined) cached.get.map(_.copy(context = context))
@@ -156,16 +160,23 @@ object Ingestor {
   private def cachePaths(dfsHash: String, cacheDir: String) =
     (Paths.get(cacheDir, s"$dfsHash.json"), Paths.get(cacheDir, dfsHash))
 
+  /** Re-register a cached ingestion's payloads; a payload whose
+    * schema `schemaOf` knows is read with it, any other infers it from
+    * the parquet footers (one job per table). */
   private def loadCache(spark: SparkSession, dfsHash: String,
-                        cacheDir: String): Option[Seq[IngestResult]] = {
+                        cacheDir: String,
+                        schemaOf: String => Option[StructType] = _ => None)
+      : Option[Seq[IngestResult]] = {
     val (metaPath, tablesDir) = cachePaths(dfsHash, cacheDir)
     if (!Files.exists(metaPath)) return None
     val metas = Json.parseArray(Files.readString(metaPath))
     Some(metas.map { m =>
       val h = m("hash").toString
       val parquet = tablesDir.resolve(h)
-      if (Files.exists(parquet))
-        spark.read.parquet(parquet.toString).createOrReplaceTempView(h)
+      if (Files.exists(parquet)) {
+        val reader = schemaOf(h).fold(spark.read)(spark.read.schema(_))
+        reader.parquet(parquet.toString).createOrReplaceTempView(h)
+      }
       IngestResult(
         context = Option(m.getOrElse("context", null)).map(_.toString),
         columnTypes = asStrMap(m("column_types")),

@@ -675,4 +675,34 @@ class ForeignKeySpec extends SparkSpec
     }
     assert(e.getMessage == "FOREIGN KEY constraint failed")
   }
+
+  test("a parent UPDATE assigning no referenced key column issues no " +
+       "FK check job; re-keying a referenced parent still refuses") {
+    val i = fresh()
+    sql(s"CREATE TABLE np$i (id INTEGER PRIMARY KEY, nm TEXT)")
+    sql(s"CREATE TABLE nc$i (a INTEGER REFERENCES np$i)")
+    sql(s"INSERT INTO np$i VALUES (1, 'x'), (2, 'y')")
+    sql(s"INSERT INTO nc$i VALUES (1)")
+    sql("PRAGMA foreign_keys = 1")
+    val jobs = new JobSites(spark)
+    try {
+      assert(jobs.jobsFrom("ForeignKeys.scala")(
+        sql(s"UPDATE np$i SET nm = 'z' WHERE id = 1")) == 0)
+      // an upsert's DO UPDATE follows the same rule
+      assert(jobs.jobsFrom("ForeignKeys.scala")(
+        sql(s"INSERT INTO np$i VALUES (2, 'w') " +
+          "ON CONFLICT(id) DO UPDATE SET nm = excluded.nm")) == 0)
+      assert(rowsOf(s"SELECT id, nm FROM np$i ORDER BY id") ==
+        Seq(Seq(1L, "z"), Seq(2L, "w")))
+      val e = intercept[IllegalArgumentException] {
+        sql(s"UPDATE np$i SET id = 9 WHERE id = 1")
+      }
+      assert(e.getMessage == "FOREIGN KEY constraint failed")
+      assert(rowsOf(s"SELECT id FROM np$i ORDER BY id") ==
+        Seq(Seq(1L), Seq(2L)))
+      // an unreferenced parent re-keys freely, checked by FK jobs
+      assert(jobs.jobsFrom("ForeignKeys.scala")(
+        sql(s"UPDATE np$i SET id = 8 WHERE id = 2")) > 0)
+    } finally jobs.stop()
+  }
 }

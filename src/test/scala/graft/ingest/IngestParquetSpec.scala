@@ -45,5 +45,21 @@ class IngestParquetSpec extends SparkSpec {
     assert(hash2 == hash)
     assert(cached.map(_.ddl) == results.map(_.ddl))
     assert(cached.map(_.columnKinds) == results.map(_.columnKinds))
+
+    // a cache hit re-registers each payload with the schema the hash
+    // already covers: the same schema footer inference returns
+    // (nullability included), and no job launched to register it
+    val jobs = new graft.exec.JobSites(spark)
+    try {
+      cached.foreach { r =>
+        val payload = java.nio.file.Paths.get(cacheDir, hash, r.hash).toString
+        assert(spark.table(s"`${r.hash}`").schema ==
+          spark.read.parquet(payload).schema)
+      }
+      val (_, sites) = jobs.during(Ingestor.ingest(spark, Seq(events, docs),
+        llm = new StubLlm(), cacheDir = cacheDir))
+      // the hash jobs remain; the per-table footer reads are gone
+      assert(!sites.exists(_.startsWith("parquet at Ingestor.scala")), sites)
+    } finally jobs.stop()
   }
 }
