@@ -10,13 +10,14 @@ import graft.functions.GraftRaiseAbort
   * default ON CONFLICT ABORT).
   *
   * A set-based engine cannot undo a body statement that already
-  * re-bound its table, but every rebind here is COPY-ON-WRITE: the
-  * pre-statement binding survives as a live DataFrame over retained
-  * parquet generations. So atomicity is a snapshot-restore of
-  * references, not data: capture each session relation's current
-  * DataFrame before the statement, re-register them all if anything
-  * escapes. O(relations) driver metadata, zero data movement —
-  * exactly the plan-pointer swap a lakehouse MERGE rollback does.
+  * re-bound its table, but every rebind here is copy-on-write
+  * ([[Publish]]): the pre-statement binding survives as a live
+  * DataFrame over retained generations. So atomicity is a
+  * snapshot-restore of references, not data: capture each session
+  * relation's current DataFrame before the statement, re-register them
+  * all if anything escapes. O(relations) driver metadata, zero data
+  * movement — exactly the plan-pointer swap a lakehouse MERGE rollback
+  * does.
   *
   * Scope: snapshots are taken only when the session has any trigger
   * registered (the only source of multi-write statements; a plain DML

@@ -9,8 +9,7 @@ import graft.text2sql.SqlDml
   *  - `CREATE [TEMP] VIEW v AS select` → a TEMPORARY view (the session
   *    is the engine's database, so lifetimes match);
   *  - `CREATE [TEMP] TABLE t AS select` → the select MATERIALIZES
-  *    (parquet, copy-on-write generation dir — same discipline as
-  *    [[Upsert]]) and registers as a session table, so downstream
+  *    (a new generation, [[Publish.materialize]]) and registers as a session table, so downstream
   *    statements scan stored files instead of re-running the plan;
   *  - `DROP TABLE/VIEW [IF EXISTS] t` → unregisters the binding (lake
   *    files are immutable; only the name drops).
@@ -61,11 +60,8 @@ object Ddl {
         s"CREATE TABLE ${stmt.name}: relation already exists (SQLite " +
           s"semantics); add IF NOT EXISTS or DROP TABLE it first")
     }
-    val dir = "target/graft_tmp/ctas_" +
-      stmt.name.replaceAll("[^A-Za-z0-9_]", "_") +
-      "_g" + Upsert.nextGeneration()
-    spark.sql(stmt.sourceSql).write.mode("overwrite").parquet(dir)
-    spark.read.parquet(dir).createOrReplaceTempView(stmt.name)
+    Publish.materialize(spark, spark.sql(stmt.sourceSql), stmt.name)
+      .createOrReplaceTempView(stmt.name)
     Pragma.bumpSchemaVersion(spark)
     spark.emptyDataFrame
   }

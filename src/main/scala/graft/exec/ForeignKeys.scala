@@ -665,9 +665,7 @@ object ForeignKeys {
         throw new IllegalArgumentException(
           s"""foreign key mismatch - "$childName" referencing "$table""""))
     }
-    val view = s"graft_fkcas_g${Upsert.nextGeneration()}"
-    removed.createOrReplaceTempView(view)
-    try SessionChanges.inTriggerBody {
+    Publish.withView(removed, "fkcas")(view => SessionChanges.inTriggerBody {
       val hitWhere = childCols.map(cc =>
         s"${Ddl.quote(cc)} IS NOT NULL").mkString(" AND ") +
         s" AND EXISTS (SELECT 1 FROM `$view` WHERE " +
@@ -690,7 +688,7 @@ object ForeignKeys {
               c -> dflts.get(c.toLowerCase).map(_._2).getOrElse("NULL")),
             Some(hitWhere), None, ""))
       }
-    } finally spark.catalog.dropTempView(view)
+    })
   }
 
   /** Apply ON UPDATE actions for re-keyed parent rows — called AFTER
@@ -746,9 +744,7 @@ object ForeignKeys {
               throw new IllegalArgumentException(
                 s"""foreign key mismatch - "$childName" referencing "$table""""))
           }
-          val view = s"graft_fkcas_g${Upsert.nextGeneration()}"
-          remap.createOrReplaceTempView(view)
-          try SessionChanges.inTriggerBody {
+          Publish.withView(remap, "fkcas")(view => SessionChanges.inTriggerBody {
             val joinWhere = childCols.map(cc =>
               s"${Ddl.quote(cc)} IS NOT NULL").mkString(" AND ") + " AND " +
               childCols.zipWithIndex.map { case (cc, i) =>
@@ -763,7 +759,7 @@ object ForeignKeys {
                 cc -> s"`$view`.__fk_n$i"
               },
               Some(joinWhere), None, "", from = Some(s"`$view`")))
-          } finally spark.catalog.dropTempView(view)
+          })
         case act => // SET NULL / SET DEFAULT
           applyChildActionKeys(spark, table, childName, fk,
             remap.select(pcols.indices.map(i =>

@@ -20,12 +20,10 @@ import graft.text2sql.SqlDml
   * construction) and are cast to the lake column's type, NULL on a
   * lenient-cast miss per the engine's documented CAST policy.
   *
-  * The rewritten table is MATERIALIZED (parquet, fresh generation dir —
-  * see [[Upsert]]) and the temp view re-bound: the statement's
-  * observable effect is the same table-state transition SQLite performs
-  * in place. At 100 TB both shapes are embarrassingly parallel — a
-  * single narrow scan-project(-filter)-write pass, no shuffle, no
-  * driver data path; only the files of the new snapshot are written.
+  * The rewritten table publishes through [[Publish.commit]] (new
+  * parquet generation, view re-bound). At 100 TB both shapes are
+  * embarrassingly parallel — a single narrow scan-project(-filter)-write
+  * pass, no shuffle, no driver data path.
   *
   * `RETURNING` evaluates over the affected slice (old rows for DELETE,
   * post-assignment rows for UPDATE, as SQLite defines) and is
@@ -106,6 +104,37 @@ object Mutate {
         s"$verb target '$table' is not a registered table/view: " +
           e.getMessage, e)
     }
+
+  /** The preamble every UPDATE route shares: resolve the target,
+    * refuse unknown, rowid and generated assignment targets, and keep
+    * the rightmost assignment per column (SQLite's rule). */
+  private def updateTarget(spark: SparkSession, u: SqlDml.Update)
+      : (DataFrame, Map[String, String]) = {
+    val base = resolve(spark, u.table, "UPDATE")
+    val known = base.schema.fields.map(_.name.toLowerCase).toSet
+    val unknown = u.assigns.map(_._1).filterNot(c => known(c.toLowerCase))
+    if (unknown.nonEmpty)
+      throw new IllegalArgumentException(
+        s"UPDATE ${u.table}: no such column(s) ${unknown.mkString(", ")}")
+    Rowid.guardUpdateAssigns(spark, u.table, u.assigns.map(_._1))
+    guardGeneratedAssigns(spark, u.table, u.assigns.map(_._1))
+    (base, u.assigns.map { case (c, e) => c.toLowerCase -> e }.toMap)
+  }
+
+  private val rid = "__graft_rid"
+
+  /** Run `body` over the base tagged with a monotonic row id in column
+    * `__graft_rid` — persisted, so every branch of the rewrite reads
+    * one consistent id assignment — and registered under a scratch
+    * view; both are released when `body` returns or throws. */
+  private def withRowIds[T](base: DataFrame, tag: String)(
+      body: (DataFrame, String) => T): T = {
+    import org.apache.spark.sql.functions.monotonically_increasing_id
+    val baseR = base.withColumn(rid, monotonically_increasing_id())
+      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+    try Publish.withView(baseR, tag)(body(baseR, _))
+    finally baseR.unpersist()
+  }
 
   def runUpdate(spark: SparkSession, u: SqlDml.Update): DataFrame =
     Atomic.statement(spark)(runUpdateStmt(spark, u))
@@ -222,17 +251,7 @@ object Mutate {
           "statement")
     if (u.limit.isDefined) return runUpdateLimit(spark, u)
     if (u.from.isDefined) return runUpdateFrom(spark, u)
-    val base = resolve(spark, u.table, "UPDATE")
-    val known = base.schema.fields.map(_.name.toLowerCase).toSet
-    val unknown = u.assigns.map(_._1).filterNot(c => known(c.toLowerCase))
-    if (unknown.nonEmpty)
-      throw new IllegalArgumentException(
-        s"UPDATE ${u.table}: no such column(s) ${unknown.mkString(", ")}")
-    Rowid.guardUpdateAssigns(spark, u.table, u.assigns.map(_._1))
-    guardGeneratedAssigns(spark, u.table, u.assigns.map(_._1))
-    // rightmost assignment wins on a repeated column (SQLite rule);
-    // toMap keeps the last entry per key
-    val assigns0 = u.assigns.map { case (c, e) => c.toLowerCase -> e }.toMap
+    val (base, assigns0) = updateTarget(spark, u)
     // the REPLACE algorithm's NOT NULL step (lang_conflict.html): an
     // assignment producing NULL in a NOT NULL column takes the
     // column's declared DEFAULT; without one the write-time guard
@@ -442,7 +461,7 @@ object Mutate {
       // probed by the updated slice (new images of WHERE-true rows),
       // so the scan is O(touched), never O(table)
       Constraints.assertUniqueOn(reachedKeys, merged, Some(updatedNew))
-      val out = rebind(spark, u.table, merged, ret)
+      val out = Publish.commit(spark, u.table, merged, ret)
       if (fkMapNeeded) {
         slice.foreach(sl =>
           ForeignKeys.applyParentUpdate(spark, u.table, sl))
@@ -453,6 +472,62 @@ object Mutate {
         Triggers.fire(spark, u.table, "update", setColNames, "after", sl))
       out
     } finally slice.foreach(_.unpersist())
+  }
+
+  /** Run `body` over the matched rows of an UPDATE as (old image
+    * struct `__graft_old`, new image columns) — the trigger-slice
+    * shape, one scan, persisted while `body` runs. */
+  private def withMatchedPairs[T](spark: SparkSession, u: SqlDml.Update,
+                                  base: DataFrame,
+                                  assigns: Map[String, String], cond: String)(
+      body: DataFrame => T): T = {
+    val oldS = base.schema.fields
+      .map(f => s"'${esc(f.name)}', ${q(f.name)}").mkString(", ")
+    val flatNew = base.schema.fields.map { f =>
+      val v = assigns.get(f.name.toLowerCase) match {
+        case Some(e) => strictCastSql(spark, u, e, f)
+        case None    => q(f.name)
+      }
+      s"$v AS ${q(f.name)}"
+    }.mkString(", ")
+    val pairs = spark.sql((u.withPrefix +
+      s" SELECT named_struct($oldS) AS __graft_old, $flatNew" +
+      s" FROM ${q(u.table)} WHERE $cond").trim).persist()
+    try body(pairs) finally pairs.unpersist()
+  }
+
+  /** Probe the matched `pairs` ([[withMatchedPairs]]) for the two
+    * intra-statement collisions on key `k` whose outcome depends on
+    * SQLite's rowid processing order: two updated rows landing on one
+    * new key value (`sharedNew` raises), or one landing on another's
+    * pre-update key value (`ontoOld` raises). Both jobs are bounded by
+    * the matched slice. */
+  private def probeIntraCollisions(pairs: DataFrame,
+                                   k: Constraints.UniqueKey)(
+      sharedNew: => Nothing, ontoOld: => Nothing): Unit = {
+    import org.apache.spark.sql.functions._
+    import org.apache.spark.sql.types.BooleanType
+    val es = k.exprs.map(expr)
+    def inScope(df: DataFrame): DataFrame = {
+      val pred = k.where.map(w => coalesce(
+        expr(w).cast(BooleanType), lit(false))).getOrElse(lit(true))
+      df.filter(pred).filter(es.map(_.isNotNull).reduce(_ && _))
+    }
+    val newK = inScope(pairs)
+    if (!newK.groupBy(es: _*).count()
+        .filter(col("count") > 1L).limit(1).isEmpty) sharedNew
+    val oldImg = pairs.select(col("__graft_old").as("__graft_oldj"),
+      col("__graft_old.*"))
+    val oldK = inScope(oldImg).select(
+      (k.exprs.zipWithIndex.map { case (e, i) =>
+        expr(e).as(s"__graft_ok$i")
+      } :+ col("__graft_oldj")).toIndexedSeq: _*)
+    val cross = newK.join(oldK,
+      k.exprs.zipWithIndex.map { case (e, i) =>
+        expr(e) === oldK(s"__graft_ok$i")
+      }.reduce(_ && _) &&
+        !(col("__graft_old") <=> col("__graft_oldj")))
+    if (!cross.limit(1).isEmpty) ontoOld
   }
 
   /** UPDATE OR IGNORE on a table with declared unique keys — the
@@ -466,8 +541,7 @@ object Mutate {
     * assignments reach (the same displacement join OR REPLACE builds,
     * direction reversed); what stays declined — checked here, named —
     * are the intra-statement interactions whose outcome depends on
-    * SQLite's rowid processing order: two updated rows landing on the
-    * same key value, or one landing on another's pre-update key.
+    * SQLite's rowid processing order ([[probeIntraCollisions]]).
     *
     * At 100 TB: every job here is bounded by the statement's matched
     * slice (pairs), except the untouched-side key projection, which is
@@ -478,54 +552,16 @@ object Mutate {
                                   assigns: Map[String, String], cond: String,
                                   keys: Seq[Constraints.UniqueKey])
       : DataFrame = {
-    import org.apache.spark.sql.functions._
-    import org.apache.spark.sql.types.BooleanType
-    // matched rows as (old image struct, new image columns) — the
-    // trigger-slice shape, one scan
-    val oldS = base.schema.fields
-      .map(f => s"'${esc(f.name)}', ${q(f.name)}").mkString(", ")
-    val flatNew = base.schema.fields.map { f =>
-      val v = assigns.get(f.name.toLowerCase) match {
-        case Some(e) => strictCastSql(spark, u, e, f)
-        case None    => q(f.name)
-      }
-      s"$v AS ${q(f.name)}"
-    }.mkString(", ")
-    val pairs = spark.sql((u.withPrefix +
-      s" SELECT named_struct($oldS) AS __graft_old, $flatNew" +
-      s" FROM ${q(u.table)} WHERE $cond").trim).persist()
-    try {
-      keys.foreach { k =>
-        val es = k.exprs.map(expr)
-        def inScope(df: DataFrame): DataFrame = {
-          val pred = k.where.map(w => coalesce(
-            expr(w).cast(BooleanType), lit(false))).getOrElse(lit(true))
-          df.filter(pred).filter(es.map(_.isNotNull).reduce(_ && _))
-        }
-        val newK = inScope(pairs)
-        if (!newK.groupBy(es: _*).count()
-            .filter(col("count") > 1L).limit(1).isEmpty)
-          throw new UnsupportedOperationException(
-            "UPDATE OR IGNORE: two updated rows land on the same " +
-              s"${k.label} value; the per-row skip order has no " +
-              "set-based equivalent — split the statement")
-        val oldImg = pairs.select(col("__graft_old").as("__graft_oldj"),
-          col("__graft_old.*"))
-        val oldK = inScope(oldImg).select(
-          (k.exprs.zipWithIndex.map { case (e, i) =>
-            expr(e).as(s"__graft_ok$i")
-          } :+ col("__graft_oldj")).toIndexedSeq: _*)
-        val cross = newK.join(oldK,
-          k.exprs.zipWithIndex.map { case (e, i) =>
-            expr(e) === oldK(s"__graft_ok$i")
-          }.reduce(_ && _) &&
-            !(col("__graft_old") <=> col("__graft_oldj")))
-        if (!cross.limit(1).isEmpty)
-          throw new UnsupportedOperationException(
-            "UPDATE OR IGNORE: an updated row lands on another updated " +
-              s"row's pre-update ${k.label} value; the per-row skip " +
-              "order has no set-based equivalent — split the statement")
-      }
+    import org.apache.spark.sql.functions.col
+    def decline(what: String): Nothing =
+      throw new UnsupportedOperationException(
+        s"UPDATE OR IGNORE: $what value; the per-row skip order has no " +
+          "set-based equivalent — split the statement")
+    withMatchedPairs(spark, u, base, assigns, cond) { pairs =>
+      keys.foreach(k => probeIntraCollisions(pairs, k)(
+        decline(s"two updated rows land on the same ${k.label}"),
+        decline("an updated row lands on another updated row's " +
+          s"pre-update ${k.label}")))
       val untouched = spark.sql((u.withPrefix +
         s" SELECT * FROM ${q(u.table)} WHERE NOT ($cond)").trim)
       val appliedPairs = keys.foldLeft(pairs)((acc, k) =>
@@ -542,15 +578,8 @@ object Mutate {
         .select(col("__graft_old.*")).select(cols: _*)
       val merged = untouched.select(cols: _*)
         .unionAll(skippedOld).unionAll(appliedNew)
-      // RETURNING sees only the APPLIED rows' new values (measured) —
-      // evaluated over the applied slice via a transient view,
-      // analyzed (and so bound to the pre-rebind plan) immediately
-      val ret = u.returning.map { r =>
-        val vn = "graft_updignore_ret_g" + Upsert.nextGeneration()
-        appliedNew.createOrReplaceTempView(vn)
-        try spark.sql(s"SELECT $r FROM $vn")
-        finally spark.catalog.dropTempView(vn)
-      }
+      // RETURNING sees only the APPLIED rows' new values (measured)
+      val ret = u.returning.map(Publish.returning(appliedNew, u.withPrefix, _))
       // changes() counts only the applied rows (measured)
       SessionChanges.record(spark, () => appliedPairs.count())
       if (ForeignKeys.enforcing(spark)) {
@@ -562,8 +591,8 @@ object Mutate {
           "update", assigned = Some(assigns.keys))
       }
       Constraints.assertUniqueOn(keys, merged, Some(appliedNew))
-      rebind(spark, u.table, merged, ret)
-    } finally pairs.unpersist()
+      Publish.commit(spark, u.table, merged, ret)
+    }
   }
 
   /** UPDATE OR FAIL's would-violation probe. SQLite's OR FAIL differs
@@ -574,18 +603,15 @@ object Mutate {
     * would occur, and declines named otherwise — checked here before
     * the rewrite: (a) a matched row whose post-assignment image fails
     * NOT NULL/CHECK, (b) any conflict the assignments would create on
-    * a key they reach (`keys`): against the untouched slice, two
-    * matched rows on one new key, or a matched row landing on
-    * another's pre-update key. All probes are bounded by the
-    * statement's matched slice plus the same narrow untouched-key
-    * projection the OR IGNORE / OR REPLACE routes pay. */
+    * a key they reach (`keys`): against the untouched slice, or
+    * between matched rows ([[probeIntraCollisions]]). All probes are
+    * bounded by the statement's matched slice plus the same narrow
+    * untouched-key projection the OR IGNORE / OR REPLACE routes pay. */
   private def failWouldViolate(spark: SparkSession, u: SqlDml.Update,
                                base: DataFrame,
                                assigns: Map[String, String],
                                cond0: String,
                                keys: Seq[Constraints.UniqueKey]): Unit = {
-    import org.apache.spark.sql.functions._
-    import org.apache.spark.sql.types.BooleanType
     def decline(what: String): Nothing =
       throw new UnsupportedOperationException(
         s"UPDATE OR FAIL: the statement would hit $what mid-statement; " +
@@ -599,52 +625,20 @@ object Mutate {
       if (!bad.isEmpty) decline("a NOT NULL/CHECK violation")
     }
     if (keys.isEmpty) return
-    val oldS = base.schema.fields
-      .map(f => s"'${esc(f.name)}', ${q(f.name)}").mkString(", ")
-    val flatNew = base.schema.fields.map { f =>
-      val v = assigns.get(f.name.toLowerCase) match {
-        case Some(e) => strictCastSql(spark, u, e, f)
-        case None    => q(f.name)
-      }
-      s"$v AS ${q(f.name)}"
-    }.mkString(", ")
-    val pairs = spark.sql((u.withPrefix +
-      s" SELECT named_struct($oldS) AS __graft_old, $flatNew" +
-      s" FROM ${q(u.table)} WHERE $cond0").trim).persist()
-    try {
+    withMatchedPairs(spark, u, base, assigns, cond0) { pairs =>
       val untouched = spark.sql((u.withPrefix +
         s" SELECT * FROM ${q(u.table)} WHERE NOT ($cond0)").trim)
       keys.foreach { k =>
-        val es = k.exprs.map(expr)
-        def inScope(df: DataFrame): DataFrame = {
-          val pred = k.where.map(w => coalesce(
-            expr(w).cast(BooleanType), lit(false))).getOrElse(lit(true))
-          df.filter(pred).filter(es.map(_.isNotNull).reduce(_ && _))
-        }
         // conflicts the assignments would create against rows the
         // statement does not touch: anything dropConflicting removes
         if (Constraints.dropConflicting(pairs, untouched, k).count() <
             pairs.count())
           decline(s"a UNIQUE conflict on ${k.label}")
-        val newK = inScope(pairs)
-        if (!newK.groupBy(es: _*).count()
-            .filter(col("count") > 1L).limit(1).isEmpty)
-          decline(s"two rows landing on one ${k.label} value")
-        val oldImg = pairs.select(col("__graft_old").as("__graft_oldj"),
-          col("__graft_old.*"))
-        val oldK = inScope(oldImg).select(
-          (k.exprs.zipWithIndex.map { case (e, i) =>
-            expr(e).as(s"__graft_ok$i")
-          } :+ col("__graft_oldj")).toIndexedSeq: _*)
-        val cross = newK.join(oldK,
-          k.exprs.zipWithIndex.map { case (e, i) =>
-            expr(e) === oldK(s"__graft_ok$i")
-          }.reduce(_ && _) &&
-            !(col("__graft_old") <=> col("__graft_oldj")))
-        if (!cross.limit(1).isEmpty)
-          decline(s"a row landing on another's pre-update ${k.label} value")
+        probeIntraCollisions(pairs, k)(
+          decline(s"two rows landing on one ${k.label} value"),
+          decline(s"a row landing on another's pre-update ${k.label} value"))
       }
-    } finally pairs.unpersist()
+    }
   }
 
   /** SQLite's UPDATE-FROM join form (lang_update.html §2): each target
@@ -663,23 +657,9 @@ object Mutate {
     * crosses the driver.
     */
   private def runUpdateFrom(spark: SparkSession, u: SqlDml.Update): DataFrame = {
-    import org.apache.spark.sql.functions.{col, monotonically_increasing_id}
-    val base = resolve(spark, u.table, "UPDATE")
-    val known = base.schema.fields.map(_.name.toLowerCase).toSet
-    val unknown = u.assigns.map(_._1).filterNot(c => known(c.toLowerCase))
-    if (unknown.nonEmpty)
-      throw new IllegalArgumentException(
-        s"UPDATE ${u.table}: no such column(s) ${unknown.mkString(", ")}")
-    Rowid.guardUpdateAssigns(spark, u.table, u.assigns.map(_._1))
-    guardGeneratedAssigns(spark, u.table, u.assigns.map(_._1))
-    val assigns = u.assigns.map { case (c, e) => c.toLowerCase -> e }.toMap
-    val gen = Upsert.nextGeneration()
-    val rid = "__graft_rid"
-    val baseR = base.withColumn(rid, monotonically_increasing_id())
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    val bview = s"graft_updf_src_g$gen"
-    baseR.createOrReplaceTempView(bview)
-    try {
+    import org.apache.spark.sql.functions.col
+    val (base, assigns) = updateTarget(spark, u)
+    withRowIds(base, "updf_src") { (baseR, bview) =>
       // alias the rid-tagged base AS the target table name so both
       // bare and `table.col`-qualified references resolve against it
       // (the original view stays registered — a self-reference in the
@@ -721,12 +701,8 @@ object Mutate {
         .join(matched.select(col("__rid").as(rid)), Seq(rid), "left_anti")
         .drop(rid)
       val merged = untouched.unionByName(matched.drop("__rid"))
-      val ret = u.returning.map { r =>
-        val rv = s"graft_updf_ret_g$gen"
-        matched.drop("__rid").createOrReplaceTempView(rv)
-        try spark.sql(s"${u.withPrefix} SELECT $r FROM `$rv`".trim)
-        finally () // view dropped after rebind materializes it
-      }
+      val ret = u.returning.map(
+        Publish.returning(matched.drop("__rid"), u.withPrefix, _))
       // changes(): one count per matched target row (the captured
       // plan stays computable after the view drops / cache release)
       SessionChanges.record(spark, () => matched.count())
@@ -766,19 +742,11 @@ object Mutate {
           Constraints.keysChangedBy(spark, u.table, base.columns.toSeq,
             assigns.keys),
           merged, Some(matched.drop("__rid")))
-        val out = rebind(spark, u.table, merged, ret)
+        val out = Publish.commit(spark, u.table, merged, ret)
         slice.foreach(sl => Triggers.fire(spark, u.table, "update",
           setColNames, "after", sl))
         out
       } finally slice.foreach(_.unpersist())
-    } finally {
-      // the RETURNING helper view drops here (not just on success) so
-      // a raising trigger / failing rebind can't leak it into the
-      // session catalog; dropTempView on the no-RETURNING path is a
-      // false-returning no-op
-      spark.catalog.dropTempView(s"graft_updf_ret_g$gen")
-      spark.catalog.dropTempView(bview)
-      baseR.unpersist()
     }
   }
 
@@ -825,7 +793,7 @@ object Mutate {
       val out = ForeignKeys.withPendingRebind(d.table) {
         val merged2 = ForeignKeys.applyParentDelete(spark, d.table,
           spark.table(q(d.table)), merged)
-        rebind(spark, d.table, merged2, ret)
+        Publish.commit(spark, d.table, merged2, ret)
       }
       slice.foreach(sl =>
         Triggers.fire(spark, d.table, "delete", Nil, "after", sl))
@@ -861,7 +829,7 @@ object Mutate {
     * window. Returns None when the statement is effectively
     * un-limited (negative n, no offset) — callers use their plain
     * path. */
-  private def limitedRids(spark: SparkSession, bview: String, rid: String,
+  private def limitedRids(spark: SparkSession, bview: String,
                           withPrefix: String, cond: String,
                           orderBy: Option[String], n: Long, m0: Long)
       : Option[DataFrame] = {
@@ -883,20 +851,12 @@ object Mutate {
     // first m ranks are the OFFSET skip. The window re-reads the order
     // columns through the carried `*`, so arbitrary order expressions
     // stay resolvable.
-    val rvw = s"graft_dml_lim_g${Upsert.nextGeneration()}"
-    top.createOrReplaceTempView(rvw)
-    // the view exists only to give the window SQL a name — the ranked
-    // plan is analyzed (inlined) eagerly, so drop it before returning
-    // rather than leaking a catalog entry per DML statement
-    val ranked =
-      try spark.sql(
-        s"""SELECT __rid FROM (
-           |  SELECT __rid, row_number() OVER (ORDER BY $obys) AS __rn
-           |  FROM `$rvw`
-           |) WHERE __rn > $m ${if (nEff >= 0) s"AND __rn <= ${m + nEff}" else ""}"""
-          .stripMargin)
-      finally spark.catalog.dropTempView(rvw)
-    Some(ranked)
+    Some(Publish.withView(top, "dml_lim")(rvw => spark.sql(
+      s"""SELECT __rid FROM (
+         |  SELECT __rid, row_number() OVER (ORDER BY $obys) AS __rn
+         |  FROM `$rvw`
+         |) WHERE __rn > $m ${if (nEff >= 0) s"AND __rn <= ${m + nEff}" else ""}"""
+        .stripMargin)))
   }
 
   /** `DELETE … [ORDER BY …] LIMIT n [OFFSET m]`
@@ -904,21 +864,15 @@ object Mutate {
     * SQLite the reference runs on): remove at most n WHERE-true rows
     * in the given order. */
   private def runDeleteLimit(spark: SparkSession, d: SqlDml.Delete): DataFrame = {
-    import org.apache.spark.sql.functions.{col, monotonically_increasing_id}
+    import org.apache.spark.sql.functions.col
     declineTriggered(spark, d.table, "delete", Nil, "DELETE … LIMIT")
     val base = resolve(spark, d.table, "DELETE")
     val cond = foldWhere(spark, d.table, d.where)
       .map(w => s"coalesce(($w), false)").getOrElse("true")
     val n = evalConst(spark, d.limit.get, "DELETE LIMIT")
     val m = d.offset.map(evalConst(spark, _, "DELETE OFFSET")).getOrElse(0L)
-    val rid = "__graft_rid"
-    val baseR = base.withColumn(rid, monotonically_increasing_id())
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    val bview = s"graft_dmll_src_g${Upsert.nextGeneration()}"
-    baseR.createOrReplaceTempView(bview)
-    try {
-      limitedRids(spark, bview, rid, d.withPrefix, cond, d.orderBy,
-          n, m) match {
+    withRowIds(base, "dmll_src") { (baseR, bview) =>
+      limitedRids(spark, bview, d.withPrefix, cond, d.orderBy, n, m) match {
         case None =>
           // effectively un-limited: the plain path (no rid pass)
           runDelete(spark, d.copy(limit = None, offset = None,
@@ -928,23 +882,15 @@ object Mutate {
           SessionChanges.record(spark, () => vk.count()) // ≤ n rows
           val merged = baseR.join(vk, Seq(rid), "left_anti")
             .select(base.columns.map(col): _*)
-          val ret = d.returning.map { r =>
-            val rv = s"graft_dmll_ret_g${Upsert.nextGeneration()}"
+          val ret = d.returning.map(Publish.returning(
             baseR.join(vk, Seq(rid), "left_semi")
-              .select(base.columns.map(col): _*)
-              .createOrReplaceTempView(rv)
-            try spark.sql(s"${d.withPrefix} SELECT $r FROM `$rv`".trim)
-            finally spark.catalog.dropTempView(rv)
-          }
+              .select(base.columns.map(col): _*), d.withPrefix, _))
           ForeignKeys.withPendingRebind(d.table) {
             val merged2 =
               ForeignKeys.applyParentDelete(spark, d.table, base, merged)
-            rebind(spark, d.table, merged2, ret)
+            Publish.commit(spark, d.table, merged2, ret)
           }
       }
-    } finally {
-      spark.catalog.dropTempView(bview)
-      baseR.unpersist()
     }
   }
 
@@ -952,30 +898,16 @@ object Mutate {
     * apply to at most n WHERE-true rows in the given order; every
     * other row survives unchanged. */
   private def runUpdateLimit(spark: SparkSession, u: SqlDml.Update): DataFrame = {
-    import org.apache.spark.sql.functions.{col, monotonically_increasing_id}
+    import org.apache.spark.sql.functions.col
     declineTriggered(spark, u.table, "update", u.assigns.map(_._1),
       "UPDATE … LIMIT")
-    val base = resolve(spark, u.table, "UPDATE")
-    val known = base.schema.fields.map(_.name.toLowerCase).toSet
-    val unknown = u.assigns.map(_._1).filterNot(c => known(c.toLowerCase))
-    if (unknown.nonEmpty)
-      throw new IllegalArgumentException(
-        s"UPDATE ${u.table}: no such column(s) ${unknown.mkString(", ")}")
-    Rowid.guardUpdateAssigns(spark, u.table, u.assigns.map(_._1))
-    guardGeneratedAssigns(spark, u.table, u.assigns.map(_._1))
-    val assigns = u.assigns.map { case (c, e) => c.toLowerCase -> e }.toMap
+    val (base, assigns) = updateTarget(spark, u)
     val cond = foldWhere(spark, u.table, u.where)
       .map(w => s"coalesce(($w), false)").getOrElse("true")
     val n = evalConst(spark, u.limit.get, "UPDATE LIMIT")
     val m = u.offset.map(evalConst(spark, _, "UPDATE OFFSET")).getOrElse(0L)
-    val rid = "__graft_rid"
-    val baseR = base.withColumn(rid, monotonically_increasing_id())
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    val bview = s"graft_updl_src_g${Upsert.nextGeneration()}"
-    baseR.createOrReplaceTempView(bview)
-    try {
-      limitedRids(spark, bview, rid, u.withPrefix, cond, u.orderBy,
-          n, m) match {
+    withRowIds(base, "updl_src") { (baseR, bview) =>
+      limitedRids(spark, bview, u.withPrefix, cond, u.orderBy, n, m) match {
         case None =>
           runUpdate(spark, u.copy(limit = None, offset = None,
             orderBy = None))
@@ -984,8 +916,6 @@ object Mutate {
           SessionChanges.record(spark, () => vk.count()) // ≤ n rows
           // victims all satisfy the WHERE — assignments apply
           // unconditionally, reading the OLD row (SQLite rule)
-          val vv = s"graft_updl_vic_g${Upsert.nextGeneration()}"
-          baseR.join(vk, Seq(rid), "left_semi").createOrReplaceTempView(vv)
           val proj = base.schema.fields.map { f =>
             assigns.get(f.name.toLowerCase) match {
               case Some(e) =>
@@ -993,21 +923,16 @@ object Mutate {
               case None => q(f.name)
             }
           }
-          // the scratch views only name plans for SQL text — analysis
-          // inlines them, so they drop immediately (no catalog leak)
           val updated = recomputeGenerated(spark, u.table, base,
-            try spark.sql(
-              s"${u.withPrefix} SELECT ${proj.mkString(", ")} FROM `$vv`".trim)
-            finally spark.catalog.dropTempView(vv))
+            Publish.withView(baseR.join(vk, Seq(rid), "left_semi"),
+              "updl_vic")(vv => spark.sql(
+                s"${u.withPrefix} SELECT ${proj.mkString(", ")} FROM `$vv`"
+                  .trim)))
           val untouched = baseR.join(vk, Seq(rid), "left_anti")
             .select(base.columns.map(col): _*)
           val merged = untouched.unionByName(updated)
-          val ret = u.returning.map { r =>
-            val rv = s"graft_updl_ret_g${Upsert.nextGeneration()}"
-            updated.createOrReplaceTempView(rv)
-            try spark.sql(s"${u.withPrefix} SELECT $r FROM `$rv`".trim)
-            finally spark.catalog.dropTempView(rv)
-          }
+          val ret = u.returning.map(
+            Publish.returning(updated, u.withPrefix, _))
           if (ForeignKeys.enforcing(spark)) {
             ForeignKeys.assertChildRows(spark, u.table, updated, merged,
               Some(assigns.keySet))
@@ -1018,17 +943,11 @@ object Mutate {
             Constraints.keysChangedBy(spark, u.table, base.columns.toSeq,
               assigns.keys),
             merged, Some(updated))
-          rebind(spark, u.table, merged, ret)
+          Publish.commit(spark, u.table, merged, ret)
       }
-    } finally {
-      spark.catalog.dropTempView(bview)
-      baseR.unpersist()
     }
   }
 
-  /** Materialize the rewritten table (and the RETURNING slice, if any
-    * — FIRST, while it still reads the old binding), re-bind the view,
-    * return RETURNING rows or the new table state. */
   /** The LIMIT DML variants do not fire triggers (their affected-row
     * slices interleave with the ordering machinery this set-based
     * engine does not re-derive; trigger bodies never carry LIMIT —
@@ -1041,25 +960,4 @@ object Mutate {
       throw new UnsupportedOperationException(
         s"$form does not fire the trigger(s) registered on $table; " +
           s"drop the trigger or use the plain statement form")
-
-  private def rebind(spark: SparkSession, table: String,
-                     merged: DataFrame, ret: Option[DataFrame]): DataFrame = {
-    val dir = "target/graft_tmp/mutate_" +
-      table.replaceAll("[^A-Za-z0-9_]", "_") + "_g" + Upsert.nextGeneration()
-    val retOut = ret.map { r =>
-      r.write.mode("overwrite").parquet(dir + "_ret")
-      spark.read.parquet(dir + "_ret")
-    }
-    // NOT NULL/CHECK enforcement rides the materializing write (a
-    // row-local conditional — exec.Constraints): an UPDATE assigning
-    // a violating value raises SQLite's error here and Atomic rolls
-    // the statement back; DELETEs only remove rows, so the guard is
-    // identity-valued for them
-    Constraints.guard(spark, table, merged)
-      .write.mode("overwrite").parquet(dir)
-    val out = spark.read.parquet(dir)
-    out.createOrReplaceTempView(table)
-    Triggers.bumpVersion(spark, table)
-    retOut.getOrElse(out)
-  }
 }

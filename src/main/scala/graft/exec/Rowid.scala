@@ -91,10 +91,7 @@ object Rowid {
         df.withColumn("rowid", df(Ddl.quote(pk)).cast(LongType))
       case None => withSequentialRowid(spark, df, 1L)
     }
-    val dir = "target/graft_tmp/rowid_" +
-      table.replaceAll("[^A-Za-z0-9_]", "_") + "_g" + Upsert.nextGeneration()
-    withId.write.mode("overwrite").parquet(dir)
-    spark.read.parquet(dir).createOrReplaceTempView(table)
+    Publish.materialize(spark, withId, table).createOrReplaceTempView(table)
     val s = state(spark)
     s.synchronized(s.tables.put(table.toLowerCase, alias))
   }

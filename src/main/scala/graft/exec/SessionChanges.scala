@@ -13,7 +13,7 @@ import org.apache.spark.sql.SparkSession
   * `total_changes()` — the rewrite itself stays one pass. The captured
   * plans stay computable after the view re-binds (analysis inlined the
   * old binding) and after scratch caches unpersist (lineage recompute);
-  * superseded generation files are never deleted within a session.
+  * superseded generations stay on disk ([[Publish]]).
   *
   * One State per SparkSession ([[graft.SessionLocal]]) — a stopped
   * session's counters (and the plan closures its thunks hold) are

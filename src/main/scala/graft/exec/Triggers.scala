@@ -92,8 +92,6 @@ object Triggers {
     override def initialValue() = scala.collection.mutable.Set.empty[String]
   }
 
-  private val sliceCounter = new java.util.concurrent.atomic.AtomicLong()
-
   // --------------------------------------------------------- create
 
   /** Case-insensitive scan (outside quotes) for `NEW.` / `OLD.`. */
@@ -747,11 +745,9 @@ object Triggers {
     if (!prePersisted) df.persist()
     try {
       if (df.isEmpty) return
-      val view = s"graft_trig_${sliceCounter.incrementAndGet()}"
-      df.createOrReplaceTempView(view)
       // body DML counts toward total_changes() only, and leaves
       // last_insert_rowid() untouched — SQLite's trigger accounting
-      try SessionChanges.inTriggerBody {
+      Publish.withView(df, "trig")(view => SessionChanges.inTriggerBody {
         trigs.foreach { t =>
           // WHEN may contain RAISE too (measured: SQLite accepts it
           // and fires it while evaluating the clause) — rewritten the
@@ -764,7 +760,7 @@ object Triggers {
           try t.body.foreach(b => runBody(spark, rel, rewriteRaise(b)))
           finally active.get() -= t.name.toLowerCase
         }
-      } finally spark.catalog.dropTempView(view)
+      })
     } finally if (!prePersisted) df.unpersist()
   }
 

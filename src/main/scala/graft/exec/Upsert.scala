@@ -10,9 +10,8 @@ import graft.text2sql.SqlDml
   *
   *   merged = updates ∪ (base ⟕anti updates on key)
   *
-  * then the merged result is MATERIALIZED (parquet) and the temp view
-  * re-bound to it — the statement's observable effect is the same
-  * table-state transition SQLite performs in place. At 100 TB this is
+  * then the merged result publishes through [[Publish.commit]] (new
+  * parquet generation, view re-bound). At 100 TB this is
   * the standard MERGE shape: the anti-join shuffles on the key (or
   * broadcasts the update set when small — AQE decides), only rewritten
   * files are produced, and no row ever crosses the driver.
@@ -417,30 +416,11 @@ object Upsert {
         }
         else (base.unionAll(admitted), admitted, admitted, None)
     }
-    // copy-on-write: materialize BEFORE re-binding the view (the merge
-    // plan reads the old binding; a lazy re-registration would
-    // recurse). The dir carries a per-statement generation counter —
-    // a SECOND upsert into the same table reads the parquet the FIRST
-    // one wrote, and overwriting the path a plan is reading from is an
-    // analysis error (or worse). Superseded generations stay on disk
-    // (scratch space, bounded by statement count) because a caller may
-    // still hold a DataFrame over the previous binding.
-    val dir = "target/graft_tmp/upsert_" +
-      stmt.table.replaceAll("[^A-Za-z0-9_]", "_") +
-      "_g" + Upsert.generation.incrementAndGet()
     // RETURNING sees the affected slice with its FINAL values (SQLite
-    // lang_returning: inserted rows, plus DO-UPDATE-updated rows) —
-    // materialized BEFORE the re-bind so the handed-back result can't
-    // be perturbed by later statements
-    val ret = stmt.returning.map { r =>
-      val rv = "graft_ret_g" + Upsert.generation.get()
-      affected.createOrReplaceTempView(rv)
-      try {
-        spark.sql(s"SELECT $r FROM `$rv`")
-          .write.mode("overwrite").parquet(dir + "_ret")
-      } finally spark.catalog.dropTempView(rv)
-      spark.read.parquet(dir + "_ret")
-    }
+    // lang_returning: inserted rows, plus DO-UPDATE-updated rows);
+    // [[Publish.commit]] materializes it BEFORE the re-bind so the
+    // handed-back result can't be perturbed by later statements
+    val ret = stmt.returning.map(Publish.returning(affected, "", _))
     // changes(): the affected slice (inserted rows; OR-IGNORE
     // survivors only; DO-UPDATE-updated + appended rows — the same
     // set RETURNING hands back, which is SQLite's count). Lazy: only
@@ -537,13 +517,7 @@ object Upsert {
         if (!(effReplace && (mergedFk eq merged)))
           Constraints.assertUnique(spark, stmt.table, mergedFk,
             Some(affected))
-        // the NOT NULL/CHECK guard rides the materializing write — a
-        // violating row raises SQLite's error and Atomic rolls back
-        Constraints.guard(spark, stmt.table, mergedFk)
-          .write.mode("overwrite").parquet(dir)
-        val o = spark.read.parquet(dir)
-        o.createOrReplaceTempView(stmt.table)
-        Triggers.bumpVersion(spark, stmt.table)
+        val o = Publish.commit(spark, stmt.table, mergedFk, ret)
         if (fkMapNeeded) {
           updOldNew.foreach(m =>
             ForeignKeys.applyParentUpdate(spark, stmt.table, m))
@@ -570,7 +544,7 @@ object Upsert {
           if (!r.isNullAt(0))
             SessionKeys.bumpSeq(spark, stmt.table, r.getLong(0))
         }
-      ret.getOrElse(out)
+      out
     } finally {
       updSlice.foreach(_.unpersist())
       beforeSlice.foreach(_.unpersist())
@@ -964,11 +938,4 @@ object Upsert {
       .drop((key.exprs.indices.map(i => s"__${flag}b$i") :+
         s"__${flag}hit"): _*)
   }
-
-  private val generation = new java.util.concurrent.atomic.AtomicLong(0L)
-
-  /** Shared generation counter for copy-on-write materializations
-    * (upserts and CTAS) — every statement gets a fresh dir, so no
-    * statement can overwrite a path an earlier binding still reads. */
-  private[exec] def nextGeneration(): Long = generation.incrementAndGet()
 }
