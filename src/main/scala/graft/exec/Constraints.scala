@@ -141,18 +141,67 @@ object Constraints {
     out.toString
   }
 
-  /** One declared unique key: `exprs` are executable Spark-SQL item
-    * texts — a plain column key carries its backtick-quoted names, an
-    * expression index its translated expressions; `label` is the text
-    * SQLite's UNIQUE error names (`t.c1, t.c2` for column keys,
-    * `index 'name'` for expression keys — both measured). A PARTIAL
-    * index carries its executable predicate in `where`: uniqueness
-    * applies only among predicate-TRUE rows (measured — exempt rows
-    * neither conflict nor displace). */
+  /** One key tuple: a declared unique key, or a FOREIGN KEY's child or
+    * parent column list ([[plainKey]]). `exprs` are executable
+    * Spark-SQL item texts — a column key carries its backtick-quoted
+    * names, wrapped in the column's collation fold where it has one
+    * ([[collatedKey]]), an expression index its translated
+    * expressions; `label` is the text SQLite's UNIQUE error names
+    * (`t.c1, t.c2` for column keys, `index 'name'` for expression keys
+    * — both measured). A PARTIAL index carries its executable
+    * predicate in `where`.
+    *
+    * A row's key is LIVE when the row is in scope (`where` is TRUE —
+    * FALSE or NULL exempts it) and no member is NULL. Only live keys
+    * conflict, displace or reference (measured: two NULL keys coexist,
+    * rows outside a partial index neither conflict nor displace, and a
+    * child tuple with a NULL member satisfies its FOREIGN KEY).
+    *
+    * This is the one place a key tuple becomes columns: [[keyed]] and
+    * [[tuples]] project live tuples under aliases no other code names,
+    * [[matches]] joins on them and [[matched]] reads an outer join's
+    * hit. Every member builds a plan and runs no job. */
   final case class UniqueKey(label: String, exprs: Seq[String],
-                             where: Option[String] = None)
+                             where: Option[String] = None) {
+    private def alias(i: Int) = s"__graft_key$i"
 
-  /** A column-list key in [[UniqueKey]] form (BINARY comparison). */
+    /** TRUE on rows in the key's scope (every row without `where`). */
+    def inScope: Column = where.fold(lit(true))(w =>
+      coalesce(expr(w).cast(BooleanType), lit(false)))
+
+    /** TRUE on rows whose key is live. */
+    def live: Column = exprs.map(expr(_).isNotNull).foldLeft(inScope)(_ && _)
+
+    /** Each live row of `df` as its key tuple under the key's aliases,
+      * followed by the `carry` columns. */
+    def keyed(df: DataFrame, carry: Column*): DataFrame =
+      df.filter(live).select(exprs.zipWithIndex.map { case (e, i) =>
+        expr(e).as(alias(i))
+      } ++ carry: _*)
+
+    /** The distinct live key tuples of `df`; with `carry`, each tuple
+      * keeps those columns of one of its rows (an arbitrary one when
+      * several share it). */
+    def tuples(df: DataFrame, carry: Column*): DataFrame =
+      keyed(df, carry: _*).dropDuplicates(exprs.indices.map(alias))
+
+    /** The condition joining a frame to `tuples` ([[keyed]] or
+      * [[tuples]] of this key, or of a key of the same arity): the row
+      * in scope and each member equal. The key's expressions resolve by
+      * name against the joined frame, since the tuple side carries only
+      * its aliases and `carry` columns — so a frame sharing lineage
+      * with the tuples joins unambiguously. */
+    def matches(tuples: DataFrame): Column =
+      exprs.zipWithIndex.map { case (e, i) => expr(e) === tuples(alias(i)) }
+        .foldLeft(inScope)(_ && _)
+
+    /** After an outer join on [[matches]]: TRUE where the row found a
+      * tuple. */
+    def matched(tuples: DataFrame): Column = tuples(alias(0)).isNotNull
+  }
+
+  /** A column-list key compared BINARY — a FOREIGN KEY's child or
+    * parent columns. */
   def plainKey(table: String, cols: Seq[String]): UniqueKey =
     UniqueKey(cols.map(c => s"$table.$c").mkString(", "),
       cols.map(Ddl.quote))
@@ -264,9 +313,8 @@ object Constraints {
   }
 
   /** SQLite's `UNIQUE constraint failed: <label>` over the
-    * POST-STATEMENT state: any fully-non-NULL key tuple appearing
-    * twice aborts (NULL members never conflict — measured; two NULL
-    * keys coexist). One narrow group-count per declared key, bounded
+    * POST-STATEMENT state: any live key ([[UniqueKey]]) appearing
+    * twice aborts. One narrow group-count per declared key, bounded
     * by the statement's write — session-declared tables only.
     *
     * Which keys a write re-checks follows SQLite, which probes only
@@ -297,38 +345,18 @@ object Constraints {
     if (keys.isEmpty) return
     val probe = probe0 // forced once, only when keys exist
     keys.foreach { k =>
-      val es = k.exprs.map(expr)
-      val inScope = k.where match {
-        case Some(w) => merged.filter(coalesce(
-          expr(w).cast(BooleanType), lit(false)))
-        case None => merged
-      }
-      val nonNull = inScope.filter(es.map(_.isNotNull).reduce(_ && _))
+      val live = merged.filter(k.live)
       // scale guard: a new duplicate must involve a key the STATEMENT
       // wrote — with `probe` (the incoming/updated slice) the count
       // runs over the semi-joined sliver, O(batch) instead of
       // O(table) per key (rows already in the table passed this check
       // at their own write). SQLite's index probe has the same cost
       // shape.
-      val scoped = probe match {
-        case Some(p) =>
-          val pin = k.where match {
-            case Some(w) => p.filter(coalesce(
-              expr(w).cast(BooleanType), lit(false)))
-            case None => p
-          }
-          val pk = pin.select(k.exprs.zipWithIndex.map { case (e2, i) =>
-              expr(e2).as(s"__uq$i")
-            }.toIndexedSeq: _*)
-            .filter(k.exprs.indices.map(i => col(s"__uq$i").isNotNull)
-              .reduce(_ && _))
-            .distinct()
-          nonNull.join(pk, k.exprs.zipWithIndex.map { case (e2, i) =>
-              expr(e2) === pk(s"__uq$i")
-            }.reduce(_ && _), "left_semi")
-        case None => nonNull
+      val scoped = probe.fold(live) { p =>
+        val written = k.tuples(p)
+        live.join(written, k.matches(written), "left_semi")
       }
-      val dup = scoped.groupBy(es: _*)
+      val dup = scoped.groupBy(k.exprs.map(expr): _*)
         .count().filter(col("count") > 1L).limit(1)
       if (!dup.isEmpty)
         throw new IllegalArgumentException(
@@ -336,39 +364,24 @@ object Constraints {
     }
   }
 
-  /** Drop `df` rows whose fully-non-NULL key tuple already exists in
-    * `base` — the skip/displacement primitive of DO NOTHING /
-    * OR IGNORE / OR REPLACE over one declared key. NULL-keyed rows
-    * never match (anti-join equality), SQLite's rule. */
+  /** Drop `df` rows whose live key already exists in `base` — the
+    * skip/displacement primitive of DO NOTHING / OR IGNORE / OR
+    * REPLACE over one declared key. */
   def dropConflicting(df: DataFrame, base: DataFrame,
                       key: UniqueKey): DataFrame = {
-    val basePred = key.where.map(w =>
-      coalesce(expr(w).cast(BooleanType), lit(false))).getOrElse(lit(true))
-    val bk = base.filter(basePred)
-      .select(key.exprs.zipWithIndex.map { case (e, i) =>
-        expr(e).as(s"__uk$i")
-      }.toIndexedSeq: _*)
-      .filter(key.exprs.indices.map(i => col(s"__uk$i").isNotNull)
-        .reduce(_ && _))
-      .distinct()
-    // a PARTIAL key's predicate rides the join condition: a left row
-    // outside the predicate matches nothing, so it always survives
-    val leftPred = key.where.map(w =>
-      coalesce(expr(w).cast(BooleanType), lit(false))).getOrElse(lit(true))
-    df.join(bk, leftPred && key.exprs.zipWithIndex.map { case (e, i) =>
-        expr(e) === bk(s"__uk$i")
-      }.reduce(_ && _), "left_anti")
+    val taken = key.tuples(base)
+    df.join(taken, key.matches(taken), "left_anti")
   }
 
   /** Batch-internal one-winner-per-key dedup, settled set-based from
     * SQLite's row-at-a-time processing: rows are position-tagged in
-    * source order and each fully-non-NULL key keeps its LATEST row
-    * (`keepLast` — the REPLACE algorithm's outcome) or its EARLIEST
-    * (DO NOTHING / OR IGNORE: the first row inserts, later conflictors
-    * skip); NULL-key rows pass through untouched (they conflict with
-    * nothing). Applied per declared key in declaration order —
-    * equivalent to SQLite's sequential resolution for batches whose
-    * displacements don't chain through already-displaced rows. */
+    * source order and each live key keeps its LATEST row (`keepLast`
+    * — the REPLACE algorithm's outcome) or its EARLIEST (DO NOTHING /
+    * OR IGNORE: the first row inserts, later conflictors skip); rows
+    * whose key is not live pass through untouched. Applied per
+    * declared key in declaration order — equivalent to SQLite's
+    * sequential resolution for batches whose displacements don't chain
+    * through already-displaced rows. */
   def dedupPerKey(spark: SparkSession, df: DataFrame,
                   keys: Seq[UniqueKey],
                   keepLast: Boolean): DataFrame = {
@@ -386,18 +399,15 @@ object Constraints {
     val tagged =
       if (hadRowid) tagged0.withColumnRenamed(stash, "rowid") else tagged0
     val resolved = keys.foldLeft(tagged) { (acc, k) =>
-      val es = k.exprs.map(expr)
-      val inScope = k.where.map(p =>
-        coalesce(expr(p).cast(BooleanType), lit(false))).getOrElse(lit(true))
-      val nonNull = es.map(_.isNotNull).reduce(_ && _) && inScope
-      // exempt rows (NULL key / outside a PARTIAL index's predicate) must
-      // not share a partition with in-scope rows on the same key value —
-      // they'd inflate the in-scope row's row_number past 1 and silently
-      // drop it. Partitioning on the scope flag keeps them apart.
-      val w = Window.partitionBy((es :+ nonNull.cast(IntegerType)): _*)
+      // rows whose key is not live must not share a partition with
+      // live rows on the same key value — they'd inflate the live
+      // row's row_number past 1 and silently drop it. Partitioning on
+      // the liveness flag keeps them apart.
+      val w = Window.partitionBy((k.exprs.map(expr) :+
+          k.live.cast(IntegerType)): _*)
         .orderBy(if (keepLast) col(pos).desc else col(pos).asc)
       acc.withColumn("__graft_urn",
-          when(nonNull, row_number().over(w)).otherwise(lit(1)))
+          when(k.live, row_number().over(w)).otherwise(lit(1)))
         .filter(col("__graft_urn") === 1).drop("__graft_urn")
     }
     resolved.select(df.columns.map(c => col(Ddl.quote(c))): _*)

@@ -227,25 +227,29 @@ object ForeignKeys {
     }
   }
 
-  /** `rows`'s FK tuples (childCols) with NO match in `parentDf[pcols]`
-    * — the right side projects to freshly-aliased columns so self-
-    * referential FKs (shared lineage) join unambiguously. Filtering to
-    * all-non-null first is SQLite's rule: any NULL in the child tuple
-    * satisfies the constraint. */
-  private def orphansOf(rows: DataFrame, childCols: Seq[String],
+  /** [[resolveParentCols]] as a key. */
+  private def parentKey(spark: SparkSession, child: String, fk: SqlDml.Fk,
+                        parentDf: DataFrame): Constraints.UniqueKey =
+    Constraints.plainKey(fk.parent,
+      resolveParentCols(spark, child, fk, parentDf))
+
+  /** `fk`'s child columns resolved against `df`'s schema, as a key;
+    * a missing one is SQLite's 'foreign key mismatch' error. */
+  private def childKey(fk: SqlDml.Fk, df: DataFrame, child: String,
+                       parent: String): Constraints.UniqueKey =
+    Constraints.plainKey(child, fk.cols.map { c =>
+      df.columns.find(_.equalsIgnoreCase(c)).getOrElse(
+        throw new IllegalArgumentException(
+          s"""foreign key mismatch - "$child" referencing "$parent""""))
+    })
+
+  /** `rows` whose live child tuple has no match among `parentDf`'s
+    * parent key tuples. */
+  private def orphansOf(rows: DataFrame, child: Constraints.UniqueKey,
                         parentDf: DataFrame,
-                        pcols: Seq[String]): DataFrame = {
-    import org.apache.spark.sql.functions.col
-    val nonNull = rows.filter(
-      childCols.map(c => col(Ddl.quote(c)).isNotNull).reduce(_ && _))
-    val keys = parentDf.select(pcols.zipWithIndex.map { case (c, i) =>
-      col(Ddl.quote(c)).as(s"__fk_p$i")
-    }.toIndexedSeq: _*).distinct()
-    nonNull.join(keys,
-      childCols.zipWithIndex.map { case (cc, i) =>
-        nonNull(Ddl.quote(cc)) === keys(s"__fk_p$i")
-      }.reduce(_ && _),
-      "left_anti")
+                        parent: Constraints.UniqueKey): DataFrame = {
+    val keys = parent.tuples(parentDf)
+    rows.filter(child.live).join(keys, child.matches(keys), "left_anti")
   }
 
   // ------------------------------------------------ foreign_key_check
@@ -290,18 +294,12 @@ object ForeignKeys {
           else lit(null).cast(LongType) // declared-rowid-shadowed edge
         fks.zipWithIndex.map { case (fk, i) =>
           val id = listId(fks.size, i).toLong
-          val childCols = fk.cols.map { c =>
-            child.columns.find(_.equalsIgnoreCase(c)).getOrElse(
-              throw new IllegalArgumentException(
-                s"""foreign key mismatch - "$t" referencing "${fk.parent}""""))
-          }
+          val ck = childKey(fk, child, t, fk.parent)
           val violating = tableOpt(spark, fk.parent) match {
             case None => // missing parent: all non-null rows flag
-              child.filter(childCols.map(c =>
-                col(Ddl.quote(c)).isNotNull).reduce(_ && _))
+              child.filter(ck.live)
             case Some(p) =>
-              orphansOf(child, childCols,
-                p, resolveParentCols(spark, t, fk, p))
+              orphansOf(child, ck, p, parentKey(spark, t, fk, p))
           }
           violating.select(lit(t).as("table"), ridCol.as("rowid"),
             lit(fk.parent).as("parent"), lit(id).as("fkid"))
@@ -348,13 +346,9 @@ object ForeignKeys {
         else tableOpt(spark, fk.parent).getOrElse(
           throw new IllegalArgumentException(
             s"no such table: main.${fk.parent}"))
-      val pcols = resolveParentCols(spark, table, fk, parentDf)
-      val childCols = fk.cols.map { c =>
-        rows.columns.find(_.equalsIgnoreCase(c)).getOrElse(
-          throw new IllegalArgumentException(
-            s"""foreign key mismatch - "$table" referencing "${fk.parent}""""))
-      }
-      if (!orphansOf(rows, childCols, parentDf, pcols).isEmpty) fail()
+      val pk = parentKey(spark, table, fk, parentDf)
+      val ck = childKey(fk, rows, table, fk.parent)
+      if (!orphansOf(rows, ck, parentDf, pk).isEmpty) fail()
     }
   }
 
@@ -410,7 +404,6 @@ object ForeignKeys {
     * cycles back into a rebind-pending table declines visibly. */
   def applyParentDelete(spark: SparkSession, table: String,
                         oldDf: DataFrame, newDf: DataFrame): DataFrame = {
-    import org.apache.spark.sql.functions.col
     if (!enforcing(spark)) return newDf
     val refs = referencing(spark, table)
     if (refs.isEmpty) return newDf
@@ -428,12 +421,12 @@ object ForeignKeys {
         case (childName, _) => childName.equalsIgnoreCase(table)
       }
       selfActs.foreach { case (_, fk) =>
-        val pcols = resolveParentCols(spark, table, fk, oldDf)
-        current = applySelfAction(spark, table, fk, oldDf, current, pcols)
+        val pk = parentKey(spark, table, fk, oldDf)
+        current = applySelfAction(spark, table, fk, oldDf, current, pk)
       }
       childActs.foreach { case (childName, fk) =>
-        val pcols = resolveParentCols(spark, childName, fk, oldDf)
-        applyChildAction(spark, table, childName, fk, oldDf, current, pcols)
+        val pk = parentKey(spark, childName, fk, oldDf)
+        applyChildAction(spark, table, childName, fk, oldDf, current, pk)
       }
     }
     // NO ACTION / RESTRICT: check against the POST-action child state.
@@ -448,9 +441,9 @@ object ForeignKeys {
         if (childName.equalsIgnoreCase(table)) Some(current)
         else tableOpt(spark, childName)
       childState.foreach { childDf =>
-        val pcolsOld = resolveParentCols(spark, childName, fk, oldDf)
-        if (removedReferenced(spark, oldDf, current, pcolsOld,
-            childDf, childName, fk, table)) fail()
+        val pk = parentKey(spark, childName, fk, oldDf)
+        if (removedReferenced(oldDf, current, pk, childDf,
+            childKey(fk, childDf, childName, table))) fail()
       }
     }
     current
@@ -465,45 +458,39 @@ object ForeignKeys {
   private def applySelfAction(spark: SparkSession, table: String,
                               fk: SqlDml.Fk, oldDf: DataFrame,
                               merged: DataFrame,
-                              pcols: Seq[String]): DataFrame =
+                              parent: Constraints.UniqueKey): DataFrame =
     // follow ONLY the chain rooted at keys this statement removes:
     // frontier_0 = the statement's removed keys. A pre-existing
     // dangling row (its parent never existed) references no frontier
     // key and SURVIVES — measured: sqlite3 leaves it, flagged only by
     // foreign_key_check. Seeding from all dangling tuples instead
     // would silently delete it.
-    applySelfActionKeys(spark, table, fk, merged, pcols,
-      removedKeys(oldDf, merged, pcols), None)
+    applySelfActionKeys(spark, table, fk, merged, parent,
+      removedKeys(oldDf, merged, parent), None)
 
   /** [[applySelfAction]] seeded with an EXPLICIT frontier — shared by
     * the DELETE route (frontier = the statement's removed keys) and
     * INSERT OR REPLACE (frontier = the DISPLACED keys, which the same
     * statement re-inserts, so removedKeys would see nothing — yet
-    * SQLite cascades for them, measured). `writtenKeys` (REPLACE route
-    * only) carries the statement's own written key tuples
-    * (__fk_w*-aliased): a cascade victim that IS a statement-written
-    * row declines named, because SQLite resolves that interaction in
-    * VALUES order — measured both ways: (1,NULL),(2,1) keeps the
-    * re-inserted child, (2,1),(1,NULL) cascades it away; same for the
-    * SET NULL arm's re-point. */
+    * SQLite cascades for them, measured). `written` (REPLACE route
+    * only) carries the statement's own written rows: a cascade victim
+    * holding one of their live keys declines named, because SQLite
+    * resolves that interaction in VALUES order — measured both ways:
+    * (1,NULL),(2,1) keeps the re-inserted child, (2,1),(1,NULL)
+    * cascades it away; same for the SET NULL arm's re-point. */
   private def applySelfActionKeys(spark: SparkSession, table: String,
                                   fk: SqlDml.Fk,
                                   merged: DataFrame,
-                                  pcols: Seq[String],
+                                  parent: Constraints.UniqueKey,
                                   frontier0: DataFrame,
-                                  writtenKeys: Option[DataFrame])
+                                  written: Option[DataFrame])
       : DataFrame = {
-    import org.apache.spark.sql.functions.{col, expr, lit, when}
-    val childCols = fk.cols.map { c =>
-      merged.columns.find(_.equalsIgnoreCase(c)).getOrElse(
-        throw new IllegalArgumentException(
-          s"""foreign key mismatch - "$table" referencing "$table""""))
-    }
+    import org.apache.spark.sql.functions.{expr, lit, when}
+    val child = childKey(fk, merged, table, table)
     def guardWritten(hit: DataFrame, what: String): Unit =
-      writtenKeys.foreach { wk =>
-        val isWritten = hit.join(wk, pcols.zipWithIndex.map {
-            case (p, i) => hit(Ddl.quote(p)) <=> wk(s"__fk_w$i")
-          }.reduce(_ && _), "left_semi")
+      written.foreach { w =>
+        val wk = parent.tuples(w)
+        val isWritten = hit.join(wk, parent.matches(wk), "left_semi")
         if (!isWritten.isEmpty)
           throw new UnsupportedOperationException(
             s"INSERT OR REPLACE into $table: a self-referential ON " +
@@ -540,9 +527,7 @@ object ForeignKeys {
                 s"self-referential ON DELETE CASCADE on $table did " +
                   s"not settle within 1000 rounds; delete explicitly")
             val cur = survivors
-            val hitCond = childCols.zipWithIndex.map { case (cc, i) =>
-              cur(Ddl.quote(cc)) === frontier(s"__fk_r$i")
-            }.reduce(_ && _)
+            val hitCond = child.matches(frontier)
             val victims = cur.join(frontier, hitCond, "left_semi")
               .localCheckpoint()
             val vickRdd = ckptRddOf(victims)
@@ -574,9 +559,7 @@ object ForeignKeys {
               val nextRdd = ckptRddOf(next)
               // next round's frontier is shallow over the victims'
               // checkpoint — keep that RDD, free the superseded ones
-              frontier = victims.select(pcols.zipWithIndex.map {
-                case (c, i) => col(Ddl.quote(c)).as(s"__fk_r$i")
-              }.toIndexedSeq: _*).distinct()
+              frontier = parent.tuples(victims)
               survRdd.foreach(_.unpersist(false)); survRdd = nextRdd
               frontRdd.foreach(_.unpersist(false)); frontRdd = vickRdd
               survivors = next
@@ -600,20 +583,13 @@ object ForeignKeys {
         if (removed.isEmpty) return merged
         // a re-point hitting a statement-written row declines
         // (REPLACE route; measured order dependence — see Scaladoc)
-        guardWritten(merged.join(removed,
-          childCols.zipWithIndex.map { case (cc, i) =>
-            merged(Ddl.quote(cc)) === removed(s"__fk_r$i")
-          }.reduce(_ && _), "left_semi"), "would re-point")
-        val marked = merged.join(
-          removed,
-          childCols.zipWithIndex.map { case (cc, i) =>
-            merged(Ddl.quote(cc)) === removed(s"__fk_r$i")
-          }.reduce(_ && _),
-          "left_outer")
+        guardWritten(merged.join(removed, child.matches(removed),
+          "left_semi"), "would re-point")
+        val marked = merged.join(removed, child.matches(removed), "left_outer")
+        val hit = child.matched(removed)
         val dflts = SessionKeys.defaultsFor(spark, table)
         val out = marked.select(merged.columns.map { c =>
-          if (childCols.exists(_.equalsIgnoreCase(c))) {
-            val hit = removed(s"__fk_r0").isNotNull
+          if (fk.cols.exists(_.equalsIgnoreCase(c))) {
             val repl =
               if (fk.onDelete == "SET NULL") lit(null)
               else dflts.get(c.toLowerCase).map(d => expr(d._2))
@@ -626,7 +602,7 @@ object ForeignKeys {
         // at a removed/missing key fails the statement)
         if (fk.onDelete == "SET DEFAULT")
           assertChildRows(spark, table, out, out,
-            Some(childCols.map(_.toLowerCase).toSet))
+            Some(fk.cols.map(_.toLowerCase).toSet))
         out
     }
   }
@@ -639,11 +615,12 @@ object ForeignKeys {
   private def applyChildAction(spark: SparkSession, table: String,
                                childName: String, fk: SqlDml.Fk,
                                oldDf: DataFrame, newDf: DataFrame,
-                               pcols: Seq[String]): Unit =
+                               parent: Constraints.UniqueKey): Unit =
     applyChildActionKeys(spark, table, childName, fk,
-      removedKeys(oldDf, newDf, pcols), fk.onDelete, "DELETE")
+      removedKeys(oldDf, newDf, parent), fk.onDelete, "DELETE")
 
-  /** The action keyed on an explicit removed-key set (__fk_r*-aliased).
+  /** The action keyed on an explicit removed-key set (parent key
+    * [[Constraints.UniqueKey.tuples]]).
     * A statement that removes nothing cascades nothing — no child
     * rewrite, no spurious cycle decline (measured: a zero-row DELETE
     * on a cascade parent is a complete no-op in sqlite3). */
@@ -660,17 +637,13 @@ object ForeignKeys {
           s"set-based engine cannot interleave the writes — break the " +
           s"FK cycle or delete explicitly")
     val childDf = tableOpt(spark, childName).getOrElse(return)
-    val childCols = fk.cols.map { c =>
-      childDf.columns.find(_.equalsIgnoreCase(c)).getOrElse(
-        throw new IllegalArgumentException(
-          s"""foreign key mismatch - "$childName" referencing "$table""""))
-    }
+    val child = childKey(fk, childDf, childName, table)
     Publish.withView(removed, "fkcas")(view => SessionChanges.inTriggerBody {
-      val hitWhere = childCols.map(cc =>
-        s"${Ddl.quote(cc)} IS NOT NULL").mkString(" AND ") +
+      val hitWhere = child.exprs.map(cc => s"$cc IS NOT NULL")
+        .mkString(" AND ") +
         s" AND EXISTS (SELECT 1 FROM `$view` WHERE " +
-        childCols.zipWithIndex.map { case (cc, i) =>
-          s"`$view`.__fk_r$i = ${Ddl.quote(cc)}"
+        child.exprs.zip(removed.columns).map { case (cc, r) =>
+          s"`$view`.`$r` = $cc"
         }.mkString(" AND ") + ")"
       action match {
         case "CASCADE" =>
@@ -680,11 +653,11 @@ object ForeignKeys {
             SqlDml.Delete(childName, Some(hitWhere), None, ""))
         case "SET NULL" =>
           Mutate.runUpdate(spark, SqlDml.Update(childName,
-            childCols.map(c => c -> "NULL"), Some(hitWhere), None, ""))
+            fk.cols.map(c => c -> "NULL"), Some(hitWhere), None, ""))
         case "SET DEFAULT" =>
           val dflts = SessionKeys.defaultsFor(spark, childName)
           Mutate.runUpdate(spark, SqlDml.Update(childName,
-            childCols.map(c =>
+            fk.cols.map(c =>
               c -> dflts.get(c.toLowerCase).map(_._2).getOrElse("NULL")),
             Some(hitWhere), None, ""))
       }
@@ -723,9 +696,10 @@ object ForeignKeys {
     refs.foreach { case (childName, fk) =>
       val pcols = resolveParentCols(spark, childName, fk, parentDf)
       // only rows whose KEY actually changed re-point anything
-      val remap = mapping.filter(pcols.map(p =>
+      val changed = mapping.filter(pcols.map(p =>
           !(col("old").getField(p) <=> col("new").getField(p)))
           .reduce(_ || _))
+      val remap = changed
         .select(pcols.zipWithIndex.flatMap { case (p, i) =>
           Seq(col("old").getField(p).as(s"__fk_o$i"),
             col("new").getField(p).as(s"__fk_n$i"))
@@ -739,31 +713,27 @@ object ForeignKeys {
                 s"back into a table this statement is rewriting; break " +
                 s"the FK cycle or update explicitly")
           val childDf = tableOpt(spark, childName).getOrElse(return)
-          val childCols = fk.cols.map { c =>
-            childDf.columns.find(_.equalsIgnoreCase(c)).getOrElse(
-              throw new IllegalArgumentException(
-                s"""foreign key mismatch - "$childName" referencing "$table""""))
-          }
+          val child = childKey(fk, childDf, childName, table)
           Publish.withView(remap, "fkcas")(view => SessionChanges.inTriggerBody {
-            val joinWhere = childCols.map(cc =>
-              s"${Ddl.quote(cc)} IS NOT NULL").mkString(" AND ") + " AND " +
-              childCols.zipWithIndex.map { case (cc, i) =>
-                s"`$view`.__fk_o$i = ${Ddl.quote(cc)}"
+            val joinWhere = child.exprs.map(cc => s"$cc IS NOT NULL")
+              .mkString(" AND ") + " AND " +
+              child.exprs.zipWithIndex.map { case (cc, i) =>
+                s"`$view`.__fk_o$i = $cc"
               }.mkString(" AND ")
             // one enrichment-merge pass through the UPDATE…FROM route:
             // matched child rows take the NEW key, unmatched rows stay;
             // the child's own triggers fire and its FKs validate
             // against the already-rebound parent
             Mutate.runUpdate(spark, SqlDml.Update(childName,
-              childCols.zipWithIndex.map { case (cc, i) =>
+              fk.cols.zipWithIndex.map { case (cc, i) =>
                 cc -> s"`$view`.__fk_n$i"
               },
               Some(joinWhere), None, "", from = Some(s"`$view`")))
           })
         case act => // SET NULL / SET DEFAULT
           applyChildActionKeys(spark, table, childName, fk,
-            remap.select(pcols.indices.map(i =>
-              col(s"__fk_o$i").as(s"__fk_r$i")).toIndexedSeq: _*),
+            Constraints.plainKey(table, pcols)
+              .tuples(changed.select(col("old.*"))),
             act, "UPDATE")
       }
     }
@@ -788,7 +758,6 @@ object ForeignKeys {
                          displaced0: DataFrame,
                          merged: DataFrame,
                          written: DataFrame): DataFrame = {
-    import org.apache.spark.sql.functions.col
     if (!enforcing(spark)) return merged
     val refs = referencing(spark, table).filter {
       case (_, fk) => isAction(fk.onDelete)
@@ -802,22 +771,13 @@ object ForeignKeys {
     val displaced = displaced0.localCheckpoint()
     if (displaced.isEmpty) return merged // conflict-free: plain insert
     refs.foldLeft(merged) { case (cur, (childName, fk)) =>
-      if (childName.equalsIgnoreCase(table)) {
-        val pcols = resolveParentCols(spark, childName, fk, displaced)
-        val frontier0 = displaced.select(pcols.zipWithIndex.map {
-          case (c, i) => col(Ddl.quote(c)).as(s"__fk_r$i")
-        }.toIndexedSeq: _*).distinct()
-        val writtenKeys = written.select(pcols.zipWithIndex.map {
-          case (c, i) => col(Ddl.quote(c)).as(s"__fk_w$i")
-        }.toIndexedSeq: _*).distinct()
-        applySelfActionKeys(spark, table, fk, cur, pcols, frontier0,
-          Some(writtenKeys))
-      } else {
-        val pcols = resolveParentCols(spark, childName, fk, displaced)
+      val pk = parentKey(spark, childName, fk, displaced)
+      if (childName.equalsIgnoreCase(table))
+        applySelfActionKeys(spark, table, fk, cur, pk, pk.tuples(displaced),
+          Some(written))
+      else {
         applyChildActionKeys(spark, table, childName, fk,
-          displaced.select(pcols.zipWithIndex.map { case (c, i) =>
-            col(Ddl.quote(c)).as(s"__fk_r$i")
-          }.toIndexedSeq: _*).distinct(), fk.onDelete, "DELETE")
+          pk.tuples(displaced), fk.onDelete, "DELETE")
         cur
       }
     }
@@ -834,42 +794,20 @@ object ForeignKeys {
       case _ => None
     }
 
-  /** The key tuples `oldDf` has and `newDf` lacks, freshly aliased
-    * (__fk_r0..n). */
+  /** The live key tuples `oldDf` has and `newDf` lacks. */
   private def removedKeys(oldDf: DataFrame, newDf: DataFrame,
-                          pcols: Seq[String]): DataFrame = {
-    import org.apache.spark.sql.functions.col
-    val pcolsNew = pcols.map(c =>
-      newDf.columns.find(_.equalsIgnoreCase(c)).getOrElse(c))
-    oldDf.select(pcols.zipWithIndex.map { case (c, i) =>
-        col(Ddl.quote(c)).as(s"__fk_r$i")
-      }.toIndexedSeq: _*).distinct()
-      .except(newDf.select(pcolsNew.zipWithIndex.map { case (c, i) =>
-        col(Ddl.quote(c)).as(s"__fk_r$i")
-      }.toIndexedSeq: _*).distinct())
-  }
+                          parent: Constraints.UniqueKey): DataFrame =
+    parent.tuples(oldDf).except(parent.tuples(newDf))
 
-  /** Does any non-null FK tuple of `childDf` reference a key removed
-    * by oldDf → newDf? */
-  private def removedReferenced(spark: SparkSession, oldDf: DataFrame,
-                                newDf: DataFrame, pcols: Seq[String],
-                                childDf: DataFrame, childName: String,
-                                fk: SqlDml.Fk, table: String): Boolean = {
-    import org.apache.spark.sql.functions.col
-    val childCols = fk.cols.map { c =>
-      childDf.columns.find(_.equalsIgnoreCase(c)).getOrElse(
-        throw new IllegalArgumentException(
-          s"""foreign key mismatch - "$childName" referencing "$table""""))
-    }
-    val removed = removedKeys(oldDf, newDf, pcols)
-    val nonNull = childDf.filter(
-      childCols.map(c => col(Ddl.quote(c)).isNotNull).reduce(_ && _))
-    val hit = nonNull.join(removed,
-      childCols.zipWithIndex.map { case (cc, i) =>
-        nonNull(Ddl.quote(cc)) === removed(s"__fk_r$i")
-      }.reduce(_ && _),
-      "left_semi")
-    !hit.isEmpty
+  /** Does any live child tuple of `childDf` reference a key removed by
+    * oldDf → newDf? */
+  private def removedReferenced(oldDf: DataFrame, newDf: DataFrame,
+                                parent: Constraints.UniqueKey,
+                                childDf: DataFrame,
+                                child: Constraints.UniqueKey): Boolean = {
+    val removed = removedKeys(oldDf, newDf, parent)
+    !childDf.filter(child.live).join(removed, child.matches(removed),
+      "left_semi").isEmpty
   }
 
   /** True when none of the parent-key columns `fk` references is in
@@ -895,7 +833,6 @@ object ForeignKeys {
                              actionsApplied: Boolean = false,
                              assigned: Option[Iterable[String]] = None)
       : Unit = {
-    import org.apache.spark.sql.functions.col
     if (!enforcing(spark)) return
     // an UPDATE re-checks only the FKs whose parent key it can change
     // (SQLite's fkParentIsModified); once actions ran, or for a
@@ -917,30 +854,9 @@ object ForeignKeys {
         else if (childName.equalsIgnoreCase(table)) Some(newDf)
         else tableOpt(spark, childName)
       childState.foreach { childDf =>
-        val pcolsOld = resolveParentCols(spark, childName, fk, oldDf)
-        val pcolsNew = pcolsOld.map(c =>
-          newDf.columns.find(_.equalsIgnoreCase(c)).getOrElse(c))
-        // keys the statement removes — freshly aliased so a child that
-        // shares lineage with the old binding joins unambiguously
-        val removed = oldDf.select(pcolsOld.zipWithIndex.map {
-            case (c, i) => col(Ddl.quote(c)).as(s"__fk_r$i")
-          }.toIndexedSeq: _*).distinct()
-          .except(newDf.select(pcolsNew.zipWithIndex.map {
-            case (c, i) => col(Ddl.quote(c)).as(s"__fk_r$i")
-          }.toIndexedSeq: _*).distinct())
-        val childCols = fk.cols.map { c =>
-          childDf.columns.find(_.equalsIgnoreCase(c)).getOrElse(
-            throw new IllegalArgumentException(
-              s"""foreign key mismatch - "$childName" referencing "$table""""))
-        }
-        val nonNull = childDf.filter(
-          childCols.map(c => col(Ddl.quote(c)).isNotNull).reduce(_ && _))
-        val hit = nonNull.join(removed,
-          childCols.zipWithIndex.map { case (cc, i) =>
-            nonNull(Ddl.quote(cc)) === removed(s"__fk_r$i")
-          }.reduce(_ && _),
-          "left_semi")
-        if (!hit.isEmpty) {
+        val pk = parentKey(spark, childName, fk, oldDf)
+        if (removedReferenced(oldDf, newDf, pk, childDf,
+            childKey(fk, childDf, childName, table))) {
           val action = if (verb == "delete") fk.onDelete else fk.onUpdate
           // after [[applyParentUpdate]] ran the actions, any leftover
           // dangle is a genuine violation (SQLite's error), not an

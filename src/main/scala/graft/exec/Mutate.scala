@@ -505,28 +505,14 @@ object Mutate {
   private def probeIntraCollisions(pairs: DataFrame,
                                    k: Constraints.UniqueKey)(
       sharedNew: => Nothing, ontoOld: => Nothing): Unit = {
-    import org.apache.spark.sql.functions._
-    import org.apache.spark.sql.types.BooleanType
-    val es = k.exprs.map(expr)
-    def inScope(df: DataFrame): DataFrame = {
-      val pred = k.where.map(w => coalesce(
-        expr(w).cast(BooleanType), lit(false))).getOrElse(lit(true))
-      df.filter(pred).filter(es.map(_.isNotNull).reduce(_ && _))
-    }
-    val newK = inScope(pairs)
-    if (!newK.groupBy(es: _*).count()
+    import org.apache.spark.sql.functions.{col, expr}
+    val newK = pairs.filter(k.live)
+    if (!newK.groupBy(k.exprs.map(expr): _*).count()
         .filter(col("count") > 1L).limit(1).isEmpty) sharedNew
-    val oldImg = pairs.select(col("__graft_old").as("__graft_oldj"),
-      col("__graft_old.*"))
-    val oldK = inScope(oldImg).select(
-      (k.exprs.zipWithIndex.map { case (e, i) =>
-        expr(e).as(s"__graft_ok$i")
-      } :+ col("__graft_oldj")).toIndexedSeq: _*)
+    val oldK = k.keyed(pairs.select(col("__graft_old").as("__graft_oldj"),
+      col("__graft_old.*")), col("__graft_oldj"))
     val cross = newK.join(oldK,
-      k.exprs.zipWithIndex.map { case (e, i) =>
-        expr(e) === oldK(s"__graft_ok$i")
-      }.reduce(_ && _) &&
-        !(col("__graft_old") <=> col("__graft_oldj")))
+      k.matches(oldK) && !(col("__graft_old") <=> col("__graft_oldj")))
     if (!cross.limit(1).isEmpty) ontoOld
   }
 
@@ -630,9 +616,10 @@ object Mutate {
         s" SELECT * FROM ${q(u.table)} WHERE NOT ($cond0)").trim)
       keys.foreach { k =>
         // conflicts the assignments would create against rows the
-        // statement does not touch: anything dropConflicting removes
-        if (Constraints.dropConflicting(pairs, untouched, k).count() <
-            pairs.count())
+        // statement does not touch: a matched row whose new key an
+        // untouched row holds
+        val taken = k.tuples(untouched)
+        if (!pairs.join(taken, k.matches(taken), "left_semi").isEmpty)
           decline(s"a UNIQUE conflict on ${k.label}")
         probeIntraCollisions(pairs, k)(
           decline(s"two rows landing on one ${k.label} value"),

@@ -27,13 +27,16 @@ object Publish {
   private val generation = new java.util.concurrent.atomic.AtomicLong(0L)
 
   /** Run `body` with `df` registered under a fresh scratch view name,
-    * `graft_<tag>_g<n>`; the view drops when `body` returns or
-    * throws. */
+    * `graft_<tag>_g<n>`; the name is unregistered when `body` returns
+    * or throws. Only the name goes: `Catalog.dropTempView` would also
+    * uncache the plan it names, which is `df`'s own — a slice the
+    * caller persisted around two trigger firings would lose its cache
+    * after the first and re-scan its source for the second. */
   def withView[T](df: DataFrame, tag: String)(body: String => T): T = {
     val name = s"graft_${tag}_g${generation.incrementAndGet()}"
     df.createOrReplaceTempView(name)
     try body(name)
-    finally df.sparkSession.catalog.dropTempView(name)
+    finally df.sparkSession.sessionState.catalog.dropTempView(name)
   }
 
   /** `[WITH …] SELECT <exprs> FROM <slice>` for a RETURNING list,

@@ -158,8 +158,15 @@ object Upsert {
             coalesce(vMax, lit(start - 1)))))
         .drop("__graft_pos")
     }
+    // a VALUES batch answers on the driver from its own rows; any
+    // other source takes one probe job
     def hasNullKey(df: DataFrame, pk: String): Boolean =
-      df.filter(col(pk).isNull).limit(1).count() > 0
+      df.queryExecution.optimizedPlan match {
+        case l: org.apache.spark.sql.catalyst.plans.logical.LocalRelation =>
+          val i = l.output.indexWhere(_.name.equalsIgnoreCase(pk))
+          l.data.exists(_.isNullAt(i))
+        case _ => df.filter(col(pk).isNull).limit(1).count() > 0
+      }
     val named =
       if (rowidAuto && !named0.columns.exists(_.equalsIgnoreCase("rowid")))
         Rowid.aliasOf(spark, stmt.table) match {
@@ -511,7 +518,7 @@ object Upsert {
         // conflicting on another key — all abort here); probed by the
         // statement's own written slice, so the scan is O(batch). The
         // bare REPLACE merge is unique by construction: the batch keeps
-        // one in-scope row per value of every declared key, and every
+        // one live row per value of every declared key, and every
         // base row sharing one is displaced — unless a self-FK action
         // rewrote the merged image, which is checked like any write
         if (!(effReplace && (mergedFk eq merged)))
@@ -612,10 +619,9 @@ object Upsert {
     * MERGE shape again, shuffling on the key only.
     *
     * The key is a [[Constraints.UniqueKey]]: plain column lists,
-    * expression-index keys, and partial-index keys all resolve here —
-    * key expressions evaluate row-locally on both sides, a PARTIAL
-    * key's predicate gates both sides (out-of-scope or NULL-keyed
-    * incoming rows never conflict: they append, SQLite's rule).
+    * expression-index keys, and partial-index keys all resolve here;
+    * an incoming row whose key is not live conflicts with nothing and
+    * appends.
     *
     * Batch-internal key duplicates: SQLite resolves them sequentially
     * by rowid, an order a distributed batch does not have — one
@@ -627,41 +633,25 @@ object Upsert {
                        c: graft.text2sql.SqlDml.OnConflict,
                        table: String)
       : (DataFrame, DataFrame, DataFrame, DataFrame) = {
-    import org.apache.spark.sql.functions.{coalesce, expr, lit, struct, when}
+    import org.apache.spark.sql.functions.{expr, struct, when}
     import org.apache.spark.sql.types.BooleanType
-    val kNames = key.exprs.indices.map(i => s"__gk$i")
-    def scopeCol: Column = key.where.map(w =>
-      coalesce(expr(w).cast(BooleanType), lit(false))).getOrElse(lit(true))
-    // evaluate the key on the incoming side; rows outside a PARTIAL
-    // key's predicate or with a NULL key member never conflict
-    val tagged = key.exprs.zipWithIndex.foldLeft(incoming) {
-        case (df, (e, i)) => df.withColumn(s"__gk$i", expr(e))
-      }.withColumn("__gscope", scopeCol)
-    val eligCond = col("__gscope") &&
-      kNames.map(col(_).isNotNull).reduce(_ && _)
-    val eligible = tagged.filter(eligCond)
-    val ineligible = tagged.filter(!eligCond)
-    val upd = eligible.dropDuplicates(kNames)
-    val excl = upd.select((incoming.columns.map(cn =>
-        col(cn).as("__excl_" + cn)) ++
-      kNames.map(k => col(k).as("__excl" + k)) :+
-      lit(true).as("__excl_hit")).toIndexedSeq: _*)
+    // one incoming row per live key drives the update, its columns
+    // renamed so assignments read them as `excluded.col`
+    val excl = key.tuples(incoming,
+      incoming.columns.map(cn => col(cn).as("__excl_" + cn)).toIndexedSeq: _*)
     // alias the base side with the table name so qualified `t.col`
     // references in assignments resolve (dotted names can't alias);
     // bare key expressions resolve to the base side (the excl frame
     // carries only renamed columns)
     val b = if (table.contains(".")) base else base.as(table)
-    val joined = b.join(excl,
-      scopeCol && key.exprs.zipWithIndex.map { case (e, i) =>
-        expr(e) === excl(s"__excl__gk$i")
-      }.reduce(_ && _), "left")
+    val joined = b.join(excl, key.matches(excl), "left")
     val assigns: Map[String, String] = c.assigns.map { case (cn, ex) =>
       val res = base.columns.find(_.equalsIgnoreCase(cn)).getOrElse(
         throw new IllegalArgumentException(
           s"INSERT INTO $table ON CONFLICT DO UPDATE: no such column $cn"))
       res -> graft.text2sql.SqlDml.rewriteExcluded(ex)
     }.toMap // rightmost assignment wins on a repeated column (SQLite)
-    val hit = coalesce(col("__excl_hit"), lit(false))
+    val hit = key.matched(excl)
     val gate = c.updateWhere match {
       // NULL predicate skips the update, as in SQLite — `when` only
       // fires on TRUE, so the raw && carries that semantics. SQLite
@@ -714,21 +704,9 @@ object Upsert {
         acc.withColumn(actual, expr(ex).cast(types(cn)))
       }.select(df.columns.map(col).toIndexedSeq: _*)
     val projected = recompute(projected0)
-    // append = conflict-eligible incoming rows whose key has no
-    // IN-SCOPE base match, plus every ineligible row (out-of-scope /
-    // NULL-keyed — they conflict with nothing, SQLite's rule)
-    val bk = base.filter(scopeCol)
-      .select(key.exprs.zipWithIndex.map { case (e, i) =>
-        expr(e).as(s"__bk$i")
-      }.toIndexedSeq: _*)
-      .filter(key.exprs.indices.map(i => col(s"__bk$i").isNotNull)
-        .reduce(_ && _))
-      .distinct()
-    val appended = eligible.join(bk,
-        kNames.zipWithIndex.map { case (k, i) =>
-          col(k) === bk(s"__bk$i")
-        }.reduce(_ && _), "left_anti")
-      .unionByName(ineligible)
+    // append = incoming rows whose live key has no base match, plus
+    // every row whose key is not live
+    val appended = Constraints.dropConflicting(incoming, base, key)
       .select(base.columns.map(col): _*)
     val merged = projected.drop("__graft_hit").unionAll(appended)
     // RETURNING's affected slice: gate-fired updates (new values) +
@@ -787,7 +765,7 @@ object Upsert {
                        declaredKeys: Seq[Constraints.UniqueKey],
                        verb: String)
       : (DataFrame, DataFrame, DataFrame, Option[DataFrame]) = {
-    import org.apache.spark.sql.functions.{coalesce, col, expr, lit, when}
+    import org.apache.spark.sql.functions.{col, lit, when}
     if (chain.count(_.assigns.nonEmpty) > 1)
       throw new UnsupportedOperationException(
         s"$verb INTO $table with multiple ON CONFLICT DO UPDATE " +
@@ -813,7 +791,7 @@ object Upsert {
     val batch = Constraints.dedupPerKey(spark, admitted, covered,
       keepLast = false)
     // one hit flag per covered key (probe joins against base's
-    // distinct in-scope key tuples — O(batch) rows shuffled per key)
+    // distinct live key tuples — O(batch) rows shuffled per key)
     val tagged = covered.zipWithIndex.foldLeft(batch) {
       case (df, (k, i)) => conflictFlag(df, base, k, s"__gcf$i")
     }
@@ -909,33 +887,15 @@ object Upsert {
     }
   }
 
-  /** Tag `df` with boolean `flag`: TRUE when the row's evaluated key
-    * conflicts with some base row under `key` (in-scope, fully
-    * non-NULL, value present among base's distinct in-scope key
-    * tuples) — one left join against an O(distinct keys) projection,
-    * no fanout. */
+  /** Tag `df` with boolean `flag`: TRUE when the row's live key is
+    * among base's — one left join against its distinct live key
+    * tuples, no fanout. */
   private def conflictFlag(df: DataFrame, base: DataFrame,
                            key: Constraints.UniqueKey,
                            flag: String): DataFrame = {
-    import org.apache.spark.sql.functions.{coalesce, col, expr, lit}
-    import org.apache.spark.sql.types.BooleanType
-    def scope(d: DataFrame): Column = key.where.map(w =>
-      coalesce(expr(w).cast(BooleanType), lit(false))).getOrElse(lit(true))
-    val bk = base.filter(scope(base))
-      .select(key.exprs.zipWithIndex.map { case (e, i) =>
-        expr(e).as(s"__${flag}b$i")
-      }.toIndexedSeq: _*)
-      .filter(key.exprs.indices.map(i => col(s"__${flag}b$i").isNotNull)
-        .reduce(_ && _))
-      .distinct()
-      .withColumn(s"__${flag}hit", lit(true))
-    val joined = df.join(bk,
-      scope(df) && key.exprs.zipWithIndex.map { case (e, i) =>
-        expr(e) === bk(s"__${flag}b$i")
-      }.reduce(_ && _), "left")
-    joined
-      .withColumn(flag, coalesce(col(s"__${flag}hit"), lit(false)))
-      .drop((key.exprs.indices.map(i => s"__${flag}b$i") :+
-        s"__${flag}hit"): _*)
+    val taken = key.tuples(base)
+    df.join(taken, key.matches(taken), "left")
+      .withColumn(flag, key.matched(taken))
+      .drop(taken.columns.toIndexedSeq: _*)
   }
 }

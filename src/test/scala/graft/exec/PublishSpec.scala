@@ -135,4 +135,20 @@ class PublishSpec extends SparkSpec with org.scalatest.BeforeAndAfterAll {
     assert(out.orderBy("id").collect().map(_.getLong(0)).toSeq ==
       Seq(0L, 1L, 2L))
   }
+
+  test("a persisted frame passed through withView stays cached after " +
+      "its view drops") {
+    val df = spark.range(5).selectExpr("id * 2 AS x").persist()
+    try {
+      assert(df.count() == 5L)
+      val level = df.storageLevel
+      assert(level.useMemory || level.useDisk)
+      Publish.withView(df, "keep")(v =>
+        assert(spark.sql(s"SELECT count(*) FROM `$v`").first().getLong(0) ==
+          5L))
+      assert(df.storageLevel == level)
+      assert(!spark.catalog.listTables().collect()
+        .exists(_.name.startsWith("graft_keep_")))
+    } finally df.unpersist()
+  }
 }
