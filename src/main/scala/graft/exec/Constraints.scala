@@ -159,8 +159,9 @@ object Constraints {
     *
     * This is the one place a key tuple becomes columns: [[keyed]] and
     * [[tuples]] project live tuples under aliases no other code names,
-    * [[matches]] joins on them and [[matched]] reads an outer join's
-    * hit. Every member builds a plan and runs no job. */
+    * [[matches]] joins on them (as SQL text, [[matchesSql]]),
+    * [[matched]] reads an outer join's hit and [[sameTuple]] tests row
+    * identity NULL-safely. Every member builds a plan and runs no job. */
   final case class UniqueKey(label: String, exprs: Seq[String],
                              where: Option[String] = None) {
     private def alias(i: Int) = s"__graft_key$i"
@@ -186,14 +187,40 @@ object Constraints {
       keyed(df, carry: _*).dropDuplicates(exprs.indices.map(alias))
 
     /** The condition joining a frame to `tuples` ([[keyed]] or
-      * [[tuples]] of this key, or of a key of the same arity): the row
-      * in scope and each member equal. The key's expressions resolve by
-      * name against the joined frame, since the tuple side carries only
-      * its aliases and `carry` columns — so a frame sharing lineage
-      * with the tuples joins unambiguously. */
+      * [[tuples]] of this key, or of a key of the same arity): the
+      * row's key live and each member equal, so a semi or outer join
+      * needs no filter first; an anti-join keeps the rows whose key is
+      * not live, and filters on [[live]] where those must go. The key's
+      * expressions resolve by name against the joined frame, since the
+      * tuple side carries only its aliases and `carry` columns — so a
+      * frame sharing lineage with the tuples joins unambiguously. */
     def matches(tuples: DataFrame): Column =
       exprs.zipWithIndex.map { case (e, i) => expr(e) === tuples(alias(i)) }
-        .foldLeft(inScope)(_ && _)
+        .foldLeft(live)(_ && _)
+
+    /** The rows of `df` whose key tuple equals one of `others`'
+      * NULL-safely, liveness ignored: two tuples with a NULL in the
+      * same member match. A test of row identity, never a conflict
+      * rule — it over-matches where keys are not live. */
+    def sameTuple(df: DataFrame, others: DataFrame): DataFrame = {
+      val t = others.select(exprs.zipWithIndex.map { case (e, i) =>
+        expr(e).as(alias(i))
+      }: _*).distinct()
+      df.join(t, exprs.zipWithIndex.map { case (e, i) =>
+        expr(e) <=> t(alias(i))
+      }.reduce(_ && _), "left_semi")
+    }
+
+    /** [[matches]] of a key without `where` (a FOREIGN KEY column
+      * list) as Spark-SQL text, for a statement that reads the tuples
+      * through the registered view `view`, whose columns `viewCols`
+      * hold the members in order. */
+    def matchesSql(view: String, viewCols: Seq[String]): String = {
+      require(where.isEmpty, s"$label: a partial key has no SQL match")
+      (exprs.map(e => s"$e IS NOT NULL") ++
+        exprs.zip(viewCols).map { case (e, c) => s"`$view`.`$c` = $e" })
+        .mkString(" AND ")
+    }
 
     /** After an outer join on [[matches]]: TRUE where the row found a
       * tuple. */
@@ -345,16 +372,15 @@ object Constraints {
     if (keys.isEmpty) return
     val probe = probe0 // forced once, only when keys exist
     keys.foreach { k =>
-      val live = merged.filter(k.live)
       // scale guard: a new duplicate must involve a key the STATEMENT
       // wrote — with `probe` (the incoming/updated slice) the count
       // runs over the semi-joined sliver, O(batch) instead of
       // O(table) per key (rows already in the table passed this check
       // at their own write). SQLite's index probe has the same cost
       // shape.
-      val scoped = probe.fold(live) { p =>
+      val scoped = probe.fold(merged.filter(k.live)) { p =>
         val written = k.tuples(p)
-        live.join(written, k.matches(written), "left_semi")
+        merged.join(written, k.matches(written), "left_semi")
       }
       val dup = scoped.groupBy(k.exprs.map(expr): _*)
         .count().filter(col("count") > 1L).limit(1)

@@ -249,6 +249,7 @@ object ForeignKeys {
                         parentDf: DataFrame,
                         parent: Constraints.UniqueKey): DataFrame = {
     val keys = parent.tuples(parentDf)
+    // an anti-join keeps a tuple that is not live: it references nothing
     rows.filter(child.live).join(keys, child.matches(keys), "left_anti")
   }
 
@@ -474,7 +475,7 @@ object ForeignKeys {
     * statement re-inserts, so removedKeys would see nothing — yet
     * SQLite cascades for them, measured). `written` (REPLACE route
     * only) carries the statement's own written rows: a cascade victim
-    * holding one of their live keys declines named, because SQLite
+    * holding one of their key tuples declines named, because SQLite
     * resolves that interaction in VALUES order — measured both ways:
     * (1,NULL),(2,1) keeps the re-inserted child, (2,1),(1,NULL)
     * cascades it away; same for the SET NULL arm's re-point. */
@@ -489,9 +490,11 @@ object ForeignKeys {
     val child = childKey(fk, merged, table, table)
     def guardWritten(hit: DataFrame, what: String): Unit =
       written.foreach { w =>
-        val wk = parent.tuples(w)
-        val isWritten = hit.join(wk, parent.matches(wk), "left_semi")
-        if (!isWritten.isEmpty)
+        // by key tuple NULL-safely: a written row whose parent key has
+        // a NULL member (a nullable UNIQUE parent column) is still one
+        // of the statement's rows, and a hit base row sharing that
+        // tuple declines with it — conservative, never silent
+        if (!parent.sameTuple(hit, w).isEmpty)
           throw new UnsupportedOperationException(
             s"INSERT OR REPLACE into $table: a self-referential ON " +
               s"DELETE ${fk.onDelete} $what a row this same statement " +
@@ -639,12 +642,8 @@ object ForeignKeys {
     val childDf = tableOpt(spark, childName).getOrElse(return)
     val child = childKey(fk, childDf, childName, table)
     Publish.withView(removed, "fkcas")(view => SessionChanges.inTriggerBody {
-      val hitWhere = child.exprs.map(cc => s"$cc IS NOT NULL")
-        .mkString(" AND ") +
-        s" AND EXISTS (SELECT 1 FROM `$view` WHERE " +
-        child.exprs.zip(removed.columns).map { case (cc, r) =>
-          s"`$view`.`$r` = $cc"
-        }.mkString(" AND ") + ")"
+      val hitWhere = s"EXISTS (SELECT 1 FROM `$view` WHERE " +
+        child.matchesSql(view, removed.columns.toSeq) + ")"
       action match {
         case "CASCADE" =>
           // reachable for DELETE only — UPDATE-cascade re-points
@@ -715,11 +714,8 @@ object ForeignKeys {
           val childDf = tableOpt(spark, childName).getOrElse(return)
           val child = childKey(fk, childDf, childName, table)
           Publish.withView(remap, "fkcas")(view => SessionChanges.inTriggerBody {
-            val joinWhere = child.exprs.map(cc => s"$cc IS NOT NULL")
-              .mkString(" AND ") + " AND " +
-              child.exprs.zipWithIndex.map { case (cc, i) =>
-                s"`$view`.__fk_o$i = $cc"
-              }.mkString(" AND ")
+            val joinWhere = child.matchesSql(view,
+              pcols.indices.map(i => s"__fk_o$i"))
             // one enrichment-merge pass through the UPDATE…FROM route:
             // matched child rows take the NEW key, unmatched rows stay;
             // the child's own triggers fire and its FKs validate
@@ -806,8 +802,7 @@ object ForeignKeys {
                                 childDf: DataFrame,
                                 child: Constraints.UniqueKey): Boolean = {
     val removed = removedKeys(oldDf, newDf, parent)
-    !childDf.filter(child.live).join(removed, child.matches(removed),
-      "left_semi").isEmpty
+    !childDf.join(removed, child.matches(removed), "left_semi").isEmpty
   }
 
   /** True when none of the parent-key columns `fk` references is in

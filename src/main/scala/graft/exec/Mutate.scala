@@ -506,12 +506,11 @@ object Mutate {
                                    k: Constraints.UniqueKey)(
       sharedNew: => Nothing, ontoOld: => Nothing): Unit = {
     import org.apache.spark.sql.functions.{col, expr}
-    val newK = pairs.filter(k.live)
-    if (!newK.groupBy(k.exprs.map(expr): _*).count()
+    if (!pairs.filter(k.live).groupBy(k.exprs.map(expr): _*).count()
         .filter(col("count") > 1L).limit(1).isEmpty) sharedNew
     val oldK = k.keyed(pairs.select(col("__graft_old").as("__graft_oldj"),
       col("__graft_old.*")), col("__graft_oldj"))
-    val cross = newK.join(oldK,
+    val cross = pairs.join(oldK,
       k.matches(oldK) && !(col("__graft_old") <=> col("__graft_oldj")))
     if (!cross.limit(1).isEmpty) ontoOld
   }

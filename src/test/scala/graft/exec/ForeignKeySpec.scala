@@ -660,6 +660,29 @@ class ForeignKeySpec extends SparkSpec
     assert(e2.getMessage.contains("VALUES order"), e2.getMessage)
   }
 
+  test("self-referential INSERT OR REPLACE through a nullable UNIQUE " +
+      "parent key: a written row whose parent key is NULL is still " +
+      "recognised as written, so the order-dependent cascade and " +
+      "re-point decline instead of diverging") {
+    // sqlite3 3.40.1: VALUES (1,5,NULL),(2,NULL,5) keeps (2,NULL,5)
+    // under both actions; the reverse order re-points it (SET NULL) or
+    // deletes it (CASCADE)
+    Seq("SET NULL", "CASCADE").foreach { act =>
+      val i = fresh()
+      sql(s"CREATE TABLE nu$i (id INTEGER PRIMARY KEY, k INTEGER UNIQUE, " +
+        s"p INTEGER REFERENCES nu$i(k) ON DELETE $act)")
+      sql(s"INSERT INTO nu$i VALUES (1, 5, NULL), (3, 7, NULL)")
+      sql("PRAGMA foreign_keys = 1")
+      val e = intercept[UnsupportedOperationException] {
+        sql(s"INSERT OR REPLACE INTO nu$i VALUES (1, 5, NULL), (2, NULL, 5)")
+      }
+      assert(e.getMessage.contains("VALUES order"), s"$act: ${e.getMessage}")
+      assert(rowsOf(s"SELECT id, k, p FROM nu$i ORDER BY id") ==
+        Seq(Seq(1L, 5L, null), Seq(3L, 7L, null)), act)
+      sql("PRAGMA foreign_keys = 0")
+    }
+  }
+
   test("composite FK enforces on the declared multi-column key; " +
        "any NULL component passes (SQLite's rule)") {
     val i = fresh()
