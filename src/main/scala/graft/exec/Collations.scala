@@ -1,8 +1,8 @@
 package graft.exec
 
 import org.apache.spark.sql.SparkSession
-import graft.text2sql.SqlDialect
-import graft.text2sql.SqlDialect.{endOfQuoted, isWordChar, keywordAt}
+import graft.text2sql.{SqlDialect, SqlText}
+import graft.text2sql.SqlText.{isWordChar, keywordAt, skipWs}
 
 /** Column-DECLARED collations for the generated-SQL path. SQLite's
   * rule (datatype3.html §7.1): a bare comparison over a column
@@ -44,10 +44,10 @@ object Collations {
 
   def fold(spark: SparkSession, sql: String, csLike: Boolean): String = {
     if (!SessionKeys.anyCollates(spark)) return sql
-    val head = sql.trim.toLowerCase
     // declaration/DDL text never folds; PRAGMAs answer from registries
-    if (head.startsWith("create") || head.startsWith("alter") ||
-        head.startsWith("drop") || head.startsWith("pragma")) return sql
+    val head = skipWs(sql, 0)
+    if (Seq("create", "alter", "drop", "pragma").exists(keywordAt(sql, head, _)))
+      return sql
     // an explicit COLLATE anywhere in the statement takes precedence
     // (SQLite's override rule); rather than model the per-comparison
     // precedence textually, a statement that spells any COLLATE keeps
@@ -121,21 +121,9 @@ object Collations {
       .stripPrefix("SELECT ").trim
   }
 
-  /** Word-boundary reference scan (outside quotes). */
-  private def referencesWord(sql: String, word: String): Boolean = {
-    var i = 0
-    while (i < sql.length) {
-      val c = sql.charAt(i)
-      if (c == '\'' || c == '"' || c == '`') i = endOfQuoted(sql, i, c)
-      else if (isWordChar(c)) {
-        var e = i
-        while (e < sql.length && isWordChar(sql.charAt(e))) e += 1
-        if (sql.substring(i, e).equalsIgnoreCase(word)) return true
-        i = e
-      } else i += 1
-    }
-    false
-  }
+  /** Word-boundary reference scan (in code). */
+  private def referencesWord(sql: String, word: String): Boolean =
+    SqlText.find(sql, 0)(keywordAt(sql, _, word)) >= 0
 
   private def isCmpAt(sql: String, i: Int): Boolean = {
     if (i >= sql.length) return false
@@ -198,17 +186,11 @@ object Collations {
     var groupDepth = -1 // GROUP BY specifically (subset of byDepth)
     var havingDepth = -1
     var selStack: List[Int] = Nil // depths of open select-list scopes
-    def ws(j0: Int): Int = {
-      var j = j0
-      while (j < sql.length && sql.charAt(j).isWhitespace) j += 1
-      j
-    }
     while (i < sql.length) {
       val c = sql.charAt(i)
-      if (c == '\'' || c == '"' || c == '`') {
-        val e = endOfQuoted(sql, i, c)
-        out.append(sql, i, e); i = e
-      } else if (c == '(') { depth += 1; out.append(c); i += 1 }
+      val opaque = SqlText.skipOpaque(sql, i)
+      if (opaque > i) { out.append(sql, i, opaque); i = opaque }
+      else if (c == '(') { depth += 1; out.append(c); i += 1 }
       else if (c == ')') {
         depth -= 1
         if (byDepth > depth) byDepth = -1
@@ -228,7 +210,7 @@ object Collations {
                    "union", "intersect", "except", "window")(w))
           selStack = selStack.tail
         if ((w == "order" || w == "group") &&
-            keywordAt(sql, ws(e), "by")) {
+            keywordAt(sql, skipWs(sql, e), "by")) {
           byDepth = depth
           groupDepth = if (w == "group") depth else -1
         } else if (byDepth == depth &&
@@ -242,7 +224,7 @@ object Collations {
                    "window")(w)) havingDepth = -1
         byCol.get(w) match {
           case Some((collation, declaringTables)) =>
-            val next = ws(e)
+            val next = skipWs(sql, e)
             val prevEnd = {
               var p = i
               while (p > 0 && sql.charAt(p - 1).isWhitespace) p -= 1
@@ -269,7 +251,7 @@ object Collations {
             val inAfter = keywordAt(sql, next, "in") ||
               keywordAt(sql, next, "between") ||
               (keywordAt(sql, next, "not") && {
-                val n = ws(next + 3)
+                val n = skipWs(sql, next + 3)
                 keywordAt(sql, n, "in") || keywordAt(sql, n, "between")
               })
             // the operator-before test looks past a `qualifier.`

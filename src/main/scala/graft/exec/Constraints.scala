@@ -111,34 +111,20 @@ object Constraints {
   }
 
   /** Word-boundary substitution of assigned column references inside
-    * a constraint expression (quote-aware; a name inside a string
-    * literal or quoted identifier is untouched; a function call —
-    * word followed by '(' — is never a column reference). */
+    * a constraint expression (a name inside a string literal, quoted
+    * identifier or comment is untouched; a function call — word
+    * followed by '(' — is never a column reference). */
   private def substituteCols(sql: String,
                              assigns: Map[String, String]): String = {
-    import graft.text2sql.SqlDialect.{endOfQuoted, isWordChar}
-    val out = new java.lang.StringBuilder
-    var i = 0
-    while (i < sql.length) {
-      val c = sql.charAt(i)
-      if (c == '\'' || c == '"' || c == '`') {
-        val e = endOfQuoted(sql, i, c)
-        out.append(sql, i, e); i = e
-      } else if (isWordChar(c)) {
-        var e = i
-        while (e < sql.length && isWordChar(sql.charAt(e))) e += 1
-        val w = sql.substring(i, e)
-        var k = e
-        while (k < sql.length && sql.charAt(k).isWhitespace) k += 1
-        val isCall = k < sql.length && sql.charAt(k) == '('
-        assigns.get(w.toLowerCase) match {
-          case Some(ex) if !isCall => out.append('(').append(ex).append(')')
-          case _ => out.append(w)
-        }
-        i = e
-      } else { out.append(c); i += 1 }
+    import graft.text2sql.SqlText
+    SqlText.rewrite(sql) { i =>
+      var e = i
+      if (i == 0 || !SqlText.isWordChar(sql.charAt(i - 1)))
+        while (e < sql.length && SqlText.isWordChar(sql.charAt(e))) e += 1
+      def isCall = { val k = SqlText.skipWs(sql, e); k < sql.length && sql.charAt(k) == '(' }
+      if (e == i || isCall) None
+      else assigns.get(sql.substring(i, e).toLowerCase).map(ex => (s"($ex)", e))
     }
-    out.toString
   }
 
   /** One key tuple: a declared unique key, or a FOREIGN KEY's child or

@@ -1,7 +1,7 @@
 package graft.exec
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
-import graft.text2sql.SqlDml
+import graft.text2sql.{SqlDml, SqlText}
 
 /** Session DDL from generated SQL (reference executes it against its
   * session-scoped SQLite database, pandasqlite.py:245-247):
@@ -198,25 +198,11 @@ object Ddl {
     Right(ordered.result())
   }
 
-  /** True when the expression text contains a SELECT keyword outside
-    * quotes (paren-transparent) — SQLite prohibits subqueries in CHECK
+  /** True when the expression text contains a SELECT keyword in code
+    * (paren-transparent) — SQLite prohibits subqueries in CHECK
     * constraints at parse time. */
-  private[exec] def containsSelect(raw: String): Boolean = {
-    var i = 0
-    while (i < raw.length) {
-      val c = raw.charAt(i)
-      if (c == '\'' || c == '"' || c == '`')
-        i = graft.text2sql.SqlDialect.endOfQuoted(raw, i, c)
-      else if (graft.text2sql.SqlDialect.isWordChar(c)) {
-        var e = i
-        while (e < raw.length &&
-               graft.text2sql.SqlDialect.isWordChar(raw.charAt(e))) e += 1
-        if (raw.substring(i, e).equalsIgnoreCase("select")) return true
-        i = e
-      } else i += 1
-    }
-    false
-  }
+  private[exec] def containsSelect(raw: String): Boolean =
+    SqlText.find(raw, 0)(SqlText.keywordAt(raw, _, "select")) >= 0
 
   private def refHits(raw: String, col: String): Boolean =
     java.util.regex.Pattern.compile(

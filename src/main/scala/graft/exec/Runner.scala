@@ -3,7 +3,7 @@ package graft.exec
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import graft.ingest.IngestResult
 import graft.llm.LlmCallback
-import graft.text2sql.{SqlDml, Text2Sql}
+import graft.text2sql.{SqlDml, SqlText, Text2Sql}
 
 /** Execution + result sampling (reference README.md:49, test.py:50-55):
   * generated SQL runs verbatim through spark.sql against the
@@ -32,27 +32,30 @@ object Runner {
     if (!spark.sessionState.functionRegistry.functionExists(
         org.apache.spark.sql.catalyst.FunctionIdentifier("sqlite_typeof")))
       graft.plans.SqliteFunctions.registerRuntime(spark)
-    // SQLite introspection first: bare PRAGMA statements execute
-    // directly; pragma_table_info('t') table-valued calls rewrite to
-    // on-demand views; any sqlite_master reference (re)builds the
-    // catalog view so schema questions keep working ([[Pragma]])
-    val stmt = sql.trim.replaceAll(";\\s*$", "").trim
+    // routing reads the statement past its leading comments, which
+    // SQLite skips the same way
+    val trimmed = sql.trim.replaceAll(";\\s*$", "").trim
+    val stmt = trimmed.substring(SqlText.skipWs(trimmed, 0))
     val head = stmt.toLowerCase
+    val isTrigger = head.matches("(?s)create\\s+(temp\\w*\\s+)?trigger\\b.*")
     // the reference's execution path (pd.read_sql → sqlite3
     // cursor.execute, reference test.py:50) accepts ONE statement —
     // a multi-statement script raises SQLite's "You can only execute
     // one statement at a time", so the same targeted error beats a
-    // generic parse failure. Quote- and comment-aware scan; CREATE
-    // TRIGGER is exempt (its BEGIN…END body holds `;` legally, as
+    // generic parse failure; text after the `;` that is only
+    // whitespace and comments is no second statement. CREATE TRIGGER
+    // is exempt (its BEGIN…END body holds `;` legally, as
     // sqlite3_complete knows) so it reaches its own targeted decline.
-    if (!head.matches("(?s)create\\s+(temp\\w*\\s+)?trigger\\b.*"))
-      topLevelSemicolon(stmt).foreach { i =>
-        if (stmt.substring(i + 1).exists(!_.isWhitespace))
-          throw new UnsupportedOperationException(
-            "multi-statement scripts are not supported — one statement " +
-              "at a time (SQLite's own execute() rule); run each " +
-              "statement separately")
-      }
+    val semi = SqlText.find(stmt, 0)(stmt.charAt(_) == ';')
+    if (!isTrigger && semi >= 0 && SqlText.skipWs(stmt, semi + 1) < stmt.length)
+      throw new UnsupportedOperationException(
+        "multi-statement scripts are not supported — one statement " +
+          "at a time (SQLite's own execute() rule); run each " +
+          "statement separately")
+    // SQLite introspection first: bare PRAGMA statements execute
+    // directly; pragma_table_info('t') table-valued calls rewrite to
+    // on-demand views; any sqlite_master reference (re)builds the
+    // catalog view so schema questions keep working ([[Pragma]])
     if (head.startsWith("pragma"))
       return Pragma.run(spark, stmt)
     // SQLite session statements a model wraps around reads: BEGIN /
@@ -106,9 +109,8 @@ object Runner {
     // simply keep their own conf (it is restored here either way).
     // RAISE() is legal only inside a trigger program (the one place
     // the engine rewrites it to its executable form) — SQLite's own
-    // refusal text for every other statement, quote-aware scan
-    if (!head.matches("(?s)create\\s+(temp\\w*\\s+)?trigger\\b.*") &&
-        graft.text2sql.SqlDialect.keywordFollowedBy(prepared, "raise", '('))
+    // refusal text for every other statement
+    if (!isTrigger && SqlText.keywordFollowedBy(prepared, "raise", '('))
       throw new IllegalArgumentException(
         "RAISE() may only be used within a trigger-program")
     val savedAnsi = spark.conf.get("spark.sql.ansi.enabled", "true")
@@ -169,31 +171,6 @@ object Runner {
         spark.sql(Collations.fold(spark, prepared,
           Pragma.caseSensitiveLike(spark)))
     } finally spark.conf.set("spark.sql.ansi.enabled", savedAnsi)
-  }
-
-  /** First top-level `;` (outside quotes and comments), if any. */
-  private def topLevelSemicolon(sql: String): Option[Int] = {
-    var i = 0
-    while (i < sql.length) {
-      sql.charAt(i) match {
-        case q @ ('\'' | '"' | '`') =>
-          i += 1
-          while (i < sql.length &&
-                 !(sql.charAt(i) == q &&
-                   (i + 1 >= sql.length || sql.charAt(i + 1) != q))) {
-            if (sql.charAt(i) == q) i += 2 else i += 1 // doubled quote
-          }
-          i += 1
-        case '-' if i + 1 < sql.length && sql.charAt(i + 1) == '-' =>
-          while (i < sql.length && sql.charAt(i) != '\n') i += 1
-        case '/' if i + 1 < sql.length && sql.charAt(i + 1) == '*' =>
-          val end = sql.indexOf("*/", i + 2)
-          i = if (end < 0) sql.length else end + 2
-        case ';' => return Some(i)
-        case _ => i += 1
-      }
-    }
-    None
   }
 
   /** ≤5 sample rows as JSON (reference test.py:51-55). */

@@ -1,7 +1,8 @@
 package graft.exec
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
-import graft.text2sql.SqlDml
+import graft.text2sql.{SqlDml, SqlText}
+import graft.text2sql.SqlText.{keywordAt, skipWs}
 
 /** SQLite `CREATE TRIGGER` — the supported subset, executed
   * SET-BASED (reference delegation: pandasqlite.py:245-247 hands any
@@ -94,9 +95,9 @@ object Triggers {
 
   // --------------------------------------------------------- create
 
-  /** Case-insensitive scan (outside quotes) for `NEW.` / `OLD.`. */
+  /** Case-insensitive scan (in code) for `NEW.` / `OLD.`. */
   private def refersTo(sqlText: String, qualifier: String): Boolean =
-    graft.text2sql.SqlDialect.keywordFollowedBy(sqlText, qualifier, '.')
+    SqlText.keywordFollowedBy(sqlText, qualifier, '.')
 
   private def decline(msg: String): Nothing =
     throw new UnsupportedOperationException(msg)
@@ -109,63 +110,48 @@ object Triggers {
   private final case class RaiseCall(start: Int, end: Int,
                                      kind: String, msgLiteral: String)
 
-  /** Scan `sqlText` (outside quotes) for RAISE( calls and parse each
+  /** Scan `sqlText` (in code) for RAISE( calls and parse each
     * against SQLite's grammar: `RAISE(IGNORE)` or `RAISE(ABORT|
     * ROLLBACK|FAIL, 'string-literal')` — a non-literal message is a
     * syntax error in SQLite too (measured: `RAISE(ABORT, 'a'||'b')` →
     * near "||": syntax error). */
   private def scanRaise(sqlText: String): Seq[RaiseCall] = {
+    def at(k: Int)(c: Char) = k < sqlText.length && sqlText.charAt(k) == c
+    def next(from: Int) = SqlText.find(sqlText, from)(i =>
+      keywordAt(sqlText, i, "raise") && at(skipWs(sqlText, i + 5))('('))
     val out = Seq.newBuilder[RaiseCall]
-    var i = 0
-    while (i < sqlText.length) {
-      val c = sqlText.charAt(i)
-      if (c == '\'' || c == '"' || c == '`')
-        i = graft.text2sql.SqlDialect.endOfQuoted(sqlText, i, c)
-      else if (graft.text2sql.SqlDialect.keywordAt(sqlText, i, "raise")) {
-        var j = i + 5
-        while (j < sqlText.length && sqlText.charAt(j).isWhitespace) j += 1
-        if (j >= sqlText.length || sqlText.charAt(j) != '(') { i += 5 }
+    var i = next(0)
+    while (i >= 0) {
+      def syntax(near: String): Nothing =
+        throw new IllegalArgumentException(
+          s"""near "$near": syntax error (RAISE(IGNORE) or """ +
+            s"RAISE(ABORT|ROLLBACK|FAIL, 'message'))")
+      def near(k: Int) =
+        if (k < sqlText.length) sqlText.charAt(k).toString else "RAISE"
+      var k = skipWs(sqlText, skipWs(sqlText, i + 5) + 1)
+      var e = k
+      while (e < sqlText.length && sqlText.charAt(e).isLetter) e += 1
+      val kind = sqlText.substring(k, e).toLowerCase
+      if (!Set("ignore", "abort", "rollback", "fail")(kind))
+        syntax(if (kind.isEmpty) "(" else kind)
+      k = skipWs(sqlText, e)
+      val lit =
+        if (kind == "ignore") "''"
         else {
-          def syntax(near: String): Nothing =
-            throw new IllegalArgumentException(
-              s"""near "$near": syntax error (RAISE(IGNORE) or """ +
-                s"RAISE(ABORT|ROLLBACK|FAIL, 'message'))")
-          var k = j + 1
-          while (k < sqlText.length && sqlText.charAt(k).isWhitespace) k += 1
-          var e = k
-          while (e < sqlText.length && sqlText.charAt(e).isLetter) e += 1
-          val kind = sqlText.substring(k, e).toLowerCase
-          if (!Set("ignore", "abort", "rollback", "fail")(kind))
-            syntax(if (kind.isEmpty) "(" else kind)
-          k = e
-          while (k < sqlText.length && sqlText.charAt(k).isWhitespace) k += 1
-          if (kind == "ignore") {
-            if (k >= sqlText.length || sqlText.charAt(k) != ')')
-              syntax(if (k < sqlText.length) sqlText.charAt(k).toString
-                     else "RAISE")
-            out += RaiseCall(i, k + 1, kind, "''")
-            i = k + 1
-          } else {
-            if (k >= sqlText.length || sqlText.charAt(k) != ',')
-              syntax(")")
-            k += 1
-            while (k < sqlText.length && sqlText.charAt(k).isWhitespace) k += 1
-            if (k >= sqlText.length || sqlText.charAt(k) != '\'')
-              syntax(if (k < sqlText.length)
-                sqlText.substring(k, math.min(k + 8, sqlText.length)).trim
-                else "RAISE")
-            val litEnd = graft.text2sql.SqlDialect.endOfQuoted(sqlText, k, '\'')
-            val lit = sqlText.substring(k, litEnd)
-            k = litEnd
-            while (k < sqlText.length && sqlText.charAt(k).isWhitespace) k += 1
-            if (k >= sqlText.length || sqlText.charAt(k) != ')')
-              syntax(if (k < sqlText.length) sqlText.charAt(k).toString
-                     else "RAISE")
-            out += RaiseCall(i, k + 1, kind, lit)
-            i = k + 1
-          }
+          if (!at(k)(',')) syntax(")")
+          k = skipWs(sqlText, k + 1)
+          if (!at(k)('\''))
+            syntax(if (k < sqlText.length)
+              sqlText.substring(k, math.min(k + 8, sqlText.length)).trim
+              else "RAISE")
+          val litEnd = SqlText.skipOpaque(sqlText, k)
+          val l = sqlText.substring(k, litEnd)
+          k = skipWs(sqlText, litEnd)
+          l
         }
-      } else i += 1
+      if (!at(k)(')')) syntax(near(k))
+      out += RaiseCall(i, k + 1, kind, lit)
+      i = next(k + 1)
     }
     out.result()
   }
@@ -219,31 +205,12 @@ object Triggers {
     s.synchronized(s.trigs.nonEmpty)
   }
 
-  /** First top-level occurrence of any of `kws` (outside quotes and
-    * parens), as (position, keyword). */
-  private def topLevelKeyword(stmt: String,
-                              kws: Set[String]): Option[(Int, String)] = {
-    var i = 0; var depth = 0
-    while (i < stmt.length) {
-      val c = stmt.charAt(i)
-      if (c == '\'' || c == '"' || c == '`')
-        i = graft.text2sql.SqlDialect.endOfQuoted(stmt, i, c)
-      else if (c == '(') { depth += 1; i += 1 }
-      else if (c == ')') { depth -= 1; i += 1 }
-      else if (depth == 0 && (c.isLetter || c == '_')) {
-        var e = i
-        while (e < stmt.length && (stmt.charAt(e).isLetterOrDigit ||
-               stmt.charAt(e) == '_')) e += 1
-        val w = stmt.substring(i, e).toLowerCase
-        if (kws(w)) return Some((i, w))
-        i = e
-      } else i += 1
-    }
-    None
-  }
+  /** First top-level code position of any of `kws`, or -1. */
+  private def topLevel(stmt: String, kws: Set[String]): Int =
+    SqlText.findTop(stmt, 0)(i => kws.exists(keywordAt(stmt, i, _)))
 
   private def hasTopLevelFrom(stmt: String): Boolean =
-    topLevelKeyword(stmt, Set("from")).isDefined
+    topLevel(stmt, Set("from")) >= 0
 
   /** Give a FROM-less SELECT body the slice as its relation: insert
     * `FROM rel` before the top-level WHERE/GROUP/HAVING/ORDER/LIMIT
@@ -254,11 +221,9 @@ object Triggers {
     * decorrelates the subquery into an uncorrelated projection that
     * would evaluate the raise before the correlation filter.) */
   private def injectFrom(stmt: String, rel: String): String =
-    topLevelKeyword(stmt,
-      Set("where", "group", "having", "order", "limit")) match {
-      case Some((pos, _)) =>
-        stmt.substring(0, pos) + s"FROM $rel " + stmt.substring(pos)
-      case None => s"$stmt FROM $rel"
+    topLevel(stmt, Set("where", "group", "having", "order", "limit")) match {
+      case -1 => s"$stmt FROM $rel"
+      case pos => stmt.substring(0, pos) + s"FROM $rel " + stmt.substring(pos)
     }
 
   /** Does any RAISE() occurrence sit inside a `(SELECT …)` group? A
@@ -268,29 +233,19 @@ object Triggers {
     * non-subquery parens (iif(…), CASE arms, function args) stay
     * allowed: those evaluate lazily in-row. */
   private def raiseInSubquery(stmt: String): Boolean = {
-    var i = 0
     var stack = List.empty[Boolean] // per open paren: is a subquery?
-    while (i < stmt.length) {
-      val c = stmt.charAt(i)
-      if (c == '\'' || c == '"' || c == '`')
-        i = graft.text2sql.SqlDialect.endOfQuoted(stmt, i, c)
-      else if (c == '(') {
-        var j = i + 1
-        while (j < stmt.length && stmt.charAt(j).isWhitespace) j += 1
-        stack ::= graft.text2sql.SqlDialect.keywordAt(stmt, j, "select")
-        i += 1
-      } else if (c == ')') {
-        if (stack.nonEmpty) stack = stack.tail
-        i += 1
-      } else if (graft.text2sql.SqlDialect.keywordAt(stmt, i, "raise")) {
-        var j = i + 5
-        while (j < stmt.length && stmt.charAt(j).isWhitespace) j += 1
-        if (j < stmt.length && stmt.charAt(j) == '(' &&
-            stack.contains(true)) return true
-        i += 5
-      } else i += 1
-    }
-    false
+    SqlText.find(stmt, 0) { i =>
+      stmt.charAt(i) match {
+        case '(' =>
+          stack ::= keywordAt(stmt, skipWs(stmt, i + 1), "select"); false
+        case ')' => stack = stack.drop(1); false
+        case _ =>
+          keywordAt(stmt, i, "raise") && stack.contains(true) && {
+            val j = skipWs(stmt, i + 5)
+            j < stmt.length && stmt.charAt(j) == '('
+          }
+      }
+    } >= 0
   }
 
   def create(spark: SparkSession, t: SqlDml.CreateTrigger): DataFrame = {
@@ -433,7 +388,7 @@ object Triggers {
     }
   }
 
-  /** Quote-aware, POSITION-aware rename of a table reference: an
+  /** Lexer-aware, POSITION-aware rename of a table reference: an
     * identifier equal to `from` (bare or `"quoted"`/`` `quoted` ``)
     * becomes `to` only in table positions — right after INTO / UPDATE
     * / FROM / JOIN, or used as a dot-qualifier (`from.col`). Column
@@ -450,26 +405,22 @@ object Triggers {
     var i = 0
     var prevWord = "" // last identifier/keyword; punctuation resets it
     def dotFollows(k: Int): Boolean = {
-      var j = k
-      while (j < sqlText.length && sqlText.charAt(j).isWhitespace) j += 1
+      val j = skipWs(sqlText, k)
       j < sqlText.length && sqlText.charAt(j) == '.'
     }
     while (i < sqlText.length) {
       val c = sqlText.charAt(i)
-      if (c == '"' || c == '`') {
-        val e = graft.text2sql.SqlDialect.endOfQuoted(sqlText, i, c)
-        val inner = sqlText.substring(i + 1, (e - 1) max (i + 1))
+      val e = SqlText.skipOpaque(sqlText, i)
+      if (e > i) {
+        val inner =
+          if (c == '"' || c == '`') sqlText.substring(i + 1, (e - 1) max (i + 1))
+          else "" // a literal or comment
         if (inner.equalsIgnoreCase(from) && !inner.contains(c) &&
-            (tablePosKeywords(prevWord) || dotFollows(e max (i + 1))))
+            (tablePosKeywords(prevWord) || dotFollows(e)))
           out.append(c).append(to).append(c)
-        else out.append(sqlText.substring(i, e max (i + 1)))
+        else out.append(sqlText.substring(i, e))
         prevWord = inner.toLowerCase
-        i = e max (i + 1)
-      } else if (c == '\'') {
-        val e = graft.text2sql.SqlDialect.endOfQuoted(sqlText, i, c)
-        out.append(sqlText.substring(i, e max (i + 1)))
-        prevWord = ""
-        i = e max (i + 1)
+        i = e
       } else if (c.isLetter || c == '_') {
         var e = i
         while (e < sqlText.length && (sqlText.charAt(e).isLetterOrDigit ||
@@ -496,47 +447,28 @@ object Triggers {
     * table's columns. Returns (rewritten, found). */
   private def scanQual(sqlText: String, qual: String, colName: String,
                        to: Option[String]): (String, Boolean) = {
-    val out = new StringBuilder
     var found = false
-    var i = 0
-    while (i < sqlText.length) {
-      val c = sqlText.charAt(i)
-      if (c == '\'' || c == '"' || c == '`') {
-        val e = graft.text2sql.SqlDialect.endOfQuoted(sqlText, i, c)
-        out.append(sqlText.substring(i, e max (i + 1)))
-        i = e max (i + 1)
-      } else if (graft.text2sql.SqlDialect.keywordAt(sqlText, i, qual)) {
-        var j = i + qual.length
-        while (j < sqlText.length && sqlText.charAt(j).isWhitespace) j += 1
-        if (j < sqlText.length && sqlText.charAt(j) == '.') {
-          var k = j + 1
-          while (k < sqlText.length && sqlText.charAt(k).isWhitespace) k += 1
-          val quoted = k < sqlText.length &&
-            (sqlText.charAt(k) == '"' || sqlText.charAt(k) == '`')
-          val (refEnd, ref) =
-            if (quoted) {
-              val q = sqlText.charAt(k)
-              val e = graft.text2sql.SqlDialect.endOfQuoted(sqlText, k, q)
-              (e, sqlText.substring(k + 1, (e - 1) max (k + 1)))
-            } else {
-              var e = k
-              while (e < sqlText.length &&
-                     (sqlText.charAt(e).isLetterOrDigit ||
-                      sqlText.charAt(e) == '_')) e += 1
-              (e, sqlText.substring(k, e))
-            }
-          if (ref.equalsIgnoreCase(colName)) {
-            found = true
-            out.append(sqlText.substring(i, k))
-            out.append(to.getOrElse(ref))
-            i = refEnd max (k + 1)
-          } else { out.append(sqlText.substring(i, refEnd max (k + 1)))
-                   i = refEnd max (k + 1) }
-        } else { out.append(sqlText.substring(i, j min sqlText.length))
-                 i = j min sqlText.length }
-      } else { out.append(c); i += 1 }
+    val out = SqlText.rewrite(sqlText) { i =>
+      val dot = skipWs(sqlText, i + qual.length)
+      if (!keywordAt(sqlText, i, qual) || dot >= sqlText.length ||
+          sqlText.charAt(dot) != '.') None
+      else {
+        val k = skipWs(sqlText, dot + 1)
+        val quoted = SqlText.skipOpaque(sqlText, k)
+        var e = k
+        while (e < sqlText.length && (sqlText.charAt(e).isLetterOrDigit ||
+               sqlText.charAt(e) == '_')) e += 1
+        val (refEnd, ref) =
+          if (quoted > k) (quoted, sqlText.substring(k + 1, (quoted - 1) max (k + 1)))
+          else (e, sqlText.substring(k, e))
+        if (ref.isEmpty || !ref.equalsIgnoreCase(colName)) None
+        else {
+          found = true
+          Some((sqlText.substring(i, k) + to.getOrElse(ref), refEnd))
+        }
+      }
     }
-    (out.toString, found)
+    (out, found)
   }
 
   private def refersToCol(t: Trig, colName: String): Boolean =
@@ -940,7 +872,7 @@ object Triggers {
     while (i < values.length) {
       values.charAt(i) match {
         case '(' =>
-          val e = graft.text2sql.SqlDialect.closeParen(values, i)
+          val e = SqlText.closeParen(values, i)
           if (e < 0) throw new IllegalArgumentException(
             s"malformed VALUES in trigger body: $values")
           rows += values.substring(i + 1, e)

@@ -516,12 +516,21 @@ object Upsert {
         // `UNIQUE constraint failed: t.c` (plain INSERT duplicates, a
         // DO UPDATE re-keying into a collision, a targeted DO NOTHING
         // conflicting on another key — all abort here); probed by the
-        // statement's own written slice, so the scan is O(batch). The
-        // bare REPLACE merge is unique by construction: the batch keeps
-        // one live row per value of every declared key, and every
-        // base row sharing one is displaced — unless a self-FK action
-        // rewrote the merged image, which is checked like any write
-        if (!(effReplace && (mergedFk eq merged)))
+        // statement's own written slice, so the scan is O(batch). Two
+        // merges are unique by construction and skip the probe:
+        //  - bare REPLACE: the batch keeps one live row per value of
+        //    every declared key, and every base row sharing one is
+        //    displaced — unless a self-FK action rewrote the merged
+        //    image, which is checked like any write;
+        //  - one targetless DO NOTHING (or OR IGNORE) over declared
+        //    keys: the batch keeps its first row per value of every
+        //    declared key, and every row conflicting with the base on
+        //    any of them is dropped.
+        val doNothingAll = declaredKeys.nonEmpty &&
+          stmt.conflictRest.isEmpty && stmt.conflict.exists(c =>
+            c.assigns.isEmpty && c.keyCols.isEmpty && c.keyExprs.isEmpty &&
+              c.targetWhere.isEmpty)
+        if (!(effReplace && (mergedFk eq merged)) && !doNothingAll)
           Constraints.assertUnique(spark, stmt.table, mergedFk,
             Some(affected))
         val o = Publish.commit(spark, stmt.table, mergedFk, ret)

@@ -4,6 +4,7 @@ import java.nio.file.{Files, Paths}
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import graft.llm.{LlmCallback, Prompts}
+import graft.text2sql.SqlText
 
 /** Per-table ingestion metadata — the engine's analog of the
   * reference's ingestion_result dict (reference
@@ -231,49 +232,27 @@ object Ingestor {
   * (curriculum SQL, reference :169) and text2sql (generated SQL,
   * reference :247). The reference's raw substring replace corrupts
   * any SQL containing the letters "table" (e.g. "tables", column
-  * names); this version rewrites only the standalone identifier, and
-  * quotes with backticks (Spark SQL) instead of single quotes (SQLite).
+  * names); this version rewrites only the standalone identifier — bare
+  * in code, or as the whole backtick-quoted name — and quotes with
+  * backticks (Spark SQL) instead of single quotes (SQLite). Literals,
+  * other quoted names and comments are untouched.
   */
 object Text2SqlSubst {
-  private val quoted = "(?i)`table`".r
-  private val bare = "(?i)(?<![A-Za-z0-9_`'\\.])table(?![A-Za-z0-9_`'])".r
-
-  private def bindSegment(seg: String, tableHash: String): String = {
-    // backtick-quoted placeholder first (`table` → `hash`), then the
-    // bare identifier; hex hashes can never contain the word "table",
-    // so the two passes cannot interfere
-    val q = quoted.replaceAllIn(seg, s"`$tableHash`")
-    bare.replaceAllIn(q, s"`$tableHash`")
-  }
-
-  /** Rewrite only OUTSIDE single-quoted string literals — a literal
-    * like '%table%' must survive untouched.
-    */
   def bindTable(sql: String, tableHash: String): String = {
+    val bound = s"`$tableHash`"
     val out = new StringBuilder
     var i = 0
-    var segStart = 0
     while (i < sql.length) {
-      if (sql.charAt(i) == '\'') {
-        out ++= bindSegment(sql.substring(segStart, i), tableHash)
-        // consume the literal verbatim, honoring '' escapes
-        val lit = new StringBuilder("'")
-        i += 1
-        var done = false
-        while (i < sql.length && !done) {
-          val c = sql.charAt(i)
-          lit += c
-          if (c == '\'') {
-            if (i + 1 < sql.length && sql.charAt(i + 1) == '\'') { lit += '\''; i += 1 }
-            else done = true
-          }
-          i += 1
-        }
-        out ++= lit.result()
-        segStart = i
-      } else i += 1
+      val e = SqlText.skipOpaque(sql, i)
+      if (e > i) {
+        out ++= (if (sql.substring(i, e).equalsIgnoreCase("`table`")) bound
+                 else sql.substring(i, e))
+        i = e
+      } else if (SqlText.keywordAt(sql, i, "table") &&
+                 !(i > 0 && sql.charAt(i - 1) == '.')) {
+        out ++= bound; i += 5
+      } else { out += sql.charAt(i); i += 1 }
     }
-    out ++= bindSegment(sql.substring(segStart), tableHash)
     out.result().trim
   }
 }

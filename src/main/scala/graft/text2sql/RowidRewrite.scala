@@ -100,36 +100,36 @@ object RowidRewrite {
       if (at >= 0 && tok.equalsIgnoreCase("with")) withs += at
     }
     withs.foreach { at =>
-      var i = skipWsComments(sql, at + 4)
+      var i = SqlText.skipWs(sql, at + 4)
       wordAt(sql, i).foreach { w =>
-        if (w.equalsIgnoreCase("recursive")) i = skipWsComments(sql, i + w.length)
+        if (w.equalsIgnoreCase("recursive")) i = SqlText.skipWs(sql, i + w.length)
       }
       var more = true
       while (more) {
         more = false
         val name = readName(sql, i)
         if (name.nonEmpty) {
-          i = skipWsComments(sql, i + name.length)
+          i = SqlText.skipWs(sql, i + name.length)
           // optional column list
           if (i < sql.length && sql.charAt(i) == '(') {
-            i = skipWsComments(sql, closeParenOr(sql, i))
+            i = SqlText.skipWs(sql, pastParen(sql, i))
           }
           wordAt(sql, i) match {
             case Some(as) if as.equalsIgnoreCase("as") =>
-              i = skipWsComments(sql, i + 2)
+              i = SqlText.skipWs(sql, i + 2)
               // optional NOT? MATERIALIZED
               wordAt(sql, i).foreach { m =>
-                if (m.equalsIgnoreCase("not")) i = skipWsComments(sql, i + 3)
+                if (m.equalsIgnoreCase("not")) i = SqlText.skipWs(sql, i + 3)
               }
               wordAt(sql, i).foreach { m =>
                 if (m.equalsIgnoreCase("materialized"))
-                  i = skipWsComments(sql, i + m.length)
+                  i = SqlText.skipWs(sql, i + m.length)
               }
               if (i < sql.length && sql.charAt(i) == '(') {
                 out += unquoteName(name).toLowerCase
-                i = skipWsComments(sql, closeParenOr(sql, i))
+                i = SqlText.skipWs(sql, pastParen(sql, i))
                 if (i < sql.length && sql.charAt(i) == ',') {
-                  i = skipWsComments(sql, i + 1)
+                  i = SqlText.skipWs(sql, i + 1)
                   more = true
                 }
               }
@@ -171,51 +171,39 @@ object RowidRewrite {
 
   // ---- one SELECT block ------------------------------------------------
 
+  private val listEnds = Set("from", "union", "intersect", "except",
+    "order", "limit", "where", "group", "having", "window", "returning")
+
   private final case class FromItem(alias: String, // as written (maybe `q`)
                                     table: Option[String]) // lowercase
 
   private def expandOneSelect(sql: String, selAt: Int,
                               enabled: Map[String, Seq[String]]): String = {
     var i = selAt + "select".length
-    i = skipWsComments(sql, i)
+    i = SqlText.skipWs(sql, i)
     // DISTINCT / ALL prefix
     wordAt(sql, i).foreach { w =>
       if (w.equalsIgnoreCase("distinct") || w.equalsIgnoreCase("all"))
-        i = skipWsComments(sql, i + w.length)
+        i = SqlText.skipWs(sql, i + w.length)
     }
-    val listStart = i
-    // scan items at depth 0 until FROM (or statement/paren end)
+    // scan items at depth 0 until FROM (or statement/paren end); a
+    // bare SELECT-without-FROM list ends at a set op or clause keyword
+    // (CTE commas are at other depths, VALUES can't follow)
+    def stop(j: Int): Boolean = {
+      val c = sql.charAt(j)
+      c == ',' || c == ')' || c == ';' ||
+        (isNameStart(c) && listEnds.exists(SqlText.keywordAt(sql, j, _)))
+    }
     val items = scala.collection.mutable.ArrayBuffer.empty[(Int, Int)]
     var itemStart = i
-    var fromAt = -1
-    var done = false
-    while (!done && i < sql.length) {
-      sql.charAt(i) match {
-        case '(' => i = closeParenOr(sql, i)
-        case ')' => done = true // end of enclosing subquery
-        case q @ ('\'' | '"' | '`') => i = endQuote(sql, i, q)
-        case '-' if i + 1 < sql.length && sql.charAt(i + 1) == '-' =>
-          while (i < sql.length && sql.charAt(i) != '\n') i += 1
-        case '/' if i + 1 < sql.length && sql.charAt(i + 1) == '*' =>
-          val e = sql.indexOf("*/", i + 2); i = if (e < 0) sql.length else e + 2
-        case ',' =>
-          items += ((itemStart, i)); itemStart = i + 1; i += 1
-        case ';' => done = true
-        case c if c.isLetter || c == '_' =>
-          val w = readWord(sql, i)
-          val wl = w.toLowerCase
-          if (wl == "from") { fromAt = i; done = true }
-          // a bare SELECT-without-FROM list ends at these (set ops,
-          // CTE commas are at other depths, VALUES can't follow)
-          else if (wl == "union" || wl == "intersect" || wl == "except" ||
-                   wl == "order" || wl == "limit" || wl == "where" ||
-                   wl == "group" || wl == "having" || wl == "window" ||
-                   wl == "returning") done = true
-          else i += w.length
-        case _ => i += 1
-      }
+    var end = SqlText.findTop(sql, i)(stop)
+    while (end >= 0 && sql.charAt(end) == ',') {
+      items += ((itemStart, end))
+      itemStart = end + 1
+      end = SqlText.findTop(sql, itemStart)(stop)
     }
-    val listEnd = if (fromAt >= 0) fromAt else i
+    val fromAt = if (end >= 0 && SqlText.keywordAt(sql, end, "from")) end else -1
+    val listEnd = if (end >= 0) end else sql.length
     items += ((itemStart, listEnd))
     // star items?
     val starItems = items.toSeq.map { case (s, e) =>
@@ -300,22 +288,22 @@ object RowidRewrite {
   private def parseFromItems(sql: String, start: Int): (Seq[FromItem], Boolean) = {
     val items = scala.collection.mutable.ArrayBuffer.empty[FromItem]
     var natural = false
-    var i = skipWsComments(sql, start)
+    var i = SqlText.skipWs(sql, start)
     val clauseEnd = Set("where", "group", "having", "window", "order",
       "limit", "union", "intersect", "except", "returning", "on")
     val joinWords = Set("join", "left", "right", "full", "inner", "cross",
       "outer", "natural", "using")
 
     def parseItem(): Boolean = {
-      i = skipWsComments(sql, i)
+      i = SqlText.skipWs(sql, i)
       if (i >= sql.length) return false
       sql.charAt(i) match {
         case '(' =>
-          i = closeParenOr(sql, i)
-          i = skipWsComments(sql, i)
+          i = pastParen(sql, i)
+          i = SqlText.skipWs(sql, i)
           wordAt(sql, i) match {
             case Some(w) if w.equalsIgnoreCase("as") =>
-              i = skipWsComments(sql, i + w.length)
+              i = SqlText.skipWs(sql, i + w.length)
               val a = readName(sql, i)
               i += a.length
               items += FromItem(a, None)
@@ -329,11 +317,11 @@ object RowidRewrite {
         case c if isNameStart(c) || c == '`' =>
           val name = readName(sql, i)
           i += name.length
-          i = skipWsComments(sql, i)
+          i = SqlText.skipWs(sql, i)
           var alias = name
           wordAt(sql, i) match {
             case Some(w) if w.equalsIgnoreCase("as") =>
-              i = skipWsComments(sql, i + w.length)
+              i = SqlText.skipWs(sql, i + w.length)
               val a = readName(sql, i); i += a.length; alias = a
             case Some(w) if !clauseEnd(w.toLowerCase) &&
                 !joinWords(w.toLowerCase) =>
@@ -353,7 +341,7 @@ object RowidRewrite {
     if (!parseItem()) return (items.toSeq, natural)
     var more = true
     while (more) {
-      i = skipWsComments(sql, i)
+      i = SqlText.skipWs(sql, i)
       if (i >= sql.length) more = false
       else sql.charAt(i) match {
         case ',' => i += 1; if (!parseItem()) more = false
@@ -363,9 +351,9 @@ object RowidRewrite {
           else if (w == "using") {
             natural = true // same expansion hazard as NATURAL
             i += w.length
-            i = skipWsComments(sql, i)
+            i = SqlText.skipWs(sql, i)
             if (i < sql.length && sql.charAt(i) == '(')
-              i = closeParenOr(sql, i)
+              i = pastParen(sql, i)
           }
           else if (w == "join") { i += w.length; if (!parseItem()) more = false }
           else if (w == "left" || w == "right" || w == "full" ||
@@ -375,21 +363,15 @@ object RowidRewrite {
             // skip the ON expression at depth 0 until the next
             // connector / clause keyword
             i += w.length
-            var stop = false
-            while (!stop && i < sql.length) {
-              sql.charAt(i) match {
-                case '(' => i = closeParenOr(sql, i)
-                case ')' | ';' | ',' => stop = true
-                case q @ ('\'' | '"' | '`') => i = endQuote(sql, i, q)
-                case ch if ch.isLetter || ch == '_' =>
-                  val w2 = readWord(sql, i).toLowerCase
-                  if (joinWords(w2) || (clauseEnd(w2) && w2 != "on"))
-                    stop = true
-                  else i += w2.length
-                case _ => i += 1
-              }
+            val stop = SqlText.findTop(sql, i) { j =>
+              val c = sql.charAt(j)
+              c == ')' || c == ';' || c == ',' ||
+                (isNameStart(c) && !SqlText.isWordChar(sql.charAt(j - 1)) && {
+                  val w2 = readWord(sql, j).toLowerCase
+                  joinWords(w2) || (clauseEnd(w2) && w2 != "on")
+                })
             }
-            if (i < sql.length && sql.charAt(i) == ',') { /* next item */ }
+            i = if (stop < 0) sql.length else stop
           }
           else more = false // WHERE / GROUP / … — end of FROM
         case _ => more = false
@@ -410,10 +392,8 @@ object RowidRewrite {
 
   /** Bare word or a complete backtick-quoted name (quotes included). */
   private def readName(s: String, i: Int): String =
-    if (i < s.length && s.charAt(i) == '`') {
-      val e = endQuote(s, i, '`')
-      s.substring(i, e)
-    } else readWord(s, i)
+    if (i < s.length && s.charAt(i) == '`') s.substring(i, SqlText.skipOpaque(s, i))
+    else readWord(s, i)
 
   private def unquoteName(n: String): String =
     if (n.length >= 2 && n.head == '`' && n.last == '`')
@@ -425,57 +405,11 @@ object RowidRewrite {
     else Some(readWord(s, i))
   }
 
-  private def skipWsComments(s: String, start: Int): Int = {
-    var i = start
-    var moved = true
-    while (moved) {
-      moved = false
-      while (i < s.length && s.charAt(i).isWhitespace) { i += 1; moved = true }
-      if (i + 1 < s.length && s.charAt(i) == '-' && s.charAt(i + 1) == '-') {
-        while (i < s.length && s.charAt(i) != '\n') i += 1
-        moved = true
-      }
-      if (i + 1 < s.length && s.charAt(i) == '/' && s.charAt(i + 1) == '*') {
-        val e = s.indexOf("*/", i + 2); i = if (e < 0) s.length else e + 2
-        moved = true
-      }
-    }
-    i
-  }
-
-  /** Position just past the matching close paren (or end of string —
-    * callers treat truncated SQL as list end, mirroring SqlDialect). */
-  private def closeParenOr(s: String, open: Int): Int = {
-    var depth = 0
-    var i = open
-    while (i < s.length) {
-      s.charAt(i) match {
-        case '(' => depth += 1; i += 1
-        case ')' =>
-          depth -= 1; i += 1
-          if (depth == 0) return i
-        case q @ ('\'' | '"' | '`') => i = endQuote(s, i, q)
-        case '-' if i + 1 < s.length && s.charAt(i + 1) == '-' =>
-          while (i < s.length && s.charAt(i) != '\n') i += 1
-        case '/' if i + 1 < s.length && s.charAt(i + 1) == '*' =>
-          val e = s.indexOf("*/", i + 2); i = if (e < 0) s.length else e + 2
-        case _ => i += 1
-      }
-    }
-    s.length
-  }
-
-  /** Position just past a quoted run starting at `i` (handles doubled
-    * quote escapes). */
-  private def endQuote(s: String, i: Int, q: Char): Int = {
-    var j = i + 1
-    while (j < s.length) {
-      if (s.charAt(j) == q) {
-        if (j + 1 < s.length && s.charAt(j + 1) == q) j += 2
-        else return j + 1
-      } else j += 1
-    }
-    s.length
+  /** Index just past the `)` balancing the `(` at `open`, or the
+    * text's end — callers treat truncated SQL as the list's end. */
+  private def pastParen(s: String, open: Int): Int = {
+    val c = SqlText.closeParen(s, open)
+    if (c < 0) s.length else c + 1
   }
 
   /** Walk identifier tokens outside string literals and comments; the
@@ -490,31 +424,24 @@ object RowidRewrite {
     var i = 0
     while (i < sql.length) {
       val c = sql.charAt(i)
-      c match {
-        case '\'' | '"' => i = endQuote(sql, i, c)
-        case '`' =>
-          val e = endQuote(sql, i, '`')
-          val inner = unquoteName(sql.substring(i, e))
-          // report quoted TABLE references (hash-named tables arrive
-          // backticked) but at an offset normalizeAliases never
-          // rewrites (it matches bare tokens only, by length check)
-          if (inner.nonEmpty && inner.forall(ch => ch.isLetterOrDigit || ch == '_'))
-            f(inner, -1)
-          i = e
-        case '-' if i + 1 < sql.length && sql.charAt(i + 1) == '-' =>
-          while (i < sql.length && sql.charAt(i) != '\n') i += 1
-        case '/' if i + 1 < sql.length && sql.charAt(i + 1) == '*' =>
-          val e = sql.indexOf("*/", i + 2); i = if (e < 0) sql.length else e + 2
-        case ch if isNameStart(ch) =>
-          val w = readWord(sql, i)
-          f(w, i)
-          i += w.length
-        case ch if ch.isDigit =>
-          // skip a numeric literal so `1e5` doesn't report `e5`
-          while (i < sql.length &&
-                 (sql.charAt(i).isLetterOrDigit || sql.charAt(i) == '.')) i += 1
-        case _ => i += 1
-      }
+      val e = SqlText.skipOpaque(sql, i)
+      if (e > i) {
+        // report quoted TABLE references (hash-named tables arrive
+        // backticked) but at an offset normalizeAliases never
+        // rewrites (it matches bare tokens only, by length check)
+        val inner = if (c == '`') unquoteName(sql.substring(i, e)) else ""
+        if (inner.nonEmpty && inner.forall(ch => ch.isLetterOrDigit || ch == '_'))
+          f(inner, -1)
+        i = e
+      } else if (isNameStart(c)) {
+        val w = readWord(sql, i)
+        f(w, i)
+        i += w.length
+      } else if (c.isDigit) {
+        // skip a numeric literal so `1e5` doesn't report `e5`
+        while (i < sql.length &&
+               (sql.charAt(i).isLetterOrDigit || sql.charAt(i) == '.')) i += 1
+      } else i += 1
     }
   }
 }

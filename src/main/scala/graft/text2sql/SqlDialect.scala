@@ -35,9 +35,9 @@ package graft.text2sql
   *  - `LIMIT off, cnt`            → `LIMIT cnt OFFSET off`
   *  - `ifnull/instr/substr`       → already valid Spark SQL (no-op)
   *
-  * Scanning is quote-aware (text inside `'…'` literals is never
-  * rewritten, `''` escaping honored) and balanced-paren (nested calls
-  * work); arguments are translated recursively before substitution. A
+  * Scanning follows [[SqlText]]'s lexical rule: quoted runs and
+  * comments are opaque to every rewrite, and calls nest by balanced
+  * parens; arguments are translated recursively before substitution. A
   * call the translator does not understand is left verbatim — a visible
   * analysis error beats a silently changed answer.
   *
@@ -55,6 +55,7 @@ package graft.text2sql
   * `Text2Sql.text2sql` wires it in after [[translate]].
   */
 object SqlDialect {
+  import SqlText.{isWordChar, keywordAt, skipWs}
 
   def translate(sql: String): String =
     translate(sql, caseSensitiveLike = false)
@@ -113,9 +114,9 @@ object SqlDialect {
     var i = 0
     while (i < sql.length) {
       val c = sql.charAt(i)
-      if (c == '\'' || c == '"' || c == '`') {
-        val e = endOfQuoted(sql, i, c); out.append(sql, i, e); i = e
-      } else if (c == '+') {
+      val e = SqlText.skipOpaque(sql, i)
+      if (e > i) { out.append(sql, i, e); i = e }
+      else if (c == '+') {
         var p = out.length
         while (p > 0 && out.charAt(p - 1).isWhitespace) p -= 1
         val unary =
@@ -130,8 +131,7 @@ object SqlDialect {
                 !(s > 0 && out.charAt(s - 1) == '.')
             } else false
           }
-        var n = i + 1
-        while (n < sql.length && sql.charAt(n).isWhitespace) n += 1
+        val n = skipWs(sql, i + 1)
         val operandNext = n < sql.length && {
           val nc = sql.charAt(n)
           isWordChar(nc) || nc == '.' || nc == '(' || nc == '+' ||
@@ -149,33 +149,28 @@ object SqlDialect {
     * CTAS has AS there instead). Trivially idempotent under
     * [[translate]]'s skip. */
   private def isColumnDefCreateTable(sql: String): Boolean = {
-    def ws(i0: Int): Int = {
-      var i = i0
-      while (i < sql.length && sql.charAt(i).isWhitespace) i += 1
-      i
-    }
-    var i = ws(0)
+    var i = skipWs(sql, 0)
     if (!keywordAt(sql, i, "create")) return false
-    i = ws(i + 6)
-    if (keywordAt(sql, i, "temporary")) i = ws(i + 9)
-    else if (keywordAt(sql, i, "temp")) i = ws(i + 4)
+    i = skipWs(sql, i + 6)
+    if (keywordAt(sql, i, "temporary")) i = skipWs(sql, i + 9)
+    else if (keywordAt(sql, i, "temp")) i = skipWs(sql, i + 4)
     if (!keywordAt(sql, i, "table")) return false
-    i = ws(i + 5)
+    i = skipWs(sql, i + 5)
     if (keywordAt(sql, i, "if")) {
-      i = ws(i + 2)
+      i = skipWs(sql, i + 2)
       if (!keywordAt(sql, i, "not")) return false
-      i = ws(i + 3)
+      i = skipWs(sql, i + 3)
       if (!keywordAt(sql, i, "exists")) return false
-      i = ws(i + 6)
+      i = skipWs(sql, i + 6)
     }
     if (i >= sql.length) return false
-    val c = sql.charAt(i)
-    if (c == '\'' || c == '"' || c == '`') i = endOfQuoted(sql, i, c)
-    else if (isWordChar(c)) {
+    val quoted = SqlText.skipOpaque(sql, i)
+    if (quoted > i) i = quoted
+    else if (isWordChar(sql.charAt(i))) {
       while (i < sql.length &&
              (isWordChar(sql.charAt(i)) || sql.charAt(i) == '.')) i += 1
     } else return false
-    i = ws(i)
+    i = skipWs(sql, i)
     i < sql.length && sql.charAt(i) == '('
   }
 
@@ -188,15 +183,10 @@ object SqlDialect {
     * stored raw and translated at registration (exec.Ddl), exactly
     * like CREATE TABLE's DEFAULT/CHECK fragments. */
   private def isCreateIndex(sql: String): Boolean = {
-    def ws(i0: Int): Int = {
-      var i = i0
-      while (i < sql.length && sql.charAt(i).isWhitespace) i += 1
-      i
-    }
-    var i = ws(0)
+    var i = skipWs(sql, 0)
     if (!keywordAt(sql, i, "create")) return false
-    i = ws(i + 6)
-    if (keywordAt(sql, i, "unique")) i = ws(i + 6)
+    i = skipWs(sql, i + 6)
+    if (keywordAt(sql, i, "unique")) i = skipWs(sql, i + 6)
     keywordAt(sql, i, "index")
   }
 
@@ -204,32 +194,16 @@ object SqlDialect {
     * declaration text (RENAME forms are pure metadata; ADD COLUMN's
     * DEFAULT is a single literal token, translated at registration). */
   private def isAlterTable(sql: String): Boolean = {
-    var i = 0
-    while (i < sql.length && sql.charAt(i).isWhitespace) i += 1
-    if (!keywordAt(sql, i, "alter")) return false
-    i += 5
-    while (i < sql.length && sql.charAt(i).isWhitespace) i += 1
-    keywordAt(sql, i, "table")
+    val i = skipWs(sql, 0)
+    keywordAt(sql, i, "alter") && keywordAt(sql, skipWs(sql, i + 5), "table")
   }
 
-  /** ILIKE → LIKE (outside quotes), the final pass under
-    * case_sensitive_like. Declared-SQLite input has no ILIKE of its
-    * own (not a SQLite operator), so every ILIKE here came from
-    * [[rewriteLike]]. */
-  private def unrewriteIlike(sql: String): String = {
-    val out = new java.lang.StringBuilder
-    var i = 0
-    while (i < sql.length) {
-      val c = sql.charAt(i)
-      if (c == '\'' || c == '"' || c == '`') {
-        val e = endOfQuoted(sql, i, c)
-        out.append(sql, i, e); i = e
-      } else if (keywordAt(sql, i, "ilike")) {
-        out.append("LIKE"); i += 5
-      } else { out.append(c); i += 1 }
-    }
-    out.toString
-  }
+  /** ILIKE → LIKE in code, the final pass under case_sensitive_like.
+    * Declared-SQLite input has no ILIKE of its own (not a SQLite
+    * operator), so every ILIKE here came from [[rewriteLike]]. */
+  private def unrewriteIlike(sql: String): String =
+    SqlText.rewrite(sql)(i =>
+      if (keywordAt(sql, i, "ilike")) Some(("LIKE", i + 5)) else None)
 
   /** SQLite 3.45's `jsonb*` family "works exactly the same" as the
     * text family except for returning binary JSONB — a storage-layer
@@ -245,29 +219,14 @@ object SqlDialect {
     ("(?i)\\bjsonb(_(?:set|insert|replace|remove|patch|extract|array" +
       "|object|group_array|group_object))?(\\s*\\()").r
 
-  private def rewriteJsonb(sql: String): String = {
-    val out = new StringBuilder
-    var i = 0
-    while (i < sql.length) {
-      sql.charAt(i) match {
-        case q @ ('\'' | '"' | '`') =>
-          val e = endOfQuoted(sql, i, q)
-          out.append(sql.substring(i, e)); i = e
-        case c if (c == 'j' || c == 'J') &&
-            (i == 0 || !isWordChar(sql.charAt(i - 1))) =>
-          jsonbRe.findPrefixMatchOf(sql.substring(i)) match {
-            case Some(m) =>
-              out.append("json")
-                .append(Option(m.group(1)).getOrElse(""))
-                .append(m.group(2))
-              i += m.end
-            case None => out.append(c); i += 1
-          }
-        case c => out.append(c); i += 1
-      }
+  private def rewriteJsonb(sql: String): String =
+    SqlText.rewrite(sql) { i =>
+      val c = sql.charAt(i)
+      if ((c == 'j' || c == 'J') && (i == 0 || !isWordChar(sql.charAt(i - 1))))
+        jsonbRe.findPrefixMatchOf(sql.substring(i)).map(m =>
+          ("json" + Option(m.group(1)).getOrElse("") + m.group(2), i + m.end))
+      else None
     }
-    out.toString
-  }
 
   /** SQLite's comma-form table-valued JSON calls — `FROM t,
     * json_each(t.col)` — correlate implicitly; Spark requires the
@@ -276,19 +235,17 @@ object SqlDialect {
     * registry by `plans.SqliteFunctions`). Insert it. Valid SQLite
     * admits json_each/json_tree ONLY in FROM position, so a preceding
     * comma is proof of the form — a select-list or argument
-    * occurrence would already be a SQLite error. Quote-aware;
-    * idempotent (after insertion the token before the name is
-    * LATERAL, not a comma).
+    * occurrence would already be a SQLite error. Idempotent (after
+    * insertion the token before the name is LATERAL, not a comma).
     */
   private def rewriteJsonTvf(sql: String): String = {
     val name = "(?is)^(json_each|json_tree)\\s*\\(".r
-    val out = new StringBuilder
+    val out = new java.lang.StringBuilder
     var i = 0
     while (i < sql.length) {
-      sql.charAt(i) match {
-        case q @ ('\'' | '"' | '`') =>
-          val e = endOfQuoted(sql, i, q)
-          out.append(sql.substring(i, e)); i = e
+      val e = SqlText.skipOpaque(sql, i)
+      if (e > i) { out.append(sql, i, e); i = e }
+      else sql.charAt(i) match {
         case c if (c == 'j' || c == 'J') &&
             (i == 0 || !isWordChar(sql.charAt(i - 1))) &&
             name.findFirstIn(sql.substring(i)).isDefined =>
@@ -329,60 +286,31 @@ object SqlDialect {
     * (no OVER) is native Spark and passes through untouched. Runs
     * FIRST so later passes see the rewritten aggregate. */
   private def rewriteWindowFilter(sql: String): String = {
-    // close-paren position -> its matching open, quote-aware
-    def parenMap(s: String): Map[Int, Int] = {
-      val m = Map.newBuilder[Int, Int]
-      var stack = List.empty[Int]
-      var i = 0
-      while (i < s.length) {
-        s.charAt(i) match {
-          case q @ ('\'' | '"' | '`') => i = endOfQuoted(s, i, q) - 1
-          case '(' => stack ::= i
-          case ')' => if (stack.nonEmpty) { m += (i -> stack.head); stack = stack.tail }
-          case _ =>
-        }
-        i += 1
-      }
-      m.result()
-    }
-    def skipW(s: String, at: Int): Int = {
-      var i = at
-      while (i < s.length && s.charAt(i).isWhitespace) i += 1
-      i
-    }
-    def hasTopComma(s: String): Boolean = {
-      var i = 0
-      while (i < s.length) {
-        s.charAt(i) match {
-          case q @ ('\'' | '"' | '`') => i = endOfQuoted(s, i, q) - 1
-          case '(' => val e = closeParen(s, i); i = if (e < 0) s.length else e
-          case ',' => return true
-          case _ =>
-        }
-        i += 1
-      }
-      false
-    }
     def onePass(s: String): Option[String] = {
-      val pm = parenMap(s)
+      var stack = List.empty[Int] // open parens
+      var openIdx = -1 // the open paren of the last `)` passed
       var i = 0
       while (i < s.length) {
-        val c = s.charAt(i)
-        if (c == '\'' || c == '"' || c == '`') i = endOfQuoted(s, i, c)
-        else if (keywordAt(s, i, "filter")) {
+        val e = SqlText.skipOpaque(s, i)
+        if (e > i) i = e
+        else if (s.charAt(i) == '(') { stack ::= i; i += 1 }
+        else if (s.charAt(i) == ')') {
+          openIdx = stack.headOption.getOrElse(-1)
+          stack = stack.drop(1)
+          i += 1
+        } else if (keywordAt(s, i, "filter")) {
           var p = i - 1
           while (p >= 0 && s.charAt(p).isWhitespace) p -= 1
           val closeIdx = p
-          val j = skipW(s, i + 6)
+          val j = skipWs(s, i + 6)
           if (closeIdx >= 0 && s.charAt(closeIdx) == ')' &&
               j < s.length && s.charAt(j) == '(') {
-            val fClose = closeParen(s, j)
+            val fClose = SqlText.closeParen(s, j)
             val innerT = if (fClose > 0) s.substring(j + 1, fClose).trim else ""
-            val afterF = if (fClose > 0) skipW(s, fClose + 1) else s.length
+            val afterF = if (fClose > 0) skipWs(s, fClose + 1) else s.length
             if (fClose > 0 && keywordAt(innerT, 0, "where") &&
                 keywordAt(s, afterF, "over")) {
               val pred = innerT.substring(5).trim
-              val openIdx = pm.getOrElse(closeIdx, -1)
               if (openIdx > 0 && pred.nonEmpty) {
                 var ns = openIdx
                 while (ns > 0 && s.charAt(ns - 1).isWhitespace) ns -= 1
@@ -400,7 +328,8 @@ object SqlDialect {
                     if (name.equalsIgnoreCase("count") && args == "*" &&
                         distinct.isEmpty)
                       Some(s"count(CASE WHEN ($pred) THEN 1 END)")
-                    else if (args.nonEmpty && !hasTopComma(args))
+                    else if (args.nonEmpty &&
+                             SqlText.findTop(args, 0)(args.charAt(_) == ',') < 0)
                       Some(s"$name(${distinct}CASE WHEN ($pred) THEN $args END)")
                     else None
                   call match {
@@ -435,25 +364,21 @@ object SqlDialect {
     * so `LIMIT off, -1` (comma form) normalizes first. Only a bare
     * negative integer literal matches; arithmetic stays untouched. */
   private def rewriteNegativeLimit(sql: String): String = {
-    var i = 0
-    while (i < sql.length) {
-      val c = sql.charAt(i)
-      if (c == '\'' || c == '"' || c == '`') i = endOfQuoted(sql, i, c)
-      else if (keywordAt(sql, i, "limit")) {
-        var j = i + 5
-        while (j < sql.length && sql.charAt(j).isWhitespace) j += 1
-        if (j < sql.length && sql.charAt(j) == '-') {
-          var e = j + 1
-          while (e < sql.length && sql.charAt(e).isDigit) e += 1
-          val bareNegInt = e > j + 1 &&
-            (e >= sql.length || !(isWordChar(sql.charAt(e)) ||
-              "+-*/%.".indexOf(sql.charAt(e)) >= 0))
-          if (bareNegInt)
-            return rewriteNegativeLimit(
-              sql.substring(0, i).stripSuffix(" ") + sql.substring(e))
-        }
-        i = j
-      } else i += 1
+    def next(from: Int) = SqlText.find(sql, from)(keywordAt(sql, _, "limit"))
+    var i = next(0)
+    while (i >= 0) {
+      val j = skipWs(sql, i + 5)
+      if (j < sql.length && sql.charAt(j) == '-') {
+        var e = j + 1
+        while (e < sql.length && sql.charAt(e).isDigit) e += 1
+        val bareNegInt = e > j + 1 &&
+          (e >= sql.length || !(isWordChar(sql.charAt(e)) ||
+            "+-*/%.".indexOf(sql.charAt(e)) >= 0))
+        if (bareNegInt)
+          return rewriteNegativeLimit(
+            sql.substring(0, i).stripSuffix(" ") + sql.substring(e))
+      }
+      i = next(j)
     }
     sql
   }
@@ -465,36 +390,27 @@ object SqlDialect {
     * Spark-parseable forms untouched.
     */
   private def rewriteIs(sql: String): String = {
-    var i = 0
-    while (i < sql.length) {
-      val c = sql.charAt(i)
-      if (c == '\'' || c == '"' || c == '`') i = endOfQuoted(sql, i, c)
-      else if (keywordAt(sql, i, "is")) {
-        var j = i + 2
-        while (j < sql.length && sql.charAt(j).isWhitespace) j += 1
-        var negated = false
-        if (keywordAt(sql, j, "not")) {
-          negated = true
-          j += 3
-          while (j < sql.length && sql.charAt(j).isWhitespace) j += 1
+    def next(from: Int) = SqlText.find(sql, from)(keywordAt(sql, _, "is"))
+    var i = next(0)
+    while (i >= 0) {
+      var j = skipWs(sql, i + 2)
+      val negated = keywordAt(sql, j, "not")
+      if (negated) j = skipWs(sql, j + 3)
+      val sparkOk = Seq("null", "true", "false", "unknown", "distinct")
+        .exists(k => keywordAt(sql, j, k))
+      if (!sparkOk) {
+        val ye = primaryEndForwards(sql, j)
+        var xEnd = i
+        while (xEnd > 0 && sql.charAt(xEnd - 1).isWhitespace) xEnd -= 1
+        val xStart = primaryStartBackwards(sql, xEnd)
+        if (ye >= 0 && xStart >= 0 && xStart < xEnd) {
+          val a = sql.substring(xStart, xEnd)
+          val b = sql.substring(j, ye)
+          val repl = if (negated) s"NOT ($a <=> $b)" else s"($a <=> $b)"
+          return rewriteIs(sql.substring(0, xStart) + repl + sql.substring(ye))
         }
-        val spark_ok = Seq("null", "true", "false", "unknown", "distinct")
-          .exists(k => keywordAt(sql, j, k))
-        if (spark_ok) i = j
-        else {
-          val ye = primaryEndForwards(sql, j)
-          var xEnd = i
-          while (xEnd > 0 && sql.charAt(xEnd - 1).isWhitespace) xEnd -= 1
-          val xStart = primaryStartBackwards(sql, xEnd)
-          if (ye < 0 || xStart < 0 || xStart >= xEnd) i = j
-          else {
-            val a = sql.substring(xStart, xEnd)
-            val b = sql.substring(j, ye)
-            val repl = if (negated) s"NOT ($a <=> $b)" else s"($a <=> $b)"
-            return rewriteIs(sql.substring(0, xStart) + repl + sql.substring(ye))
-          }
-        }
-      } else i += 1
+      }
+      i = next(j)
     }
     sql
   }
@@ -504,31 +420,23 @@ object SqlDialect {
     * through untouched.
     */
   private def rewriteLimitComma(sql: String): String = {
-    var i = 0
-    while (i < sql.length) {
-      val c = sql.charAt(i)
-      if (c == '\'' || c == '"' || c == '`') i = endOfQuoted(sql, i, c)
-      else if (keywordAt(sql, i, "limit")) {
-        var j = i + 5
-        while (j < sql.length && sql.charAt(j).isWhitespace) j += 1
-        val ae = primaryEndForwards(sql, j)
-        if (ae < 0) { i = j } else {
-          var k = ae
-          while (k < sql.length && sql.charAt(k).isWhitespace) k += 1
-          if (k < sql.length && sql.charAt(k) == ',') {
-            var bs = k + 1
-            while (bs < sql.length && sql.charAt(bs).isWhitespace) bs += 1
-            val be = primaryEndForwards(sql, bs)
-            if (be < 0) i = k
-            else {
-              val off = sql.substring(j, ae)
-              val cnt = sql.substring(bs, be)
-              return rewriteLimitComma(sql.substring(0, i) +
-                s"LIMIT $cnt OFFSET $off" + sql.substring(be))
-            }
-          } else i = ae
+    def next(from: Int) = SqlText.find(sql, from)(keywordAt(sql, _, "limit"))
+    var i = next(0)
+    while (i >= 0) {
+      val j = skipWs(sql, i + 5)
+      val ae = primaryEndForwards(sql, j)
+      val k = if (ae < 0) -1 else skipWs(sql, ae)
+      if (k >= 0 && k < sql.length && sql.charAt(k) == ',') {
+        val bs = skipWs(sql, k + 1)
+        val be = primaryEndForwards(sql, bs)
+        if (be >= 0) {
+          val off = sql.substring(j, ae)
+          val cnt = sql.substring(bs, be)
+          return rewriteLimitComma(sql.substring(0, i) +
+            s"LIMIT $cnt OFFSET $off" + sql.substring(be))
         }
-      } else i += 1
+      }
+      i = next(math.max(j, ae))
     }
     sql
   }
@@ -623,85 +531,76 @@ object SqlDialect {
     * rewritten call becomes the next operator's `)`-terminated LHS
     * operand. `-->` is a SQLite line comment, never an arrow. */
   private def rewriteJsonArrow(sql: String): String = {
-    var i = 0
-    while (i < sql.length) {
-      val c = sql.charAt(i)
-      if (c == '\'' || c == '"' || c == '`') i = endOfQuoted(sql, i, c)
-      else if (c == '-' && i + 1 < sql.length && sql.charAt(i + 1) == '>' &&
-               (i == 0 || sql.charAt(i - 1) != '-')) {
-        val unquoting = i + 2 < sql.length && sql.charAt(i + 2) == '>'
-        val opEnd = i + (if (unquoting) 3 else 2)
-        var lhsEnd = i
-        while (lhsEnd > 0 && sql.charAt(lhsEnd - 1).isWhitespace) lhsEnd -= 1
-        val lhsStart = operandStartBackwards(sql, lhsEnd, 0)
-        var j = opEnd
-        while (j < sql.length && sql.charAt(j).isWhitespace) j += 1
-        // normalized '<path literal>' (including quotes) + end index
-        val path: Option[(String, Int)] =
-          if (j < sql.length && sql.charAt(j) == '\'') {
-            val e = endOfQuote(sql, j)
-            val body = sql.substring(j + 1, e - 1)
-            if (body.startsWith("$")) Some((sql.substring(j, e), e))
-            else if (body.matches("[A-Za-z_][A-Za-z0-9_]*"))
-              Some((s"'$$.$body'", e))
-            else None
-          } else {
-            var e = j
-            while (e < sql.length && sql.charAt(e).isDigit) e += 1
-            if (e > j && (e == sql.length || !isWordChar(sql.charAt(e))))
-              Some((s"'$$[${sql.substring(j, e)}]'", e))
-            else None
-          }
-        path match {
-          case Some((p, e)) if lhsStart < lhsEnd =>
-            val lhs = sql.substring(lhsStart, lhsEnd)
-            val repl =
-              if (unquoting) s"get_json_object($lhs, $p)"
-              else s"to_json(variant_get(parse_json($lhs), $p))"
-            return rewriteJsonArrow(
-              sql.substring(0, lhsStart) + repl + sql.substring(e))
-          case _ => i = opEnd
+    def next(from: Int) = SqlText.find(sql, from)(sql.startsWith("->", _))
+    var i = next(0)
+    while (i >= 0) {
+      val unquoting = sql.startsWith("->>", i)
+      val opEnd = i + (if (unquoting) 3 else 2)
+      var lhsEnd = i
+      while (lhsEnd > 0 && sql.charAt(lhsEnd - 1).isWhitespace) lhsEnd -= 1
+      val lhsStart = operandStartBackwards(sql, lhsEnd, 0)
+      val j = skipWs(sql, opEnd)
+      // normalized '<path literal>' (including quotes) + end index
+      val path: Option[(String, Int)] =
+        if (j < sql.length && sql.charAt(j) == '\'') {
+          val e = SqlText.skipOpaque(sql, j)
+          val body = sql.substring(j + 1, e - 1)
+          if (body.startsWith("$")) Some((sql.substring(j, e), e))
+          else if (body.matches("[A-Za-z_][A-Za-z0-9_]*"))
+            Some((s"'$$.$body'", e))
+          else None
+        } else {
+          var e = j
+          while (e < sql.length && sql.charAt(e).isDigit) e += 1
+          if (e > j && (e == sql.length || !isWordChar(sql.charAt(e))))
+            Some((s"'$$[${sql.substring(j, e)}]'", e))
+          else None
         }
-      } else i += 1
+      path match {
+        case Some((p, e)) if lhsStart < lhsEnd =>
+          val lhs = sql.substring(lhsStart, lhsEnd)
+          val repl =
+            if (unquoting) s"get_json_object($lhs, $p)"
+            else s"to_json(variant_get(parse_json($lhs), $p))"
+          return rewriteJsonArrow(
+            sql.substring(0, lhsStart) + repl + sql.substring(e))
+        case _ => i = next(opEnd)
+      }
     }
     sql
   }
 
   private def rewriteGlob(sql: String): String = {
+    def next(from: Int) = SqlText.find(sql, from)(keywordAt(sql, _, "glob"))
     val out = new java.lang.StringBuilder
-    var i = 0
+    var i = next(0)
     var emitted = 0 // everything before this index is already appended
-    while (i < sql.length) {
-      val c = sql.charAt(i)
-      if (c == '\'' || c == '"' || c == '`') i = endOfQuoted(sql, i, c)
-      else if (keywordAt(sql, i, "glob")) {
-        // LHS: scan back over the preceding operand. A bare token is a
-        // non-whitespace run; a `)`-terminated operand walks back to
-        // its balanced `(` and then over any call-name token — so
-        // `trim( c1 ) GLOB 'p'` captures `trim( c1 )`, not `)` (the
-        // parenthesized rewrite would otherwise split the call).
-        var lhsEnd = i
-        while (lhsEnd > emitted && sql.charAt(lhsEnd - 1).isWhitespace) lhsEnd -= 1
-        val lhsStart = operandStartBackwards(sql, lhsEnd, emitted)
-        // RHS: must be a string literal
-        var j = i + 4
-        while (j < sql.length && sql.charAt(j).isWhitespace) j += 1
-        if (lhsStart < lhsEnd && j < sql.length && sql.charAt(j) == '\'') {
-          val e = endOfQuote(sql, j)
-          val colName = sql.substring(lhsStart, lhsEnd)
-          val pattern = sql.substring(j + 1, e - 1).replace("''", "'")
-          val regex = graft.functions.Glob.toRegex(pattern)
-            .replace("\\", "\\\\").replace("'", "''")
-          out.append(sql, emitted, lhsStart)
-          // parenthesized: SQLite lets GLOB chain/embed like any binary
-          // operator (`a GLOB p + 1`, `a GLOB p GLOB q`), but Spark's
-          // grammar treats RLIKE as a predicate that cannot be an
-          // operand — the parens keep every embedding parseable
-          out.append(s"($colName RLIKE '$regex')")
-          emitted = e
-          i = e
-        } else i += 4
-      } else i += 1
+    while (i >= 0) {
+      // LHS: scan back over the preceding operand. A bare token is a
+      // non-whitespace run; a `)`-terminated operand walks back to
+      // its balanced `(` and then over any call-name token — so
+      // `trim( c1 ) GLOB 'p'` captures `trim( c1 )`, not `)` (the
+      // parenthesized rewrite would otherwise split the call).
+      var lhsEnd = i
+      while (lhsEnd > emitted && sql.charAt(lhsEnd - 1).isWhitespace) lhsEnd -= 1
+      val lhsStart = operandStartBackwards(sql, lhsEnd, emitted)
+      // RHS: must be a string literal
+      val j = skipWs(sql, i + 4)
+      if (lhsStart < lhsEnd && j < sql.length && sql.charAt(j) == '\'') {
+        val e = SqlText.skipOpaque(sql, j)
+        val colName = sql.substring(lhsStart, lhsEnd)
+        val pattern = sql.substring(j + 1, e - 1).replace("''", "'")
+        val regex = graft.functions.Glob.toRegex(pattern)
+          .replace("\\", "\\\\").replace("'", "''")
+        out.append(sql, emitted, lhsStart)
+        // parenthesized: SQLite lets GLOB chain/embed like any binary
+        // operator (`a GLOB p + 1`, `a GLOB p GLOB q`), but Spark's
+        // grammar treats RLIKE as a predicate that cannot be an
+        // operand — the parens keep every embedding parseable
+        out.append(s"($colName RLIKE '$regex')")
+        emitted = e
+        i = next(e)
+      } else i = next(i + 4)
     }
     out.append(sql, emitted, sql.length)
     out.toString
@@ -718,46 +617,9 @@ object SqlDialect {
     * SQLite folds ASCII only, ILIKE folds full Unicode — documented
     * in README's divergence table.
     */
-  private def rewriteLike(sql: String): String = {
-    val out = new java.lang.StringBuilder
-    var i = 0
-    while (i < sql.length) {
-      val c = sql.charAt(i)
-      if (c == '\'' || c == '"' || c == '`') {
-        val e = endOfQuoted(sql, i, c)
-        out.append(sql, i, e); i = e
-      } else if (keywordAt(sql, i, "like")) {
-        out.append("ILIKE"); i += 4
-      } else { out.append(c); i += 1 }
-    }
-    out.toString
-  }
-
-  /** Case-insensitive keyword match at `i` with word boundaries on
-    * both sides. */
-  private[graft] def keywordAt(sql: String, i: Int, kw: String): Boolean =
-    sql.regionMatches(true, i, kw, 0, kw.length) &&
-      (i == 0 || !isWordChar(sql.charAt(i - 1))) &&
-      (i + kw.length >= sql.length || !isWordChar(sql.charAt(i + kw.length)))
-
-  /** Quote-aware scan: does `kw` occur anywhere outside quotes,
-    * followed (after optional whitespace) by `next`? Covers the
-    * `NEW.` / `OLD.` / `raise(` shapes trigger validation probes. */
-  private[graft] def keywordFollowedBy(sql: String, kw: String,
-                                       next: Char): Boolean = {
-    var i = 0
-    while (i < sql.length) {
-      val c = sql.charAt(i)
-      if (c == '\'' || c == '"' || c == '`') i = endOfQuoted(sql, i, c)
-      else if (keywordAt(sql, i, kw)) {
-        var j = i + kw.length
-        while (j < sql.length && sql.charAt(j).isWhitespace) j += 1
-        if (j < sql.length && sql.charAt(j) == next) return true
-        i += kw.length
-      } else i += 1
-    }
-    false
-  }
+  private def rewriteLike(sql: String): String =
+    SqlText.rewrite(sql)(i =>
+      if (keywordAt(sql, i, "like")) Some(("ILIKE", i + 4)) else None)
 
   /** SQLite `COLLATE` clauses. `COLLATE BINARY` is Spark's default
     * comparison — the clause is dropped. `COLLATE NOCASE` applies
@@ -783,40 +645,32 @@ object SqlDialect {
     * answer.
     */
   private def rewriteCollate(sql: String): String = {
-    var i = 0
-    while (i < sql.length) {
-      val c = sql.charAt(i)
-      if (c == '\'' || c == '"' || c == '`') i = endOfQuoted(sql, i, c)
-      else if (keywordAt(sql, i, "collate")) {
-        var j = i + 7
-        while (j < sql.length && sql.charAt(j).isWhitespace) j += 1
-        var k = j
-        while (k < sql.length && isWordChar(sql.charAt(k))) k += 1
-        sql.substring(j, k).toLowerCase match {
-          case "binary" =>
-            // BINARY is Spark's default comparison — the clause drops,
-            // but a comment marker records that the statement CHOSE a
-            // collation explicitly, so the column-DECLARED collation
-            // fold (exec.Collations) steps aside for the whole
-            // statement (SQLite's explicit-override rule, applied
-            // coarsely — documented in the README table)
-            var e = i
-            while (e > 0 && sql.charAt(e - 1).isWhitespace) e -= 1
-            return rewriteCollate(sql.substring(0, e) +
-              " /*graft_binary*/" + sql.substring(k))
-          case "nocase" =>
-            applyCollationFold(sql, i, k, "lower") match {
-              case Some(rewritten) => return rewriteCollate(rewritten)
-              case None            => i = k // unparseable context: leave verbatim
-            }
-          case "rtrim" =>
-            applyCollationFold(sql, i, k, "rtrim") match {
-              case Some(rewritten) => return rewriteCollate(rewritten)
-              case None            => i = k // unparseable context: leave verbatim
-            }
-          case _ => i = k // unknown collation: leave verbatim
-        }
-      } else i += 1
+    def next(from: Int) = SqlText.find(sql, from)(keywordAt(sql, _, "collate"))
+    var i = next(0)
+    while (i >= 0) {
+      val j = skipWs(sql, i + 7)
+      var k = j
+      while (k < sql.length && isWordChar(sql.charAt(k))) k += 1
+      // None: an unknown collation or an unparseable context stays verbatim
+      val rewritten = sql.substring(j, k).toLowerCase match {
+        case "binary" =>
+          // BINARY is Spark's default comparison — the clause drops,
+          // but a comment marker records that the statement CHOSE a
+          // collation explicitly, so the column-DECLARED collation
+          // fold (exec.Collations) steps aside for the whole
+          // statement (SQLite's explicit-override rule, applied
+          // coarsely — documented in the README table)
+          var e = i
+          while (e > 0 && sql.charAt(e - 1).isWhitespace) e -= 1
+          Some(sql.substring(0, e) + " /*graft_binary*/" + sql.substring(k))
+        case "nocase" => applyCollationFold(sql, i, k, "lower")
+        case "rtrim" => applyCollationFold(sql, i, k, "rtrim")
+        case _ => None
+      }
+      rewritten match {
+        case Some(r) => return rewriteCollate(r)
+        case None => i = next(k)
+      }
     }
     sql
   }
@@ -830,8 +684,7 @@ object SqlDialect {
     val x = sql.substring(xStart, xEnd)
 
     // X COLLATE NOCASE op Y
-    var a = collEnd
-    while (a < sql.length && sql.charAt(a).isWhitespace) a += 1
+    val a = skipWs(sql, collEnd)
     // X COLLATE NOCASE [NOT] IN (list | SELECT …) / [NOT] BETWEEN
     // lo AND hi — SQLite propagates the LHS collation to every IN
     // operand (list members or subquery results) and both BETWEEN
@@ -841,21 +694,18 @@ object SqlDialect {
     var inStart = a
     var neg = ""
     if (keywordAt(sql, a, "not")) {
-      var n = a + 3
-      while (n < sql.length && sql.charAt(n).isWhitespace) n += 1
+      val n = skipWs(sql, a + 3)
       if (keywordAt(sql, n, "in") || keywordAt(sql, n, "between")) {
         neg = "NOT "; inStart = n
       } else if (!keywordAt(sql, n, "ilike")) return None
     }
     if (keywordAt(sql, inStart, "in")) {
-      var p = inStart + 2
-      while (p < sql.length && sql.charAt(p).isWhitespace) p += 1
+      val p = skipWs(sql, inStart + 2)
       if (p >= sql.length || sql.charAt(p) != '(') return None
-      val cp = closeParen(sql, p)
+      val cp = SqlText.closeParen(sql, p)
       if (cp < 0) return None
       val inner = sql.substring(p + 1, cp)
-      var s0 = 0
-      while (s0 < inner.length && inner.charAt(s0).isWhitespace) s0 += 1
+      val s0 = skipWs(inner, 0)
       // IN (SELECT …): SQLite propagates the LHS collation into the
       // membership comparison too. Folding does NOT require parsing
       // the subquery's select list — wrapping it as a one-column
@@ -866,22 +716,19 @@ object SqlDialect {
         return Some(sql.substring(0, xStart) +
           s"$fn($x) ${neg}IN (SELECT $fn(__graft_inc) FROM (" + inner +
           ") AS __graft_insub(__graft_inc))" + sql.substring(cp + 1))
-      val items = splitArgs(inner).map(it => s"$fn(${it.trim})")
+      val items = SqlText.splitTop(inner).map(it => s"$fn(${it.trim})")
       return Some(sql.substring(0, xStart) +
         s"$fn($x) ${neg}IN (" + items.mkString(", ") + ")" +
         sql.substring(cp + 1))
     }
     if (keywordAt(sql, inStart, "between")) {
-      var p = inStart + 7
-      while (p < sql.length && sql.charAt(p).isWhitespace) p += 1
+      val p = skipWs(sql, inStart + 7)
       val loEnd = primaryEndForwards(sql, p)
       if (loEnd < 0) return None
       val lo = sql.substring(p, loEnd)
-      var q = loEnd
-      while (q < sql.length && sql.charAt(q).isWhitespace) q += 1
-      if (!keywordAt(sql, q, "and")) return None
-      q += 3
-      while (q < sql.length && sql.charAt(q).isWhitespace) q += 1
+      val and = skipWs(sql, loEnd)
+      if (!keywordAt(sql, and, "and")) return None
+      val q = skipWs(sql, and + 3)
       val hiEnd = primaryEndForwards(sql, q)
       if (hiEnd < 0) return None
       val hi = sql.substring(q, hiEnd)
@@ -893,8 +740,7 @@ object SqlDialect {
       case Some(("ilike", _)) | Some(("not", _)) =>
         return Some(sql.substring(0, xEnd) + sql.substring(collEnd))
       case Some((op, opEnd)) =>
-        var ys = opEnd
-        while (ys < sql.length && sql.charAt(ys).isWhitespace) ys += 1
+        val ys = skipWs(sql, opEnd)
         val ye = primaryEndForwards(sql, ys)
         if (ye < 0) return None
         val y = sql.substring(ys, ye)
@@ -1014,23 +860,20 @@ object SqlDialect {
     * `start`; -1 if unrecognized. */
   private def primaryEndForwards(sql: String, start: Int): Int = {
     if (start >= sql.length) return -1
+    val quoted = SqlText.skipOpaque(sql, start)
+    if (quoted > start) return quoted
     sql.charAt(start) match {
       // unary sign before a primary (`x IS -1`): consume it and scan
       // the signed operand as one unit
-      case '-' | '+' =>
-        var j = start + 1
-        while (j < sql.length && sql.charAt(j).isWhitespace) j += 1
-        primaryEndForwards(sql, j)
-      case q @ ('\'' | '"' | '`') => endOfQuoted(sql, start, q)
+      case '-' | '+' => primaryEndForwards(sql, skipWs(sql, start + 1))
       case '(' =>
-        val c = closeParen(sql, start); if (c < 0) -1 else c + 1
+        val c = SqlText.closeParen(sql, start); if (c < 0) -1 else c + 1
       case c if isWordChar(c) =>
         var e = start
         while (e < sql.length && (isWordChar(sql.charAt(e)) || sql.charAt(e) == '.')) e += 1
-        var j = e
-        while (j < sql.length && sql.charAt(j).isWhitespace) j += 1
+        val j = skipWs(sql, e)
         if (j < sql.length && sql.charAt(j) == '(') {
-          val cl = closeParen(sql, j); if (cl < 0) -1 else cl + 1
+          val cl = SqlText.closeParen(sql, j); if (cl < 0) -1 else cl + 1
         } else e
       case _ => -1
     }
@@ -1052,37 +895,21 @@ object SqlDialect {
     val out = new java.lang.StringBuilder
     var i = 0
     while (i < sql.length) {
-      sql.charAt(i) match {
-        case '\'' =>
-          val e = endOfQuote(sql, i); out.append(sql, i, e); i = e
-        case '`' =>
-          val e = endOfQuoted(sql, i, '`'); out.append(sql, i, e); i = e
-        case '"' =>
-          var j = i + 1
-          val tok = new StringBuilder
-          var closed = -1
-          while (j < sql.length && closed < 0) {
-            if (sql.charAt(j) == '"') {
-              if (j + 1 < sql.length && sql.charAt(j + 1) == '"') {
-                tok.append('"'); j += 2
-              } else closed = j
-            } else { tok.append(sql.charAt(j)); j += 1 }
-          }
-          if (closed < 0) { out.append(sql, i, sql.length); i = sql.length }
-          else {
-            val t = tok.toString
-            if (known.contains(t.toLowerCase))
-              out.append('`').append(t.replace("`", "``")).append('`')
-            else out.append(sql, i, closed + 1)
-            i = closed + 1
-          }
-        case c => out.append(c); i += 1
+      val e = SqlText.skipOpaque(sql, i)
+      if (e == i) { out.append(sql.charAt(i)); i += 1 }
+      else {
+        val closedDq = sql.charAt(i) == '"' && e - i >= 2 && sql.charAt(e - 1) == '"'
+        val t = if (closedDq) sql.substring(i + 1, e - 1).replace("\"\"", "\"") else ""
+        if (closedDq && known.contains(t.toLowerCase))
+          out.append('`').append(t.replace("`", "``")).append('`')
+        else out.append(sql, i, e)
+        i = e
       }
     }
     out.toString
   }
 
-  // ---------------------------------------------------------------- lexer
+  // ---------------------------------------------------------------- calls
 
   /** Rewritable call names, matched with word boundaries. `datetime`
     * never collides with `date`/`time` because the boundary check
@@ -1098,68 +925,6 @@ object SqlDialect {
     "glob", "string_agg", "concat", "typeof", "hex", "quote",
     "zeroblob", "randomblob", "soundex", "sign")
 
-  private[graft] def isWordChar(c: Char) = c.isLetterOrDigit || c == '_'
-
-  /** Index just past the closing quote of the literal starting at
-    * `start` (which must be a `'`), honoring `''` escapes. */
-  private def endOfQuote(sql: String, start: Int): Int =
-    endOfQuoted(sql, start, '\'')
-
-  /** Same for an arbitrary quote char (`'` or `"`), honoring doubling. */
-  private[graft] def endOfQuoted(sql: String, start: Int, q: Char): Int = {
-    var i = start + 1
-    while (i < sql.length) {
-      if (sql.charAt(i) == q) {
-        if (i + 1 < sql.length && sql.charAt(i + 1) == q) i += 2
-        else return i + 1
-      } else i += 1
-    }
-    sql.length
-  }
-
-  /** Index of the `)` balancing the `(` at `open`, quote-aware (both
-    * `'…'` and `"…"` are opaque); -1 if unbalanced. */
-  private[graft] def closeParen(sql: String, open: Int): Int = {
-    var depth = 0
-    var i = open
-    while (i < sql.length) {
-      sql.charAt(i) match {
-        case '\'' => i = endOfQuoted(sql, i, '\'') - 1
-        case '"'  => i = endOfQuoted(sql, i, '"') - 1
-        case '`'  => i = endOfQuoted(sql, i, '`') - 1
-        case '('  => depth += 1
-        case ')'  => depth -= 1; if (depth == 0) return i
-        case _    =>
-      }
-      i += 1
-    }
-    -1
-  }
-
-  /** Split an argument list on top-level commas (quote- and
-    * paren-aware). */
-  private def splitArgs(s: String): Seq[String] = {
-    val args = Seq.newBuilder[String]
-    var depth = 0
-    var last = 0
-    var i = 0
-    while (i < s.length) {
-      s.charAt(i) match {
-        case '\'' => i = endOfQuoted(s, i, '\'') - 1
-        case '"'  => i = endOfQuoted(s, i, '"') - 1
-        case '`'  => i = endOfQuoted(s, i, '`') - 1
-        case '('  => depth += 1
-        case ')'  => depth -= 1
-        case ',' if depth == 0 =>
-          args += s.substring(last, i); last = i + 1
-        case _ =>
-      }
-      i += 1
-    }
-    args += s.substring(last)
-    args.result()
-  }
-
   /** If a rewritable call starts at `i`, return (name, openParenIdx,
     * closeParenIdx). The boundary check requires a non-word char before
     * `i`; `char(` preceded by `AS` is a cast type, not a call. */
@@ -1171,10 +936,9 @@ object SqlDialect {
       val name = it.next()
       if (sql.regionMatches(true, i, name, 0, name.length) &&
           (i + name.length >= sql.length || !isWordChar(sql.charAt(i + name.length)))) {
-        var j = i + name.length
-        while (j < sql.length && sql.charAt(j).isWhitespace) j += 1
+        val j = skipWs(sql, i + name.length)
         if (j < sql.length && sql.charAt(j) == '(') {
-          val close = closeParen(sql, j)
+          val close = SqlText.closeParen(sql, j)
           val castType = name == "char" && precedingWord(sql, i).equalsIgnoreCase("as")
           if (close >= 0 && !castType) return Some((name, j, close))
         }
@@ -1194,37 +958,21 @@ object SqlDialect {
   /** One left-to-right pass: rewrite the leftmost translatable call
     * (arguments first, recursively), continue after it. Untranslatable
     * calls keep their text but their arguments are still scanned. */
-  private def rewriteCalls(sql: String): String = {
-    val out = new java.lang.StringBuilder
-    var i = 0
-    while (i < sql.length) {
-      val c = sql.charAt(i)
-      if (c == '\'' || c == '"' || c == '`') {
-        // both quote styles are opaque here: double-quoted tokens are
-        // resolved later by resolveDoubleQuoted, never call-rewritten
-        val end = endOfQuoted(sql, i, c)
-        out.append(sql, i, end)
-        i = end
-      } else {
-        matchCall(sql, i) match {
-          case Some((name, open, close)) =>
-            val argRegion = sql.substring(open + 1, close)
-            // a blank arg list is zero args (SQLite date() = date('now')),
-            // not one empty-string arg
-            val args =
-              if (argRegion.trim.isEmpty) Seq.empty[String]
-              else splitArgs(argRegion).map(a => rewriteCalls(a.trim))
-            build(name, args) match {
-              case Some(repl) => out.append(repl); i = close + 1
-              case None       => out.append(sql, i, open + 1); i = open + 1
-            }
-          case None =>
-            out.append(c); i += 1
+  private def rewriteCalls(sql: String): String =
+    SqlText.rewrite(sql) { i =>
+      matchCall(sql, i).map { case (name, open, close) =>
+        val argRegion = sql.substring(open + 1, close)
+        // a blank arg list is zero args (SQLite date() = date('now')),
+        // not one empty-string arg
+        val args =
+          if (skipWs(argRegion, 0) == argRegion.length) Seq.empty[String]
+          else SqlText.splitTop(argRegion).map(a => rewriteCalls(a.trim))
+        build(name, args) match {
+          case Some(repl) => (repl, close + 1)
+          case None       => (sql.substring(i, open + 1), open + 1)
         }
       }
     }
-    out.toString
-  }
 
   // ----------------------------------------------------------- builders
 
@@ -1493,7 +1241,7 @@ object SqlDialect {
 
   private def isStringLit(s: String): Boolean = {
     val t = s.trim
-    t.length >= 2 && t.head == '\'' && endOfQuote(t, 0) == t.length
+    t.length >= 2 && t.head == '\'' && SqlText.skipOpaque(t, 0) == t.length
   }
 
   private def unquote(s: String): String = {

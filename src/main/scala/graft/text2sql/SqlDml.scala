@@ -34,7 +34,7 @@ package graft.text2sql
   * `graft.exec` so the text2sql layer stays side-effect free.
   */
 object SqlDml {
-  import SqlDialect.{keywordAt, isWordChar, endOfQuoted, closeParen}
+  import SqlText.{closeParen, isWordChar, keywordAt, skipWs, splitTop}
 
   sealed trait Stmt
 
@@ -317,40 +317,17 @@ object SqlDml {
     * restrictions (no PK / indexed / last-remaining column). */
   final case class AlterDropColumn(table: String, col: String) extends Stmt
 
-  /** Strip `--` and `slash-star` comments (quote-aware, replaced by one
-    * space so token boundaries survive). The clause scanners stop on
-    * bare keywords — a `-- limit cleanup` trailer would otherwise be
-    * read as a LIMIT clause; Spark itself handles comments in plain
-    * queries, but the DML path re-assembles statement fragments, so
-    * comments are removed before classification. */
-  private def stripComments(sql: String): String = {
-    val out = new StringBuilder
-    var i = 0
-    while (i < sql.length) {
-      val c = sql.charAt(i)
-      if (c == '\'' || c == '"' || c == '`') {
-        val e = endOfQuoted(sql, i, c)
-        out.append(sql.substring(i, e)); i = e
-      } else if (c == '-' && i + 1 < sql.length && sql.charAt(i + 1) == '-') {
-        while (i < sql.length && sql.charAt(i) != '\n') i += 1
-        out.append(' ')
-      } else if (c == '/' && i + 1 < sql.length && sql.charAt(i + 1) == '*') {
-        val e = sql.indexOf("*/", i + 2)
-        i = if (e < 0) sql.length else e + 2
-        out.append(' ')
-      } else { out.append(c); i += 1 }
-    }
-    out.toString
-  }
-
   /** Classify a statement. None = not DML (run it as a query). */
   def detect(rawSql: String): Option[Stmt] = {
     // strip trailing statement terminators: models habitually emit
     // "…;" and a semicolon riding into a re-wrapped source (e.g.
     // `SELECT * FROM (VALUES (1);)`) is a parse error. Quote-safe: a
     // literal can't END the statement with a bare ';' outside quotes.
-    // Comments strip first — the clause scanners are keyword-driven.
-    val sql = stripComments(rawSql).replaceAll("[;\\s]+$", "")
+    // Comments strip first (each to one space): the clause scanners
+    // stop on bare keywords, so a `-- limit cleanup` trailer would
+    // otherwise read as a LIMIT clause, and the DML path re-assembles
+    // statement fragments Spark never sees whole.
+    val sql = SqlText.stripComments(rawSql).replaceAll("[;\\s]+$", "")
     var i = skipWs(sql, 0)
     var withPrefix = ""
     if (keywordAt(sql, i, "with")) {
@@ -495,7 +472,7 @@ object SqlDml {
         // split is exact too (no-match rows assign NULLs, measured).
         val close = closeParen(sql, j)
         if (close < 0) return None
-        val colsList = splitTopCommas(sql.substring(j + 1, close))
+        val colsList = splitTop(sql.substring(j + 1, close))
           .map(c => unquoteIdent(c.trim)).filter(_.nonEmpty)
         if (colsList.isEmpty) return None
         j = skipWs(sql, close + 1)
@@ -508,7 +485,7 @@ object SqlDml {
         val inner = sql.substring(j + 1, rClose).trim
         val exprs: Seq[String] =
           if (!keywordAt(sql, skipWs(sql, j + 1), "select")) {
-            splitTopCommas(inner).map(_.trim).filter(_.nonEmpty)
+            splitTop(inner).map(_.trim).filter(_.nonEmpty)
           } else {
             val body = inner.substring(6).trim // past SELECT
             if (body.startsWith("*") ||
@@ -516,9 +493,9 @@ object SqlDml {
                 keywordAt(body, 0, "all"))
               return Some(Unsupported(
                 "UPDATE with a star/DISTINCT row-value subquery SET"))
-            val fromAt = findTopKeyword(body, 0, "from")
+            val fromAt = SqlText.findTop(body, 0)(keywordAt(body, _, "from"))
             val listEnd = if (fromAt < 0) body.length else fromAt
-            val items = splitTopCommas(body.substring(0, listEnd))
+            val items = splitTop(body.substring(0, listEnd))
               .map(_.trim).filter(_.nonEmpty)
             val tail = if (fromAt < 0) "" else " " + body.substring(fromAt)
             if (items.exists(_ == "*"))
@@ -702,27 +679,12 @@ object SqlDml {
   private def scanExpr(sql: String, i: Int, stops: Set[String],
                        stopComma: Boolean = true)
       : (String, Int, Option[String]) = {
-    var j = i
-    while (j < sql.length) {
-      val c = sql.charAt(j)
-      c match {
-        case '\'' | '"' | '`' => j = endOfQuoted(sql, j, c)
-        case '(' =>
-          val e = closeParen(sql, j)
-          if (e < 0) return (sql.substring(i), sql.length, None)
-          j = e + 1
-        case ',' if stopComma => return (sql.substring(i, j), j, Some(","))
-        case _ =>
-          if (isWordChar(c)) {
-            var e = j
-            while (e < sql.length && isWordChar(sql.charAt(e))) e += 1
-            val w = sql.substring(j, e).toLowerCase
-            if (stops(w)) return (sql.substring(i, j), j, Some(w))
-            j = e
-          } else j += 1
-      }
-    }
-    (sql.substring(i), sql.length, None)
+    def stopAt(j: Int): Option[String] =
+      if (sql.charAt(j) == ',') Some(",").filter(_ => stopComma)
+      else stops.find(keywordAt(sql, j, _))
+    val at = SqlText.findTop(sql, i)(stopAt(_).isDefined)
+    if (at < 0) (sql.substring(i), sql.length, None)
+    else (sql.substring(i, at), at, stopAt(at))
   }
 
   /** Parse `[TEMP|TEMPORARY] (VIEW|TABLE) [IF NOT EXISTS] name
@@ -773,7 +735,7 @@ object SqlDml {
       if (!isTable) {
         val close = closeParen(sql, j)
         if (close < 0) return Some(Unsupported(verb))
-        val vcols = splitTopCommas(sql.substring(j + 1, close))
+        val vcols = splitTop(sql.substring(j + 1, close))
           .map(c => unquoteIdent(c.trim)).filter(_.nonEmpty)
         if (vcols.isEmpty) return Some(Unsupported(verb))
         val k = skipWs(sql, close + 1)
@@ -890,16 +852,17 @@ object SqlDml {
     val (typeEnd, _) = scanTypeTokens(item, typeStart).getOrElse(return bad)
     val declType = item.substring(typeStart, typeEnd min item.length).trim
     val frag = item.substring(typeEnd min item.length)
-    if (findTopKeyword(frag, 0, "primary") >= 0)
+    def top(kw: String) = SqlText.findTop(frag, 0)(keywordAt(frag, _, kw))
+    if (top("primary") >= 0)
       return Some(Unsupported(s"$verb with PRIMARY KEY (SQLite forbids)"))
-    if (findTopKeyword(frag, 0, "unique") >= 0)
+    if (top("unique") >= 0)
       return Some(Unsupported(s"$verb with UNIQUE (SQLite forbids)"))
-    val genK = findTopKeyword(frag, 0, "generated")
-    val asK = findTopKeyword(frag, 0, "as")
+    val genK = top("generated")
+    val asK = top("as")
     if (genK >= 0 || asK >= 0) {
-      if (findTopKeyword(frag, 0, "default") >= 0 ||
-          findTopKeyword(frag, 0, "not") >= 0 ||
-          findTopKeyword(frag, 0, "references") >= 0)
+      if (top("default") >= 0 ||
+          top("not") >= 0 ||
+          top("references") >= 0)
         return Some(Unsupported(s"$verb with a constrained generated column"))
       return parseGeneratedClause(frag, genK, asK) match {
         case Right((exprSql, stored)) =>
@@ -909,10 +872,10 @@ object SqlDml {
       }
     }
     val notNull = {
-      val k = findTopKeyword(frag, 0, "not")
+      val k = top("not")
       k >= 0 && keywordAt(frag, skipWs(frag, k + 3), "null")
     }
-    val dk = findTopKeyword(frag, 0, "default")
+    val dk = top("default")
     val default =
       if (dk < 0) None
       else {
@@ -923,10 +886,9 @@ object SqlDml {
           return Some(Unsupported(
             s"$verb with a parenthesized DEFAULT expression (SQLite forbids)"))
         val end =
-          if (c == '\'' || c == '"') endOfQuoted(frag, at, c)
-          else if ((c == 'x' || c == 'X') && at + 1 < frag.length &&
-                   frag.charAt(at + 1) == '\'')
-            endOfQuoted(frag, at + 1, '\'')
+          if (c == '\'' || c == '"') SqlText.skipOpaque(frag, at)
+          else if ((c == 'x' || c == 'X') && frag.startsWith("'", at + 1))
+            SqlText.skipOpaque(frag, at + 1)
           else {
             var e = at
             while (e < frag.length && !frag.charAt(e).isWhitespace) e += 1
@@ -944,7 +906,7 @@ object SqlDml {
     // as CREATE TABLE's column-level form does (measured: SQLite lists
     // it in foreign_key_list and enforces it)
     val fk = {
-      val rk = findTopKeyword(frag, 0, "references")
+      val rk = top("references")
       if (rk < 0) None
       else parseReferences(frag, skipWs(frag, rk + 10), Seq(name)) match {
         case Right((f, _)) => Some(f)
@@ -954,7 +916,7 @@ object SqlDml {
     // CHECK / COLLATE riders register like CREATE TABLE's (SQLite
     // accepts both on ADD COLUMN; existing rows are not re-validated)
     val check = {
-      val ck = findTopKeyword(frag, 0, "check")
+      val ck = top("check")
       if (ck < 0) None
       else {
         val p = skipWs(frag, ck + 5)
@@ -967,7 +929,7 @@ object SqlDml {
       }
     }
     val collate = {
-      val lk = findTopKeyword(frag, 0, "collate")
+      val lk = top("collate")
       if (lk < 0) None
       else parseIdent(frag, skipWs(frag, lk + 7)).map(_._1.toUpperCase)
     }
@@ -1041,7 +1003,7 @@ object SqlDml {
       s.split(",").toSeq.map(c => unquoteIdent(
         // strip per-column COLLATE / ASC / DESC riders
         c.trim.split("\\s+").headOption.getOrElse("").trim)).filter(_.nonEmpty)
-    for (rawItem <- splitTopCommas(inner)) {
+    for (rawItem <- splitTop(inner)) {
       var item = rawItem.trim
       if (item.isEmpty) return Left(Unsupported("CREATE TABLE"))
       // CONSTRAINT <name> <constraint> — kept: SQLite's CHECK error
@@ -1111,17 +1073,18 @@ object SqlDml {
           .getOrElse(return Left(Unsupported("CREATE TABLE")))
         val declType = item.substring(typeStart, typeEnd min item.length).trim
         val frag = item.substring(typeEnd min item.length)
-        val genK = findTopKeyword(frag, 0, "generated")
-        val asK = findTopKeyword(frag, 0, "as")
+        def top(kw: String) = SqlText.findTop(frag, 0)(keywordAt(frag, _, kw))
+        val genK = top("generated")
+        val asK = top("as")
         if (genK >= 0 || asK >= 0) {
           // [GENERATED ALWAYS] AS (expr) [VIRTUAL|STORED] — the
           // paren-aware top scan can't see keywords inside the expr,
           // so any OTHER constraint keyword at top level is a
           // combination SQLite forbids on generated columns
-          if (findTopKeyword(frag, 0, "primary") >= 0 ||
-              findTopKeyword(frag, 0, "unique") >= 0 ||
-              findTopKeyword(frag, 0, "default") >= 0 ||
-              findTopKeyword(frag, 0, "references") >= 0)
+          if (top("primary") >= 0 ||
+              top("unique") >= 0 ||
+              top("default") >= 0 ||
+              top("references") >= 0)
             return Left(Unsupported(
               "CREATE TABLE with a constrained generated column"))
           parseGeneratedClause(frag, genK, asK) match {
@@ -1131,20 +1094,20 @@ object SqlDml {
             case Left(u) => return Left(u)
           }
         } else {
-        if (findTopKeyword(frag, 0, "autoincrement") >= 0 && autoinc.isEmpty)
+        if (top("autoincrement") >= 0 && autoinc.isEmpty)
           autoinc = Some((name, declType,
-            findTopKeyword(frag, 0, "primary") >= 0))
-        if (findTopKeyword(frag, 0, "primary") >= 0 && pk.isEmpty)
+            top("primary") >= 0))
+        if (top("primary") >= 0 && pk.isEmpty)
           pk = Seq(name)
-        else if (findTopKeyword(frag, 0, "unique") >= 0)
+        else if (top("unique") >= 0)
           uniques += Seq(name)
-        // NOT NULL — findTopKeyword is paren-transparent, so a
+        // NOT NULL — `top` is paren-transparent, so a
         // `NOT NULL` inside a CHECK expression never false-positives
-        val nnK = findTopKeyword(frag, 0, "not")
+        val nnK = top("not")
         if (nnK >= 0 && keywordAt(frag, skipWs(frag, nnK + 3), "null"))
           notNulls += name
         // column-level [CONSTRAINT nm] CHECK (expr)
-        val ckK = findTopKeyword(frag, 0, "check")
+        val ckK = top("check")
         if (ckK >= 0) {
           val p = skipWs(frag, ckK + 5)
           if (p >= frag.length || frag.charAt(p) != '(')
@@ -1153,7 +1116,7 @@ object SqlDml {
           if (close < 0) return Left(Unsupported("CREATE TABLE"))
           val ex = frag.substring(p + 1, close).trim
           if (ex.isEmpty) return Left(Unsupported("CREATE TABLE"))
-          val cnK = findTopKeyword(frag, 0, "constraint")
+          val cnK = top("constraint")
           val nm =
             if (cnK < 0) ""
             else parseIdent(frag, skipWs(frag, cnK + 10))
@@ -1162,7 +1125,7 @@ object SqlDml {
         }
         // COLLATE <name> rider (registered so bare comparisons /
         // ORDER BY / GROUP BY over the column fold the collation)
-        val clK = findTopKeyword(frag, 0, "collate")
+        val clK = top("collate")
         if (clK >= 0)
           parseIdent(frag, skipWs(frag, clK + 7)).foreach { case (cl, _) =>
             collates += ((name, cl.toUpperCase))
@@ -1171,7 +1134,7 @@ object SqlDml {
         // quoted literal, or a signed literal/keyword token (SQLite's
         // column-constraint grammar — CREATE TABLE, unlike ADD
         // COLUMN, allows parenthesized defaults)
-        val dk = findTopKeyword(frag, 0, "default")
+        val dk = top("default")
         if (dk >= 0) {
           val at = skipWs(frag, dk + 7)
           if (at >= frag.length) return Left(Unsupported("CREATE TABLE"))
@@ -1182,7 +1145,7 @@ object SqlDml {
               if (close < 0) return Left(Unsupported("CREATE TABLE"))
               close + 1
             }
-            else if (c == '\'' || c == '"') endOfQuoted(frag, at, c)
+            else if (c == '\'' || c == '"') SqlText.skipOpaque(frag, at)
             else {
               var e = at
               if (e < frag.length &&
@@ -1197,7 +1160,7 @@ object SqlDml {
           defaults += ((name, tok))
         }
         // column-level REFERENCES parent [(pcol)] [ref clauses]
-        val rk = findTopKeyword(frag, 0, "references")
+        val rk = top("references")
         if (rk >= 0)
           parseReferences(frag, skipWs(frag, rk + 10), Seq(name)) match {
             case Right((fk, _)) => fks += fk
@@ -1331,45 +1294,6 @@ object SqlDml {
     Right((Fk(childCols, parent, pcols, onUpd, onDel), j))
   }
 
-  /** Split on top-level commas (outside quotes and parens). */
-  private def splitTopCommas(s: String): Seq[String] = {
-    val out = Seq.newBuilder[String]
-    var start = 0
-    var j = 0
-    while (j < s.length) {
-      val c = s.charAt(j)
-      c match {
-        case '\'' | '"' | '`' => j = endOfQuoted(s, j, c)
-        case '(' =>
-          val e = closeParen(s, j)
-          j = if (e < 0) s.length else e + 1
-        case ',' => out += s.substring(start, j); start = j + 1; j += 1
-        case _ => j += 1
-      }
-    }
-    out += s.substring(start)
-    out.result()
-  }
-
-  /** Parse `[IF NOT EXISTS] name ON table (col [COLLATE c] [ASC|DESC],
-    * …) [WHERE …]` starting just after INDEX. A plain index is a pure
-    * access-path directive (no result semantics — registered no-op); a
-    * UNIQUE one declares the conflict key, so unsound variants
-    * (expression keys, partial-index WHERE) decline targeted. */
-  /** First top-level `;` at/after `i` (outside quotes; parens cannot
-    * legally hold a bare `;`), or -1. */
-  private def topLevelSemi(sql: String, i: Int): Int = {
-    var j = i
-    while (j < sql.length) {
-      sql.charAt(j) match {
-        case c @ ('\'' | '"' | '`') => j = endOfQuoted(sql, j, c)
-        case ';' => return j
-        case _ => j += 1
-      }
-    }
-    -1
-  }
-
   /** `CREATE [TEMP] TRIGGER …` — see [[CreateTrigger]]. Grammar-level
     * failures return Unsupported with a NAMED reason (the detector
     * stays total — a truncated model response must classify, not
@@ -1447,7 +1371,7 @@ object SqlDml {
         if (skipWs(sql, j + 3) < sql.length) return bailWhy("text after END") // trailing text
         parsing = false
       } else {
-        val semi = topLevelSemi(sql, j)
+        val semi = SqlText.find(sql, j)(sql.charAt(_) == ';')
         if (semi < 0) return bailWhy("body statement without a terminating ';' before END")
         val stmtText = sql.substring(j, semi).trim
         if (stmtText.nonEmpty) body += stmtText
@@ -1460,6 +1384,11 @@ object SqlDml {
       table, when, stmts, sql))
   }
 
+  /** Parse `[IF NOT EXISTS] name ON table (col [COLLATE c] [ASC|DESC],
+    * …) [WHERE …]` starting just after INDEX. A plain index is a pure
+    * access-path directive (no result semantics — registered no-op); a
+    * UNIQUE one declares the conflict key, so unsound variants
+    * (expression keys, partial-index WHERE) decline targeted. */
   private def parseCreateIndex(sql: String, start: Int,
                                unique: Boolean): Option[Stmt] = {
     val verb = if (unique) "CREATE UNIQUE INDEX" else "CREATE INDEX"
@@ -1486,7 +1415,7 @@ object SqlDml {
     val close = closeParen(sql, j)
     if (close < 0) return Some(Unsupported(verb))
     var exprKey = false
-    val parsed = splitTopCommas(sql.substring(j + 1, close)).flatMap { raw =>
+    val parsed = splitTop(sql.substring(j + 1, close)).flatMap { raw =>
       val item = raw.trim
       parseIdent(item, 0) match {
         case Some((c, after)) =>
@@ -1523,7 +1452,7 @@ object SqlDml {
     // executor validates/translates them and the constraint enforces
     // over the expressions (SQLite's `UNIQUE constraint failed:
     // index 'name'` error)
-    val rawItems = splitTopCommas(sql.substring(j + 1, close)).map(_.trim)
+    val rawItems = splitTop(sql.substring(j + 1, close)).map(_.trim)
     if (unique && exprKey && rawItems.exists(_.isEmpty))
       return Some(Unsupported("CREATE UNIQUE INDEX on an expression"))
     Some(CreateIndex(name, table, if (exprKey) Nil else cols, unique,
@@ -1564,8 +1493,11 @@ object SqlDml {
     // ON is never followed by the word CONFLICT), else the first
     // top-level RETURNING (grammar places it after ON CONFLICT, and a
     // bare keyword can't appear top-level inside the source)
-    val confAt = findOnConflict(sql, j)
-    val retAt = if (confAt >= 0) -1 else findTopKeyword(sql, j, "returning")
+    def onConflictAt(k: Int) =
+      keywordAt(sql, k, "on") && keywordAt(sql, skipWs(sql, k + 2), "conflict")
+    val confAt = SqlText.findTop(sql, j)(onConflictAt)
+    val retAt =
+      if (confAt >= 0) -1 else SqlText.findTop(sql, j)(keywordAt(sql, _, "returning"))
     val srcEnd =
       if (confAt >= 0) confAt else if (retAt >= 0) retAt else sql.length
     var returning: Option[String] =
@@ -1592,7 +1524,7 @@ object SqlDml {
             case Right((c, end)) =>
               acc += c
               val rest = skipWs(sql, end)
-              if (rest < sql.length && findOnConflict(sql, rest) == rest) {
+              if (onConflictAt(rest)) {
                 if (c.keyCols.isEmpty && c.keyExprs.isEmpty)
                   // sqlite3 echoes the SOURCE token's casing ('on
                   // conflict' yields near "on" — measured 3.40.1)
@@ -1638,57 +1570,6 @@ object SqlDml {
       conflictRest = conflicts.drop(1)))
   }
 
-  /** Index of the first top-level occurrence of keyword `kw` at or
-    * after `i` (outside quotes and parens), or -1. */
-  private def findTopKeyword(sql: String, i: Int, kw: String): Int = {
-    var j = i
-    while (j < sql.length) {
-      val c = sql.charAt(j)
-      c match {
-        case '\'' | '"' | '`' => j = endOfQuoted(sql, j, c)
-        case '(' =>
-          val e = closeParen(sql, j)
-          if (e < 0) return -1
-          j = e + 1
-        case _ =>
-          if (isWordChar(c)) {
-            var e = j
-            while (e < sql.length && isWordChar(sql.charAt(e))) e += 1
-            if (e - j == kw.length && sql.substring(j, e).equalsIgnoreCase(kw))
-              return j
-            j = e
-          } else j += 1
-      }
-    }
-    -1
-  }
-
-  /** Index of the first top-level `ON CONFLICT` at or after `i`
-    * (outside quotes and parens), or -1. */
-  private def findOnConflict(sql: String, i: Int): Int = {
-    var j = i
-    while (j < sql.length) {
-      val c = sql.charAt(j)
-      c match {
-        case '\'' | '"' | '`' => j = endOfQuoted(sql, j, c)
-        case '(' =>
-          val e = closeParen(sql, j)
-          if (e < 0) return -1
-          j = e + 1
-        case _ =>
-          if (isWordChar(c)) {
-            var e = j
-            while (e < sql.length && isWordChar(sql.charAt(e))) e += 1
-            if (e - j == 2 && sql.substring(j, e).equalsIgnoreCase("on") &&
-                keywordAt(sql, skipWs(sql, e), "conflict"))
-              return j
-            j = e
-          } else j += 1
-      }
-    }
-    -1
-  }
-
   /** Parse `[(cols) [WHERE …]] DO (NOTHING | UPDATE SET a = e, …
     * [WHERE p])` starting just after the CONFLICT keyword. Right =
     * (clause, end index); Left = targeted decline. */
@@ -1701,7 +1582,7 @@ object SqlDml {
     if (j < sql.length && sql.charAt(j) == '(') {
       val close = closeParen(sql, j)
       if (close < 0) return Left(Unsupported("INSERT … ON CONFLICT"))
-      val items = splitTopCommas(sql.substring(j + 1, close)).map(_.trim)
+      val items = splitTop(sql.substring(j + 1, close)).map(_.trim)
       if (items.isEmpty || items.exists(_.isEmpty))
         return Left(Unsupported("INSERT … ON CONFLICT"))
       // a plain column list keys against the lake schema; anything
@@ -1784,42 +1665,24 @@ object SqlDml {
   /** Rewrite `excluded.col` references — SQLite's upsert qualifier for
     * the would-be-inserted row — to flat `__excl_col` names, the
     * columns [[graft.exec.Upsert]] carries the incoming row under in
-    * its update join. Quote-aware: `excluded` inside literals or
-    * quoted identifiers is untouched; both bare and quoted column
-    * forms rewrite. */
-  private[graft] def rewriteExcluded(s: String): String = {
-    val out = new StringBuilder
-    var j = 0
-    while (j < s.length) {
-      val c = s.charAt(j)
-      if (c == '\'' || c == '"' || c == '`') {
-        val e = endOfQuoted(s, j, c)
-        out.append(s.substring(j, e)); j = e
-      } else if (isWordChar(c)) {
-        var e = j
-        while (e < s.length && isWordChar(s.charAt(e))) e += 1
-        val w = s.substring(j, e)
-        var k = skipWs(s, e)
-        if (w.equalsIgnoreCase("excluded") && k < s.length &&
-            s.charAt(k) == '.') {
-          k = skipWs(s, k + 1)
-          if (k < s.length &&
-              (s.charAt(k) == '"' || s.charAt(k) == '`' || s.charAt(k) == '\'')) {
-            val qe = endOfQuoted(s, k, s.charAt(k))
-            val name = s.substring(k + 1, qe - 1)
-            out.append("`__excl_").append(name.replace("`", "``")).append('`')
-            j = qe
-          } else if (k < s.length && isWordChar(s.charAt(k))) {
-            var ke = k
-            while (ke < s.length && isWordChar(s.charAt(ke))) ke += 1
-            out.append("__excl_").append(s.substring(k, ke))
-            j = ke
-          } else { out.append(w); j = e }
-        } else { out.append(w); j = e }
-      } else { out.append(c); j += 1 }
+    * its update join. `excluded` inside literals or quoted identifiers
+    * is untouched; both bare and quoted column forms rewrite. */
+  private[graft] def rewriteExcluded(s: String): String =
+    SqlText.rewrite(s) { j =>
+      val dot = skipWs(s, j + 8)
+      if (!keywordAt(s, j, "excluded") || dot >= s.length || s.charAt(dot) != '.')
+        None
+      else {
+        val k = skipWs(s, dot + 1)
+        val q = SqlText.skipOpaque(s, k)
+        var ke = k
+        while (ke < s.length && isWordChar(s.charAt(ke))) ke += 1
+        if (q >= k + 2)
+          Some(("`__excl_" + s.substring(k + 1, q - 1).replace("`", "``") + "`", q))
+        else if (ke > k) Some(("__excl_" + s.substring(k, ke), ke))
+        else None
+      }
     }
-    out.toString
-  }
 
   /** Identifier at `i`: bare word, or quoted with `` ` ``/`"`/`'`
     * (SQLite accepts all three around table names — the reference's
@@ -1827,10 +1690,10 @@ object SqlDml {
   private def parseIdent(sql: String, i: Int): Option[(String, Int)] = {
     if (i >= sql.length) return None
     val c = sql.charAt(i)
-    if (c == '`' || c == '"' || c == '\'') {
-      val e = endOfQuoted(sql, i, c)
-      if (e <= i + 2) None
-      else Some((sql.substring(i + 1, e - 1).replace(s"$c$c", s"$c"), e))
+    val q = SqlText.skipOpaque(sql, i)
+    if (q > i) {
+      if (q <= i + 2) None
+      else Some((sql.substring(i + 1, q - 1).replace(s"$c$c", s"$c"), q))
     } else if (isWordChar(c)) {
       var e = i
       while (e < sql.length && (isWordChar(sql.charAt(e)) || sql.charAt(e) == '.'))
@@ -1870,11 +1733,5 @@ object SqlDml {
       else done = true
     }
     Some(end)
-  }
-
-  private def skipWs(sql: String, i: Int): Int = {
-    var j = i
-    while (j < sql.length && sql.charAt(j).isWhitespace) j += 1
-    j
   }
 }

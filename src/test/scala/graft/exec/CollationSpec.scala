@@ -164,6 +164,15 @@ class CollationSpec extends SparkSpec {
       Seq(Seq(0L)))
   }
 
+  test("a comment holding an apostrophe leaves the fold on (measured: " +
+      "sqlite3 3.40.1 returns 1 and 2 for both comment forms)") {
+    val t = fixture()
+    assert(rowsOf(s"SELECT k FROM $t -- who's there\nWHERE x = 'APPLE' " +
+      "ORDER BY k") == Seq(Seq(1L), Seq(2L)))
+    assert(rowsOf(s"SELECT k FROM $t /* it's */ WHERE x = 'APPLE' " +
+      "ORDER BY k") == Seq(Seq(1L), Seq(2L)))
+  }
+
   test("declared collations follow ALTER renames and die with the " +
       "table; ADD COLUMN COLLATE registers") {
     val t = fixture()

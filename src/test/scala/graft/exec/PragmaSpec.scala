@@ -90,6 +90,13 @@ class PragmaSpec extends SparkSpec {
       "SELECT * FROM begin_like").count() == 2)
   }
 
+  test("statements are routed past leading comments (sqlite3 runs both)") {
+    freshView("pragma_c1")
+    assert(Runner.runSql(spark, "-- columns\nPRAGMA table_info(pragma_c1)")
+      .count() == 3)
+    assert(Runner.runSql(spark, "/* tx */ BEGIN").count() == 0)
+  }
+
   test("runSql uses SQLite evaluation semantics: 1/0 and bad casts → NULL") {
     // under Spark 4's default ANSI mode both of these are whole-query
     // runtime errors; the generated-SQL path must yield NULL per row,

@@ -229,6 +229,15 @@ class TriggerRaiseSpec extends SparkSpec {
       "RAISE() may only be used within a trigger-program")
   }
 
+  test("a raise( inside a comment is not a RAISE call (sqlite3 runs " +
+      "the statement)") {
+    val (t, _) = fixture()
+    assert(rowsOf(s"SELECT a FROM $t -- raise(ABORT, 'x')\nWHERE a = 1") ==
+      Seq(Seq(1L)))
+    assert(rowsOf(s"SELECT a FROM $t /* raise(ABORT, 'x') */ WHERE a = 2") ==
+      Seq(Seq(2L)))
+  }
+
   test("abort message parity: embedded quotes survive the round trip") {
     val (t, _) = fixture()
     sql(s"CREATE TRIGGER rz_q$n BEFORE INSERT ON $t BEGIN " +

@@ -132,5 +132,22 @@ class UniqueScopeSpec extends SparkSpec
         Constraints.assertUnique(spark, t, spark.table(t))
       }
     }
+    // a targetless DO NOTHING and INSERT OR IGNORE are unique by
+    // construction too: the batch keeps its first row per value of
+    // every declared key and drops every row conflicting with the table
+    Seq[(String, String) => String](
+      (t, rows) => s"INSERT INTO $t VALUES $rows ON CONFLICT DO NOTHING",
+      (t, rows) => s"INSERT OR IGNORE INTO $t VALUES $rows").foreach { stmt =>
+      (1 to 2).foreach { _ =>
+        val t = fresh()
+        sql(s"CREATE TABLE $t(a INT PRIMARY KEY, b INT UNIQUE, c INT, " +
+          s"d INT, UNIQUE (c, d))")
+        (1 to 3).foreach { _ =>
+          val rows = Seq.fill(6)(s"(${v()}, ${v()}, ${v()}, ${v()})")
+          assert(probes(stmt(t, rows.mkString(", "))) == 0, rows)
+          Constraints.assertUnique(spark, t, spark.table(t))
+        }
+      }
+    }
   }
 }

@@ -155,6 +155,29 @@ class SqlDialectFuzzSpec extends SparkSpec {
     }
   }
 
+  test("comments are opaque: a leading line comment and a trailing block " +
+      "comment ride through translate, resolveDoubleQuoted and bindTable") {
+    // each comment holds a lone quote character of every kind
+    val lead = "-- it's \"a\" `b`\n"
+    val trail = " /* don't */"
+    val rewrites: Seq[(String, String => String)] = Seq(
+      "translate" -> (SqlDialect.translate(_: String)),
+      "resolveDoubleQuoted" -> (SqlDialect.resolveDoubleQuoted(_, Set("c1"))),
+      "bindTable" -> (graft.ingest.Text2SqlSubst.bindTable(_, "h1")))
+    check("comments", Prop.forAllNoShrink(Gen.zip(scalar(2), pred(2))) {
+      case (s, p) =>
+        val sql = s"SELECT \"c1\", $s AS v FROM table WHERE $p"
+        rewrites.forall { case (name, f) =>
+          val bare = f(sql)
+          val ok = f(lead + sql) == lead + bare && f(sql + trail) == bare + trail
+          if (!ok)
+            println(s"COMMENT NOT OPAQUE to $name:\n  in:   $sql\n" +
+              s"  bare: $bare\n  lead: ${f(lead + sql)}\n  trail: ${f(sql + trail)}")
+          ok
+        }
+    })
+  }
+
   test("SqlDml.detect is total over truncated / mangled DML prefixes") {
     // the detector's job is to turn DML into either a routed upsert or
     // a TARGETED error — it must never itself throw on the garbage a
