@@ -32,32 +32,37 @@ object Runner {
     if (!spark.sessionState.functionRegistry.functionExists(
         org.apache.spark.sql.catalyst.FunctionIdentifier("sqlite_typeof")))
       graft.plans.SqliteFunctions.registerRuntime(spark)
-    // routing reads the statement past its leading comments, which
-    // SQLite skips the same way
-    val trimmed = sql.trim.replaceAll(";\\s*$", "").trim
-    val stmt = trimmed.substring(SqlText.skipWs(trimmed, 0))
-    val head = stmt.toLowerCase
-    val isTrigger = head.matches("(?s)create\\s+(temp\\w*\\s+)?trigger\\b.*")
     // the reference's execution path (pd.read_sql → sqlite3
     // cursor.execute, reference test.py:50) accepts ONE statement —
     // a multi-statement script raises SQLite's "You can only execute
     // one statement at a time", so the same targeted error beats a
-    // generic parse failure; text after the `;` that is only
-    // whitespace and comments is no second statement. CREATE TRIGGER
-    // is exempt (its BEGIN…END body holds `;` legally, as
-    // sqlite3_complete knows) so it reaches its own targeted decline.
-    val semi = SqlText.find(stmt, 0)(stmt.charAt(_) == ';')
-    if (!isTrigger && semi >= 0 && SqlText.skipWs(stmt, semi + 1) < stmt.length)
+    // generic parse failure. The statement starts past its leading
+    // comments and ends at its first top-level `;`; text after that
+    // `;` that is only whitespace and comments is no second statement.
+    // CREATE TRIGGER is exempt (its BEGIN…END body holds `;` legally,
+    // as sqlite3_complete knows) so it reaches its own targeted decline.
+    val trimmed = sql.trim
+    val whole = trimmed.substring(SqlText.skipWs(trimmed, 0))
+    val isTrigger =
+      whole.toLowerCase.matches("(?s)create\\s+(temp\\w*\\s+)?trigger\\b.*")
+    val semi =
+      if (isTrigger) -1 else SqlText.find(whole, 0)(whole.charAt(_) == ';')
+    if (semi >= 0 && SqlText.skipWs(whole, semi + 1) < whole.length)
       throw new UnsupportedOperationException(
         "multi-statement scripts are not supported — one statement " +
           "at a time (SQLite's own execute() rule); run each " +
           "statement separately")
+    val stmt = if (semi >= 0) whole.substring(0, semi) else whole
+    // the session statements below route on their code alone: SQLite
+    // reads `PRAGMA foreign_keys = 1 -- on` as the value 1
+    val routed = SqlText.stripComments(stmt).trim
+    val head = routed.toLowerCase
     // SQLite introspection first: bare PRAGMA statements execute
     // directly; pragma_table_info('t') table-valued calls rewrite to
     // on-demand views; any sqlite_master reference (re)builds the
     // catalog view so schema questions keep working ([[Pragma]])
     if (head.startsWith("pragma"))
-      return Pragma.run(spark, stmt)
+      return Pragma.run(spark, routed)
     // SQLite session statements a model wraps around reads: BEGIN /
     // COMMIT / ROLLBACK / SAVEPOINT / RELEASE are semantic no-ops on a
     // read-only engine (SQLite executes them as such around SELECTs),
@@ -84,8 +89,8 @@ object Runner {
     // SQLite's EXPLAIN QUERY PLAN → Spark's EXPLAIN (different report
     // format, same intent); bare EXPLAIN is already valid Spark
     if (head.startsWith("explain query plan"))
-      return spark.sql("EXPLAIN " + stmt.drop("explain query plan".length))
-    val prepared0 = Pragma.rewriteTvf(spark, sql)
+      return spark.sql("EXPLAIN " + routed.drop("explain query plan".length))
+    val prepared0 = Pragma.rewriteTvf(spark, stmt)
     if (Pragma.referencesMaster(prepared0)) Pragma.registerSqliteMaster(spark)
     if (Pragma.referencesSequence(prepared0))
       Pragma.registerSqliteSequence(spark)

@@ -322,6 +322,11 @@ object Upsert {
     // the rows an OR REPLACE actually displaces (set by that branch;
     // feeds the ON DELETE cascade for displaced parents below)
     var replacedDisplaced: Option[DataFrame] = None
+    // set by the two merges that keep one row per value of every
+    // declared key by construction (targetless DO NOTHING / OR IGNORE
+    // and bare REPLACE over declared keys): their uniqueness probe
+    // below has nothing to find
+    var uniqueByConstruction = false
     val (merged, affected, inserted, updOldNew) = stmt.conflict match {
       // clause CHAINS, and the targetless DO UPDATE form on a table
       // with SEVERAL declared keys (SQLite resolves it against
@@ -374,9 +379,11 @@ object Upsert {
           // keeps its documented single-key anti-join.
           val keySets = targetKey match {
             case Some(tk) => Seq(tk)
+            case None if c.keyCols.isEmpty && declaredKeys.nonEmpty =>
+              uniqueByConstruction = true
+              declaredKeys
             case None =>
-              if (c.keyCols.isEmpty && declaredKeys.nonEmpty) declaredKeys
-              else Seq(Constraints.collatedKey(spark, stmt.table, keys))
+              Seq(Constraints.collatedKey(spark, stmt.table, keys))
           }
           val batch =
             if (declaredKeys.isEmpty) admitted
@@ -418,6 +425,7 @@ object Upsert {
               (b, k) => Constraints.dropConflicting(b, batch, k))
               .select(base.columns.map(col): _*)
             replacedDisplaced = Some(base.exceptAll(survivors))
+            uniqueByConstruction = true
             (survivors.unionAll(batch), batch, batch, None)
           }
         }
@@ -516,21 +524,11 @@ object Upsert {
         // `UNIQUE constraint failed: t.c` (plain INSERT duplicates, a
         // DO UPDATE re-keying into a collision, a targeted DO NOTHING
         // conflicting on another key — all abort here); probed by the
-        // statement's own written slice, so the scan is O(batch). Two
-        // merges are unique by construction and skip the probe:
-        //  - bare REPLACE: the batch keeps one live row per value of
-        //    every declared key, and every base row sharing one is
-        //    displaced — unless a self-FK action rewrote the merged
-        //    image, which is checked like any write;
-        //  - one targetless DO NOTHING (or OR IGNORE) over declared
-        //    keys: the batch keeps its first row per value of every
-        //    declared key, and every row conflicting with the base on
-        //    any of them is dropped.
-        val doNothingAll = declaredKeys.nonEmpty &&
-          stmt.conflictRest.isEmpty && stmt.conflict.exists(c =>
-            c.assigns.isEmpty && c.keyCols.isEmpty && c.keyExprs.isEmpty &&
-              c.targetWhere.isEmpty)
-        if (!(effReplace && (mergedFk eq merged)) && !doNothingAll)
+        // statement's own written slice, so the scan is O(batch). A
+        // merge unique by construction skips the probe — unless a
+        // self-FK action rewrote the merged image, which is checked
+        // like any write
+        if (!(uniqueByConstruction && (mergedFk eq merged)))
           Constraints.assertUnique(spark, stmt.table, mergedFk,
             Some(affected))
         val o = Publish.commit(spark, stmt.table, mergedFk, ret)

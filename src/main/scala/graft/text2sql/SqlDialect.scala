@@ -306,7 +306,7 @@ object SqlDialect {
           if (closeIdx >= 0 && s.charAt(closeIdx) == ')' &&
               j < s.length && s.charAt(j) == '(') {
             val fClose = SqlText.closeParen(s, j)
-            val innerT = if (fClose > 0) s.substring(j + 1, fClose).trim else ""
+            val innerT = if (fClose > 0) codeOf(s.substring(j + 1, fClose)) else ""
             val afterF = if (fClose > 0) skipWs(s, fClose + 1) else s.length
             if (fClose > 0 && keywordAt(innerT, 0, "where") &&
                 keywordAt(s, afterF, "over")) {
@@ -317,7 +317,7 @@ object SqlDialect {
                 var n0 = ns
                 while (n0 > 0 && isWordChar(s.charAt(n0 - 1))) n0 -= 1
                 val name = s.substring(n0, ns)
-                var args = s.substring(openIdx + 1, closeIdx).trim
+                var args = codeOf(s.substring(openIdx + 1, closeIdx))
                 if (name.nonEmpty) {
                   var distinct = ""
                   if (keywordAt(args, 0, "distinct")) {
@@ -716,7 +716,7 @@ object SqlDialect {
         return Some(sql.substring(0, xStart) +
           s"$fn($x) ${neg}IN (SELECT $fn(__graft_inc) FROM (" + inner +
           ") AS __graft_insub(__graft_inc))" + sql.substring(cp + 1))
-      val items = SqlText.splitTop(inner).map(it => s"$fn(${it.trim})")
+      val items = SqlText.splitTop(inner).map(it => s"$fn(${codeOf(it)})")
       return Some(sql.substring(0, xStart) +
         s"$fn($x) ${neg}IN (" + items.mkString(", ") + ")" +
         sql.substring(cp + 1))
@@ -947,6 +947,11 @@ object SqlDialect {
     None
   }
 
+  /** A fragment about to be rebuilt into new text, trimmed: its
+    * comments go first, since a trailing `--` comment would swallow
+    * whatever the rebuild puts after it. */
+  private def codeOf(s: String): String = SqlText.stripComments(s).trim
+
   private def precedingWord(sql: String, i: Int): String = {
     var e = i - 1
     while (e >= 0 && sql.charAt(e).isWhitespace) e -= 1
@@ -966,7 +971,7 @@ object SqlDialect {
         // not one empty-string arg
         val args =
           if (skipWs(argRegion, 0) == argRegion.length) Seq.empty[String]
-          else SqlText.splitTop(argRegion).map(a => rewriteCalls(a.trim))
+          else SqlText.splitTop(argRegion).map(a => rewriteCalls(codeOf(a)))
         build(name, args) match {
           case Some(repl) => (repl, close + 1)
           case None       => (sql.substring(i, open + 1), open + 1)

@@ -97,6 +97,28 @@ class PragmaSpec extends SparkSpec {
     assert(Runner.runSql(spark, "/* tx */ BEGIN").count() == 0)
   }
 
+  test("a comment after the statement's `;` or value is no part of it") {
+    def fks = Runner.runSql(spark, "PRAGMA foreign_keys").head().getInt(0)
+    try {
+      // sqlite3 3.40.1 sets the value to 1 in both spellings
+      assert(Runner.runSql(spark, "PRAGMA foreign_keys = 1; -- on").count() == 0)
+      assert(fks == 1)
+      Runner.runSql(spark, "PRAGMA foreign_keys = 0")
+      Runner.runSql(spark, "PRAGMA foreign_keys = 1 /* on */")
+      assert(fks == 1)
+      Runner.runSql(spark, "PRAGMA foreign_keys = 0")
+      Runner.runSql(spark, "PRAGMA foreign_keys(1) -- on")
+      assert(fks == 1)
+      assert(Runner.runSql(spark, "COMMIT; /* done */").count() == 0)
+      // a second statement after the comment is still refused
+      val e = intercept[UnsupportedOperationException] {
+        Runner.runSql(spark, "PRAGMA foreign_keys = 0; -- off\nSELECT 1")
+      }
+      assert(e.getMessage.contains("one statement"), e.getMessage)
+      assert(fks == 1)
+    } finally Runner.runSql(spark, "PRAGMA foreign_keys = 0")
+  }
+
   test("runSql uses SQLite evaluation semantics: 1/0 and bad casts → NULL") {
     // under Spark 4's default ANSI mode both of these are whole-query
     // runtime errors; the generated-SQL path must yield NULL per row,

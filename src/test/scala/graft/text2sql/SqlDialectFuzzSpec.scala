@@ -178,6 +178,29 @@ class SqlDialectFuzzSpec extends SparkSpec {
     })
   }
 
+  test("comments are opaque between call arguments: a line comment " +
+      "before every `)` leaves translate's code unchanged") {
+    // code with its comments gone and its whitespace dropped (literal
+    // bodies kept): what Spark's parser sees of a translation
+    def code(s: String): String = {
+      val t = SqlText.stripComments(s)
+      SqlText.rewrite(t)(i =>
+        if (t.charAt(i).isWhitespace) Some(("", i + 1)) else None)
+    }
+    check("arg-comments", Prop.forAllNoShrink(expr(2)) { e =>
+      val sql = s"SELECT $e AS v"
+      val commented = SqlText.rewrite(sql)(i =>
+        if (sql.charAt(i) == ')') Some((" -- c\n)", i + 1)) else None)
+      val out = SqlDialect.translate(commented)
+      parser.parsePlan(out)
+      val ok = code(out) == code(SqlDialect.translate(sql))
+      if (!ok)
+        println(s"ARGUMENT COMMENT NOT OPAQUE:\n  in:  $commented\n" +
+          s"  out: $out\n  bare: ${SqlDialect.translate(sql)}")
+      ok
+    })
+  }
+
   test("SqlDml.detect is total over truncated / mangled DML prefixes") {
     // the detector's job is to turn DML into either a routed upsert or
     // a TARGETED error — it must never itself throw on the garbage a

@@ -868,4 +868,17 @@ class SqlDialectSpec extends SparkSpec {
     val bad = "SELECT date(x, '+1 days', 'unixepoch') FROM t"
     assert(SqlDialect.translate(bad) == bad)
   }
+
+  test("a line comment ending a rebuilt argument does not swallow its `)`") {
+    // each site rebuilds an argument list and closes it after the
+    // argument text, so the comment has to go with the rebuild
+    assert(SqlDialect.translate("SELECT iif(x, 1, 2 -- two\n) FROM t") ==
+      "SELECT if(x, 1, 2) FROM t")
+    assert(SqlDialect.translate(
+      "SELECT * FROM t WHERE x COLLATE NOCASE IN ('Apple' -- fruit\n)") ==
+      "SELECT * FROM t WHERE lower(x) IN (lower('Apple'))")
+    val f = SqlDialect.translate(
+      "SELECT sum(x -- it's x\n) FILTER (WHERE x > 0 -- positive\n) OVER () FROM t")
+    assert(f.contains("sum(CASE WHEN (x > 0) THEN x END) OVER"), f)
+  }
 }
