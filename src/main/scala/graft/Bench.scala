@@ -240,14 +240,21 @@ object Bench {
     // retry fires and the statistic is exactly the min-of-6 of the one
     // attempt, as before — cross-round comparability is untouched.
     var canaryFloor = (1 to 3).map(_ => canaryOnce()).min
-    val both: Seq[(String, (Seq[Double], Seq[Double], Double, Int))] =
+    // generated classes compiled so far, and the Janino nanoseconds
+    // they took (Spark's codegen metrics, JVM-wide)
+    def codegen(): (Long, Long) = (
+      org.apache.spark.metrics.source.CodegenMetrics.METRIC_COMPILATION_TIME.getCount,
+      org.apache.spark.sql.catalyst.expressions.codegen.CodeGenerator.compileTime)
+    val both: Seq[(String, (Seq[Double], Seq[Double], Double, Int, (Long, Long)))] =
       keys.map { name =>
         val fn = SparkEntry.queries(name)
-        def attempt(): (Seq[Double], Seq[Double], Double) = {
+        def attempt(): (Seq[Double], Seq[Double], Double, (Long, Long)) = {
           val c = canaryOnce()
+          val (n0, ns0) = codegen()
           val a = (1 to 3).map(_ => runOnce(name, fn)).sorted
           val b = (1 to 3).map(_ => runOnce(name, fn)).sorted
-          (a, b, c)
+          val (n1, ns1) = codegen()
+          (a, b, c, (n1 - n0, ns1 - ns0))
         }
         var best = attempt()
         var retries = 0
@@ -258,10 +265,10 @@ object Bench {
           canaryFloor = math.min(canaryFloor, next._3)
           if (next._3 < best._3) best = next
         }
-        name -> (best._1, best._2, best._3, retries)
+        name -> (best._1, best._2, best._3, retries, best._4)
       }
-    val results = both.map { case (n, (a, _, _, _)) => n -> a }
-    val results2 = both.map { case (n, (_, b, _, _)) => n -> b }
+    val results = both.map { case (n, (a, _, _, _, _)) => n -> a }
+    val results2 = both.map { case (n, (_, b, _, _, _)) => n -> b }
     def f3(v: Double) = f"$v%.3f"
     // ANY failed run poisons the key to -1: sorted, the -1 sentinel is
     // the MINIMUM, so taking runs(1) as median would report the faster
@@ -276,10 +283,10 @@ object Bench {
     // scalar is now the min-of-6 (headline = load-robust statistic);
     // "spread" carries {min6, med1, med2, max, canary} per key so both
     // medians AND the load regime stay visible
-    val mins = both.map { case (n, (a, b, _, _)) => n -> min6(a, b) }
+    val mins = both.map { case (n, (a, b, _, _, _)) => n -> min6(a, b) }
     val qs = mins.map { case (k, v) => "\"" + k + "\":" + f3(v) }
       .mkString("{", ",", "}")
-    val spread = both.map { case (k, (a, b, c, r)) =>
+    val spread = both.map { case (k, (a, b, c, r, _)) =>
       "\"" + k + "\":{\"min\":" + f3(min6(a, b)) +
         ",\"median\":" + f3(med(a)) + ",\"median2\":" + f3(med(b)) +
         ",\"max\":" + f3(math.max(a.last, b.last)) +
@@ -295,8 +302,13 @@ object Bench {
       .map(r => med(r._2)).filter(_ >= 0).sum
     val canaryMin = both.map(_._2._3).min
     val canaryMax = both.map(_._2._3).max
+    // per key, over the six runs of the reported attempt: the classes
+    // compiled and their Janino milliseconds (run 1 pays the plan's own)
+    val codegenJson = both.map { case (k, (_, _, _, _, (n, ns))) =>
+      "\"" + k + "\":{\"classes\":" + n + ",\"janino_ms\":" + f3(ns / 1e6) + "}"
+    }.mkString("{", ",", "}")
     val json =
-      f"""{"metric":"total_min6","value":$total%.3f,"unit":"sec","core16":$core%.3f,"queries":$qs,"spread":$spread,"medians":{"total":$totalMed%.3f,"core16":$coreMed%.3f},"run2":{"total":$total2%.3f,"core16":$core2%.3f},"canary":{"min":$canaryMin%.3f,"max":$canaryMax%.3f},"cache":"declared: runs 2-6 of a key may reuse run 1's in-plan persisted intermediates via Spark CacheManager plan matching (bounded, one live slot per operator - see graft.ops.PlanSlots); spread.max shows the key's cold run except when retries>0 replaced the measured attempt","sf":"$sfDir"}"""
+      f"""{"metric":"total_min6","value":$total%.3f,"unit":"sec","core16":$core%.3f,"queries":$qs,"spread":$spread,"medians":{"total":$totalMed%.3f,"core16":$coreMed%.3f},"run2":{"total":$total2%.3f,"core16":$core2%.3f},"canary":{"min":$canaryMin%.3f,"max":$canaryMax%.3f},"codegen":$codegenJson,"cache":"declared: runs 2-6 of a key may reuse run 1's in-plan persisted intermediates via Spark CacheManager plan matching (bounded, one live slot per operator - see graft.ops.PlanSlots); spread.max shows the key's cold run except when retries>0 replaced the measured attempt","sf":"$sfDir"}"""
     println(json)
     // stdout is interleaved with sbt [info] noise; also drop the JSON in a
     // file so the driver's parse never depends on log scraping

@@ -16,6 +16,18 @@ import org.apache.spark.sql.SparkSession
   *  - maxPartitionBytes 128 MB: scan tasks sized for executor memory;
   *    spill-aware rather than spill-prone.
   *  - UTC session timezone: deterministic date/time semantics.
+  *  - codegen.cache.maxEntries 256 (static, so it must be set before
+  *    the session starts; Spark's default is 100): Spark keeps each
+  *    generated class once per class loader, and the driver and the
+  *    executor threads use different loaders, so every plan shape
+  *    holds two entries. One perfbench session's shapes, ingest
+  *    included, measured 188 (`ask`) and 165 (`dml`) entries, more
+  *    than 100, so the default LRU evicted classes the next question
+  *    needed and Janino compiled them again. With literals
+  *    parameterized ([[graft.plans.ParameterizeLiterals]]) the
+  *    resident set follows plan shapes, not literal values; 256
+  *    leaves room for the cache's segmented eviction at about 29 KiB
+  *    of heap per resident class.
   */
 object GraftSession {
   def create(appName: String = "graft",
@@ -23,7 +35,8 @@ object GraftSession {
     val s = SparkSession.builder()
       .master(s"local[$cores]")
       .appName(appName)
-      // SQLite-dialect native functions + regex-prefix pushdown rule
+      // SQLite-dialect native functions, regex-prefix pushdown rule,
+      // literal parameterization of generated code
       .withExtensions(new graft.plans.GraftExtensions)
       .config("spark.sql.shuffle.partitions", cores.toString)
       .config("spark.sql.adaptive.enabled", "true")
@@ -32,6 +45,7 @@ object GraftSession {
       .config("spark.sql.files.maxPartitionBytes", (128L * 1024 * 1024).toString)
       .config("spark.sql.session.timeZone", "UTC")
       .config("spark.sql.parquet.outputTimestampType", "TIMESTAMP_MICROS")
+      .config("spark.sql.codegen.cache.maxEntries", "256")
       .config("spark.ui.enabled", "false")
       .getOrCreate()
     s.sparkContext.setLogLevel("WARN")

@@ -2,6 +2,7 @@ package graft.exec
 
 import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.types._
+import graft.text2sql.SqlText
 
 /** SQLite introspection surface for generated SQL. In the reference the
   * model's statements run against a real SQLite database, where `PRAGMA
@@ -288,12 +289,9 @@ object Pragma {
       .createOrReplaceTempView("sqlite_sequence")
   }
 
-  private val seqRefRe =
-    """(?i)(?<![\w.`'"])sqlite_sequence(?![\w`'"])""".r
-
   /** True if the statement references the sqlite_sequence catalog. */
   def referencesSequence(sql: String): Boolean =
-    seqRefRe.findFirstIn(sql).isDefined
+    referencesInCode(sql, "sqlite_sequence")
 
   private def tableMasterRow(spark: SparkSession, name: String,
                              schema: StructType): Row = {
@@ -703,23 +701,35 @@ object Pragma {
     """(?is)pragma_table_(x?)info\s*\(\s*'([^']+)'\s*\)""".r
 
   /** Rewrite table-valued `pragma_table_info('T')` /
-    * `pragma_table_xinfo('T')` calls to on-demand temp views; returns
-    * the rewritten SQL. Non-literal arguments are left in place →
-    * visible analysis error (policy: never guess). */
-  def rewriteTvf(spark: SparkSession, sql: String): String =
-    tvfRe.replaceAllIn(sql, m => {
-      val x = m.group(1).nonEmpty
-      val table = m.group(2)
-      val view = (if (x) "graft_pragma_tx_" else "graft_pragma_ti_") +
-        table.replaceAll("[^A-Za-z0-9_]", "_").toLowerCase
-      (if (x) tableXinfo(spark, table) else tableInfo(spark, table))
-        .createOrReplaceTempView(view)
-      java.util.regex.Matcher.quoteReplacement(view)
-    })
-
-  private val masterRefRe = """(?i)(?<![\w.`'"])sqlite_master(?![\w`'"])""".r
+    * `pragma_table_xinfo('T')` calls in code (not in comments or
+    * literals) to on-demand temp views; returns the rewritten SQL.
+    * Non-literal arguments are left in place → visible analysis error
+    * (policy: never guess). */
+  def rewriteTvf(spark: SparkSession, sql: String): String = {
+    val m = tvfRe.pattern.matcher(sql)
+    SqlText.rewrite(sql) { i =>
+      if ((i > 0 && SqlText.isWordChar(sql.charAt(i - 1))) ||
+          !m.region(i, sql.length).lookingAt()) None
+      else {
+        val x = m.group(1).nonEmpty
+        val table = m.group(2)
+        val view = (if (x) "graft_pragma_tx_" else "graft_pragma_ti_") +
+          table.replaceAll("[^A-Za-z0-9_]", "_").toLowerCase
+        (if (x) tableXinfo(spark, table) else tableInfo(spark, table))
+          .createOrReplaceTempView(view)
+        Some((view, m.end()))
+      }
+    }
+  }
 
   /** True if the statement references the sqlite_master catalog. */
   def referencesMaster(sql: String): Boolean =
-    masterRefRe.findFirstIn(sql).isDefined
+    referencesInCode(sql, "sqlite_master")
+
+  /** `name` as a bare word in code: not in a comment or literal, not
+    * quoted and not qualified (`x.name`). */
+  private def referencesInCode(sql: String, name: String): Boolean =
+    SqlText.find(sql, 0) { i =>
+      SqlText.keywordAt(sql, i, name) && (i == 0 || sql.charAt(i - 1) != '.')
+    } >= 0
 }

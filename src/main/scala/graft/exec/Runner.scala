@@ -179,8 +179,14 @@ object Runner {
   }
 
   /** ≤5 sample rows as JSON (reference test.py:51-55). */
-  def resultJson(df: DataFrame, n: Int = 5): Seq[String] =
-    df.limit(n).toJSON.collect().toIndexedSeq
+  def resultJson(df: DataFrame, n: Int = 5): Seq[String] = {
+    // the limit is the plan's root, so Spark plans it as CollectLimit or
+    // TakeOrderedAndProject; under toJSON's mapPartitions it would be a
+    // generated Local/GlobalLimit whose counter is named from a JVM-wide
+    // sequence, new Java source (and a compile) on every call
+    val top = df.limit(n)
+    org.apache.spark.sql.GraftColumnBridge.jsonLines(top, top.collect())
+  }
 
   /** Full question → answer pipeline over prior ingestions. */
   def ask(spark: SparkSession, question: String,

@@ -479,8 +479,9 @@ object SqliteFunctions {
 
 /** `spark.sql.extensions=graft.plans.GraftExtensions` entry point:
   * SQLite-dialect functions, the engine's native dedup/similarity
-  * expressions as SQL functions, the regex-prefix pushdown rule, and
-  * the GroupTopK strategy.
+  * expressions as SQL functions, the regex-prefix pushdown rule, the
+  * GroupTopK strategy, and literal parameterization of generated code
+  * ([[ParameterizeLiterals]]).
   */
 class GraftExtensions extends (SparkSessionExtensions => Unit) {
   override def apply(ext: SparkSessionExtensions): Unit = {
@@ -488,6 +489,7 @@ class GraftExtensions extends (SparkSessionExtensions => Unit) {
     GraftNativeFunctions.register(ext)
     ext.injectOptimizerRule(_ => RegexPrefixPushdown)
     ext.injectPlannerStrategy(_ => GroupTopKStrategy)
+    ext.injectColumnar(_ => ParamLiteralsColumnarRule)
   }
 }
 

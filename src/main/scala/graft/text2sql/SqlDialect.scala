@@ -400,8 +400,7 @@ object SqlDialect {
         .exists(k => keywordAt(sql, j, k))
       if (!sparkOk) {
         val ye = primaryEndForwards(sql, j)
-        var xEnd = i
-        while (xEnd > 0 && sql.charAt(xEnd - 1).isWhitespace) xEnd -= 1
+        val xEnd = SqlText.skipWsBack(sql, i)
         val xStart = primaryStartBackwards(sql, xEnd)
         if (ye >= 0 && xStart >= 0 && xStart < xEnd) {
           val a = sql.substring(xStart, xEnd)
@@ -449,71 +448,38 @@ object SqlDialect {
     */
   /** Start index of the operand ENDING just before `endExcl`, never
     * crossing below `floor`. A bare token is a non-whitespace run; a
-    * `)`-terminated operand walks back to its balanced `(` and then
+    * `)`-terminated operand reaches back to its balanced `(` and then
     * over any directly-attached call name — so `trim( c1 )` is one
-    * operand, not `)`. A backtick identifier walks to its opening
-    * backtick (the identifier may contain spaces). Shared by the
-    * binary-operator rewrites (GLOB, `->`/`->>`), which all need the
-    * preceding operand per SQLite's expression grammar. */
+    * operand, not `)`. A quoted operand (a string literal or a quoted
+    * identifier, which may contain spaces) starts at its opening
+    * quote. Shared by the binary-operator rewrites (GLOB, `->`/`->>`),
+    * which all need the preceding operand per SQLite's expression
+    * grammar. */
   private def operandStartBackwards(sql: String, endExcl: Int,
                                     floor: Int): Int = {
-    var lhsStart = endExcl
-    if (lhsStart > floor && sql.charAt(lhsStart - 1) == ')') {
-      var depth = 0
-      var k = lhsStart - 1
-      var stop = false
-      while (k >= floor && !stop) {
-        val ch = sql.charAt(k)
-        if (ch == '\'' || ch == '"' || ch == '`') {
-          // walk back over a quoted run: find its opening quote
-          var m = k - 1
-          while (m >= floor && sql.charAt(m) != ch) m -= 1
-          k = m - 1
-        } else {
-          if (ch == ')') depth += 1
-          else if (ch == '(') { depth -= 1; if (depth == 0) stop = true }
-          k -= 1
-        }
-      }
-      lhsStart = math.max(k + 1, floor)
-      // include a directly-attached call name (`trim(...)`) — but
-      // NOT a glued keyword (`AND(c1) GLOB`), which is a
-      // conjunction, not a function name
-      var nameStart = lhsStart
-      while (nameStart > floor &&
-        (sql.charAt(nameStart - 1).isLetterOrDigit ||
-          sql.charAt(nameStart - 1) == '_')) nameStart -= 1
-      val name = sql.substring(nameStart, lhsStart).toLowerCase
-      if (name.nonEmpty && !Set("and", "or", "not", "where", "on",
-          "when", "then", "else", "in", "by", "select", "from",
-          "having").contains(name))
-        lhsStart = nameStart
-    } else if (lhsStart > floor && sql.charAt(lhsStart - 1) == '`') {
-      // backtick identifier operand — walk to its OPENING backtick
-      // (identifiers may contain spaces; a whitespace walk would
-      // split the token and emit an unbalanced quote)
-      var m = lhsStart - 2
-      while (m >= floor && sql.charAt(m) != '`') m -= 1
-      lhsStart = math.max(m, floor)
-    } else if (lhsStart > floor && sql.charAt(lhsStart - 1) == '\'') {
-      // string-literal operand (`'{"k": 69}' ->> 'k'`) — walk to its
-      // OPENING quote, honoring '' escapes backwards (a quote pair is
-      // an escape, a lone quote is the opener); the literal may
-      // contain spaces, so the bare-token walk below would split it
-      var m = lhsStart - 2
-      var open = -1
-      while (m >= floor && open < 0) {
-        if (sql.charAt(m) == '\'') {
-          if (m - 1 >= floor && sql.charAt(m - 1) == '\'') m -= 2
-          else open = m
-        } else m -= 1
-      }
-      lhsStart = math.max(if (open >= 0) open else floor, floor)
-    } else {
-      while (lhsStart > floor && !sql.charAt(lhsStart - 1).isWhitespace)
-        lhsStart -= 1
+    if (endExcl <= floor) return endExcl
+    sql.charAt(endExcl - 1) match {
+      case ')' =>
+        val lhsStart = math.max(SqlText.openParen(sql, endExcl - 1), floor)
+        // include a directly-attached call name (`trim(...)`) — but
+        // NOT a glued keyword (`AND(c1) GLOB`), which is a
+        // conjunction, not a function name
+        var nameStart = lhsStart
+        while (nameStart > floor && isWordChar(sql.charAt(nameStart - 1)))
+          nameStart -= 1
+        val name = sql.substring(nameStart, lhsStart).toLowerCase
+        if (name.nonEmpty && !Set("and", "or", "not", "where", "on",
+            "when", "then", "else", "in", "by", "select", "from",
+            "having").contains(name)) nameStart
+        else lhsStart
+      case '\'' | '"' | '`' =>
+        math.max(SqlText.quotedStart(sql, endExcl), floor)
+      case _ =>
+        var lhsStart = endExcl
+        while (lhsStart > floor && !sql.charAt(lhsStart - 1).isWhitespace)
+          lhsStart -= 1
+        lhsStart
     }
-    lhsStart
   }
 
   /** SQLite JSON operators `->` (extract as JSON text — strings stay
@@ -536,8 +502,7 @@ object SqlDialect {
     while (i >= 0) {
       val unquoting = sql.startsWith("->>", i)
       val opEnd = i + (if (unquoting) 3 else 2)
-      var lhsEnd = i
-      while (lhsEnd > 0 && sql.charAt(lhsEnd - 1).isWhitespace) lhsEnd -= 1
+      val lhsEnd = SqlText.skipWsBack(sql, i)
       val lhsStart = operandStartBackwards(sql, lhsEnd, 0)
       val j = skipWs(sql, opEnd)
       // normalized '<path literal>' (including quotes) + end index
@@ -581,8 +546,7 @@ object SqlDialect {
       // its balanced `(` and then over any call-name token — so
       // `trim( c1 ) GLOB 'p'` captures `trim( c1 )`, not `)` (the
       // parenthesized rewrite would otherwise split the call).
-      var lhsEnd = i
-      while (lhsEnd > emitted && sql.charAt(lhsEnd - 1).isWhitespace) lhsEnd -= 1
+      val lhsEnd = math.max(SqlText.skipWsBack(sql, i), emitted)
       val lhsStart = operandStartBackwards(sql, lhsEnd, emitted)
       // RHS: must be a string literal
       val j = skipWs(sql, i + 4)
@@ -677,8 +641,7 @@ object SqlDialect {
 
   private def applyCollationFold(sql: String, collStart: Int, collEnd: Int,
                                  fn: String): Option[String] = {
-    var xEnd = collStart
-    while (xEnd > 0 && sql.charAt(xEnd - 1).isWhitespace) xEnd -= 1
+    val xEnd = SqlText.skipWsBack(sql, collStart)
     val xStart = primaryStartBackwards(sql, xEnd)
     if (xStart < 0 || xStart >= xEnd) return None
     val x = sql.substring(xStart, xEnd)
@@ -750,8 +713,7 @@ object SqlDialect {
     }
 
     // A op X COLLATE NOCASE
-    var b = xStart
-    while (b > 0 && sql.charAt(b - 1).isWhitespace) b -= 1
+    val b = SqlText.skipWsBack(sql, xStart)
     // X is the ESCAPE literal of an ILIKE (`y ILIKE p ESCAPE '!'
     // COLLATE NOCASE`): the fold is already the ILIKE's job — strip
     // the collation instead of wrapping the escape char in lower()
@@ -761,8 +723,7 @@ object SqlDialect {
       case Some(("ilike", _)) =>
         Some(sql.substring(0, xEnd) + sql.substring(collEnd))
       case Some((op, opStart)) =>
-        var ae = opStart
-        while (ae > 0 && sql.charAt(ae - 1).isWhitespace) ae -= 1
+        val ae = SqlText.skipWsBack(sql, opStart)
         val aStart = primaryStartBackwards(sql, ae)
         if (aStart < 0 || aStart >= ae) None
         else {
@@ -817,37 +778,18 @@ object SqlDialect {
     * paren group with optional function name, or dotted word) ending
     * just before `endExcl`; -1 if unrecognized. */
   private def primaryStartBackwards(sql: String, endExcl: Int): Int = {
-    var e = endExcl - 1
-    while (e >= 0 && sql.charAt(e).isWhitespace) e -= 1
+    val e = SqlText.skipWsBack(sql, endExcl) - 1
     if (e < 0) return -1
     sql.charAt(e) match {
-      case q @ ('\'' | '"' | '`') =>
-        var s = e - 1
-        while (s >= 0) {
-          if (sql.charAt(s) == q) {
-            if (s - 1 >= 0 && sql.charAt(s - 1) == q) s -= 2
-            else return s
-          } else s -= 1
-        }
-        -1
+      case '\'' | '"' | '`' => SqlText.quotedStart(sql, e + 1)
       case ')' =>
-        var depth = 0
-        var s = e
-        while (s >= 0) {
-          sql.charAt(s) match {
-            case ')' => depth += 1
-            case '(' =>
-              depth -= 1
-              if (depth == 0) {
-                var w = s - 1
-                while (w >= 0 && isWordChar(sql.charAt(w))) w -= 1
-                return w + 1
-              }
-            case _ =>
-          }
-          s -= 1
+        val open = SqlText.openParen(sql, e)
+        if (open < 0) -1
+        else {
+          var w = open - 1
+          while (w >= 0 && isWordChar(sql.charAt(w))) w -= 1
+          w + 1
         }
-        -1
       case c if isWordChar(c) =>
         var s = e
         while (s >= 0 && (isWordChar(sql.charAt(s)) || sql.charAt(s) == '.')) s -= 1

@@ -54,6 +54,54 @@ private[graft] object SqlText {
     i
   }
 
+  /** Index just past the last character before `end` that is neither
+    * whitespace nor inside a comment, or 0: `skipWs` walking left. A
+    * quoted run counts whole, so the result may be just past its
+    * closing quote. `end` must not fall inside an opaque run. */
+  def skipWsBack(s: String, end: Int): Int = {
+    var last = 0
+    var i = 0
+    while (i < end) {
+      val e = skipOpaque(s, i)
+      if (e > i) {
+        if (s.charAt(i) != '-' && s.charAt(i) != '/') last = e
+        i = e
+      } else {
+        if (!s.charAt(i).isWhitespace) last = i + 1
+        i += 1
+      }
+    }
+    last
+  }
+
+  /** Start of the quoted run that ends just before `end`, or -1. */
+  def quotedStart(s: String, end: Int): Int = {
+    var i = 0
+    while (i < end) {
+      val e = skipOpaque(s, i)
+      if (e == end && e > i && s.charAt(i) != '-' && s.charAt(i) != '/') return i
+      i = if (e > i) e else i + 1
+    }
+    -1
+  }
+
+  /** Index of the `(` that the code `)` at `close` balances; -1 if
+    * none. */
+  def openParen(s: String, close: Int): Int = {
+    var opens = List.empty[Int]
+    var open = -1
+    find(s, 0) { i =>
+      if (i == close) open = opens.headOption.getOrElse(-1)
+      else s.charAt(i) match {
+        case '(' => opens ::= i
+        case ')' => opens = opens.drop(1)
+        case _ =>
+      }
+      i >= close
+    }
+    open
+  }
+
   /** The first code position at or after `from` where `hit` holds, or
     * -1. `hit` sees every code position in order, so a caller may keep
     * state across calls. */

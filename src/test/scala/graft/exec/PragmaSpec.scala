@@ -97,6 +97,22 @@ class PragmaSpec extends SparkSpec {
     assert(Runner.runSql(spark, "/* tx */ BEGIN").count() == 0)
   }
 
+  test("introspection names in comments and literals are no references") {
+    import spark.implicits._
+    Seq(1L).toDF("x").createOrReplaceTempView("pragma_pt")
+    // sqlite3 3.40.1: [(1,)] for each
+    for (q <- Seq(
+        "SELECT x FROM pragma_pt -- see pragma_table_info('nosuch')",
+        "SELECT x FROM pragma_pt /* pragma_table_xinfo('nosuch') */",
+        "SELECT x FROM pragma_pt WHERE 'pragma_table_info(''nosuch'')' <> ''",
+        "SELECT x FROM pragma_pt -- not sqlite_master, nor sqlite_sequence"))
+      assert(Runner.runSql(spark, q).collect().map(_.getLong(0)).toSeq == Seq(1L), q)
+    assert(!Pragma.referencesMaster("SELECT 1 -- sqlite_master"))
+    assert(!Pragma.referencesSequence("SELECT 'sqlite_sequence'"))
+    assert(Pragma.referencesMaster("SELECT name FROM /* c */ sqlite_master"))
+    assert(Pragma.referencesSequence("SELECT * FROM sqlite_sequence"))
+  }
+
   test("a comment after the statement's `;` or value is no part of it") {
     def fks = Runner.runSql(spark, "PRAGMA foreign_keys").head().getInt(0)
     try {

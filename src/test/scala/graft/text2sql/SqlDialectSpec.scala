@@ -881,4 +881,19 @@ class SqlDialectSpec extends SparkSpec {
       "SELECT sum(x -- it's x\n) FILTER (WHERE x > 0 -- positive\n) OVER () FROM t")
     assert(f.contains("sum(CASE WHEN (x > 0) THEN x END) OVER"), f)
   }
+
+  test("a comment between an operand and its operator stays out of the operand") {
+    Seq(("abc", 1L)).toDF("s", "x").createOrReplaceTempView("cmt_t")
+    // sqlite3 3.40.1 answers [(1,)] for each
+    for (q <- Seq(
+        "SELECT x FROM cmt_t WHERE s /* c */ GLOB 'a*'",
+        "SELECT x FROM cmt_t WHERE (s) /* ) */ GLOB 'a*'",
+        "SELECT x FROM cmt_t WHERE x /* c */ IS 1",
+        "SELECT x FROM cmt_t WHERE x -- c\n IS NOT 2",
+        "SELECT x FROM cmt_t WHERE s /* c */ COLLATE NOCASE = 'ABC'",
+        "SELECT x FROM cmt_t WHERE 'ABC' = /* c */ s /* d */ COLLATE NOCASE")) {
+      val t = SqlDialect.translate(q)
+      assert(spark.sql(t).collect().map(_.getLong(0)).toSeq == Seq(1L), t)
+    }
+  }
 }
