@@ -2,7 +2,10 @@ package graft
 
 import org.apache.spark.sql.SparkSession
 
-/** Session factory with the engine's recommended configuration.
+/** The one recipe for a session: every main and the spec harness build
+  * theirs here, and [[graft.plans.GraftExtensions]] is the only way the
+  * engine's functions, rules and strategies enter it. `Runner.runSql`
+  * and `GroupTopKOps.topK` raise on a session built without it.
   *
   * Local mode here; on a cluster the same SQL confs apply (set master/
   * memory via spark-submit). The choices and why:

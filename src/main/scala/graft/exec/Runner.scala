@@ -26,12 +26,9 @@ object Runner {
 
   def runSql(spark: SparkSession, sql: String): DataFrame = {
     // the generated-SQL path needs the SQLite-dialect native functions
-    // resolvable (the translator emits sqlite_typeof; verbatim
-    // SQLite-isms like iif/glob also resolve then) — register them
-    // once per session, cheap existence probe after that
-    if (!spark.sessionState.functionRegistry.functionExists(
-        org.apache.spark.sql.catalyst.FunctionIdentifier("sqlite_typeof")))
-      graft.plans.SqliteFunctions.registerRuntime(spark)
+    // (the translator emits sqlite_typeof; verbatim SQLite-isms like
+    // iif/glob resolve through them), which only GraftExtensions brings
+    graft.plans.GraftExtensions.require(spark)
     // the reference's execution path (pd.read_sql → sqlite3
     // cursor.execute, reference test.py:50) accepts ONE statement —
     // a multi-statement script raises SQLite's "You can only execute

@@ -331,7 +331,6 @@ object QueriesExt {
     // as the exact-verification baseline at scale (the ANN keys are
     // its sublinear path).
     "ext_knn_join" -> ((s, d) => {
-      graft.plans.GroupTopKOps.ensureRegistered(s)
       val emb = t("embeddings")(s, d)
       // norm-hoist: see ext_knn_join_full (bit-identical, DotProduct)
       val probes = emb.filter(col("vec_id") % 97 === 0)
@@ -431,7 +430,6 @@ object QueriesExt {
     // most partitions·k rows per cluster ever shuffle, the map-only
     // assignment scan never does.
     "ext_cluster_balance" -> ((s, d) => {
-      graft.plans.GroupTopKOps.ensureRegistered(s)
       val ranked = clusterAssign(s, d)
         .select(col("vec_id"), col("cluster"),
           md5(col("vec_id").cast("string")).as("rk"))
@@ -850,7 +848,6 @@ object QueriesExt {
     // job-overhead-bound and the 10× candidate reduction is invisible.
     // rows-only (derived corpus).
     "ext_knn_join_full" -> ((s, d) => {
-      graft.plans.GroupTopKOps.ensureRegistered(s)
       val emb = t("embeddings")(s, d)
       // norm-hoist (guide §1.2 step 2): norms are per-row, so compute
       // the probe norm once per probe (inside the broadcast) and the

@@ -122,9 +122,10 @@ object QueriesJoins {
     // Bucket arithmetic goes through cast(ts_ntz AS timestamp), which
     // is timezone-sensitive: bucket ADJACENCY relies on the session
     // timezone having a constant UTC offset across the data range —
-    // guaranteed here because every entry point (GraftSession, Verify,
-    // Bench, specs) pins spark.sql.session.timeZone=UTC. A DST-shifted
-    // session would need the bucket derived from the NTZ value itself.
+    // guaranteed here because every entry point (mains and specs) is
+    // built by GraftSession.create, which pins
+    // spark.sql.session.timeZone=UTC. A DST-shifted session would need
+    // the bucket derived from the NTZ value itself.
     "join_range" -> ((s, d) => {
       val ev = t("events")(s, d)
         .withColumn("bkt", expr("floor(unix_micros(cast(ts as timestamp)) / 300000000)"))

@@ -231,7 +231,6 @@ object QueriesOpt {
     // and full-volume shuffle. Plan shape asserted in GroupTopKSpec;
     // the oracle proves row-for-row ROW_NUMBER equivalence.
     "opt_group_topk" -> ((s, d) => {
-      graft.plans.GroupTopKOps.ensureRegistered(s)
       graft.plans.GroupTopKOps.topK(
         Tables.t(s, d, "orders")
           .select("o_custkey", "o_orderkey", "o_totalprice"),
@@ -240,19 +239,14 @@ object QueriesOpt {
         .orderBy(col("o_custkey"), col("o_totalprice").desc, col("o_orderkey"))
     }),
 
-    // Anchored-regex scan with the RegexPrefixPushdown rule active:
-    // the GLOB→RLIKE translation shape, made pushable again. The rule
-    // adds a redundant StartsWith conjunct that reaches the parquet
-    // reader (PushedFilters: [StringStartsWith] — spec-asserted);
-    // without it an anchored regex is a full scan at any corpus size.
-    // Result is rule-independent (the conjunct only prunes), which is
-    // exactly what the oracle checks.
+    // Anchored-regex scan under the RegexPrefixPushdown rule (injected
+    // by GraftExtensions): the GLOB→RLIKE translation shape, made
+    // pushable again. The rule adds a redundant StartsWith conjunct that
+    // reaches the parquet reader (PushedFilters: [StringStartsWith] —
+    // spec-asserted); without it an anchored regex is a full scan at
+    // any corpus size. Result is rule-independent (the conjunct only
+    // prunes), which is exactly what the oracle checks.
     "opt_regex_prefix_scan" -> ((s, d) => {
-      QueriesOpt.synchronized {
-        if (!s.experimental.extraOptimizations.contains(graft.plans.RegexPrefixPushdown))
-          s.experimental.extraOptimizations =
-            s.experimental.extraOptimizations :+ graft.plans.RegexPrefixPushdown
-      }
       Tables.t(s, d, "part")
         .filter(col("p_name").rlike("^bl"))
         .select("p_partkey", "p_name")

@@ -128,7 +128,6 @@ object QueriesTrain {
     // fixed-budget curation op ("exactly 100k docs per language into
     // the mix") next to the rate-based ext_stratified_sample.
     "ext_sample_exact_k" -> ((s, d) => {
-      graft.plans.GroupTopKOps.ensureRegistered(s)
       val ranked = t("documents")(s, d)
         .select(col("doc_id"), col("lang"), md5(col("text")).as("rk"))
       graft.plans.GroupTopKOps.topK(ranked, Seq("lang"),

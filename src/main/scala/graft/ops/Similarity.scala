@@ -331,7 +331,6 @@ object Similarity {
                  probes: DataFrame, probeIdCol: String, probeEmbCol: String,
                  k: Int, nProbe: Int = 4,
                  candidateFilter: Option[Column] = None): DataFrame = {
-    graft.plans.GroupTopKOps.ensureRegistered(spark)
     // top-nProbe cells per probe: sort the (sim, cid) structs desc and
     // slice — row-local, no shuffle on the probe side
     val ranked = probeFrame(probes, probeIdCol, probeEmbCol)
@@ -405,7 +404,6 @@ object Similarity {
                  probes: DataFrame, probeIdCol: String, probeEmbCol: String,
                  k: Int, radius: Int = 1,
                  candidateFilter: Option[Column] = None): DataFrame = {
-    graft.plans.GroupTopKOps.ensureRegistered(spark)
     require(index.nBits >= 1 && index.nBits <= maxLshIndexBits,
       s"index nBits ${index.nBits} outside [1, $maxLshIndexBits]")
     val masks = (0L until (1L << index.nBits))

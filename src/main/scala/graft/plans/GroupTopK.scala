@@ -38,9 +38,9 @@ import scala.jdk.CollectionConverters._
   * ROW_NUMBER formulation row-for-row — the DuckDB oracle checks
   * exactly that.
   *
-  * Wiring: `GraftExtensions` injects [[GroupTopKStrategy]]
-  * (`spark.sql.extensions`), or add it to
-  * `spark.experimental.extraStrategies` on a live session.
+  * Wiring: [[GraftExtensions]] injects [[GroupTopKStrategy]] when the
+  * session is built; [[GroupTopKOps.topK]] raises on a session built
+  * without it.
   */
 case class GroupTopK(groupExprs: Seq[Expression], order: Seq[SortOrder],
                      k: Int, child: LogicalPlan) extends UnaryNode {
@@ -124,19 +124,9 @@ object GroupTopKStrategy extends SparkStrategy {
   * (append a unique tiebreaker) for deterministic results.
   */
 object GroupTopKOps {
-  /** Idempotent per-session strategy registration. Synchronized
-    * check-then-append: two threads racing would last-writer-win and
-    * silently drop one registration.
-    */
-  def ensureRegistered(spark: org.apache.spark.sql.SparkSession): Unit =
-    synchronized {
-      if (!spark.experimental.extraStrategies.contains(GroupTopKStrategy))
-        spark.experimental.extraStrategies =
-          spark.experimental.extraStrategies :+ GroupTopKStrategy
-    }
-
   def topK(df: DataFrame, groupCols: Seq[String],
            order: Seq[(String, Boolean)], k: Int): DataFrame = {
+    GraftExtensions.require(df.sparkSession)
     val child = df.queryExecution.analyzed
     val resolver = df.sparkSession.sessionState.analyzer.resolver
     def attr(n: String): Attribute = child.output

@@ -23,9 +23,10 @@ import org.apache.spark.sql.types._
   * Names that Spark already defines with identical semantics
   * (`printf`, `ifnull`, `instr`, `substr`, `char`) are NOT overridden.
   *
-  * Deployment: `spark.sql.extensions=graft.plans.GraftExtensions`
-  * (cluster), `GraftSession.create` (library), or
-  * [[registerRuntime]] on a live session (tests / notebooks).
+  * Deployment: [[GraftExtensions]] injects them when a session is
+  * built, through `GraftSession.create` (library) or
+  * `spark.sql.extensions=graft.plans.GraftExtensions` (cluster). A
+  * session that is already running cannot receive them.
   */
 object SqliteFunctions {
 
@@ -454,7 +455,7 @@ object SqliteFunctions {
     }
   }
 
-  /** Builder-time wiring (`SparkSession.builder.withExtensions`). */
+  /** Wiring through [[GraftExtensions]]. */
   def register(ext: SparkSessionExtensions): Unit = {
     fns.foreach { case (name, usage, b) =>
       ext.injectFunction((FunctionIdentifier(name), info(name, usage), b))
@@ -463,25 +464,14 @@ object SqliteFunctions {
       ext.injectTableFunction((FunctionIdentifier(name), info(name, usage), b))
     }
   }
-
-  /** Live-session wiring (tests, notebooks, existing sessions). */
-  def registerRuntime(spark: SparkSession): Unit = {
-    fns.foreach { case (name, usage, b) =>
-      spark.sessionState.functionRegistry
-        .registerFunction(FunctionIdentifier(name), info(name, usage), b)
-    }
-    tvfs.foreach { case (name, usage, b) =>
-      spark.sessionState.tableFunctionRegistry
-        .registerFunction(FunctionIdentifier(name), info(name, usage), b)
-    }
-  }
 }
 
-/** `spark.sql.extensions=graft.plans.GraftExtensions` entry point:
-  * SQLite-dialect functions, the engine's native dedup/similarity
-  * expressions as SQL functions, the regex-prefix pushdown rule, the
-  * GroupTopK strategy, and literal parameterization of generated code
-  * ([[ParameterizeLiterals]]).
+/** The only way the engine's pieces enter a session: SQLite-dialect
+  * functions, the engine's native dedup/similarity expressions as SQL
+  * functions, the regex-prefix pushdown rule, the GroupTopK strategy,
+  * and literal parameterization of generated code
+  * ([[ParameterizeLiterals]]). `GraftSession.create` applies it; on a
+  * cluster, set `spark.sql.extensions=graft.plans.GraftExtensions`.
   */
 class GraftExtensions extends (SparkSessionExtensions => Unit) {
   override def apply(ext: SparkSessionExtensions): Unit = {
@@ -491,6 +481,19 @@ class GraftExtensions extends (SparkSessionExtensions => Unit) {
     ext.injectPlannerStrategy(_ => GroupTopKStrategy)
     ext.injectColumnar(_ => ParamLiteralsColumnarRule)
   }
+}
+
+object GraftExtensions {
+  /** Raises unless `spark` was built with [[GraftExtensions]]. Reads the
+    * session and changes nothing: a running session cannot receive a
+    * columnar rule, so there is no partial wiring to fall back to.
+    */
+  private[graft] def require(spark: SparkSession): Unit =
+    if (!spark.sessionState.columnarRules.contains(ParamLiteralsColumnarRule))
+      throw new IllegalStateException(
+        "this SparkSession was built without graft's extensions: build it " +
+          "with graft.GraftSession.create, or start it with " +
+          "spark.sql.extensions=graft.plans.GraftExtensions")
 }
 
 /** The engine's native codegen expressions exposed as SQL functions —
@@ -543,16 +546,9 @@ object GraftNativeFunctions {
     new ExpressionInfo(getClass.getName, null, name, usage, "", "", "",
       "misc_funcs", "4.0.0", "", "built-in")
 
-  /** Builder-time wiring (`spark.sql.extensions`). */
+  /** Wiring through [[GraftExtensions]]. */
   def register(ext: SparkSessionExtensions): Unit =
     fns.foreach { case (name, usage, b) =>
       ext.injectFunction((FunctionIdentifier(name), info(name, usage), b))
-    }
-
-  /** Live-session wiring (tests, notebooks, existing sessions). */
-  def registerRuntime(spark: SparkSession): Unit =
-    fns.foreach { case (name, usage, b) =>
-      spark.sessionState.functionRegistry
-        .registerFunction(FunctionIdentifier(name), info(name, usage), b)
     }
 }

@@ -978,8 +978,8 @@ object SqlDialect {
       // including '' (never NULL) when every argument is NULL
       case "concat" if args.nonEmpty =>
         Some(s"concat_ws('', ${args.mkString(", ")})")
-      // typeof() → the native sqlite_typeof expression (registered by
-      // Runner.runSql / GraftExtensions), which folds the storage
+      // typeof() → the native sqlite_typeof expression (injected by
+      // GraftExtensions), which folds the storage
       // class to a null-guarded literal. A pure-SQL rewrite would have
       // to call typeof() inside its own emission — a second translate
       // pass would re-expand it (fixpoint violation, fuzz-pinned) —

@@ -1,6 +1,5 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
 import graft.exec.Runner
 import graft.ingest.Ingestor
 import graft.llm.StubLlm
@@ -13,13 +12,7 @@ import graft.llm.StubLlm
   */
 object Demo {
   def main(args: Array[String]): Unit = {
-    val spark = SparkSession.builder()
-      .master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.GraftSession.create("graft-demo", 4)
 
     val goDir = args.headOption.getOrElse("/root/reference/sample_data")
     val cacheDir = java.nio.file.Files.createTempDirectory("graft_demo_cache_").toString

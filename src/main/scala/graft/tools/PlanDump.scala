@@ -1,7 +1,5 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
-
 /** Dump `.explain("formatted")` for named queries to files — the
   * optimization-round evidence artifacts (plans/rNN/<key>_<tag>.txt).
   *   runMain graft.tools.PlanDump <outDir> <tag> [key1,key2,...]
@@ -14,15 +12,8 @@ object PlanDump {
     val outDir = args(0)
     val tag = args(1)
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.GraftSession.create("graft-plandump",
+      sys.env.getOrElse("SPARK_GRAFT_CPUS", "4").toInt)
     graft.ops.QueriesExt.warmFixtures(spark, sfDir)
     val keys: Seq[String] =
       if (args.length > 2) args(2).split(",").map(_.trim).filter(_.nonEmpty).toSeq

@@ -1,19 +1,11 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
-
 /** Dev smoke runner: drives SparkEntry.entry exactly as the driver's
   * t1 smoke does (rows > 0) and prints the result.
   */
 object Smoke {
   def main(args: Array[String]): Unit = {
-    val spark = SparkSession.builder()
-      .master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.GraftSession.create("graft-smoke", 4)
     val df = graft.SparkEntry.entry(spark)
     df.show(20, truncate = false)
     println("ENTRY_ROWS=" + df.count())

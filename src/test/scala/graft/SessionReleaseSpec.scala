@@ -46,11 +46,7 @@ class SessionReleaseSpec extends AnyFunSuite {
   * and B is seen. */
 object SessionReleaseChild {
   private def session(): SparkSession = {
-    val s = SparkSession.builder().master("local[2]")
-      .config("spark.sql.shuffle.partitions", "2")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val s = GraftSession.create("session-release", 2)
     s.sparkContext.setLogLevel("ERROR")
     s
   }

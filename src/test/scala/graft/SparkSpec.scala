@@ -11,13 +11,24 @@ trait SparkSpec extends AnyFunSuite {
 
 object SparkSpec {
   lazy val session: SparkSession = {
-    val s = SparkSession.builder()
-      .master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val s = GraftSession.create("graft-spec", 4)
     s.sparkContext.setLogLevel("ERROR")
     s
+  }
+
+  /** A reference session without the engine's extensions, on the shared
+    * session's SparkContext and confs: the "rule off" side of the specs
+    * that compare a rule's answers with Spark's own. The only session
+    * not built by [[GraftSession.create]].
+    */
+  lazy val plain: SparkSession = {
+    val shared = session
+    SparkSession.clearActiveSession()
+    SparkSession.clearDefaultSession()
+    try SparkSession.builder().getOrCreate()
+    finally {
+      SparkSession.setDefaultSession(shared)
+      SparkSession.setActiveSession(shared)
+    }
   }
 }

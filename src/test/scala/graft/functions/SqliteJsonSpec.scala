@@ -10,8 +10,6 @@ import org.apache.spark.sql.functions._
   * the column-based tests below exercise codegen.
   */
 class SqliteJsonSpec extends SparkSpec {
-  graft.plans.SqliteFunctions.registerRuntime(spark)
-
   private val golden: Seq[(String, String)] = Seq(
     ("json_set('{\"a\":1}', '$.b', 2)", "{\"a\":1,\"b\":2}"),
     ("json_set('{}', '$.a.b', 2)", "{\"a\":{\"b\":2}}"),

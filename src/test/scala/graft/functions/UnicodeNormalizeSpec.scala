@@ -40,7 +40,6 @@ class UnicodeNormalizeSpec extends SparkSpec {
   }
 
   test("SQL registration: nfc_normalize and unicode_normalize resolve") {
-    graft.plans.GraftNativeFunctions.registerRuntime(spark)
     val r = spark.sql(
       "SELECT nfc_normalize('café') AS a, " +
         "unicode_normalize('ﬁle', 'NFKC') AS b")

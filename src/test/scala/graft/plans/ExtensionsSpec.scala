@@ -1,17 +1,46 @@
 package graft.plans
 
-import graft.SparkSpec
+import graft.{SparkEntry, SparkSpec}
+import graft.exec.Runner
+import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.catalyst.FunctionIdentifier
 import org.apache.spark.sql.execution.FileSourceScanExec
 import org.apache.spark.sql.functions._
 
 /** The SparkSessionExtensions surface: SQLite-dialect functions as
-  * native Catalyst builders, and the regex-prefix pushdown rule.
+  * native Catalyst builders, the regex-prefix pushdown rule, and
+  * [[GraftExtensions]] as the only way they enter a session.
   */
 class ExtensionsSpec extends SparkSpec {
   import spark.implicits._
 
-  SqliteFunctions.registerRuntime(spark)
-  GraftNativeFunctions.registerRuntime(spark)
+  test("a session built without the extensions gets a targeted error") {
+    val plain = SparkSpec.plain
+    val errors = Seq(
+      intercept[IllegalStateException](Runner.runSql(plain, "SELECT 1")),
+      intercept[IllegalStateException](GroupTopKOps.topK(
+        plain.range(3).toDF(), Seq("id"), Seq("id" -> true), 1)))
+    for (e <- errors) {
+      assert(e.getMessage.contains("graft.GraftSession.create"), e.getMessage)
+      assert(e.getMessage.contains(
+        "spark.sql.extensions=graft.plans.GraftExtensions"), e.getMessage)
+    }
+    assert(!plain.sessionState.functionRegistry.functionExists(
+      FunctionIdentifier("sqlite_typeof")), "the check registers nothing")
+  }
+
+  test("keys run on the injected rules and leave the session's experimental rules empty") {
+    for (key <- Seq("opt_group_topk", "opt_regex_prefix_scan", "ext_knn_join_ivf")) {
+      val df = SparkEntry.queries(key)(spark, sfDir)
+      assert(df.collect().nonEmpty, key)
+      assert(spark.experimental.extraStrategies.isEmpty, key)
+      assert(spark.experimental.extraOptimizations.isEmpty, key)
+      val plan = df.queryExecution.executedPlan.toString
+      if (key == "opt_group_topk") assert(plan.contains("GroupTopKFinal"), plan)
+      if (key == "opt_regex_prefix_scan")
+        assert(plan.contains("StringStartsWith(p_name,bl)"), plan)
+    }
+  }
 
   test("native dedup/similarity kernels resolve through pure SQL") {
     val r = spark.sql(
@@ -140,37 +169,30 @@ class ExtensionsSpec extends SparkSpec {
   }
 
   test("rule pushes StringStartsWith to the parquet scan, rows unchanged") {
-    val df = () => spark.read.parquet(s"$sfDir/part.parquet")
+    val df = (s: SparkSession) => s.read.parquet(s"$sfDir/part.parquet")
       .filter($"p_name".rlike("^bl"))
       .select("p_partkey", "p_name")
-    val before = df().collect().map(_.getLong(0)).sorted
+    // before: a session without the rule
+    val before = df(SparkSpec.plain).collect().map(_.getLong(0)).sorted
     assert(before.nonEmpty, "test pattern must match some rows")
 
-    val had = spark.experimental.extraOptimizations
-    try {
-      spark.experimental.extraOptimizations = had :+ RegexPrefixPushdown
-      val q = df()
-      val scan = q.queryExecution.executedPlan
-        .collectFirst { case f: FileSourceScanExec => f }.get
-      assert(scan.metadata("PushedFilters").contains("StringStartsWith(p_name,bl)"),
-        s"not pushed: ${scan.metadata("PushedFilters")}")
-      assert(q.collect().map(_.getLong(0)).sorted.sameElements(before),
-        "conjunct must not change results")
-    } finally spark.experimental.extraOptimizations = had
+    val q = df(spark)
+    val scan = q.queryExecution.executedPlan
+      .collectFirst { case f: FileSourceScanExec => f }.get
+    assert(scan.metadata("PushedFilters").contains("StringStartsWith(p_name,bl)"),
+      s"not pushed: ${scan.metadata("PushedFilters")}")
+    assert(q.collect().map(_.getLong(0)).sorted.sameElements(before),
+      "conjunct must not change results")
   }
 
   test("rule is idempotent and skips unanchored patterns") {
-    val had = spark.experimental.extraOptimizations
-    try {
-      spark.experimental.extraOptimizations = had :+ RegexPrefixPushdown
-      val anchored = spark.read.parquet(s"$sfDir/part.parquet")
-        .filter($"p_name".rlike("^bl"))
-      val plan = anchored.queryExecution.optimizedPlan.toString
-      assert("StartsWith".r.findAllIn(plan).length == 1,
-        s"guard added exactly once:\n$plan")
-      val unanchored = spark.read.parquet(s"$sfDir/part.parquet")
-        .filter($"p_name".rlike("gre"))
-      assert(!unanchored.queryExecution.optimizedPlan.toString.contains("StartsWith"))
-    } finally spark.experimental.extraOptimizations = had
+    val anchored = spark.read.parquet(s"$sfDir/part.parquet")
+      .filter($"p_name".rlike("^bl"))
+    val plan = anchored.queryExecution.optimizedPlan.toString
+    assert("StartsWith".r.findAllIn(plan).length == 1,
+      s"guard added exactly once:\n$plan")
+    val unanchored = spark.read.parquet(s"$sfDir/part.parquet")
+      .filter($"p_name".rlike("gre"))
+    assert(!unanchored.queryExecution.optimizedPlan.toString.contains("StartsWith"))
   }
 }

@@ -14,29 +14,25 @@ import org.apache.spark.sql.execution.exchange.ReusedExchangeExec
   * literal are never reused for each other, and every edge value gives
   * the answer the same query gives with the rule off.
   *
-  * "Rule on" is a session built with [[GraftExtensions]]; "rule off" is
-  * the shared spec session, which has no extensions. Both read the same
+  * "Rule on" is a session of the shared spec session, which
+  * `GraftSession.create` builds with [[GraftExtensions]]; "rule off" is
+  * `SparkSpec.plain`, which has no extensions. Both read the same
   * parquet table.
   */
 class ParamLiteralsSpec extends SparkSpec with AdaptiveSparkPlanHelper {
   private val dir = "target/graft_tmp/param_literals"
 
   private lazy val on: SparkSession = {
-    val off = spark
-    SparkSession.clearActiveSession()
-    SparkSession.clearDefaultSession()
-    val s =
-      try SparkSession.builder().withExtensions(new GraftExtensions).getOrCreate()
-      finally {
-        SparkSession.setDefaultSession(off)
-        SparkSession.setActiveSession(off)
-      }
+    // a session of its own, so its codegen confs stay out of the shared one
+    val s = spark.newSession()
     // generated code that fails to compile raises instead of silently
     // falling back to interpreted evaluation
     s.conf.set("spark.sql.codegen.fallback", "false")
     s.conf.set("spark.sql.codegen.factoryMode", "CODEGEN_ONLY")
     s
   }
+
+  private def off: SparkSession = SparkSpec.plain
 
   private lazy val tables: Unit = {
     spark.sql(
@@ -92,7 +88,7 @@ class ParamLiteralsSpec extends SparkSpec with AdaptiveSparkPlanHelper {
     assert(df.queryExecution.executedPlan.isInstanceOf[AdaptiveSparkPlanExec])
     val (second, rows) = compiles(s, q(20, "1968-03-15", 2.5))
     assert(second == 0, "the second question reused every generated class")
-    assert(rows == Runner.resultJson(views(spark).sql(q(20, "1968-03-15", 2.5)), 50))
+    assert(rows == Runner.resultJson(views(off).sql(q(20, "1968-03-15", 2.5)), 50))
     assert(params(Runner.runSql(s, q(30, "1968-04-01", 3.5))) > 0)
   }
 
@@ -106,7 +102,7 @@ class ParamLiteralsSpec extends SparkSpec with AdaptiveSparkPlanHelper {
     assert(!df.queryExecution.executedPlan.isInstanceOf[AdaptiveSparkPlanExec])
     val (second, rows) = compiles(s, q(7, 60, "1969-12-31 00:00:45"))
     assert(second == 0)
-    assert(rows == Runner.resultJson(views(spark).sql(q(7, 60, "1969-12-31 00:00:45")), 50))
+    assert(rows == Runner.resultJson(views(off).sql(q(7, 60, "1969-12-31 00:00:45")), 50))
   }
 
   test("an UPDATE differing only in literals compiles 0 classes") {
@@ -136,7 +132,7 @@ class ParamLiteralsSpec extends SparkSpec with AdaptiveSparkPlanHelper {
         |       (SELECT MAX(v) FROM t WHERE x < 90) AS hi""".stripMargin
     for (q <- Seq(arms, scalar)) {
       val df = s.sql(q)
-      assert(df.collect().toSeq == views(spark).sql(q).collect().toSeq, q)
+      assert(df.collect().toSeq == views(off).sql(q).collect().toSeq, q)
       val reused = collectWithSubqueries(df.queryExecution.executedPlan) {
         case r: ReusedExchangeExec => r
       }
@@ -172,7 +168,7 @@ class ParamLiteralsSpec extends SparkSpec with AdaptiveSparkPlanHelper {
       "SELECT k, price FROM t WHERE price > 11.50BD AND k < 60 ORDER BY k")
     for (q <- qs) {
       val got = Runner.resultJson(s.sql(q), 100)
-      val want = Runner.resultJson(views(spark).sql(q), 100)
+      val want = Runner.resultJson(views(off).sql(q), 100)
       assert(got == want, q)
       assert(got.nonEmpty, q)
     }

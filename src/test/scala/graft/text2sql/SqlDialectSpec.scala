@@ -6,12 +6,6 @@ import graft.ops.Tables
 class SqlDialectSpec extends SparkSpec {
   import spark.implicits._
 
-  // translate() output may reference the SQLite-dialect native
-  // functions (e.g. sqlite_typeof); Runner.runSql registers them
-  // lazily in production — mirror that here since these specs execute
-  // translated SQL through raw spark.sql
-  graft.plans.SqliteFunctions.registerRuntime(spark)
-
   test("GLOB rewrites to an anchored RLIKE that executes in Spark") {
     val sql = SqlDialect.translate(
       "SELECT p_partkey FROM part WHERE p_name GLOB '*ge?r*' ORDER BY p_partkey")
