@@ -57,7 +57,7 @@ object Atomic {
       // plan can itself raise (a STRICT-cast CASE in an UPDATE…FROM
       // pick) when a later changes() call evaluates it.
       if (!Triggers.any(spark) &&
-          !(ForeignKeys.enforcing(spark) && ForeignKeys.anyActionFks(spark))) {
+          !(Pragma.foreignKeys(spark) && ForeignKeys.anyActionFks(spark))) {
         val counters = SessionChanges.snapshot(spark)
         val seqs = SessionKeys.snapshotAutoinc(spark)
         try f

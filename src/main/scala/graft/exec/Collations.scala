@@ -42,8 +42,16 @@ import graft.text2sql.SqlText.{isWordChar, keywordAt, skipWs}
   */
 object Collations {
 
+  /** Every table with declared collations: lowercased table →
+    * (lowercased column → collation). */
+  private def declared(spark: SparkSession): Map[String, Map[String, String]] =
+    SessionKeys.tables(spark).collect {
+      case (t, d) if d.collates.nonEmpty => t -> d.collates
+    }
+
   def fold(spark: SparkSession, sql: String, csLike: Boolean): String = {
-    if (!SessionKeys.anyCollates(spark)) return sql
+    val all = declared(spark)
+    if (all.isEmpty) return sql
     // declaration/DDL text never folds; PRAGMAs answer from registries
     val head = skipWs(sql, 0)
     if (Seq("create", "alter", "drop", "pragma").exists(keywordAt(sql, head, _)))
@@ -58,7 +66,6 @@ object Collations {
     // verbatim keyword.
     if (referencesWord(sql, "collate") ||
         sql.contains("/*graft_binary*/")) return sql
-    val all = SessionKeys.allCollates(spark)
     // a CTE shadows a same-named session table for the whole statement
     // (SQLite scoping — the Rowid pass applies the same rule): its
     // columns carry no declared collation
@@ -96,10 +103,10 @@ object Collations {
     * conflicting-declaration skip the query route uses. */
   def foldWhere(spark: SparkSession, table: String, fragment: String,
                 csLike: Boolean): String = {
-    if (!SessionKeys.anyCollates(spark)) return fragment
+    val all = declared(spark)
+    if (all.isEmpty) return fragment
     if (referencesWord(fragment, "collate") ||
         fragment.contains("/*graft_binary*/")) return fragment
-    val all = SessionKeys.allCollates(spark)
     val t = table.toLowerCase
     val referenced = all.filter { case (tn, _) =>
       tn == t || referencesWord(fragment, tn)

@@ -41,9 +41,10 @@ import org.apache.spark.sql.types.{BooleanType, IntegerType}
 object Constraints {
 
   /** True when the table declares any NOT NULL or CHECK constraint. */
-  def has(spark: SparkSession, table: String): Boolean =
-    SessionKeys.notNullsFor(spark, table).nonEmpty ||
-      SessionKeys.checksFor(spark, table).nonEmpty
+  def has(spark: SparkSession, table: String): Boolean = {
+    val d = SessionKeys.table(spark, table)
+    d.notNulls.nonEmpty || d.checks.nonEmpty
+  }
 
   /** (violation condition, error message) pairs over a full-width row
     * frame, in SQLite's evaluation order. The CHECK condition is
@@ -51,10 +52,10 @@ object Constraints {
     * raises — SQLite's rule. */
   private def violations(spark: SparkSession, table: String)
       : Seq[(Column, String)] = {
-    val nn = SessionKeys.notNullsFor(spark, table).map { c =>
+    val nn = SessionKeys.table(spark, table).notNulls.map { c =>
       col(Ddl.quote(c)).isNull -> s"NOT NULL constraint failed: $table.$c"
     }
-    val cks = SessionKeys.checksFor(spark, table).map {
+    val cks = SessionKeys.table(spark, table).checks.map {
       case (name, raw, execSql) =>
         val label = if (name.nonEmpty) name else raw
         (!coalesce(expr(execSql).cast(BooleanType), lit(true))) ->
@@ -102,9 +103,9 @@ object Constraints {
                            assigns: Map[String, String]): String = {
     def newExpr(c: String): String =
       assigns.get(c.toLowerCase).map(e => s"($e)").getOrElse(Ddl.quote(c))
-    val nn = SessionKeys.notNullsFor(spark, table)
+    val nn = SessionKeys.table(spark, table).notNulls
       .map(c => s"(${newExpr(c)} IS NOT NULL)")
-    val cks = SessionKeys.checksFor(spark, table).map { case (_, _, ex) =>
+    val cks = SessionKeys.table(spark, table).checks.map { case (_, _, ex) =>
       s"(coalesce(CAST((${substituteCols(ex, assigns)}) AS BOOLEAN), true))"
     }
     (nn ++ cks).mkString(" AND ")
@@ -238,7 +239,7 @@ object Constraints {
     * column naming. */
   def collatedKey(spark: SparkSession, table: String, cols: Seq[String],
                   riders: Seq[String] = Nil): UniqueKey = {
-    val declared = SessionKeys.collatesFor(spark, table)
+    val declared = SessionKeys.table(spark, table).collates
     val exprs = cols.zipWithIndex.map { case (c, i) =>
       val eff = riders.lift(i).filter(_.nonEmpty)
         .orElse(declared.get(c.toLowerCase))
@@ -258,7 +259,7 @@ object Constraints {
     * 100 TB path pays nothing anywhere below). */
   def uniqueKeys(spark: SparkSession, table: String,
                  tableCols: Seq[String]): Seq[UniqueKey] = {
-    val pkKeys = SessionKeys.declaredPk(spark, table).toSeq
+    val pkKeys = SessionKeys.table(spark, table).pk.toSeq
       .flatMap { ks =>
         val resolved = ks.map(k => tableCols.find(_.equalsIgnoreCase(k)))
         if (resolved.forall(_.isDefined)) Some(resolved.flatten) else None
@@ -302,7 +303,7 @@ object Constraints {
   def changeableCols(spark: SparkSession, table: String,
                      assigned: Iterable[String]): Set[String] =
     assigned.map(_.toLowerCase).toSet ++
-      SessionKeys.generatedFor(spark, table).map(_._1.toLowerCase)
+      SessionKeys.table(spark, table).generated.map(_._1.toLowerCase)
 
   /** Every name part an executable expression text references,
     * lowercased (a qualified `t.c` or a field path contributes each
@@ -430,10 +431,10 @@ object Constraints {
     * without one the row falls through to [[guard]]'s abort. */
   def fillReplaceDefaults(spark: SparkSession, table: String,
                           df: DataFrame): DataFrame = {
-    val nn = SessionKeys.notNullsFor(spark, table)
+    val nn = SessionKeys.table(spark, table).notNulls
     if (nn.isEmpty) df
     else {
-      val dflts = SessionKeys.defaultsFor(spark, table)
+      val dflts = SessionKeys.table(spark, table).defaults
       val types = df.schema.fields
         .map(f => f.name.toLowerCase -> f.dataType).toMap
       nn.foldLeft(df) { (acc, c) =>

@@ -97,9 +97,6 @@ object Ddl {
           s"(add IF EXISTS to make this a no-op)")
     if (dropped) {
       SessionKeys.forgetTable(spark, stmt.name)
-      // child-side FKs die with their table; FKs REFERENCING the
-      // dropped name dangle, exactly as SQLite leaves them
-      ForeignKeys.forgetTable(spark, stmt.name)
       SessionViews.remove(spark, stmt.name)
       Triggers.dropForTable(spark, stmt.name) // SQLite: triggers die with their table
       Pragma.bumpSchemaVersion(spark)
@@ -146,9 +143,6 @@ object Ddl {
           .stripPrefix("SELECT ").trim
     }
 
-  /** A generated column's executable form: SQLite-dialect expression
-    * through the translator (no CURRENT_* forms — SQLite itself
-    * forbids non-deterministic functions in generated columns). */
   /** SQLite's built-in collating sequences — the only ones the
     * reference's engine ever has (it registers no custom ones through
     * sqlite3). Anything else fails at DDL time with SQLite's error. */
@@ -158,6 +152,9 @@ object Ddl {
       throw new IllegalArgumentException(
         s"no such collation sequence: $name")
 
+  /** A generated column's executable form: SQLite-dialect expression
+    * through the translator (no CURRENT_* forms — SQLite itself
+    * forbids non-deterministic functions in generated columns). */
   private[exec] def generatedExecSql(raw: String): String =
     graft.text2sql.SqlDialect.translate(s"SELECT ($raw)")
       .stripPrefix("SELECT ").trim
@@ -209,17 +206,35 @@ object Ddl {
       "(?i)(?<![A-Za-z0-9_\"`\\[])" + java.util.regex.Pattern.quote(col) +
         "(?![A-Za-z0-9_])").matcher(raw).find()
 
-  /** True when `col` is textually referenced by any of `table`'s
-    * generated-column expressions (word-boundary scan of the raw
-    * text; a hit inside a string literal refuses conservatively —
-    * a visible error beats a silently broken generated column). */
-  private[exec] def referencedByGenerated(spark: SparkSession,
-                                          table: String,
-                                          col: String): Option[String] =
-    SessionKeys.generatedFor(spark, table).collectFirst {
-      case (g, raw, _, _) if !g.equalsIgnoreCase(col) &&
-        refHits(raw, col) => g
-    }
+  /** A stored expression text that reads a column: `what` names it in
+    * RENAME COLUMN's decline (with the `remedy`), `owner` is the schema
+    * object SQLite's DROP COLUMN error names. */
+  private final case class Reader(what: String, owner: String,
+                                  remedy: String)
+
+  /** The first stored text of `table` that reads `col`: another
+    * generated column's expression, a CHECK, or an index's expression
+    * item or partial WHERE. A word-boundary scan of the text; a hit
+    * inside a string literal refuses conservatively — a visible error
+    * beats a silently broken schema. SQLite rewrites these texts on
+    * RENAME COLUMN and fails DROP COLUMN on them; this engine stores
+    * the texts and declines the rename. */
+  private def textReading(spark: SparkSession, table: String,
+                          col: String): Option[Reader] = {
+    val d = SessionKeys.table(spark, table)
+    d.generated.collectFirst {
+      case (g, raw, _, _) if !g.equalsIgnoreCase(col) && refHits(raw, col) =>
+        Reader(s"generated column $g", s"table $table",
+          "DROP that column first")
+    }.orElse(d.checks.collectFirst {
+      case (nm, raw, _) if refHits(raw, col) =>
+        Reader(s"CHECK constraint ${if (nm.nonEmpty) nm else s"($raw)"}",
+          s"table $table", "re-create the table to rename it")
+    }).orElse(SessionKeys.indexesFor(spark, table).collectFirst {
+      case (ix, i) if (i.uexprs ++ i.uwhere).exists(refHits(_, col)) =>
+        Reader(s"index $ix", s"index $ix", "DROP INDEX it first")
+    })
+  }
 
   /** The table's generated columns in evaluation order, for the write
     * paths — raises SQLite's own loop error on a reference cycle
@@ -227,7 +242,7 @@ object Ddl {
     * measured 3.40.1). */
   private[exec] def generatedForWrite(spark: SparkSession, table: String)
       : Seq[(String, String, String, Boolean)] =
-    SessionKeys.generatedFor(spark, table) match {
+    SessionKeys.table(spark, table).generated match {
       case Nil => Nil
       case gens => generatedEvalOrder(gens) match {
         case Right(o) => o
@@ -290,118 +305,97 @@ object Ddl {
     val schema = org.apache.spark.sql.types.StructType(stmt.cols.map {
       case (n, t) => org.apache.spark.sql.types.StructField(n, affinityType(t))
     })
-    spark.createDataFrame(java.util.Collections.emptyList[org.apache.spark.sql.Row](),
-      schema).createOrReplaceTempView(stmt.name)
-    SessionKeys.forgetTable(spark, stmt.name)
-    if (stmt.pkCols.nonEmpty) SessionKeys.declarePk(spark, stmt.name, stmt.pkCols)
+    val empty = spark.createDataFrame(
+      java.util.Collections.emptyList[org.apache.spark.sql.Row](), schema)
+    val gens = stmt.generated.map { case (c, raw, stored) =>
+      (c.toLowerCase, raw, generatedExecSql(raw), stored)
+    }
+    // bind-check each generated expr against the declared columns NOW
+    // (SQLite validates at CREATE: an unknown identifier errors) —
+    // computed in declaration order so chained references (a generated
+    // column using an earlier one) resolve
+    // (over the relation under its name, so `t.c` references resolve)
+    val named = empty.as(stmt.name)
+    try gens.foldLeft(named) { case (probe, (c, _, ex, _)) =>
+      probe.withColumn(c, org.apache.spark.sql.functions.expr(ex))
+    }.queryExecution.analyzed
+    catch {
+      case e: Exception => throw new IllegalArgumentException(
+        s"CREATE TABLE ${stmt.name}: error in generated column " +
+          s"expression: ${e.getMessage}", e)
+    }
+    // NOT NULL / CHECK constraints enforce at write time
+    // (exec.Constraints — SQLite's error texts)
+    val checks = stmt.checks.map { case (nm, raw) =>
+      // SQLite's own parse-time rule, its exact error text
+      if (containsSelect(raw))
+        throw new IllegalArgumentException(
+          "subqueries prohibited in CHECK constraints")
+      (nm, raw, generatedExecSql(raw))
+    }
+    try checks.foreach { case (_, _, ex) =>
+      named.filter(org.apache.spark.sql.functions.expr(ex))
+        .queryExecution.analyzed
+    } catch {
+      case e: Exception => throw new IllegalArgumentException(
+        s"CREATE TABLE ${stmt.name}: error in CHECK constraint: " +
+          s"${e.getMessage}", e)
+    }
+    // column-declared collations fold into bare comparisons / ORDER BY
+    // / GROUP BY over the column (Runner's session-aware collation
+    // pass); unknown names are SQLite's own CREATE-time error (only the
+    // built-ins exist here — the reference's sqlite3 registers no
+    // custom collations either)
+    stmt.collates.foreach { case (_, c) => assertKnownCollation(c) }
     // SQLite's rowid-alias rule (lang_createtable.html §5): a
     // single-column PRIMARY KEY declared exactly INTEGER on a rowid
     // table IS the rowid — only those auto-assign missing/NULL keys;
     // `INT PRIMARY KEY` is NOT an alias (the NULL stores), and a
     // WITHOUT ROWID key has no rowid to alias
-    if (!stmt.withoutRowid) stmt.pkCols match {
-      case Seq(k) =>
-        stmt.cols.find { case (n, t) =>
-          n.equalsIgnoreCase(k) && t.trim.equalsIgnoreCase("integer")
-        }.foreach { case (n, _) =>
-          SessionKeys.declareRowidAlias(spark, stmt.name, n)
-        }
-      case _ => ()
+    val rowidAlias = stmt.pkCols match {
+      case Seq(k) if !stmt.withoutRowid =>
+        stmt.cols.collectFirst { case (n, t) if n.equalsIgnoreCase(k) &&
+          t.trim.equalsIgnoreCase("integer") => n }
+      case _ => None
     }
-    // each UNIQUE constraint becomes one of SQLite's automatic unique
-    // indexes (sqlite_autoindex_<t>_<n>, origin 'u', declaration
-    // order) — NOT a PK, so PRAGMA table_info keeps pk=0 for them
-    // while OR REPLACE / bare ON CONFLICT still resolve against them
-    // through keyFor's unique-index fallback, and uniqueness enforces
-    // on every write (exec.Constraints) — all SQLite's behavior
-    stmt.uniques.zipWithIndex.foreach { case (ks, i) =>
-      SessionKeys.registerIndex(spark,
-        s"sqlite_autoindex_${stmt.name}_${i + 1}",
-        stmt.name, ks, unique = true, origin = "u")
-    }
-    SessionKeys.declareDefaults(spark, stmt.name,
-      stmt.defaults.map { case (c, raw) => c -> (raw, defaultExecSql(raw)) })
-    if (stmt.generated.nonEmpty) {
-      val gens = stmt.generated.map { case (c, raw, stored) =>
-        (c, raw, generatedExecSql(raw), stored)
-      }
-      // bind-check each expr against the declared columns NOW (SQLite
-      // validates at CREATE: an unknown identifier errors) — compute
-      // over the empty relation in declaration order so chained
-      // references (a generated column using an earlier one) resolve
-      try {
-        var probe = spark.table(quote(stmt.name))
-        gens.foreach { case (c, _, ex, _) =>
-          probe = probe.withColumn(c,
-            org.apache.spark.sql.functions.expr(ex))
-        }
-        probe.queryExecution.analyzed
-      } catch {
-        case e: Exception =>
-          spark.catalog.dropTempView(stmt.name)
-          SessionKeys.forgetTable(spark, stmt.name)
-          throw new IllegalArgumentException(
-            s"CREATE TABLE ${stmt.name}: error in generated column " +
-              s"expression: ${e.getMessage}", e)
-      }
-      SessionKeys.declareGenerated(spark, stmt.name, gens)
-    }
-    // NOT NULL / CHECK constraints register for write-time enforcement
-    // (exec.Constraints — SQLite's error texts); a WITHOUT ROWID
-    // PRIMARY KEY is implicitly NOT NULL (measured: the insert raises
-    // `NOT NULL constraint failed: t.k` and table_info reports 1)
+    // a WITHOUT ROWID PRIMARY KEY is implicitly NOT NULL (measured:
+    // the insert raises `NOT NULL constraint failed: t.k` and
+    // table_info reports 1)
     val implicitNn =
       if (!stmt.withoutRowid) Nil
       else stmt.pkCols.map(k =>
         stmt.cols.find(_._1.equalsIgnoreCase(k)).map(_._1).getOrElse(k))
-    SessionKeys.declareNotNulls(spark, stmt.name,
-      stmt.notNulls ++ implicitNn)
-    if (stmt.checks.nonEmpty) {
-      val cks = stmt.checks.map { case (nm, raw) =>
-        // SQLite's own parse-time rule, its exact error text
-        if (containsSelect(raw))
-          throw new IllegalArgumentException(
-            "subqueries prohibited in CHECK constraints")
-        (nm, raw, generatedExecSql(raw))
-      }
-      // bind-check each expression against the declared columns NOW
-      // (SQLite validates at CREATE: an unknown identifier errors)
-      try {
-        val probe = spark.table(quote(stmt.name))
-        cks.foreach { case (_, _, ex) =>
-          probe.filter(org.apache.spark.sql.functions.expr(ex))
-            .queryExecution.analyzed
-        }
-      } catch {
-        case e: Exception =>
-          spark.catalog.dropTempView(stmt.name)
-          SessionKeys.forgetTable(spark, stmt.name)
-          throw new IllegalArgumentException(
-            s"CREATE TABLE ${stmt.name}: error in CHECK constraint: " +
-              s"${e.getMessage}", e)
-      }
-      SessionKeys.declareChecks(spark, stmt.name, cks)
-    }
-    // column-declared collations register so bare comparisons /
-    // ORDER BY / GROUP BY over the column fold the collation
-    // (Runner's session-aware collation pass); unknown names are
-    // SQLite's own CREATE-time error (only the built-ins exist here —
-    // the reference's sqlite3 registers no custom collations either)
-    stmt.collates.foreach { case (_, c) => assertKnownCollation(c) }
-    SessionKeys.declareCollates(spark, stmt.name, stmt.collates)
-    if (stmt.strict)
-      SessionKeys.declareStrict(spark, stmt.name,
-        stmt.cols.map { case (c, t) => c -> t.trim.toUpperCase }.toMap)
-    if (stmt.withoutRowid)
-      SessionKeys.declareWithoutRowid(spark, stmt.name)
-    stmt.autoincrement.foreach(_ =>
-      SessionKeys.declareAutoincrement(spark, stmt.name))
-    // FOREIGN KEY constraints register (introspection via PRAGMA
-    // foreign_key_list/check; enforced under PRAGMA foreign_keys=1) —
-    // SQLite accepts references to not-yet-created tables, so no
-    // parent existence check happens here (measured)
-    ForeignKeys.forgetTable(spark, stmt.name)
-    ForeignKeys.register(spark, stmt.name, stmt.fks)
+    // FOREIGN KEY constraints are listed by PRAGMA foreign_key_list /
+    // check and enforced under PRAGMA foreign_keys=1 — SQLite accepts
+    // references to not-yet-created tables, so no parent existence
+    // check happens here (measured)
+    val decl = SessionKeys.TableDecl(
+      pk = Some(stmt.pkCols).filter(_.nonEmpty),
+      rowidAlias = rowidAlias,
+      defaults = stmt.defaults.map { case (c, raw) =>
+        c.toLowerCase -> (raw, defaultExecSql(raw))
+      }.toMap,
+      generated = gens,
+      strict =
+        if (!stmt.strict) Map.empty
+        else stmt.cols.map { case (c, t) =>
+          c.toLowerCase -> t.trim.toUpperCase
+        }.toMap,
+      notNulls = stmt.notNulls ++ implicitNn,
+      checks = checks,
+      collates = stmt.collates.collect { case (c, v)
+        if !v.equalsIgnoreCase("BINARY") => c.toLowerCase -> v.toUpperCase
+      }.toMap,
+      withoutRowid = stmt.withoutRowid,
+      autoincrement = stmt.autoincrement.isDefined,
+      fks = stmt.fks)
+    empty.createOrReplaceTempView(stmt.name)
+    // each UNIQUE constraint becomes one of SQLite's automatic unique
+    // indexes — NOT a PK, so PRAGMA table_info keeps pk=0 for them
+    // while OR REPLACE / bare ON CONFLICT still resolve against them
+    // through keyFor's unique-index fallback, and uniqueness enforces
+    // on every write (exec.Constraints) — all SQLite's behavior
+    SessionKeys.declare(spark, stmt.name, decl, stmt.uniques)
     Pragma.bumpSchemaVersion(spark)
     spark.emptyDataFrame
   }
@@ -465,9 +459,9 @@ object Ddl {
     // reports partial=1 for plain ones too (SQLite); uniqueness
     // ENFORCEMENT stays gated on `unique` at the consumers
     // (uniqueColIndexes/uniqueExprIndexes filter on it)
-    val fresh = SessionKeys.registerIndex(spark, stmt.name, stmt.table,
-      stmt.cols, stmt.unique, riders = stmt.riders, uexprs = uexprs,
-      uwhere = uwhere)
+    val fresh = SessionKeys.registerIndex(spark, stmt.name,
+      SessionKeys.Index(stmt.table, stmt.cols, stmt.unique, "c",
+        stmt.riders, uexprs, uwhere))
     if (!fresh && !stmt.ifNotExists)
       throw new IllegalArgumentException(
         s"$verb: index ${stmt.name} already exists (SQLite semantics); " +
@@ -498,8 +492,9 @@ object Ddl {
     }
   }
 
-  /** `ALTER TABLE t RENAME TO t2` — the binding moves; declared keys
-    * and indexes follow (SQLite rewrites schema references on rename).
+  /** `ALTER TABLE t RENAME TO t2` — the binding moves; the table's
+    * declarations, indexes and the FKs naming it follow (SQLite
+    * rewrites schema references on rename).
     * Pure metadata: the captured (already-analyzed) plan re-registers
     * under the new name, so no data is rewritten. */
   def alterRenameTable(spark: SparkSession,
@@ -514,15 +509,15 @@ object Ddl {
     if (!stmt.newName.equalsIgnoreCase(stmt.table))
       spark.catalog.dropTempView(stmt.table)
     SessionKeys.renameTable(spark, stmt.table, stmt.newName)
-    ForeignKeys.renameTable(spark, stmt.table, stmt.newName)
     Triggers.renameTable(spark, stmt.table, stmt.newName)
     Pragma.bumpSchemaVersion(spark)
     spark.emptyDataFrame
   }
 
   /** `ALTER TABLE t RENAME [COLUMN] a TO b` — a pure projection
-    * re-bind (Catalyst collapses stacked ALTER projections); declared
-    * keys/indexes referencing the column follow. */
+    * re-bind (Catalyst collapses stacked ALTER projections); the
+    * declarations, index columns and FK references naming the column
+    * follow. */
   def alterRenameColumn(spark: SparkSession,
                         stmt: SqlDml.AlterRenameColumn): DataFrame = {
     import org.apache.spark.sql.functions.col
@@ -535,35 +530,17 @@ object Ddl {
         cols.exists(_.equalsIgnoreCase(stmt.newCol)))
       throw new IllegalArgumentException(
         s"ALTER TABLE ${stmt.table}: duplicate column name ${stmt.newCol}")
-    // SQLite rewrites generated-column exprs on rename; this engine
-    // stores the raw text and declines the rewrite visibly
-    referencedByGenerated(spark, stmt.table, stmt.oldCol).foreach(g =>
+    // SQLite rewrites the expression texts reading the column; this
+    // engine declines visibly rather than regex-rewrite them
+    textReading(spark, stmt.table, stmt.oldCol).foreach(r =>
       throw new UnsupportedOperationException(
         s"ALTER TABLE ${stmt.table} RENAME COLUMN ${stmt.oldCol}: " +
-          s"referenced by generated column $g; DROP that column first"))
-    // same rule for CHECK constraints (SQLite rewrites the stored
-    // text; this engine declines visibly rather than regex-rewrite)
-    SessionKeys.checksFor(spark, stmt.table)
-      .find(c => refHits(c._2, stmt.oldCol)).foreach { case (nm, raw, _) =>
-        throw new UnsupportedOperationException(
-          s"ALTER TABLE ${stmt.table} RENAME COLUMN ${stmt.oldCol}: " +
-            s"referenced by CHECK constraint " +
-            s"${if (nm.nonEmpty) nm else s"($raw)"}; re-create the " +
-            s"table to rename it")
-      }
-    // …and expression-keyed unique indexes (same stored-text rule)
-    SessionKeys.uniqueExprIndexes(spark, stmt.table)
-      .find(_._2.exists(refHits(_, stmt.oldCol))).foreach { case (ix, _, _) =>
-        throw new UnsupportedOperationException(
-          s"ALTER TABLE ${stmt.table} RENAME COLUMN ${stmt.oldCol}: " +
-            s"referenced by unique index $ix; DROP INDEX it first")
-      }
+          s"referenced by ${r.what}; ${r.remedy}"))
     base.select(cols.map { c =>
       if (c.equalsIgnoreCase(stmt.oldCol)) col(quote(c)).as(stmt.newCol)
       else col(quote(c))
     }.toIndexedSeq: _*).createOrReplaceTempView(stmt.table)
     SessionKeys.renameColumn(spark, stmt.table, stmt.oldCol, stmt.newCol)
-    ForeignKeys.renameColumn(spark, stmt.table, stmt.oldCol, stmt.newCol)
     Triggers.renameColumn(spark, stmt.table, stmt.oldCol, stmt.newCol)
     Pragma.bumpSchemaVersion(spark)
     spark.emptyDataFrame
@@ -582,8 +559,8 @@ object Ddl {
       throw new IllegalArgumentException(
         s"ALTER TABLE ${stmt.table}: duplicate column name ${stmt.col}")
     val dt = affinityType(stmt.declType)
-    val st = SessionKeys.strictFor(spark, stmt.table)
-    if (st.nonEmpty) {
+    val strict = SessionKeys.table(spark, stmt.table).strict.nonEmpty
+    if (strict) {
       val uT = stmt.declType.trim.toUpperCase
       if (uT.isEmpty)
         throw new IllegalArgumentException(
@@ -615,8 +592,8 @@ object Ddl {
               s"expression: ${e.getMessage}", e)
         }
       rebound.createOrReplaceTempView(stmt.table)
-      SessionKeys.declareGenerated(spark, stmt.table,
-        Seq((stmt.col, raw, ex, false)))
+      SessionKeys.alter(spark, stmt.table)(d =>
+        d.copy(generated = d.generated :+ ((stmt.col.toLowerCase, raw, ex, false))))
       Pragma.bumpSchemaVersion(spark)
       return spark.emptyDataFrame
     }
@@ -630,23 +607,7 @@ object Ddl {
       throw new IllegalArgumentException(
         s"ALTER TABLE ${stmt.table}: cannot add a NOT NULL column " +
           s"with default value NULL (SQLite semantics)")
-    base.select(base.columns.map(c => col(quote(c))).toIndexedSeq :+
-        lit(value).cast(dt).as(stmt.col): _*)
-      .createOrReplaceTempView(stmt.table)
-    // the STRICT column type registers only once the add succeeded
-    if (st.nonEmpty)
-      SessionKeys.declareStrict(spark, stmt.table,
-        SessionKeys.strictFor(spark, stmt.table) +
-          (stmt.col.toLowerCase -> stmt.declType.trim.toUpperCase))
-    stmt.default.foreach(raw => SessionKeys.declareDefaults(spark,
-      stmt.table, Seq(stmt.col -> (raw, defaultExecSql(raw)))))
-    // an added column's REFERENCES clause registers like CREATE
-    // TABLE's column-level form (SQLite lists and enforces it)
-    stmt.fk.foreach(f => ForeignKeys.append(spark, stmt.table, f))
-    // NOT NULL / CHECK / COLLATE riders register like CREATE TABLE's
-    if (stmt.notNull)
-      SessionKeys.declareNotNulls(spark, stmt.table, Seq(stmt.col))
-    stmt.check.foreach { raw =>
+    val check = stmt.check.map { raw =>
       if (containsSelect(raw))
         throw new IllegalArgumentException(
           "subqueries prohibited in CHECK constraints")
@@ -673,12 +634,27 @@ object Ddl {
           case _: Exception => () // references other columns: skip
         }
       }
-      SessionKeys.declareChecks(spark, stmt.table, Seq(("", raw, ex)))
+      ("", raw, ex)
     }
-    stmt.collate.foreach { c =>
-      assertKnownCollation(c)
-      SessionKeys.declareCollates(spark, stmt.table, Seq(stmt.col -> c))
-    }
+    stmt.collate.foreach(assertKnownCollation)
+    base.select(base.columns.map(c => col(quote(c))).toIndexedSeq :+
+        lit(value).cast(dt).as(stmt.col): _*)
+      .createOrReplaceTempView(stmt.table)
+    // the column's declarations register like CREATE TABLE's: an added
+    // REFERENCES clause is listed and enforced (SQLite), and takes
+    // `foreign_key_list` id 0 as the newest declaration (measured)
+    val c = stmt.col.toLowerCase
+    SessionKeys.alter(spark, stmt.table)(d => d.copy(
+      strict =
+        if (strict) d.strict + (c -> stmt.declType.trim.toUpperCase)
+        else d.strict,
+      defaults = d.defaults ++
+        stmt.default.map(raw => c -> (raw, defaultExecSql(raw))),
+      fks = d.fks ++ stmt.fk,
+      notNulls = if (stmt.notNull) d.notNulls :+ stmt.col else d.notNulls,
+      checks = d.checks ++ check,
+      collates = d.collates ++ stmt.collate
+        .filterNot(_.equalsIgnoreCase("BINARY")).map(v => c -> v.toUpperCase)))
     Pragma.bumpSchemaVersion(spark)
     spark.emptyDataFrame
   }
@@ -698,45 +674,30 @@ object Ddl {
       throw new IllegalArgumentException(
         s"ALTER TABLE ${stmt.table}: cannot drop the only column " +
           s"(SQLite semantics)")
-    if (SessionKeys.declaredPk(spark, stmt.table).getOrElse(Nil)
+    if (SessionKeys.table(spark, stmt.table).pk.getOrElse(Nil)
         .exists(_.equalsIgnoreCase(stmt.col)))
       throw new IllegalArgumentException(
         s"ALTER TABLE ${stmt.table}: cannot drop PRIMARY KEY column " +
           s"${stmt.col} (SQLite semantics)")
     SessionKeys.indexesFor(spark, stmt.table)
-      .find(_._2.exists(_.equalsIgnoreCase(stmt.col)))
-      .foreach { case (ix, _, _, _) =>
+      .find(_._2.cols.exists(_.equalsIgnoreCase(stmt.col)))
+      .foreach { case (ix, _) =>
         throw new IllegalArgumentException(
           s"ALTER TABLE ${stmt.table}: cannot drop column ${stmt.col}: " +
             s"indexed by $ix (SQLite semantics); DROP INDEX it first")
       }
     Triggers.guardDropColumn(spark, stmt.table, stmt.col)
-    // SQLite refuses dropping a column a generated column references
-    // ("error in table t after drop column: no such column: c")
-    referencedByGenerated(spark, stmt.table, stmt.col).foreach(_ =>
+    // SQLite refuses dropping a column a stored expression text reads
+    // ("error in table t after drop column: no such column: c", or
+    // "error in index i …" for an index expression or partial WHERE)
+    textReading(spark, stmt.table, stmt.col).foreach(r =>
       throw new IllegalArgumentException(
-        s"error in table ${stmt.table} after drop column: " +
+        s"error in ${r.owner} after drop column: " +
           s"no such column: ${stmt.col}"))
-    // …and one a CHECK constraint references (SQLite's same error)
-    SessionKeys.checksFor(spark, stmt.table)
-      .find(c => refHits(c._2, stmt.col)).foreach(_ =>
-        throw new IllegalArgumentException(
-          s"error in table ${stmt.table} after drop column: " +
-            s"no such column: ${stmt.col}"))
-    // …and one an expression-keyed unique index references
-    SessionKeys.uniqueExprIndexes(spark, stmt.table)
-      .find(_._2.exists(refHits(_, stmt.col))).foreach { case (ix, _, _) =>
-        throw new IllegalArgumentException(
-          s"ALTER TABLE ${stmt.table}: cannot drop column ${stmt.col}: " +
-            s"indexed by $ix (SQLite semantics); DROP INDEX it first")
-      }
     base.select(cols.filterNot(_.equalsIgnoreCase(stmt.col))
         .map(c => col(quote(c))).toIndexedSeq: _*)
       .createOrReplaceTempView(stmt.table)
-    SessionKeys.forgetColumn(spark, stmt.table, stmt.col)
-    // an FK whose child columns include the dropped column silently
-    // drops with it (measured SQLite 3.40.1 behavior)
-    ForeignKeys.dropColumn(spark, stmt.table, stmt.col)
+    SessionKeys.dropColumn(spark, stmt.table, stmt.col)
     Pragma.bumpSchemaVersion(spark)
     spark.emptyDataFrame
   }

@@ -8,15 +8,15 @@ import graft.text2sql.SqlDml
   * reference's SQLite parses and — under `PRAGMA foreign_keys=ON` —
   * enforces any FK clause the model generates, pandasqlite.py:245-247).
   *
-  * Declarations register at CREATE TABLE (previously they were skipped
-  * silently — the one divergence class this engine forbids), surface
-  * through `PRAGMA foreign_key_list` / `foreign_key_check`, follow
-  * ALTER renames on BOTH sides (measured: SQLite rewrites parent
-  * references on RENAME TO and referenced-column names on RENAME
-  * COLUMN), die with a dropped child column (measured: DROP COLUMN
-  * silently removes the FK it participates in) and with DROP TABLE of
-  * the child; dropping a PARENT leaves the dangling reference SQLite
-  * leaves (foreign_key_check then flags every non-null child row —
+  * Declarations are part of the child table's [[SessionKeys.TableDecl]]
+  * (registered at CREATE TABLE / ADD COLUMN), surface through `PRAGMA
+  * foreign_key_list` / `foreign_key_check`, follow ALTER renames on
+  * BOTH sides (measured: SQLite rewrites parent references on RENAME
+  * TO and referenced-column names on RENAME COLUMN), die with a
+  * dropped child column (measured: DROP COLUMN silently removes the FK
+  * it participates in) and with DROP TABLE of the child; dropping a
+  * PARENT leaves the dangling reference SQLite leaves
+  * (foreign_key_check then flags every non-null child row —
   * measured).
   *
   * Enforcement (`PRAGMA foreign_keys = 1`) is set-based:
@@ -56,106 +56,19 @@ import graft.text2sql.SqlDml
   */
 object ForeignKeys {
 
-  private final class State {
-    // lowercased child table -> FKs in declaration order
-    val fks = scala.collection.mutable.Map.empty[String, Vector[SqlDml.Fk]]
-  }
-
-  private val state = graft.SessionLocal(new State)
-
-  def register(spark: SparkSession, table: String,
-               fks: Seq[SqlDml.Fk]): Unit = {
-    if (fks.isEmpty) return
-    val s = state(spark)
-    s.synchronized { s.fks(table.toLowerCase) = fks.toVector }
-  }
-
-  /** Append one FK (`ALTER TABLE ADD COLUMN … REFERENCES …` — the
-    * newest declaration, so it takes `foreign_key_list` id 0, exactly
-    * SQLite's reverse-declaration numbering, measured). */
-  def append(spark: SparkSession, table: String, fk: SqlDml.Fk): Unit = {
-    val s = state(spark)
-    s.synchronized {
-      s.fks(table.toLowerCase) =
-        s.fks.getOrElse(table.toLowerCase, Vector.empty) :+ fk
-    }
-  }
-
-  /** The table's FKs in DECLARATION order (enforcement order). */
-  def childFksOf(spark: SparkSession, table: String): Seq[SqlDml.Fk] = {
-    val s = state(spark)
-    s.synchronized(s.fks.getOrElse(table.toLowerCase, Vector.empty))
-  }
-
   /** SQLite's `foreign_key_list` id for declaration index `i` of `n`
     * FKs: ids count from 0 at the LAST declared constraint (measured
     * 3.40.1). */
   private def listId(n: Int, declIdx: Int): Int = n - 1 - declIdx
 
-  /** FKs (from any child table) whose parent is `table`, with their
-    * child table names — the parent-side enforcement set. */
+  /** FKs (from any child table, the declarations in [[SessionKeys]])
+    * whose parent is `table`, with their child table names — the
+    * parent-side enforcement set. */
   def referencing(spark: SparkSession, table: String)
-      : Seq[(String, SqlDml.Fk)] = {
-    val s = state(spark)
-    s.synchronized {
-      s.fks.toSeq.sortBy(_._1).flatMap { case (child, list) =>
-        list.filter(_.parent.equalsIgnoreCase(table)).map(child -> _)
-      }
+      : Seq[(String, SqlDml.Fk)] =
+    SessionKeys.tables(spark).toSeq.sortBy(_._1).flatMap { case (child, d) =>
+      d.fks.filter(_.parent.equalsIgnoreCase(table)).map(child -> _)
     }
-  }
-
-  def forgetTable(spark: SparkSession, table: String): Unit = {
-    val s = state(spark)
-    s.synchronized { s.fks.remove(table.toLowerCase); () }
-  }
-
-  /** RENAME TO: the child-side key moves AND every FK referencing the
-    * old name re-points (measured: SQLite rewrites both). */
-  def renameTable(spark: SparkSession, from: String, to: String): Unit = {
-    val s = state(spark)
-    s.synchronized {
-      val own = s.fks.remove(from.toLowerCase)
-      own.foreach(v => s.fks(to.toLowerCase) = v)
-      for ((t, list) <- s.fks.toSeq)
-        s.fks(t) = list.map { fk =>
-          if (fk.parent.equalsIgnoreCase(from)) fk.copy(parent = to) else fk
-        }
-    }
-  }
-
-  /** RENAME COLUMN follows into the table's own child columns and into
-    * OTHER tables' parent-column references to it (measured). */
-  def renameColumn(spark: SparkSession, table: String,
-                   from: String, to: String): Unit = {
-    val s = state(spark)
-    def sub(cs: Seq[String]) =
-      cs.map(c => if (c.equalsIgnoreCase(from)) to else c)
-    s.synchronized {
-      s.fks.get(table.toLowerCase).foreach { own =>
-        s.fks(table.toLowerCase) = own.map(fk => fk.copy(cols = sub(fk.cols)))
-      }
-      for ((t, list) <- s.fks.toSeq)
-        s.fks(t) = list.map { fk =>
-          if (fk.parent.equalsIgnoreCase(table))
-            fk.copy(parentCols = sub(fk.parentCols))
-          else fk
-        }
-    }
-  }
-
-  /** DROP COLUMN: an FK whose CHILD columns include the dropped column
-    * silently drops with it (measured); parent-side references are
-    * left dangling exactly as SQLite leaves them. */
-  def dropColumn(spark: SparkSession, table: String, col: String): Unit = {
-    val s = state(spark)
-    s.synchronized {
-      s.fks.get(table.toLowerCase).foreach { own =>
-        val kept = own.filterNot(_.cols.exists(_.equalsIgnoreCase(col)))
-        if (kept.isEmpty) s.fks.remove(table.toLowerCase)
-        else s.fks(table.toLowerCase) = kept
-      }
-    }
-  }
 
   // ------------------------------------------------ introspection
 
@@ -173,7 +86,7 @@ object ForeignKeys {
     * row per FK column, ids in REVERSE declaration order, `to` NULL
     * for the short form, match always 'NONE'. */
   def foreignKeyList(spark: SparkSession, table: String): DataFrame = {
-    val fks = childFksOf(spark, table)
+    val fks = SessionKeys.table(spark, table).fks
     val rows = fks.zipWithIndex.flatMap { case (fk, i) =>
       fk.cols.zipWithIndex.map { case (c, seq) =>
         Row(listId(fks.size, i), seq, fk.parent, c,
@@ -204,7 +117,7 @@ object ForeignKeys {
         s"""foreign key mismatch - "$child" referencing "${fk.parent}"""")
     val declared = SessionKeys.keyFor(spark, fk.parent)
     if (fk.parentCols.isEmpty) {
-      val pk = SessionKeys.declaredPk(spark, fk.parent).getOrElse(mismatch())
+      val pk = SessionKeys.table(spark, fk.parent).pk.getOrElse(mismatch())
       // short form: the child column count must equal the parent PK's
       // arity (measured: a 1-column FK to a composite PK is SQLite's
       // mismatch error, not an enforcement against the leading column)
@@ -215,9 +128,9 @@ object ForeignKeys {
       val ok = declared.exists(k =>
         k.map(_.toLowerCase).toSet == pset && k.size == fk.parentCols.size)
       val okIx = SessionKeys.indexesFor(spark, fk.parent).exists {
-        case (_, cols, unique, _) =>
-          unique && cols.map(_.toLowerCase).toSet == pset &&
-            cols.size == fk.parentCols.size
+        case (_, i) =>
+          i.unique && i.cols.map(_.toLowerCase).toSet == pset &&
+            i.cols.size == fk.parentCols.size
       }
       if (!ok && !okIx) mismatch()
       // resolve case against the lake schema
@@ -272,7 +185,6 @@ object ForeignKeys {
   def foreignKeyCheck(spark: SparkSession,
                       table: Option[String]): DataFrame = {
     import org.apache.spark.sql.functions.{col, lit}
-    val s = state(spark)
     val tables = table match {
       case Some(t) =>
         // measured: sqlite3 errors on an unknown name (no main. prefix
@@ -280,10 +192,11 @@ object ForeignKeys {
         if (tableOpt(spark, t).isEmpty)
           throw new IllegalArgumentException(s"no such table: $t")
         Seq(t)
-      case None => s.synchronized(s.fks.keys.toSeq.sorted)
+      case None =>
+        SessionKeys.tables(spark).filter(_._2.fks.nonEmpty).keys.toSeq.sorted
     }
     val parts = tables.flatMap { t =>
-      val fks = childFksOf(spark, t)
+      val fks = SessionKeys.table(spark, t).fks
       if (fks.isEmpty) Nil
       else {
         Rowid.enable(spark, t) // the report column SQLite answers
@@ -319,10 +232,6 @@ object ForeignKeys {
   private def fail(): Nothing =
     throw new IllegalArgumentException("FOREIGN KEY constraint failed")
 
-  /** Is enforcement on? (`PRAGMA foreign_keys = 1`.) */
-  def enforcing(spark: SparkSession): Boolean =
-    spark.conf.get("spark.graft.pragma.foreign_keys", "0") == "1"
-
   /** Child-side check: `rows` (the statement's would-land images for
     * the child table) must resolve every non-null FK tuple against the
     * POST-STATEMENT parent. `newSelf` carries the child table's own
@@ -334,13 +243,13 @@ object ForeignKeys {
   def assertChildRows(spark: SparkSession, table: String,
                       rows: DataFrame, newSelf: DataFrame,
                       touched: Option[Set[String]] = None): Unit = {
-    val fks0 = childFksOf(spark, table)
+    val fks0 = SessionKeys.table(spark, table).fks
     val fks = touched match {
       case Some(cols) =>
         fks0.filter(_.cols.exists(c => cols.contains(c.toLowerCase)))
       case None => fks0
     }
-    if (fks.isEmpty || !enforcing(spark)) return
+    if (fks.isEmpty || !Pragma.foreignKeys(spark)) return
     fks.foreach { fk =>
       val parentDf =
         if (fk.parent.equalsIgnoreCase(table)) newSelf
@@ -374,18 +283,16 @@ object ForeignKeys {
   /** Does any registered FK declare a cascade-style ON DELETE or ON
     * UPDATE action? — the [[Atomic]] snapshot gate: only executing
     * actions can make a trigger-less statement multi-write. */
-  def anyActionFks(spark: SparkSession): Boolean = {
-    val s = state(spark)
-    s.synchronized(s.fks.values.exists(_.exists(fk =>
-      isAction(fk.onDelete) || isAction(fk.onUpdate))))
-  }
+  def anyActionFks(spark: SparkSession): Boolean =
+    SessionKeys.tables(spark).values.exists(_.fks.exists(fk =>
+      isAction(fk.onDelete) || isAction(fk.onUpdate)))
 
   /** True when enforcement is on and any FK referencing `table`
     * declares an executing ON UPDATE action — gates building the
     * old/new row mapping at the parent-update call sites. */
   def anyUpdateActionsReferencing(spark: SparkSession,
                                   table: String): Boolean =
-    enforcing(spark) && referencing(spark, table).exists {
+    Pragma.foreignKeys(spark) && referencing(spark, table).exists {
       case (_, fk) => isAction(fk.onUpdate)
     }
 
@@ -405,7 +312,7 @@ object ForeignKeys {
     * cycles back into a rebind-pending table declines visibly. */
   def applyParentDelete(spark: SparkSession, table: String,
                         oldDf: DataFrame, newDf: DataFrame): DataFrame = {
-    if (!enforcing(spark)) return newDf
+    if (!Pragma.foreignKeys(spark)) return newDf
     val refs = referencing(spark, table)
     if (refs.isEmpty) return newDf
     var current = newDf
@@ -438,10 +345,10 @@ object ForeignKeys {
       case (_, fk) => fk.onDelete == "SET DEFAULT"
     }
     recheck.foreach { case (childName, fk) =>
-      val childState =
+      val childNow =
         if (childName.equalsIgnoreCase(table)) Some(current)
         else tableOpt(spark, childName)
-      childState.foreach { childDf =>
+      childNow.foreach { childDf =>
         val pk = parentKey(spark, childName, fk, oldDf)
         if (removedReferenced(oldDf, current, pk, childDf,
             childKey(fk, childDf, childName, table))) fail()
@@ -590,7 +497,7 @@ object ForeignKeys {
           "left_semi"), "would re-point")
         val marked = merged.join(removed, child.matches(removed), "left_outer")
         val hit = child.matched(removed)
-        val dflts = SessionKeys.defaultsFor(spark, table)
+        val dflts = SessionKeys.table(spark, table).defaults
         val out = marked.select(merged.columns.map { c =>
           if (fk.cols.exists(_.equalsIgnoreCase(c))) {
             val repl =
@@ -654,7 +561,7 @@ object ForeignKeys {
           Mutate.runUpdate(spark, SqlDml.Update(childName,
             fk.cols.map(c => c -> "NULL"), Some(hitWhere), None, ""))
         case "SET DEFAULT" =>
-          val dflts = SessionKeys.defaultsFor(spark, childName)
+          val dflts = SessionKeys.table(spark, childName).defaults
           Mutate.runUpdate(spark, SqlDml.Update(childName,
             fk.cols.map(c =>
               c -> dflts.get(c.toLowerCase).map(_._2).getOrElse("NULL")),
@@ -686,7 +593,7 @@ object ForeignKeys {
   def applyParentUpdate(spark: SparkSession, table: String,
                         mapping: DataFrame): Unit = {
     import org.apache.spark.sql.functions.col
-    if (!enforcing(spark)) return
+    if (!Pragma.foreignKeys(spark)) return
     val refs = referencing(spark, table).filter {
       case (_, fk) => isAction(fk.onUpdate)
     }
@@ -754,7 +661,7 @@ object ForeignKeys {
                          displaced0: DataFrame,
                          merged: DataFrame,
                          written: DataFrame): DataFrame = {
-    if (!enforcing(spark)) return merged
+    if (!Pragma.foreignKeys(spark)) return merged
     val refs = referencing(spark, table).filter {
       case (_, fk) => isAction(fk.onDelete)
     }
@@ -811,7 +718,7 @@ object ForeignKeys {
   private def parentKeyUnchanged(spark: SparkSession, fk: SqlDml.Fk,
                                  changed: Set[String]): Boolean =
     (if (fk.parentCols.nonEmpty) Some(fk.parentCols)
-     else SessionKeys.declaredPk(spark, fk.parent))
+     else SessionKeys.table(spark, fk.parent).pk)
       .exists(_.forall(c => !changed(c.toLowerCase)))
 
   /** Parent-side check before `table` rebinds from `oldDf` to `newDf`:
@@ -828,7 +735,7 @@ object ForeignKeys {
                              actionsApplied: Boolean = false,
                              assigned: Option[Iterable[String]] = None)
       : Unit = {
-    if (!enforcing(spark)) return
+    if (!Pragma.foreignKeys(spark)) return
     // an UPDATE re-checks only the FKs whose parent key it can change
     // (SQLite's fkParentIsModified); once actions ran, or for a
     // delete, every reference is checked
@@ -839,7 +746,7 @@ object ForeignKeys {
     }
     if (refs.isEmpty) return
     refs.foreach { case (childName, fk) =>
-      val childState =
+      val childNow =
         // after actions ran, a self-FK's child side is the CURRENT
         // (re-pointed) state, not the pre-cascade merged frame —
         // checking the stale frame would flag the very danglers the
@@ -848,7 +755,7 @@ object ForeignKeys {
           tableOpt(spark, childName)
         else if (childName.equalsIgnoreCase(table)) Some(newDf)
         else tableOpt(spark, childName)
-      childState.foreach { childDf =>
+      childNow.foreach { childDf =>
         val pk = parentKey(spark, childName, fk, oldDf)
         if (removedReferenced(oldDf, newDf, pk, childDf,
             childKey(fk, childDf, childName, table))) {

@@ -38,7 +38,7 @@ object Mutate {
     * error text — every UPDATE route checks before rewriting. */
   private def guardGeneratedAssigns(spark: SparkSession, table: String,
                                     assignCols: Seq[String]): Unit = {
-    val gens = SessionKeys.generatedFor(spark, table).map(_._1).toSet
+    val gens = SessionKeys.table(spark, table).generated.map(_._1).toSet
     assignCols.find(c => gens(c.toLowerCase)).foreach(c =>
       throw new IllegalArgumentException(
         s"cannot UPDATE generated column \"$c\""))
@@ -53,7 +53,7 @@ object Mutate {
                             e: String,
                             f: org.apache.spark.sql.types.StructField)
       : String =
-    SessionKeys.strictFor(spark, u.table).get(f.name.toLowerCase) match {
+    SessionKeys.table(spark, u.table).strict.get(f.name.toLowerCase) match {
       case Some(decl) =>
         val src = spark.sql(
           s"${u.withPrefix} SELECT ($e) AS v FROM ${q(u.table)} LIMIT 0"
@@ -161,7 +161,7 @@ object Mutate {
     // the merged computation); the FROM/LIMIT routes and the
     // trigger/FK interleavings SQLite reaches per-row decline named.
     val declaredKeysExist =
-      SessionKeys.declaredPk(spark, u.table).isDefined ||
+      SessionKeys.table(spark, u.table).pk.isDefined ||
         SessionKeys.uniqueColIndexes(spark, u.table).nonEmpty ||
         SessionKeys.uniqueExprIndexes(spark, u.table).nonEmpty
     u.orAction.foreach {
@@ -236,7 +236,7 @@ object Mutate {
               "displaced rows' DELETE triggers in SQLite; this engine " +
               "cannot interleave them set-based — run with " +
               "recursive_triggers = 0")
-        if (declaredKeysExist && ForeignKeys.enforcing(spark) &&
+        if (declaredKeysExist && Pragma.foreignKeys(spark) &&
             ForeignKeys.referencing(spark, u.table).nonEmpty)
           throw new UnsupportedOperationException(
             "UPDATE OR REPLACE on a parent table referenced by foreign " +
@@ -259,9 +259,9 @@ object Mutate {
     val assigns =
       if (!u.orAction.contains("REPLACE")) assigns0
       else {
-        val nn = SessionKeys.notNullsFor(spark, u.table)
+        val nn = SessionKeys.table(spark, u.table).notNulls
           .map(_.toLowerCase).toSet
-        val dflts = SessionKeys.defaultsFor(spark, u.table)
+        val dflts = SessionKeys.table(spark, u.table).defaults
         assigns0.map { case (c, e) =>
           c -> (dflts.get(c) match {
             case Some((_, execSql)) if nn(c) =>
@@ -441,11 +441,11 @@ object Mutate {
       // PRAGMA foreign_keys=1: assigned FK columns must still resolve
       // (new images of the WHERE-true rows), and re-keying a parent
       // must not orphan children — SQLite's end-of-statement outcome
-      if (ForeignKeys.enforcing(spark)) {
+      if (Pragma.foreignKeys(spark)) {
         // the new-image plan is only built when an FK column is
         // actually assigned (assertChildRows would skip anyway, but
         // its argument is strict)
-        if (ForeignKeys.childFksOf(spark, u.table)
+        if (SessionKeys.table(spark, u.table).fks
             .exists(_.cols.exists(c => assigns.contains(c.toLowerCase))))
           ForeignKeys.assertChildRows(spark, u.table, updatedNew, merged,
             Some(assigns.keySet))
@@ -567,8 +567,8 @@ object Mutate {
       val ret = u.returning.map(Publish.returning(appliedNew, u.withPrefix, _))
       // changes() counts only the applied rows (measured)
       SessionChanges.record(spark, () => appliedPairs.count())
-      if (ForeignKeys.enforcing(spark)) {
-        if (ForeignKeys.childFksOf(spark, u.table)
+      if (Pragma.foreignKeys(spark)) {
+        if (SessionKeys.table(spark, u.table).fks
             .exists(_.cols.exists(c => assigns.contains(c.toLowerCase))))
           ForeignKeys.assertChildRows(spark, u.table, appliedNew, merged,
             Some(assigns.keySet))
@@ -655,7 +655,7 @@ object Mutate {
       // STRICT tables: each assignment routes through the checked cast
       // (SQLite 3.37 type rules); the expression's static type resolves
       // against the JOINED frame — target alias plus the FROM sources
-      val strictTypes = SessionKeys.strictFor(spark, u.table)
+      val strictTypes = SessionKeys.table(spark, u.table).strict
       def castOf(e: String, f: org.apache.spark.sql.types.StructField)
           : String =
         strictTypes.get(f.name.toLowerCase) match {
@@ -718,7 +718,7 @@ object Mutate {
         slice.foreach(sl => Triggers.fireBefore(spark, u.table, "update",
           setColNames, sl))
         // FK enforcement over the matched picks (see runUpdateStmt)
-        if (ForeignKeys.enforcing(spark)) {
+        if (Pragma.foreignKeys(spark)) {
           ForeignKeys.assertChildRows(spark, u.table,
             matched.drop("__rid"), merged, Some(assigns.keySet))
           ForeignKeys.assertParentTransition(spark, u.table, base, merged,
@@ -919,7 +919,7 @@ object Mutate {
           val merged = untouched.unionByName(updated)
           val ret = u.returning.map(
             Publish.returning(updated, u.withPrefix, _))
-          if (ForeignKeys.enforcing(spark)) {
+          if (Pragma.foreignKeys(spark)) {
             ForeignKeys.assertChildRows(spark, u.table, updated, merged,
               Some(assigns.keySet))
             ForeignKeys.assertParentTransition(spark, u.table, base, merged,

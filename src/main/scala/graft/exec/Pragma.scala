@@ -62,19 +62,20 @@ object Pragma {
     // SQLite's table_info never lists rowid; generated columns are
     // hidden from table_info too (measured: cids renumber densely
     // over the ordinary columns — table_xinfo is the full listing)
-    val gens = SessionKeys.generatedFor(spark, table).map(_._1).toSet
+    val decl = SessionKeys.table(spark, table)
+    val gens = decl.generated.map(_._1).toSet
     val schema = org.apache.spark.sql.types.StructType(
       spark.table(table).schema.fields.filterNot(f =>
         (f.name.equalsIgnoreCase("rowid") && Rowid.isEnabled(spark, table)) ||
           gens(f.name.toLowerCase)))
-    val pk = SessionKeys.declaredPk(spark, table).getOrElse(Nil)
+    val pk = decl.pk.getOrElse(Nil)
       .map(_.toLowerCase).zipWithIndex.toMap
     // dflt_value reports the DEFAULT text as written (SQLite's shape);
     // ingested tables declare none. notnull reports declared NOT NULL
     // columns (a WITHOUT ROWID PK registers as implicitly NOT NULL —
     // SQLite reports 1 for those too, measured)
-    val dflt = SessionKeys.defaultsFor(spark, table)
-    val nn = SessionKeys.notNullsFor(spark, table).map(_.toLowerCase).toSet
+    val dflt = decl.defaults
+    val nn = decl.notNulls.map(_.toLowerCase).toSet
     val rows = schema.fields.zipWithIndex.map { case (f, i) =>
       Row(i, f.name, graft.ingest.Ddl.sqlType(f.dataType),
         if (!f.nullable || nn(f.name.toLowerCase)) 1 else 0,
@@ -91,15 +92,16 @@ object Pragma {
     * generated, 3 STORED generated; cids ordinal over ALL columns
     * (measured 3.40.1). */
   def tableXinfo(spark: SparkSession, table: String): DataFrame = {
-    val gens = SessionKeys.generatedFor(spark, table)
+    val decl = SessionKeys.table(spark, table)
+    val gens = decl.generated
       .map { case (c, _, _, st) => c -> (if (st) 3 else 2) }.toMap
     val schema = org.apache.spark.sql.types.StructType(
       spark.table(table).schema.fields.filterNot(f =>
         f.name.equalsIgnoreCase("rowid") && Rowid.isEnabled(spark, table)))
-    val pk = SessionKeys.declaredPk(spark, table).getOrElse(Nil)
+    val pk = decl.pk.getOrElse(Nil)
       .map(_.toLowerCase).zipWithIndex.toMap
-    val dflt = SessionKeys.defaultsFor(spark, table)
-    val nn = SessionKeys.notNullsFor(spark, table).map(_.toLowerCase).toSet
+    val dflt = decl.defaults
+    val nn = decl.notNulls.map(_.toLowerCase).toSet
     val rows = schema.fields.zipWithIndex.map { case (f, i) =>
       Row(i, f.name, graft.ingest.Ddl.sqlType(f.dataType),
         if (!f.nullable || nn(f.name.toLowerCase)) 1 else 0,
@@ -139,10 +141,10 @@ object Pragma {
       : Seq[(Int, Int, String)] =
     SessionKeys.indexByName(spark, index) match {
       case None => Nil // SQLite: unknown index = empty result
-      case Some((table, cols, _)) =>
-        val colIdx = spark.table(Ddl.quote(table))
+      case Some(ix) =>
+        val colIdx = spark.table(Ddl.quote(ix.table))
           .schema.fieldNames.map(_.toLowerCase).zipWithIndex.toMap
-        cols.zipWithIndex.map { case (c, i) =>
+        ix.cols.zipWithIndex.map { case (c, i) =>
           (i, colIdx.getOrElse(c.toLowerCase, -1), c)
         }
     }
@@ -172,11 +174,10 @@ object Pragma {
     * predicate. */
   private def indexList(spark: SparkSession, table: String): DataFrame = {
     spark.table(Ddl.quote(table)) // targeted missing-table error
-    val partials = SessionKeys.partialIndexNames(spark, table)
     val rows = SessionKeys.indexesFor(spark, table).zipWithIndex.map {
-      case ((name, _, unique, origin), i) =>
-        Row(i, name, if (unique) 1 else 0, origin,
-          if (partials(name.toLowerCase)) 1 else 0)
+      case ((name, ix), i) =>
+        Row(i, name, if (ix.unique) 1 else 0, ix.origin,
+          if (ix.uwhere.isDefined) 1 else 0)
     }
     spark.createDataFrame(
       new java.util.ArrayList[Row](java.util.Arrays.asList(rows: _*)),
@@ -198,9 +199,9 @@ object Pragma {
     // columns); the internal sqlite_sequence table lists once any
     // AUTOINCREMENT table was created, as SQLite's does
     val rows = sessionTables(spark).map { case (name, schema) =>
+      val decl = SessionKeys.table(spark, name)
       Row("main", name, "table", schema.length,
-        if (SessionKeys.isWithoutRowid(spark, name)) 1 else 0,
-        if (SessionKeys.strictFor(spark, name).nonEmpty) 1 else 0)
+        if (decl.withoutRowid) 1 else 0, if (decl.strict.nonEmpty) 1 else 0)
     } ++ (if (SessionKeys.sequenceTableExists(spark))
             Seq(Row("main", "sqlite_sequence", "table", 2, 0, 0))
           else Nil)
@@ -246,13 +247,12 @@ object Pragma {
     // session-declared indexes list as SQLite's would (type 'index',
     // tbl_name = the indexed table, sql = the synthesized statement —
     // NULL for UNIQUE-constraint autoindexes, exactly SQLite's rows)
-    val indexRows = SessionKeys.allIndexes(spark).map {
-      case (name, table, cols, unique, origin) =>
-        val verb = if (unique) "CREATE UNIQUE INDEX" else "CREATE INDEX"
-        val sql =
-          if (origin != "c") null
-          else s"$verb $name ON $table (${cols.mkString(", ")})"
-        Row("index", name, table, 0, sql)
+    val indexRows = SessionKeys.allIndexes(spark).map { case (name, ix) =>
+      val verb = if (ix.unique) "CREATE UNIQUE INDEX" else "CREATE INDEX"
+      val sql =
+        if (ix.origin != "c") null
+        else s"$verb $name ON ${ix.table} (${ix.cols.mkString(", ")})"
+      Row("index", name, ix.table, 0, sql)
     }
     // registered triggers list as SQLite does: type 'trigger',
     // tbl_name = the trigger's table, sql = the statement as written
@@ -299,15 +299,15 @@ object Pragma {
       // session-declared DEFAULTs and PRIMARY KEY render into the
       // synthesized DDL (SQLite's sqlite_master.sql carries the
       // original constraint text; `PRAGMA table_info` agrees)
-      val dflt = SessionKeys.defaultsFor(spark, name)
-      val pk = SessionKeys.declaredPk(spark, name).getOrElse(Nil)
-      val fks = ForeignKeys.childFksOf(spark, name)
-      val gens = SessionKeys.generatedFor(spark, name)
+      val decl = SessionKeys.table(spark, name)
+      val dflt = decl.defaults
+      val pk = decl.pk.getOrElse(Nil)
+      val fks = decl.fks
+      val gens = decl.generated
         .map { case (c, raw, _, st) => c -> (raw, st) }.toMap
-      val nn = SessionKeys.notNullsFor(spark, name)
-        .map(_.toLowerCase).toSet
-      val checks = SessionKeys.checksFor(spark, name)
-      val colls = SessionKeys.collatesFor(spark, name)
+      val nn = decl.notNulls.map(_.toLowerCase).toSet
+      val checks = decl.checks
+      val colls = decl.collates
       val base = graft.ingest.Ddl.createTable(name, schema).trim
       val sql =
         if (dflt.isEmpty && pk.isEmpty && fks.isEmpty && gens.isEmpty &&
@@ -344,10 +344,8 @@ object Pragma {
       // STRICT / WITHOUT ROWID table options render into the
       // synthesized text, as SQLite's original-statement sql would
       val opts =
-        (if (SessionKeys.strictFor(spark, name).nonEmpty) Seq("STRICT")
-         else Nil) ++
-          (if (SessionKeys.isWithoutRowid(spark, name)) Seq("WITHOUT ROWID")
-           else Nil)
+        (if (decl.strict.nonEmpty) Seq("STRICT") else Nil) ++
+          (if (decl.withoutRowid) Seq("WITHOUT ROWID") else Nil)
       Row("table", name, name, 0,
         if (opts.isEmpty) sql else s"$sql ${opts.mkString(", ")}")
     }
@@ -442,6 +440,12 @@ object Pragma {
     * skips them. */
   def recursiveTriggers(spark: SparkSession): Boolean =
     tracked(spark, "recursive_triggers", "0") == "1"
+
+  /** `PRAGMA foreign_keys = 1` — consumed by [[ForeignKeys]]: ON
+    * enforces the declared FOREIGN KEY constraints and runs their
+    * actions; OFF (the default) only records them. */
+  def foreignKeys(spark: SparkSession): Boolean =
+    tracked(spark, "foreign_keys", "0") == "1"
 
   /** SQLite's boolean-pragma parse (sqlite3GetBoolean): any nonzero
     * integer → 1 (`foreign_keys = 2` is ON, measured), yes/true/on →

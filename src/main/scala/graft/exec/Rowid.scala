@@ -79,7 +79,7 @@ object Rowid {
     // a WITHOUT ROWID table has no rowid surface to materialize —
     // a reference then fails analysis visibly (SQLite: "no such
     // column: rowid"; here Spark's unresolved-column error)
-    if (SessionKeys.isWithoutRowid(spark, table)) return
+    if (SessionKeys.table(spark, table).withoutRowid) return
     if (isEnabled(spark, table)) return
     val df =
       try spark.table(Ddl.quote(table))
@@ -101,7 +101,7 @@ object Rowid {
     * a rowid table (SQLite's alias rule; `INT` does not alias). */
   private def integerPkAlias(spark: SparkSession, table: String,
                              df: DataFrame): Option[String] =
-    SessionKeys.rowidAliasOf(spark, table)
+    SessionKeys.table(spark, table).rowidAlias
       .flatMap(c => df.columns.find(_.equalsIgnoreCase(c)))
 
   /** The aliased INTEGER PRIMARY KEY column for an enabled table, if

@@ -97,7 +97,7 @@ object Upsert {
     // Deliberately NOT a schema-type heuristic: `INT PRIMARY KEY`
     // stores a NULL key, and a WITHOUT ROWID key never auto-assigns
     // (raises NOT NULL) — both measured SQLite behaviors.
-    val intPk: Option[String] = SessionKeys.rowidAliasOf(spark, stmt.table)
+    val intPk: Option[String] = SessionKeys.table(spark, stmt.table).rowidAlias
       .flatMap(c => base.columns.find(_.equalsIgnoreCase(c)))
     // DEFAULT VALUES: the source binds no target columns — every
     // column falls to its registered DEFAULT / NULL below, one row
@@ -125,7 +125,7 @@ object Upsert {
     // AUTOINCREMENT tables, the sqlite_sequence high-water mark
     def seqAwareStart(maxExisting: Long): Long =
       math.max(maxExisting,
-        if (SessionKeys.isAutoincrement(spark, stmt.table))
+        if (SessionKeys.table(spark, stmt.table).autoincrement)
           SessionKeys.seqOf(spark, stmt.table)
         else 0L) + 1L
     // SQLite numbers each NULL INTEGER-PRIMARY-KEY row one past the
@@ -221,12 +221,12 @@ object Upsert {
     // survive — OR REPLACE deletes and re-inserts), every column cast
     // to the lake schema's type
     val present = named.columns.map(_.toLowerCase).toSet
-    val dflts = SessionKeys.defaultsFor(spark, stmt.table)
+    val dflts = SessionKeys.table(spark, stmt.table).defaults
     // STRICT tables route every incoming value through the checked
     // cast (SQLite 3.37 type rules — exec.Strict); the storage class
     // is the SOURCE column's static type, default exprs resolve their
     // type once against an empty select
-    val strictTypes = SessionKeys.strictFor(spark, stmt.table)
+    val strictTypes = SessionKeys.table(spark, stmt.table).strict
     def strictOr(v: Column, src: => org.apache.spark.sql.types.DataType,
                  f: org.apache.spark.sql.types.StructField): Column =
       strictTypes.get(f.name.toLowerCase) match {
@@ -353,7 +353,7 @@ object Upsert {
         // matched index's key then drives the resolution below
         val targetKey: Option[Constraints.UniqueKey] =
           if (c.keyExprs.nonEmpty || c.targetWhere.isDefined)
-            Some(matchConflictTarget(spark, stmt.table, c))
+            Some(matchConflictTarget(spark, stmt.table, c, None))
           else None
         // the upsert clause (or OR IGNORE's implied DO NOTHING):
         // resolve the conflict key against the lake schema; no target
@@ -514,7 +514,7 @@ object Upsert {
         // actions settle IN-PLAN over the merged image and hand back
         // the adjusted table for the write below.
         val mergedFk =
-          if (effReplace && ForeignKeys.enforcing(spark))
+          if (effReplace && Pragma.foreignKeys(spark))
             ForeignKeys.applyParentReplace(spark, stmt.table,
               replacedDisplaced.getOrElse(
                 base.join(admitted.select(defaultKey.map(col): _*).distinct(),
@@ -551,7 +551,7 @@ object Upsert {
       // discard still advances the sequence (measured: discarded row
       // leaves seq 2, the next insert takes 3). One narrow agg over
       // the attempted slice, only for declared AUTOINCREMENT tables.
-      if (SessionKeys.isAutoincrement(spark, stmt.table))
+      if (SessionKeys.table(spark, stmt.table).autoincrement)
         intPk.foreach { pk =>
           val r = resolved.agg(org.apache.spark.sql.functions
             .max(col(pk).cast(org.apache.spark.sql.types.LongType))).first()
@@ -571,7 +571,8 @@ object Upsert {
     * compare after the same dialect translation the DDL registration
     * applied, whitespace- and case-insensitively). */
   private def matchConflictTarget(spark: SparkSession, table: String,
-                                  c: graft.text2sql.SqlDml.OnConflict)
+                                  c: graft.text2sql.SqlDml.OnConflict,
+                                  ordinal: Option[Int])
       : Constraints.UniqueKey = {
     def norm(raw: String): String =
       Ddl.generatedExecSql(raw).toLowerCase.filterNot(_.isWhitespace)
@@ -595,16 +596,13 @@ object Upsert {
             SessionKeys.riderCollations(spark, name)).copy(where = w)
         }
       }
-    hit.getOrElse(throw new IllegalArgumentException(noMatchError(c)))
+    hit.getOrElse(throw new IllegalArgumentException(noMatchError(ordinal)))
   }
 
   /** SQLite 3.40.1's exact no-match text; in a CHAIN the clause gets
-    * its ordinal prefix (`1st`/`2nd`/… — measured). The ordinal is
-    * stamped onto the clause by [[runChain]] before matching. */
-  private val clauseOrdinal =
-    new ThreadLocal[Option[Int]] { override def initialValue = None }
-  private def noMatchError(c: graft.text2sql.SqlDml.OnConflict): String = {
-    val ord = clauseOrdinal.get().map { i =>
+    * its 1-based `ordinal` prefix (`1st`/`2nd`/… — measured). */
+  private def noMatchError(ordinal: Option[Int]): String = {
+    val ord = ordinal.map { i =>
       val suffix = i % 10 match {
         case 1 if i % 100 != 11 => "st"
         case 2 if i % 100 != 12 => "nd"
@@ -682,7 +680,7 @@ object Upsert {
         hit && truthy
       case None    => hit
     }
-    val strictTypes = SessionKeys.strictFor(base.sparkSession, table)
+    val strictTypes = SessionKeys.table(base.sparkSession, table).strict
     def assignCast(ex: String, f: org.apache.spark.sql.types.StructField)
         : Column =
       strictTypes.get(f.name.toLowerCase) match {
@@ -787,9 +785,7 @@ object Upsert {
         else {
           // SQLite prefixes chain no-match errors with the clause's
           // ordinal (`1st ON CONFLICT clause does not match …`)
-          clauseOrdinal.set(Some(i + 1))
-          try Seq(matchChainTarget(spark, table, c))
-          finally clauseOrdinal.set(None)
+          Seq(matchChainTarget(spark, table, c, i + 1))
         }
       }
     val covered: Seq[Constraints.UniqueKey] =
@@ -881,16 +877,17 @@ object Upsert {
     * constraint-less ingested tables does not extend to chains —
     * SQLite itself rejects any target that matches no index.) */
   private def matchChainTarget(spark: SparkSession, table: String,
-                               c: graft.text2sql.SqlDml.OnConflict)
+                               c: graft.text2sql.SqlDml.OnConflict,
+                               ordinal: Int)
       : Constraints.UniqueKey = {
     if (c.keyExprs.nonEmpty || c.targetWhere.isDefined)
-      matchConflictTarget(spark, table, c)
+      matchConflictTarget(spark, table, c, Some(ordinal))
     else {
       val clauseCols = c.keyCols.map(_.toLowerCase).sorted
-      val pkHit = SessionKeys.declaredPk(spark, table)
+      val pkHit = SessionKeys.table(spark, table).pk
         .filter(_.map(_.toLowerCase).sorted == clauseCols)
         .map(ks => Constraints.collatedKey(spark, table, ks))
-      pkHit.getOrElse(matchConflictTarget(spark, table, c))
+      pkHit.getOrElse(matchConflictTarget(spark, table, c, Some(ordinal)))
     }
   }
 
