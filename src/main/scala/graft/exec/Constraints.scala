@@ -55,11 +55,10 @@ object Constraints {
     val nn = SessionKeys.table(spark, table).notNulls.map { c =>
       col(Ddl.quote(c)).isNull -> s"NOT NULL constraint failed: $table.$c"
     }
-    val cks = SessionKeys.table(spark, table).checks.map {
-      case (name, raw, execSql) =>
-        val label = if (name.nonEmpty) name else raw
-        (!coalesce(expr(execSql).cast(BooleanType), lit(true))) ->
-          s"CHECK constraint failed: $label"
+    val cks = SessionKeys.table(spark, table).checks.map { k =>
+      val label = if (k.name.nonEmpty) k.name else k.raw
+      (!coalesce(expr(k.exec).cast(BooleanType), lit(true))) ->
+        s"CHECK constraint failed: $label"
     }
     nn ++ cks
   }
@@ -105,8 +104,8 @@ object Constraints {
       assigns.get(c.toLowerCase).map(e => s"($e)").getOrElse(Ddl.quote(c))
     val nn = SessionKeys.table(spark, table).notNulls
       .map(c => s"(${newExpr(c)} IS NOT NULL)")
-    val cks = SessionKeys.table(spark, table).checks.map { case (_, _, ex) =>
-      s"(coalesce(CAST((${substituteCols(ex, assigns)}) AS BOOLEAN), true))"
+    val cks = SessionKeys.table(spark, table).checks.map { k =>
+      s"(coalesce(CAST((${substituteCols(k.exec, assigns)}) AS BOOLEAN), true))"
     }
     (nn ++ cks).mkString(" AND ")
   }

@@ -218,20 +218,25 @@ object Ddl {
     * inside a string literal refuses conservatively — a visible error
     * beats a silently broken schema. SQLite rewrites these texts on
     * RENAME COLUMN and fails DROP COLUMN on them; this engine stores
-    * the texts and declines the rename. */
+    * the texts and declines the rename. When `dropping`, the column's
+    * own CHECKs do not count: they go with it. When renaming, a plain
+    * (non-UNIQUE) index's expression items do not count: they never
+    * change an answer, and the rename rewrites them
+    * ([[SessionKeys.renameColumn]]). */
   private def textReading(spark: SparkSession, table: String,
-                          col: String): Option[Reader] = {
+                          col: String, dropping: Boolean): Option[Reader] = {
     val d = SessionKeys.table(spark, table)
     d.generated.collectFirst {
       case (g, raw, _, _) if !g.equalsIgnoreCase(col) && refHits(raw, col) =>
         Reader(s"generated column $g", s"table $table",
           "DROP that column first")
     }.orElse(d.checks.collectFirst {
-      case (nm, raw, _) if refHits(raw, col) =>
-        Reader(s"CHECK constraint ${if (nm.nonEmpty) nm else s"($raw)"}",
+      case k if !(dropping && k.declaredBy(col)) && refHits(k.raw, col) =>
+        Reader(s"CHECK constraint ${if (k.name.nonEmpty) k.name else s"(${k.raw})"}",
           s"table $table", "re-create the table to rename it")
     }).orElse(SessionKeys.indexesFor(spark, table).collectFirst {
-      case (ix, i) if (i.uexprs ++ i.uwhere).exists(refHits(_, col)) =>
+      case (ix, i) if ((if (i.unique || dropping) i.uexprs else Nil) ++ i.uwhere)
+          .exists(refHits(_, col)) =>
         Reader(s"index $ix", s"index $ix", "DROP INDEX it first")
     })
   }
@@ -326,15 +331,15 @@ object Ddl {
     }
     // NOT NULL / CHECK constraints enforce at write time
     // (exec.Constraints — SQLite's error texts)
-    val checks = stmt.checks.map { case (nm, raw) =>
+    val checks = stmt.checks.map { case (nm, raw, column) =>
       // SQLite's own parse-time rule, its exact error text
       if (containsSelect(raw))
         throw new IllegalArgumentException(
           "subqueries prohibited in CHECK constraints")
-      (nm, raw, generatedExecSql(raw))
+      SessionKeys.Check(nm, raw, generatedExecSql(raw), column)
     }
-    try checks.foreach { case (_, _, ex) =>
-      named.filter(org.apache.spark.sql.functions.expr(ex))
+    try checks.foreach { k =>
+      named.filter(org.apache.spark.sql.functions.expr(k.exec))
         .queryExecution.analyzed
     } catch {
       case e: Exception => throw new IllegalArgumentException(
@@ -420,10 +425,11 @@ object Ddl {
         throw new IllegalArgumentException(
           s"$verb ${stmt.name}: no such column(s) ${unknown.mkString(", ")}")
     }
-    // an expression-keyed UNIQUE index: validate + translate each item
-    // NOW (SQLite checks at CREATE), then register the executable
-    // texts — uniqueness enforces over them and the REPLACE/IGNORE
-    // machinery displaces/skips on them (exec.Constraints)
+    // an expression-keyed index: validate + translate each item NOW
+    // (SQLite checks at CREATE), then register the executable texts —
+    // DROP COLUMN of a column they read fails, and for a UNIQUE index
+    // uniqueness enforces over them and the REPLACE/IGNORE machinery
+    // displaces/skips on them (exec.Constraints)
     val uwhere = stmt.where.map { raw =>
       if (containsSelect(raw))
         throw new IllegalArgumentException(
@@ -532,7 +538,7 @@ object Ddl {
         s"ALTER TABLE ${stmt.table}: duplicate column name ${stmt.newCol}")
     // SQLite rewrites the expression texts reading the column; this
     // engine declines visibly rather than regex-rewrite them
-    textReading(spark, stmt.table, stmt.oldCol).foreach(r =>
+    textReading(spark, stmt.table, stmt.oldCol, dropping = false).foreach(r =>
       throw new UnsupportedOperationException(
         s"ALTER TABLE ${stmt.table} RENAME COLUMN ${stmt.oldCol}: " +
           s"referenced by ${r.what}; ${r.remedy}"))
@@ -634,7 +640,7 @@ object Ddl {
           case _: Exception => () // references other columns: skip
         }
       }
-      ("", raw, ex)
+      SessionKeys.Check("", raw, ex, Some(stmt.col))
     }
     stmt.collate.foreach(assertKnownCollation)
     base.select(base.columns.map(c => col(quote(c))).toIndexedSeq :+
@@ -690,7 +696,7 @@ object Ddl {
     // SQLite refuses dropping a column a stored expression text reads
     // ("error in table t after drop column: no such column: c", or
     // "error in index i …" for an index expression or partial WHERE)
-    textReading(spark, stmt.table, stmt.col).foreach(r =>
+    textReading(spark, stmt.table, stmt.col, dropping = true).foreach(r =>
       throw new IllegalArgumentException(
         s"error in ${r.owner} after drop column: " +
           s"no such column: ${stmt.col}"))

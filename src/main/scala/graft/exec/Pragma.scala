@@ -325,9 +325,9 @@ object Pragma {
             s"\t`${f.name}` ${graft.ingest.Ddl.sqlType(f.dataType)}$d"
           } ++ (if (pk.isEmpty) Nil
                 else Seq(s"\tPRIMARY KEY (${pk.mkString(", ")})")) ++
-            checks.map { case (nm, raw, _) =>
-              if (nm.isEmpty) s"\tCHECK ($raw)"
-              else s"\tCONSTRAINT $nm CHECK ($raw)"
+            checks.map { k =>
+              if (k.name.isEmpty) s"\tCHECK (${k.raw})"
+              else s"\tCONSTRAINT ${k.name} CHECK (${k.raw})"
             } ++
             fks.map { fk =>
               val tgt = if (fk.parentCols.isEmpty) fk.parent

@@ -1,8 +1,9 @@
 package graft.exec
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, GraftColumnBridge, SparkSession}
 import graft.ingest.IngestResult
 import graft.llm.LlmCallback
+import graft.plans.StatementEvalMode
 import graft.text2sql.{SqlDml, SqlText, Text2Sql}
 
 /** Execution + result sampling (reference README.md:49, test.py:50-55):
@@ -95,29 +96,29 @@ object Runner {
     // session tables, normalize `_rowid_`/`oid`, and expand `*` so the
     // column stays hidden exactly where SQLite hides it ([[Rowid]])
     val prepared = Rowid.prepare(spark, prepared0)
-    // SQLite EVALUATION semantics for generated SQL: under Spark 4's
-    // default ANSI mode, `1/0` and an unparseable CAST are whole-query
-    // RUNTIME ERRORS — a model-emitted ratio with one zero denominator
-    // in one group would crash the entire answer, where SQLite (the
-    // dialect this SQL is declared in, and what the reference's engine
-    // executes) yields NULL for that row. Non-ANSI Spark matches the
-    // NULL behavior, so it is scoped to exactly this call: the eager
-    // analysis inside the try bakes each expression's eval mode, and
-    // the conf is restored before returning the (lazy) result.
-    // Caveat: the session conf is process-visible, so OTHER threads
-    // analyzing queries concurrently in the same session would also
-    // see non-ANSI during this window — the engine's Q&A usage is
-    // synchronous; cluster deployments wanting ANSI everywhere else
-    // simply keep their own conf (it is restored here either way).
     // RAISE() is legal only inside a trigger program (the one place
     // the engine rewrites it to its executable form) — SQLite's own
     // refusal text for every other statement
     if (!isTrigger && SqlText.keywordFollowedBy(prepared, "raise", '('))
       throw new IllegalArgumentException(
         "RAISE() may only be used within a trigger-program")
-    val savedAnsi = spark.conf.get("spark.sql.ansi.enabled", "true")
-    spark.conf.set("spark.sql.ansi.enabled", "false")
-    try SqlDml.detect(prepared) match {
+    // SQLite EVALUATION semantics for generated SQL: under Spark 4's
+    // default ANSI mode, `1/0` and an unparseable CAST are whole-query
+    // RUNTIME ERRORS — a model-emitted ratio with one zero denominator
+    // in one group would crash the entire answer, where SQLite (the
+    // dialect this SQL is declared in, and what the reference's engine
+    // executes) yields NULL for that row. Non-ANSI Spark matches the
+    // NULL behavior, so the statement is analyzed in that mode
+    // (plans.StatementEvalMode, a conf scope of this thread alone; other
+    // threads of the session keep ANSI): the eager analysis bakes each
+    // expression's eval mode, so the (lazy) result keeps it.
+    StatementEvalMode.legacy(spark)(statement(spark, prepared))
+  }
+
+  /** Routes one prepared statement: DML, session DDL and triggers to
+    * their executors, anything else to `spark.sql`. */
+  private def statement(spark: SparkSession, prepared: String): DataFrame =
+    SqlDml.detect(prepared) match {
       // `PRAGMA query_only = 1` (enforced, SQLite's own error text):
       // every detected statement class except the parse-decline is a
       // write — DML, session DDL, triggers. Unsupported keeps its own
@@ -172,17 +173,20 @@ object Runner {
         // injection pass must not see them (README divergence table)
         spark.sql(Collations.fold(spark, prepared,
           Pragma.caseSensitiveLike(spark)))
-    } finally spark.conf.set("spark.sql.ansi.enabled", savedAnsi)
-  }
+    }
 
-  /** ≤5 sample rows as JSON (reference test.py:51-55). */
+  /** ≤5 sample rows as JSON (reference test.py:51-55). A question
+    * whose inputs are small runs as one stage
+    * ([[GraftColumnBridge.planBySize]]); a larger one runs the plan Spark
+    * gives it. */
   def resultJson(df: DataFrame, n: Int = 5): Seq[String] = {
     // the limit is the plan's root, so Spark plans it as CollectLimit or
     // TakeOrderedAndProject; under toJSON's mapPartitions it would be a
     // generated Local/GlobalLimit whose counter is named from a JVM-wide
     // sequence, new Java source (and a compile) on every call
     val top = df.limit(n)
-    org.apache.spark.sql.GraftColumnBridge.jsonLines(top, top.collect())
+    val rows = GraftColumnBridge.planBySize(top).collect()
+    GraftColumnBridge.jsonLines(top, rows)
   }
 
   /** Full question → answer pipeline over prior ingestions. */

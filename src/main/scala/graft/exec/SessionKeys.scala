@@ -1,7 +1,7 @@
 package graft.exec
 
 import org.apache.spark.sql.SparkSession
-import graft.text2sql.SqlDml
+import graft.text2sql.{SqlDml, SqlText}
 
 /** The session's schema declarations, SQLite's `sqlite_master` for the
   * generated-DML path (reference pandasqlite.py:115, 245-247). Ingested
@@ -42,8 +42,7 @@ object SessionKeys {
     *                    names t.c verbatim); a WITHOUT ROWID PK lists its
     *                    columns too — SQLite makes that implicit NOT NULL
     *                    visible in table_info and its error
-    * @param checks      CHECK constraints in declaration order:
-    *                    (CONSTRAINT name or "", raw expr, executable expr)
+    * @param checks      CHECK constraints in declaration order
     * @param collates    column → declared collation (uppercased; only
     *                    non-BINARY entries)
     * @param autoincrement AUTOINCREMENT declared (its sequence lives in
@@ -58,7 +57,7 @@ object SessionKeys {
       generated: Seq[(String, String, String, Boolean)] = Nil,
       strict: Map[String, String] = Map.empty,
       notNulls: Seq[String] = Nil,
-      checks: Seq[(String, String, String)] = Nil,
+      checks: Seq[Check] = Nil,
       collates: Map[String, String] = Map.empty,
       withoutRowid: Boolean = false,
       autoincrement: Boolean = false,
@@ -78,23 +77,39 @@ object SessionKeys {
         },
         strict = key(strict),
         notNulls = renamed(notNulls, from, to),
+        checks = checks.map(k => k.copy(column = k.column.map(c =>
+          if (c.equalsIgnoreCase(from)) to else c))),
         collates = key(collates),
         fks = fks.map(fk => fk.copy(cols = renamed(fk.cols, from, to))))
     }
 
-    /** DROP COLUMN: the column's declarations go with it, an FK whose
-      * child columns include it too (measured SQLite 3.40.1). PK
-      * columns and columns an expression text reads are refused
-      * upstream ([[Ddl]]). */
+    /** DROP COLUMN: the column's declarations go with it, its own
+      * CHECKs whatever they read, and an FK whose child columns include
+      * it (measured SQLite 3.40.1). PK columns and columns another
+      * expression text reads are refused upstream ([[Ddl]]). */
     def dropColumn(col: String): TableDecl = {
       val c = col.toLowerCase
       copy(defaults = defaults - c,
         generated = generated.filterNot(_._1 == c),
         strict = strict - c,
         notNulls = notNulls.filterNot(_.equalsIgnoreCase(col)),
+        checks = checks.filterNot(_.declaredBy(col)),
         collates = collates - c,
         fks = fks.filterNot(_.cols.exists(_.equalsIgnoreCase(col))))
     }
+  }
+
+  /** One CHECK constraint.
+    *
+    * @param name   the CONSTRAINT name, or "" (SQLite's error then names
+    *               the expression)
+    * @param raw    the expression as written
+    * @param exec   its executable Spark-SQL text
+    * @param column the column whose definition declared it; None for a
+    *               table constraint */
+  final case class Check(name: String, raw: String, exec: String,
+                         column: Option[String]) {
+    def declaredBy(col: String): Boolean = column.exists(_.equalsIgnoreCase(col))
   }
 
   private val undeclared = TableDecl()
@@ -223,8 +238,8 @@ object SessionKeys {
   }
 
   /** ALTER TABLE RENAME COLUMN: the table's record, its index column
-    * lists and other tables' FK parent columns naming it follow
-    * (SQLite rewrites them). */
+    * lists and expression items, and other tables' FK parent columns
+    * naming it follow (SQLite rewrites them). */
   def renameColumn(spark: SparkSession, table: String, from: String,
                    to: String): Unit = locked(spark) { s =>
     val t = table.toLowerCase
@@ -236,7 +251,24 @@ object SessionKeys {
         else fk))
     }
     s.indexes.mapValuesInPlace((_, i) =>
-      if (i.table == t) i.copy(cols = renamed(i.cols, from, to)) else i)
+      if (i.table == t)
+        i.copy(cols = renamed(i.cols, from, to), uexprs = i.uexprs.map(renamedRefs(_, from, to)))
+      else i)
+  }
+
+  /** Expression text `ex` with each bare reference to column `from` (a
+    * word in code, not a function name) reading `to`. */
+  private def renamedRefs(ex: String, from: String, to: String): String = {
+    val bare = to.nonEmpty && !to.head.isDigit && to.forall(SqlText.isWordChar)
+    SqlText.rewrite(ex) { i =>
+      val end = i + from.length
+      val next = SqlText.skipWs(ex, end)
+      val hit = ex.regionMatches(true, i, from, 0, from.length) &&
+        (i == 0 || !SqlText.isWordChar(ex.charAt(i - 1))) &&
+        (end == ex.length || !SqlText.isWordChar(ex.charAt(end))) &&
+        (next == ex.length || ex.charAt(next) != '(')
+      if (hit) Some((if (bare) to else Ddl.quote(to), end)) else None
+    }
   }
 
   /** ALTER TABLE DROP COLUMN ([[TableDecl.dropColumn]]); FK parent

@@ -468,15 +468,17 @@ object SqliteFunctions {
 
 /** The only way the engine's pieces enter a session: SQLite-dialect
   * functions, the engine's native dedup/similarity expressions as SQL
-  * functions, the regex-prefix pushdown rule, the GroupTopK strategy,
-  * and literal parameterization of generated code
-  * ([[ParameterizeLiterals]]). `GraftSession.create` applies it; on a
-  * cluster, set `spark.sql.extensions=graft.plans.GraftExtensions`.
+  * functions, the statement evaluation mode ([[StatementEvalMode]]), the
+  * regex-prefix pushdown rule, the GroupTopK strategy, and literal
+  * parameterization of generated code ([[ParameterizeLiterals]]).
+  * `GraftSession.create` applies it; on a cluster, set
+  * `spark.sql.extensions=graft.plans.GraftExtensions`.
   */
 class GraftExtensions extends (SparkSessionExtensions => Unit) {
   override def apply(ext: SparkSessionExtensions): Unit = {
     SqliteFunctions.register(ext)
     GraftNativeFunctions.register(ext)
+    ext.injectPostHocResolutionRule(_ => StatementEvalMode)
     ext.injectOptimizerRule(_ => RegexPrefixPushdown)
     ext.injectPlannerStrategy(_ => GroupTopKStrategy)
     ext.injectColumnar(_ => ParamLiteralsColumnarRule)

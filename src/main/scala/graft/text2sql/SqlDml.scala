@@ -175,8 +175,10 @@ object SqlDml {
     * written — enforced at every write with SQLite's `NOT NULL
     * constraint failed: t.c` error); `checks` carries the CHECK
     * constraints in declaration order as (CONSTRAINT name or "" =
-    * unnamed, raw expr as written) — enforced at every write with
-    * SQLite's `CHECK constraint failed: <name or expr>` error;
+    * unnamed, raw expr as written, the declaring column — None for a
+    * table constraint — whose DROP COLUMN drops it) — enforced at every
+    * write with SQLite's `CHECK constraint failed: <name or expr>`
+    * error;
     * `collates` carries column-declared COLLATE riders (column,
     * collation uppercased) so bare comparisons / ORDER BY / GROUP BY
     * over the column fold the declared collation, SQLite's rule.
@@ -189,7 +191,7 @@ object SqlDml {
                                uniques: Seq[Seq[String]] = Nil,
                                fks: Seq[Fk] = Nil,
                                notNulls: Seq[String] = Nil,
-                               checks: Seq[(String, String)] = Nil,
+                               checks: Seq[(String, String, Option[String])] = Nil,
                                collates: Seq[(String, String)] = Nil,
                                // generated columns in declaration
                                // order: (name, raw expr, STORED?) —
@@ -233,11 +235,12 @@ object SqlDml {
     * index additionally declares the constraint SQLite resolves
     * `INSERT OR REPLACE` / bare `ON CONFLICT` against, so its column
     * set registers as the table's conflict key. An EXPRESSION-keyed
-    * UNIQUE index carries the raw item texts in `exprs` (cols empty):
-    * uniqueness enforces over the expressions and the REPLACE/IGNORE
-    * machinery displaces/skips on them; a targeted `ON CONFLICT
-    * (expr)` clause and DO UPDATE against an expression key still
-    * decline named. */
+    * index carries the raw item texts in `exprs` (cols empty): they are
+    * bind-checked at CREATE and guard the columns they read against
+    * DROP COLUMN; for a UNIQUE one, uniqueness enforces over the
+    * expressions and the REPLACE/IGNORE machinery displaces/skips on
+    * them; a targeted `ON CONFLICT (expr)` clause and DO UPDATE against
+    * an expression key still decline named. */
   final case class CreateIndex(name: String, table: String,
                                cols: Seq[String], unique: Boolean,
                                ifNotExists: Boolean,
@@ -972,7 +975,8 @@ object SqlDml {
     * registers it as an automatic unique index, not a PK); per-column
     * DEFAULT expressions verbatim; FKs; generated columns; the
     * AUTOINCREMENT rider; NOT NULL columns (declaration order); CHECK
-    * constraints as (name or "", raw expr) in declaration order; and
+    * constraints as (name or "", raw expr, declaring column or None) in
+    * declaration order; and
     * column-declared COLLATE riders. */
   private[graft] final case class ParsedDefs(
       cols: Seq[(String, String)], pk: Seq[String],
@@ -980,7 +984,7 @@ object SqlDml {
       defaults: Seq[(String, String)], fks: Seq[Fk],
       gens: Seq[(String, String, Boolean)],
       autoinc: Option[(String, String, Boolean)],
-      notNulls: Seq[String], checks: Seq[(String, String)],
+      notNulls: Seq[String], checks: Seq[(String, String, Option[String])],
       collates: Seq[(String, String)])
 
   /** Parse the inside of a column-def list: `col [type] [constraints],
@@ -994,7 +998,7 @@ object SqlDml {
     val fks = Seq.newBuilder[Fk]
     val gens = Seq.newBuilder[(String, String, Boolean)]
     val notNulls = Seq.newBuilder[String]
-    val checks = Seq.newBuilder[(String, String)]
+    val checks = Seq.newBuilder[(String, String, Option[String])]
     val collates = Seq.newBuilder[(String, String)]
     var autoinc: Option[(String, String, Boolean)] = None
     var pk = Seq.empty[String]
@@ -1063,7 +1067,7 @@ object SqlDml {
         if (close < 0) return Left(Unsupported("CREATE TABLE"))
         val ex = item.substring(p + 1, close).trim
         if (ex.isEmpty) return Left(Unsupported("CREATE TABLE"))
-        checks += ((cname, ex))
+        checks += ((cname, ex, None))
       } else {
         // a column definition: name [type tokens] [constraint tail]
         val (name, afterName) = parseIdent(item, 0)
@@ -1121,7 +1125,7 @@ object SqlDml {
             if (cnK < 0) ""
             else parseIdent(frag, skipWs(frag, cnK + 10))
               .map(_._1).getOrElse("")
-          checks += ((nm, ex))
+          checks += ((nm, ex, Some(name)))
         }
         // COLLATE <name> rider (registered so bare comparisons /
         // ORDER BY / GROUP BY over the column fold the collation)
@@ -1448,17 +1452,17 @@ object SqlDml {
         Some(w)
       }
     if (tail < sql.length && !partial) return Some(Unsupported(verb))
-    // an expression-keyed UNIQUE index keeps its raw item texts — the
-    // executor validates/translates them and the constraint enforces
-    // over the expressions (SQLite's `UNIQUE constraint failed:
-    // index 'name'` error)
+    // an expression-keyed index keeps its raw item texts — the executor
+    // bind-checks them at CREATE, DROP COLUMN of a column they read
+    // fails, and a UNIQUE one enforces over the expressions (SQLite's
+    // `UNIQUE constraint failed: index 'name'` error)
     val rawItems = splitTop(sql.substring(j + 1, close)).map(_.trim)
-    if (unique && exprKey && rawItems.exists(_.isEmpty))
-      return Some(Unsupported("CREATE UNIQUE INDEX on an expression"))
+    if (exprKey && rawItems.exists(_.isEmpty))
+      return Some(Unsupported(s"$verb on an expression"))
     Some(CreateIndex(name, table, if (exprKey) Nil else cols, unique,
       ifNotExists,
       if (exprKey) Nil else parsed.map(p => (p._2, p._3)),
-      if (unique && exprKey) rawItems else Nil,
+      if (exprKey) rawItems else Nil,
       whereExpr))
   }
 

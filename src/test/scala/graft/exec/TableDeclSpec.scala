@@ -150,6 +150,62 @@ class TableDeclSpec extends SparkSpec {
     assert(rowsOf("SELECT a, b, c FROM decl_pw ORDER BY c") ==
       Seq("(1,1,1)", "(1,0,2)"))
   }
+
+  // expected values: python3 sqlite3 3.40.1
+  test("a column's own CHECKs go with it on DROP COLUMN, whatever they " +
+      "read; a CHECK that reads a dropped column still refuses") {
+    sql("CREATE TABLE decl_ck(a INTEGER, c INTEGER CHECK (c > 0), " +
+      "e INTEGER CONSTRAINT e_a CHECK (a > -5), f INTEGER CHECK (f > a))")
+    assert(outcome("ALTER TABLE decl_ck DROP COLUMN c") == "ok")
+    assert(outcome("INSERT INTO decl_ck(a, e, f) VALUES (1, 1, 2)") == "ok")
+    assert(outcome("ALTER TABLE decl_ck DROP COLUMN a").contains(
+      "error in table decl_ck after drop column: no such column: a"))
+    assert(outcome("ALTER TABLE decl_ck DROP COLUMN e") == "ok")
+    assert(outcome("INSERT INTO decl_ck(a, f) VALUES (-9, 1)") == "ok")
+    assert(outcome("INSERT INTO decl_ck(a, f) VALUES (3, 1)")
+      .contains("CHECK constraint failed: f > a"))
+    assert(outcome("ALTER TABLE decl_ck ADD COLUMN g INTEGER CHECK (g > 0)") == "ok")
+    assert(outcome("ALTER TABLE decl_ck DROP COLUMN g") == "ok")
+    assert(outcome("INSERT INTO decl_ck(a, f) VALUES (4, 5)") == "ok")
+    assert(rowsOf("SELECT a, f FROM decl_ck ORDER BY a") ==
+      Seq("(-9,1)", "(1,2)", "(4,5)"))
+    assert(rowsOf("PRAGMA table_info(decl_ck)").map(untyped) ==
+      Seq("(0,a,INTEGER,0,null,0)", "(1,f,INTEGER,0,null,0)").map(untyped))
+  }
+
+  // expected values: python3 sqlite3 3.40.1
+  test("a plain expression index is bind-checked at CREATE and guards " +
+      "the columns it reads on DROP COLUMN") {
+    sql("CREATE TABLE decl_ix(a INTEGER, c INTEGER)")
+    assert(outcome("CREATE INDEX decl_ix_e ON decl_ix (a + nosuch)")
+      .contains("nosuch"))
+    assert(outcome("CREATE INDEX decl_ix_e ON decl_ix (a + c)") == "ok")
+    assert(outcome("ALTER TABLE decl_ix DROP COLUMN c").contains(
+      "error in index decl_ix_e after drop column: no such column: c"))
+    assert(outcome("DROP INDEX decl_ix_e") == "ok")
+    assert(outcome("ALTER TABLE decl_ix DROP COLUMN c") == "ok")
+    assert(rowsOf("PRAGMA table_info(decl_ix)").map(untyped) ==
+      Seq("(0,a,INTEGER,0,null,0)").map(untyped))
+  }
+
+  // expected values: python3 sqlite3 3.40.1
+  test("RENAME COLUMN of a column a plain expression index reads succeeds, " +
+      "and the index then guards the new name on DROP COLUMN") {
+    sql("CREATE TABLE decl_rn(a INTEGER, c INTEGER)")
+    sql("CREATE INDEX decl_rn_e ON decl_rn (a + c)")
+    sql("INSERT INTO decl_rn VALUES (1, 2)")
+    assert(outcome("ALTER TABLE decl_rn RENAME COLUMN c TO d") == "ok")
+    assert(outcome("ALTER TABLE decl_rn DROP COLUMN d").contains(
+      "error in index decl_rn_e after drop column: no such column: d"))
+    assert(outcome("ALTER TABLE decl_rn RENAME COLUMN a TO b") == "ok")
+    assert(outcome("ALTER TABLE decl_rn DROP COLUMN b").contains(
+      "error in index decl_rn_e after drop column: no such column: b"))
+    assert(rowsOf("SELECT b, d FROM decl_rn") == Seq("(1,2)"))
+    assert(outcome("DROP INDEX decl_rn_e") == "ok")
+    assert(outcome("ALTER TABLE decl_rn DROP COLUMN d") == "ok")
+    assert(rowsOf("PRAGMA table_info(decl_rn)").map(untyped) ==
+      Seq("(0,b,INTEGER,0,null,0)").map(untyped))
+  }
 }
 
 object TableDeclSpec {

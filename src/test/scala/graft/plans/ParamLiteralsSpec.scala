@@ -92,6 +92,29 @@ class ParamLiteralsSpec extends SparkSpec with AdaptiveSparkPlanHelper {
     assert(params(Runner.runSql(s, q(30, "1968-04-01", 3.5))) > 0)
   }
 
+  test("a question differing only in literals compiles 0 classes: join + aggregate, " +
+      "one stage and above the bound") {
+    // the same rule-on session confs, with an adaptive partition size
+    // below the tables, so resultJson keeps the adaptive plan
+    val above = spark.newSession()
+    above.conf.set("spark.sql.codegen.fallback", "false")
+    above.conf.set("spark.sql.codegen.factoryMode", "CODEGEN_ONLY")
+    above.conf.set("spark.sql.adaptive.advisoryPartitionSizeInBytes", "1024")
+    def q(x: Int, day: String, m: Double) =
+      s"""SELECT t.g AS g, COUNT(*) AS n, SUM(t.v * $m) AS s FROM t JOIN u ON t.k = u.k
+         |WHERE t.x > $x AND t.d >= DATE '$day' AND u.r <> ${x % 5}
+         |GROUP BY t.g ORDER BY g""".stripMargin
+    for ((s, oneStage) <- Seq(views(on) -> true, views(above) -> false)) {
+      compiles(s, q(12, "1968-02-11", 1.25))
+      val top = Runner.runSql(s, q(22, "1968-03-21", 2.25)).limit(50)
+      assert(org.apache.spark.sql.GraftColumnBridge.planBySize(top).queryExecution
+        .executedPlan.isInstanceOf[AdaptiveSparkPlanExec] != oneStage)
+      val (second, rows) = compiles(s, q(22, "1968-03-21", 2.25))
+      assert(second == 0, s"one stage: $oneStage")
+      assert(rows == Runner.resultJson(views(off).sql(q(22, "1968-03-21", 2.25)), 50))
+    }
+  }
+
   test("a question differing only in literals compiles 0 classes: plan with no exchange") {
     val s = views(on)
     def q(lo: Long, hi: Long, ts: String) =
