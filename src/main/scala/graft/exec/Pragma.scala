@@ -169,12 +169,12 @@ object Pragma {
 
   /** `PRAGMA index_list(T)`: the session-declared indexes
     * ([[SessionKeys]] — `CREATE [UNIQUE] INDEX` plus UNIQUE-constraint
-    * autoindexes), SQLite's shape: origin 'c' (created) / 'u' (unique
-    * constraint), partial = 1 for indexes declared with a WHERE
-    * predicate. */
+    * autoindexes), SQLite's shape: newest first, origin 'c' (created) /
+    * 'u' (unique constraint), partial = 1 for indexes declared with a
+    * WHERE predicate. */
   private def indexList(spark: SparkSession, table: String): DataFrame = {
     spark.table(Ddl.quote(table)) // targeted missing-table error
-    val rows = SessionKeys.indexesFor(spark, table).zipWithIndex.map {
+    val rows = SessionKeys.indexesFor(spark, table).sortBy(-_._2.seq).zipWithIndex.map {
       case ((name, ix), i) =>
         Row(i, name, if (ix.unique) 1 else 0, ix.origin,
           if (ix.uwhere.isDefined) 1 else 0)

@@ -5,25 +5,21 @@ package graft.text2sql
   * The reference instructs its model to emit "SQL compliant to SQLite"
   * (reference pandasqlite/pandasqlite.py:220-225); this engine asks for
   * Spark SQL, but a model fed SQLite-era few-shots still produces
-  * SQLite-isms. This post-processor rewrites the mechanical ones so a
-  * reference user's existing prompts and cached curricula keep working:
+  * SQLite-isms. What a SQLite FUNCTION means lives in one place,
+  * [[graft.plans.SqliteFunctions]] (Catalyst builders injected into
+  * every session). This translator keeps what a function cannot
+  * express — operators and clauses — and renames the calls whose name
+  * Spark already owns with other semantics:
   *
-  *  - `strftime(fmt, x, mods…)`   → `date_format` (+ `%s`/`%w` specials)
-  *  - `date/time/datetime(x, mods…)` → modifier chain + `date_format`
-  *    (modifiers: `±N days/hours/…/months/years`, `start of day/month/
-  *    year`, `weekday N`, `unixepoch` first-position base
-  *    reinterpretation, `localtime`/`utc` no-ops under the UTC session)
-  *  - `julianday(x, mods…)`       → explicit noon-based Julian formula
-  *  - `iif(a,b,c)`                → `if(a,b,c)`
-  *  - `group_concat([DISTINCT] x[, sep])` → sorted `array_join(collect_*)`
-  *  - `unicode(x)` / `char(n…)`   → `ascii(x)` / `chr`-concat
-  *  - `printf(...)`               → `format_string(...)`
+  *  - `date(…)`, `time(…)`, `char(…)`, `printf(…)`, `concat(…)`,
+  *    1-arg `trunc`, `random()`, scalar `min`/`max`, 2-arg
+  *    `ltrim`/`rtrim`/`trim` and `json_array_length`, `typeof`, `hex`,
+  *    `quote`, `soundex`, `sign` → their `sqlite_`/`graft_` names;
+  *    `string_agg` → `group_concat`; `group_concat(DISTINCT x)` →
+  *    `sqlite_group_concat_distinct(x)` (DISTINCT cannot reach an
+  *    injected builder). Every other SQLite function (`strftime`,
+  *    `iif`, the JSON1 family, …) passes through verbatim.
   *  - `x GLOB 'pat'`              → `x RLIKE '<anchored regex>'`
-  *  - `random()`                  → uniform 64-bit BIGINT over rand()
-  *    (SQLite's range, so `abs(random()) % n` keeps its meaning)
-  *  - `hex(x)` / `quote(x)`       → native `sqlite_hex`/`sqlite_quote`
-  *    (type-directed blob/literal renderings; Spark's hex(25) = '19'
-  *    where SQLite's = '3235')
   *  - `a LIKE b`                  → `a ILIKE b` (SQLite LIKE folds case;
   *    Spark's does not — same token, different semantics, silent wrong
   *    rows without the rewrite; `NOT`/`ESCAPE` forms compose)
@@ -32,21 +28,18 @@ package graft.text2sql
   *    default); unknown collations left verbatim
   *  - `a IS b` / `a IS NOT b`     → null-safe `<=>` (`IS NULL`,
   *    `IS TRUE/FALSE`, `IS DISTINCT FROM` pass through)
-  *  - `LIMIT off, cnt`            → `LIMIT cnt OFFSET off`
-  *  - `ifnull/instr/substr`       → already valid Spark SQL (no-op)
+  *  - `x -> p` / `x ->> p`        → `to_json(variant_get(…))` /
+  *    `get_json_object(…)`
+  *  - `LIMIT off, cnt`            → `LIMIT cnt OFFSET off`; a negative
+  *    LIMIT is removed
+  *  - window `FILTER (WHERE …)`, unary `+`, `jsonb_*` → `json_*`, the
+  *    comma-form `json_each`/`json_tree` LATERAL, and the `CAST`
+  *    storage-class type names (TEXT, REAL, …)
   *
   * Scanning follows [[SqlText]]'s lexical rule: quoted runs and
   * comments are opaque to every rewrite, and calls nest by balanced
-  * parens; arguments are translated recursively before substitution. A
-  * call the translator does not understand is left verbatim — a visible
-  * analysis error beats a silently changed answer.
-  *
-  * Two deliberate semantic deltas from SQLite, documented here because
-  * they are contracts, not bugs:
-  *  - month/year shifts CLAMP at month end (Spark/DuckDB `Mar 31 - 1
-  *    month = Feb 28`) where SQLite NORMALIZES (`= Mar 3`);
-  *  - `group_concat` output is sorted (SQLite's order is explicitly
-  *    "arbitrary" — sorting makes the distributed result deterministic).
+  * parens. A construct the translator does not understand is left
+  * verbatim — a visible analysis error beats a silently changed answer.
   *
   * Double-quoted tokens are ambiguous in SQLite (identifier if it
   * resolves, string literal otherwise — `WHERE survived="1"` is a
@@ -853,40 +846,55 @@ object SqlDialect {
 
   // ---------------------------------------------------------------- calls
 
-  /** Rewritable call names, matched with word boundaries. `datetime`
-    * never collides with `date`/`time` because the boundary check
-    * rejects a word character on either side of the candidate name.
-    */
-  private val names = Seq(
-    "json_group_array", "json_group_object", "group_concat",
-    "json_array_length", "json_extract", "json_object", "json_array",
-    "json_valid", "json", "likelihood", "likely", "unlikely",
-    "unixepoch", "julianday", "datetime", "strftime", "random",
-    "unicode", "printf", "format", "total", "trunc", "date", "time",
-    "char", "iif", "cast", "min", "max", "ltrim", "rtrim", "trim",
-    "glob", "string_agg", "concat", "typeof", "hex", "quote",
-    "zeroblob", "randomblob", "soundex", "sign")
+  /** Calls whose name Spark owns with other semantics → the name
+    * [[graft.plans.SqliteFunctions]] registers the SQLite function
+    * under, for the argument counts where the SQLite meaning applies
+    * (2-argument `trunc` is Spark's date truncation, 1-argument
+    * `min`/`max` the aggregates, 1-argument trims the same in both).
+    * Every other SQLite function is registered under its own name and
+    * passes through verbatim. A target never matches again ('date'
+    * inside 'sqlite_date' fails the word boundary), so renaming is a
+    * fixpoint. */
+  private[graft] val renames: Map[String, (Int => Boolean, String)] = Map(
+    "date" -> ((_: Int) => true, "sqlite_date"),
+    "time" -> ((_: Int) => true, "sqlite_time"),
+    "char" -> ((_: Int) => true, "sqlite_char"),
+    "printf" -> ((_: Int) >= 1, "sqlite_printf"),
+    "concat" -> ((_: Int) >= 1, "sqlite_concat"),
+    "trunc" -> ((_: Int) == 1, "sqlite_trunc"),
+    "random" -> ((_: Int) == 0, "sqlite_random"),
+    "min" -> ((_: Int) >= 2, "sqlite_min"),
+    "max" -> ((_: Int) >= 2, "sqlite_max"),
+    "ltrim" -> ((_: Int) == 2, "sqlite_ltrim"),
+    "rtrim" -> ((_: Int) == 2, "sqlite_rtrim"),
+    "trim" -> ((_: Int) == 2, "sqlite_trim"),
+    "json_array_length" -> ((_: Int) == 2, "sqlite_json_array_length"),
+    "typeof" -> ((_: Int) == 1, "sqlite_typeof"),
+    "hex" -> ((_: Int) == 1, "sqlite_hex"),
+    "quote" -> ((_: Int) == 1, "sqlite_quote"),
+    "soundex" -> ((_: Int) == 1, "graft_soundex"),
+    "sign" -> ((_: Int) == 1, "graft_sign"),
+    // SQLite ≥3.44 string_agg(X, SEP) is an exact group_concat alias;
+    // Spark's own string_agg keeps partition-dependent input order
+    "string_agg" -> ((_: Int) == 2, "group_concat"))
 
-  /** If a rewritable call starts at `i`, return (name, openParenIdx,
-    * closeParenIdx). The boundary check requires a non-word char before
-    * `i`; `char(` preceded by `AS` is a cast type, not a call. */
+  /** If a call to a name this pass handles starts at `i`, return
+    * (lowercased name, openParenIdx, closeParenIdx). The boundary check
+    * requires a non-word char before `i`; a name right after `AS` is a
+    * type (`CAST(x AS CHAR(4))`), not a call. */
   private def matchCall(sql: String, i: Int): Option[(String, Int, Int)] = {
     if (i > 0 && (isWordChar(sql.charAt(i - 1)) || sql.charAt(i - 1) == '.'))
       return None
-    val it = names.iterator
-    while (it.hasNext) {
-      val name = it.next()
-      if (sql.regionMatches(true, i, name, 0, name.length) &&
-          (i + name.length >= sql.length || !isWordChar(sql.charAt(i + name.length)))) {
-        val j = skipWs(sql, i + name.length)
-        if (j < sql.length && sql.charAt(j) == '(') {
-          val close = SqlText.closeParen(sql, j)
-          val castType = name == "char" && precedingWord(sql, i).equalsIgnoreCase("as")
-          if (close >= 0 && !castType) return Some((name, j, close))
-        }
-      }
-    }
-    None
+    var e = i
+    while (e < sql.length && isWordChar(sql.charAt(e))) e += 1
+    val name = sql.substring(i, e).toLowerCase
+    val j = skipWs(sql, e)
+    if ((renames.contains(name) || name == "group_concat" || name == "cast") &&
+        j < sql.length && sql.charAt(j) == '(' &&
+        !precedingWord(sql, i).equalsIgnoreCase("as")) {
+      val close = SqlText.closeParen(sql, j)
+      if (close >= 0) Some((name, j, close)) else None
+    } else None
   }
 
   /** A fragment about to be rebuilt into new text, trimmed: its
@@ -902,269 +910,35 @@ object SqlDialect {
     if (e < 0) "" else sql.substring(s + 1, e + 1)
   }
 
-  /** One left-to-right pass: rewrite the leftmost translatable call
-    * (arguments first, recursively), continue after it. Untranslatable
-    * calls keep their text but their arguments are still scanned. */
+  /** One left-to-right pass over the calls: a renamed call keeps its
+    * argument text (the scan continues into it), `group_concat(DISTINCT
+    * …)` moves the DISTINCT into the name (an injected builder cannot
+    * receive it), and `CAST(… AS <storage class>)` takes the Spark type
+    * name. */
   private def rewriteCalls(sql: String): String =
     SqlText.rewrite(sql) { i =>
-      matchCall(sql, i).map { case (name, open, close) =>
+      matchCall(sql, i).flatMap { case (name, open, close) =>
         val argRegion = sql.substring(open + 1, close)
-        // a blank arg list is zero args (SQLite date() = date('now')),
-        // not one empty-string arg
+        // a blank arg list is zero args (SQLite date() = date('now'))
         val args =
           if (skipWs(argRegion, 0) == argRegion.length) Seq.empty[String]
-          else SqlText.splitTop(argRegion).map(a => rewriteCalls(codeOf(a)))
-        build(name, args) match {
-          case Some(repl) => (repl, close + 1)
-          case None       => (sql.substring(i, open + 1), open + 1)
+          else SqlText.splitTop(argRegion)
+        name match {
+          case "cast" =>
+            if (args.length == 1)
+              buildCastType(rewriteCalls(codeOf(args.head))).map((_, close + 1))
+            else None
+          case "group_concat" =>
+            val d = skipWs(sql, open + 1)
+            if (keywordAt(sql, d, "distinct"))
+              Some(("sqlite_group_concat_distinct(", skipWs(sql, d + 8)))
+            else None
+          case _ =>
+            val (arity, target) = renames(name)
+            if (arity(args.length)) Some((target, i + name.length)) else None
         }
       }
     }
-
-  // ----------------------------------------------------------- builders
-
-  private def build(name: String, args: Seq[String]): Option[String] =
-    name match {
-      case "iif" if args.length == 3 =>
-        Some(s"if(${args.mkString(", ")})")
-      // SQLite ≥3.48 two-argument iif: NULL when the condition is false
-      case "iif" if args.length == 2 =>
-        Some(s"(CASE WHEN ${args(0)} THEN ${args(1)} END)")
-      // SQLite random() returns a uniform 64-bit INTEGER, not a [0,1)
-      // double — `abs(random()) % n` (the idiomatic SQLite random
-      // pick) would silently always yield ~0 on a bare rand(). One
-      // double-scaled draw can't make uniform LOW bits either (the
-      // ulp near 2^63 is 2048, so `% 10` would only ever see even
-      // residues) — compose two exact 32-bit draws instead: each
-      // rand() instance seeds independently, floor(rand()*2^32) is
-      // integer-exact in a double, and (hi-2^31)*2^32 + lo spans
-      // exactly [-2^63, 2^63) with no BIGINT overflow. 'rand' never
-      // re-matches the 'random' scan (different word): fixpoint.
-      case "random" if args.isEmpty =>
-        Some("((CAST(floor(rand() * 4294967296.0D) AS BIGINT) - 2147483648) " +
-          "* 4294967296 + CAST(floor(rand() * 4294967296.0D) AS BIGINT))")
-      // format() is SQLite's printf alias (≥3.38); Spark has no format()
-      case "printf" | "format" if args.nonEmpty =>
-        buildPrintf(args)
-      // SQLite 2-arg ltrim/rtrim/trim are (src, trimChars); Spark's
-      // legacy 2-arg forms are (trimStr, src) — SAME TOKEN, SWAPPED
-      // arguments, silently wrong values without translation. The
-      // keyword TRIM forms are emitted (not the swapped 2-arg calls):
-      // they parse as a single argument, so a second translate pass
-      // leaves them alone — a plain swap would swap BACK (involution,
-      // not idempotent)
-      case "ltrim" if args.length == 2 =>
-        Some(s"TRIM(LEADING ${args(1)} FROM ${args(0)})")
-      case "rtrim" if args.length == 2 =>
-        Some(s"TRIM(TRAILING ${args(1)} FROM ${args(0)})")
-      case "trim" if args.length == 2 =>
-        Some(s"TRIM(BOTH ${args(1)} FROM ${args(0)})")
-      // glob(PATTERN, STRING) — the function form of the GLOB operator
-      // (note the swapped operand order); literal patterns compile to
-      // the same anchored regex, non-literal patterns decline visibly
-      case "glob" if args.length == 2 && isStringLit(args.head) =>
-        val regex = graft.functions.Glob.toRegex(unquote(args.head))
-          .replace("\\", "\\\\").replace("'", "''")
-        Some(s"(${args(1)} RLIKE '$regex')")
-      // SQLite ≥3.44 string_agg(X, SEP) is an exact group_concat alias
-      // (arbitrary order) — rendered sorted like group_concat. Spark 4
-      // has a native string_agg, but its input order is partition-
-      // dependent: leaving it untranslated would make declared-SQLite
-      // queries nondeterministic across runs.
-      case "string_agg" if args.length == 2 => buildGroupConcat(args)
-      // SQLite concat()/concat_ws() skip NULL arguments; Spark's
-      // concat is NULL-propagating (same token, different algebra) —
-      // concat_ws with an empty separator is the exact semantics,
-      // including '' (never NULL) when every argument is NULL
-      case "concat" if args.nonEmpty =>
-        Some(s"concat_ws('', ${args.mkString(", ")})")
-      // typeof() → the native sqlite_typeof expression (injected by
-      // GraftExtensions), which folds the storage
-      // class to a null-guarded literal. A pure-SQL rewrite would have
-      // to call typeof() inside its own emission — a second translate
-      // pass would re-expand it (fixpoint violation, fuzz-pinned) —
-      // and leaving the call verbatim resolves to SPARK's typeof,
-      // whose answers ('bigint', 'string') are silently wrong in
-      // SQLite dialect. The distinct target name survives re-scans:
-      // 'typeof' inside 'sqlite_typeof' fails the word-boundary match.
-      case "typeof" if args.length == 1 =>
-        Some(s"sqlite_typeof(${args.head})")
-      // hex()/quote() are value-rendering functions whose behavior
-      // depends on the operand's storage class — routed to native
-      // type-directed expressions (same pattern and fixpoint reasoning
-      // as typeof; Spark's own hex() answers '19' for hex(25) where
-      // SQLite answers '3235')
-      case "hex" if args.length == 1 =>
-        Some(s"sqlite_hex(${args.head})")
-      case "quote" if args.length == 1 =>
-        Some(s"sqlite_quote(${args.head})")
-      // soundex() is compiled into the reference's sqlite build
-      // (SQLITE_SOUNDEX, measured on 3.40.1) with rules Spark's own
-      // census-variant soundex() diverges from ('b-b': SQLite B100,
-      // Spark's B000; non-alpha/NULL input → '?000', never NULL) —
-      // routed to the native byte-exact expression. 'soundex' inside
-      // 'graft_soundex' fails the word-boundary match (fixpoint).
-      case "soundex" if args.length == 1 =>
-        Some(s"graft_soundex(${args.head})")
-      // sign() answers INTEGER -1/0/1 with NULL on non-numeric text
-      // where Spark's answers DOUBLE and text coerces differently —
-      // routed native (same fixpoint reasoning)
-      case "sign" if args.length == 1 =>
-        Some(s"graft_sign(${args.head})")
-      // zeroblob(N) → an N-byte zero blob (non-positive N → empty,
-      // SQLite's rule). unhex/repeat/greatest are never rewritten and
-      // INT is not a castTypes class — the emission is a fixpoint.
-      case "zeroblob" if args.length == 1 =>
-        Some(s"unhex(repeat('00', greatest(CAST((${args.head}) AS INT), 0)))")
-      // randomblob(N) → N uniform random bytes, each an exact
-      // independent 8-bit draw (hex(randomblob(16)) is the idiomatic
-      // SQLite unique-id generator). N must be a literal — the byte
-      // count is the emission length; SQLite returns ONE byte for
-      // N < 1. format_string (not hex/concat) keeps the emission out
-      // of this translator's own rewrites. Over 256 bytes (or a
-      // non-literal N) the call is left verbatim → visible error.
-      case "randomblob" if args.length == 1 &&
-          args.head.trim.matches("-?\\d{1,9}") =>
-        val n = math.max(args.head.trim.toInt, 1)
-        if (n > 256) None
-        else {
-          val b = "format_string('%02X', CAST(floor(rand() * 256.0D) AS BIGINT))"
-          Some(s"unhex(${Seq.fill(n)(b).mkString("(", " || ", ")")})")
-        }
-      case "unicode" if args.length == 1 =>
-        Some(s"ascii(${args.head})")
-      case "char" if args.nonEmpty =>
-        Some(if (args.length == 1) s"chr(${args.head})"
-             // || not concat(): the concat→concat_ws NULL-skip rewrite
-             // would hit our own emission on a second pass (fixpoint),
-             // and || keeps NULL-propagation
-             else args.map(a => s"chr($a)").mkString("(", " || ", ")"))
-      case "group_concat" => buildGroupConcat(args)
-      case "strftime" if args.nonEmpty => buildStrftime(args)
-      // SQLite total(): like sum() but DOUBLE and 0.0 (not NULL) on
-      // empty/all-NULL input
-      case "total" if args.length == 1 =>
-        Some(s"coalesce(sum(CAST(${args.head} AS DOUBLE)), CAST(0.0 AS DOUBLE))")
-      // SQLite storage-class names in CAST targets
-      case "cast" if args.length == 1 => buildCastType(args.head)
-      // scalar (multi-argument) min/max: SQLite returns NULL if ANY
-      // argument is NULL; Spark's least/greatest skip NULLs, so guard
-      case "min" if args.length >= 2 =>
-        Some(buildScalarMinMax("least", args))
-      case "max" if args.length >= 2 =>
-        Some(buildScalarMinMax("greatest", args))
-      case "date" =>
-        applyModifiers(args).map(e => s"date_format($e, 'yyyy-MM-dd')")
-      case "time" =>
-        applyModifiers(args).map(e => s"date_format($e, 'HH:mm:ss')")
-      case "datetime" =>
-        applyModifiers(args).map(e => s"date_format($e, 'yyyy-MM-dd HH:mm:ss')")
-      case "julianday" =>
-        // SQLite returns a float → force DOUBLE everywhere: in SQL
-        // TEXT a `1000000.0` literal parses as DECIMAL and bigint ÷
-        // decimal runs DECIMAL division, whose rounding diverges from
-        // the double formula in the last digit — so divide ONCE by an
-        // explicit double (µs per day)
-        applyModifiers(args).map(e =>
-          s"(CAST(2440587.5 AS DOUBLE) + " +
-            s"unix_micros($e) / CAST(86400000000 AS DOUBLE))")
-      case "unixepoch" =>
-        // SQLite ≥3.38: integer Unix seconds (floor)
-        applyModifiers(args).map(e => s"unix_timestamp($e)")
-      // NOT translated, deliberately: `log(x)` is VALID Spark SQL with
-      // a different meaning (natural log; SQLite's is base-10). The
-      // translator only rewrites tokens that cannot be Spark SQL —
-      // flipping an ambiguous one would corrupt Spark-compliant model
-      // output. A model wanting base-10 emits log10(), valid in both.
-      // numeric truncation toward zero (Spark's trunc is date-only)
-      case "trunc" if args.length == 1 =>
-        val x = args.head
-        Some(s"(CASE WHEN ($x) >= 0 THEN CAST(FLOOR($x) AS DOUBLE) " +
-          s"ELSE CAST(CEIL($x) AS DOUBLE) END)")
-      // JSON1 aggregates; sorted for distributed determinism (SQLite
-      // order is arbitrary), same policy as group_concat
-      case "json_group_array" if args.length == 1 =>
-        Some(s"to_json(array_sort(collect_list(${args.head})))")
-      case "json_group_object" if args.length == 2 =>
-        Some(s"to_json(map_from_entries(array_sort(collect_list(" +
-          s"struct(${args(0)}, ${args(1)})))))")
-      // JSON1 scalar surface. json_extract's SQL-value semantics are
-      // get_json_object's (strings unquoted, objects/arrays as JSON
-      // text); residual delta: JSON numbers/booleans come back as
-      // STRING '7'/'true', not typed values — comparisons coerce,
-      // documented in README. Multi-path form returns a JSON array of
-      // the per-path values (missing paths → JSON null), per SQLite.
-      case "json_extract" if args.length == 2 =>
-        Some(s"get_json_object(${args(0)}, ${args(1)})")
-      case "json_extract" if args.length > 2 =>
-        val parts = args.tail.map(p =>
-          s"coalesce(to_json(variant_get(parse_json(${args(0)}), $p)), 'null')")
-        Some(s"concat_ws('', '[', concat_ws(',', ${parts.mkString(", ")}), ']')")
-      // json(X): validate + minify. parse_json throws on malformed
-      // input — so does SQLite's json().
-      case "json" if args.length == 1 =>
-        Some(s"to_json(parse_json(${args.head}))")
-      // Boolean (not SQLite's 0/1 — WHERE is the common position and
-      // Spark filters need BOOLEAN); NULL input stays NULL per SQLite
-      case "json_valid" if args.length == 1 =>
-        Some(s"(CASE WHEN (${args.head}) IS NULL THEN NULL " +
-          s"ELSE try_parse_json(${args.head}) IS NOT NULL END)")
-      case "json_array" =>
-        if (args.isEmpty) Some("'[]'")
-        else Some(s"concat_ws('', '[', concat_ws(',', " +
-          s"${args.map(jsonQuoteValue).mkString(", ")}), ']')")
-      // keys must be string literals (the form models emit; SQLite
-      // errors on non-text labels anyway) — else decline visibly
-      case "json_object"
-          if args.length % 2 == 0 &&
-            args.grouped(2).forall(p => isStringLit(p.head)) =>
-        if (args.isEmpty) Some("'{}'")
-        else {
-          val pairs = args.grouped(2).map { p =>
-            s"concat_ws('', ${jsonQuoteValue(p(0))}, ':', ${jsonQuoteValue(p(1))})"
-          }
-          Some(s"concat_ws('', '{', concat_ws(',', ${pairs.mkString(", ")}), '}')")
-        }
-      // 1-arg json_array_length passes through to Spark's native
-      // function (same name): it yields NULL where SQLite yields 0 on
-      // valid non-array JSON — documented divergence. Patching it
-      // would emit a 1-arg json_array_length inside the patch, which a
-      // second translate pass re-expands (the idempotence property
-      // forbids self-referential rewrites; same reasoning as typeof).
-      // The 2-arg path form below is safe: its emission only contains
-      // the untranslated 1-arg shape.
-      case "json_array_length" if args.length == 2 =>
-        Some(s"(CASE WHEN get_json_object(${args(0)}, ${args(1)}) IS NULL " +
-          s"THEN NULL ELSE coalesce(json_array_length(" +
-          s"get_json_object(${args(0)}, ${args(1)})), 0) END)")
-      // SQLite planner hints: identity on the value
-      case "likely" | "unlikely" if args.length == 1 =>
-        Some(s"(${args.head})")
-      case "likelihood" if args.length == 2 =>
-        Some(s"(${args.head})")
-      case _ => None
-    }
-
-  /** One json_array/json_object element: serialize the SQL value as
-    * JSON text (variant cast quotes strings, passes numbers/booleans
-    * through; SQL NULL → JSON `null`). A value that is itself already
-    * JSON text from a translated JSON call (`json(…)`, `->`, both
-    * rewritten to `to_json(…)` by the time this runs on rewritten
-    * args) is spliced verbatim — SQLite's JSON-subtype rule, so
-    * `json_array(json('[1]'))` nests as `[[1]]`, not a quoted string. */
-  private def jsonQuoteValue(e: String): String = {
-    val t = e.trim
-    // already-JSON shapes: anything this builder family itself emits —
-    // to_json(…) (json()/`->`/aggregates), a rewritten json_array/
-    // json_object (the exact concat prefix is ours), or their empty
-    // literals. Everything else is an SQL value to be serialized.
-    val alreadyJson = t.startsWith("to_json(") ||
-      t.startsWith("concat_ws('', '[', concat_ws(',', ") ||
-      t.startsWith("concat_ws('', '{', concat_ws(',', ") ||
-      t == "'[]'" || t == "'{}'"
-    if (alreadyJson) s"coalesce($t, 'null')"
-    else s"coalesce(to_json(CAST($t AS VARIANT)), 'null')"
-  }
 
   /** SQLite storage classes → Spark types inside `CAST(x AS T)`.
     * Types Spark already accepts (INTEGER, BIGINT, VARCHAR, …) decline
@@ -1179,327 +953,5 @@ object SqlDialect {
     case castArgRe(prefix, tpe) =>
       castTypes.get(tpe.toLowerCase).map(t => s"CAST($prefix$t)")
     case _ => None
-  }
-
-  private def buildScalarMinMax(fn: String, args: Seq[String]): String = {
-    val anyNull = args.map(a => s"($a) IS NULL").mkString(" OR ")
-    s"(CASE WHEN $anyNull THEN NULL ELSE $fn(${args.mkString(", ")}) END)"
-  }
-
-  private def isStringLit(s: String): Boolean = {
-    val t = s.trim
-    t.length >= 2 && t.head == '\'' && SqlText.skipOpaque(t, 0) == t.length
-  }
-
-  private def unquote(s: String): String = {
-    val t = s.trim
-    t.substring(1, t.length - 1).replace("''", "'")
-  }
-
-  /** SQLite printf → format_string. Java's Formatter is strict where
-    * SQLite's is lenient: %f on an INTEGER/DECIMAL argument throws at
-    * runtime (`f != Decimal`), %i doesn't exist, and SQLite's `!` flag
-    * is unknown — so for a LITERAL format string the conversions are
-    * scanned and each consuming argument gets the cast SQLite would
-    * apply (%d/%i/%x/%o → BIGINT, %e/%f/%g → DOUBLE), `%i` renders as
-    * `%d` and `!` is dropped, and the SQL-escaping conversions
-    * %q/%Q/%w render as %s over a transformed argument. The remaining
-    * SQLite-only conversions (%u/%c)
-    * and `*` widths decline the whole call → visible error. A
-    * non-literal format string passes through to format_string as-is
-    * (no directive knowledge — the pre-existing behavior). */
-  private def buildPrintf(args: Seq[String]): Option[String] = {
-    if (!isStringLit(args.head))
-      return Some(s"format_string(${args.mkString(", ")})")
-    val fmt = unquote(args.head)
-    val fixed = new StringBuilder
-    val kinds = scala.collection.mutable.ArrayBuffer.empty[Char]
-    var i = 0
-    while (i < fmt.length) {
-      val c = fmt.charAt(i)
-      if (c != '%') { fixed.append(c); i += 1 }
-      else if (i + 1 < fmt.length && fmt.charAt(i + 1) == '%') {
-        fixed.append("%%"); i += 2
-      } else {
-        var j = i + 1
-        val spec = new StringBuilder("%")
-        while (j < fmt.length && "-+ 0#,!".indexOf(fmt.charAt(j)) >= 0) {
-          if (fmt.charAt(j) != '!') spec.append(fmt.charAt(j))
-          j += 1
-        }
-        while (j < fmt.length && fmt.charAt(j).isDigit) {
-          spec.append(fmt.charAt(j)); j += 1
-        }
-        if (j < fmt.length && fmt.charAt(j) == '.') {
-          spec.append('.'); j += 1
-          while (j < fmt.length && fmt.charAt(j).isDigit) {
-            spec.append(fmt.charAt(j)); j += 1
-          }
-        }
-        if (j >= fmt.length) return None
-        fmt.charAt(j) match {
-          case 'd' | 'i'                   => kinds += 'd'; spec.append('d')
-          case k @ ('x' | 'X' | 'o')       => kinds += 'd'; spec.append(k)
-          case k @ ('e' | 'E' | 'f' | 'g' | 'G') => kinds += 'f'; spec.append(k)
-          case 's'                         => kinds += 's'; spec.append('s')
-          // SQLite's SQL-escaping conversions render as %s over a
-          // transformed argument: %q doubles single quotes (NULL →
-          // empty, where Java's Formatter would print "null"), %Q is
-          // the quote() rendering incl. the bare NULL keyword, %w
-          // doubles double quotes for identifiers
-          case k @ ('q' | 'Q' | 'w')       => kinds += k; spec.append('s')
-          case _                           => return None
-        }
-        fixed.append(spec); i = j + 1
-      }
-    }
-    if (kinds.length != args.length - 1) return None
-    // NULL arguments take SQLite's printf substitutions (0, 0.0, the
-    // empty string) — Java's Formatter would print the string "null"
-    val casted = kinds.toSeq.zip(args.tail).map {
-      case ('d', a) => s"coalesce(CAST($a AS BIGINT), 0)"
-      case ('f', a) => s"coalesce(CAST($a AS DOUBLE), CAST(0.0 AS DOUBLE))"
-      case ('s', a) => s"coalesce(CAST($a AS STRING), '')"
-      case ('q', a) =>
-        s"coalesce(replace(CAST($a AS STRING), '''', ''''''), '')"
-      case ('Q', a) => s"sqlite_quote(CAST($a AS STRING))"
-      case ('w', a) =>
-        s"""coalesce(replace(CAST($a AS STRING), '"', '""'), '')"""
-      case (_, a)   => a
-    }
-    val lit = "'" + fixed.toString.replace("'", "''") + "'"
-    Some((lit +: casted).mkString("format_string(", ", ", ")"))
-  }
-
-  private val distinctRe = "(?is)^DISTINCT\\s+(.*)$".r
-
-  /** `group_concat` → sorted array_join. NULL inputs are skipped by
-    * `collect_*` exactly as SQLite skips them; an all-NULL group yields
-    * SQL NULL (not "") via the size guard. Sorting replaces SQLite's
-    * documented-arbitrary order with a deterministic one. */
-  private def buildGroupConcat(args: Seq[String]): Option[String] = {
-    if (args.isEmpty || args.length > 2) return None
-    val (expr, collect) = args.head.trim match {
-      case distinctRe(e) => (e.trim, s"collect_set(${e.trim})")
-      case e             => (e, s"collect_list($e)")
-    }
-    val sep = if (args.length == 2) args(1) else "','"
-    Some(s"(CASE WHEN count($expr) = 0 THEN CAST(NULL AS STRING) ELSE " +
-      s"array_join(array_sort(transform($collect, v -> CAST(v AS STRING))), $sep) END)")
-  }
-
-  /** SQLite strftime directives → Java DateTimeFormatter pattern
-    * letters. Conservative: an unmapped directive declines the whole
-    * call (left verbatim → visible analysis error). */
-  private val directives = Map(
-    'Y' -> "yyyy", 'm' -> "MM", 'd' -> "dd", 'H' -> "HH",
-    'M' -> "mm", 'S' -> "ss", 'j' -> "DDD", 'f' -> "ss.SSS",
-    'I' -> "hh", 'p' -> "a",
-    // C-composite shorthands (SQLite ≥3.44 supports these directly)
-    'F' -> "yyyy-MM-dd", 'T' -> "HH:mm:ss", 'R' -> "HH:mm")
-
-  private def buildStrftime(args: Seq[String]): Option[String] = {
-    if (!isStringLit(args.head)) return None
-    val fmt = unquote(args.head)
-    applyModifiers(args.tail).flatMap(e => strftimeExpr(fmt, e))
-  }
-
-  /** Compile one strftime format into a single Spark expression. Runs
-    * of pattern-mappable directives and literal text become
-    * `date_format` segments; COMPUTED directives with no
-    * DateTimeFormatter equivalent — `%s` (epoch), `%w` (weekday),
-    * `%U`/`%W` (C week numbers; Spark 3+ dropped week-based pattern
-    * letters entirely) — become standalone expressions; a mixed format
-    * concatenates the pieces in order. Any directive outside both maps
-    * declines the whole call (left verbatim → visible analysis error).
-    *
-    * Week-number semantics (SQLite == C strftime): weeks run
-    * Sunday-first for `%U`, Monday-first for `%W`; week 01 starts at
-    * the year's first such day and everything before it is week 00.
-    * With 1-based day-of-year j and week-start-based weekday w (0 =
-    * the week-start day), the number is `(j + 6 - w) div 7`, emitted
-    * zero-padded to 2 — pinned arithmetic, no locale-dependent
-    * WeekFields anywhere.
-    */
-  private def strftimeExpr(fmt: String, e: String): Option[String] = {
-    // pieces: Left(javaPatternFragment) | Right(sparkExprText); pattern
-    // fragments carry raw quote chars and are SQL-escaped at embed time
-    val pieces = scala.collection.mutable.ArrayBuffer.empty[Either[String, String]]
-    def addPat(p: String): Unit = pieces.lastOption match {
-      case Some(Left(prev)) => pieces(pieces.length - 1) = Left(prev + p)
-      case _                => pieces += Left(p)
-    }
-    val lit = new StringBuilder
-    def flushLit(): Unit = if (lit.nonEmpty) {
-      // quote literal runs so letters aren't read as pattern directives
-      addPat("'" + lit.toString.replace("'", "''") + "'")
-      lit.clear()
-    }
-    var i = 0
-    while (i < fmt.length) {
-      val c = fmt.charAt(i)
-      if (c == '%') {
-        if (i + 1 >= fmt.length) return None
-        fmt.charAt(i + 1) match {
-          case '%' => lit.append('%')
-          case 's' =>
-            flushLit(); pieces += Right(s"CAST(unix_timestamp($e) AS STRING)")
-          case 'w' =>
-            flushLit(); pieces += Right(s"CAST(dayofweek($e) - 1 AS STRING)")
-          case 'U' => // dayofweek() is 1=Sunday → Sunday-based w = dayofweek-1
-            flushLit()
-            pieces += Right(s"lpad(CAST((dayofyear($e) + 6 - " +
-              s"(dayofweek($e) - 1)) div 7 AS STRING), 2, '0')")
-          case 'W' => // weekday() is 0=Monday — already Monday-based
-            flushLit()
-            pieces += Right(s"lpad(CAST((dayofyear($e) + 6 - " +
-              s"weekday($e)) div 7 AS STRING), 2, '0')")
-          // ISO-8601 week directives (SQLite ≥3.44): Spark's
-          // weekofyear() IS the ISO week; the ISO YEAR comes from the
-          // Thursday rule (the week's Thursday determines its year —
-          // e + (4 - isoWeekday) days, i.e. 3 - weekday())
-          case 'V' =>
-            flushLit()
-            pieces += Right(s"lpad(CAST(weekofyear($e) AS STRING), 2, '0')")
-          case 'u' => // ISO weekday 1=Monday..7=Sunday
-            flushLit()
-            pieces += Right(s"CAST(weekday($e) + 1 AS STRING)")
-          case 'G' =>
-            flushLit()
-            pieces += Right(
-              s"CAST(year(date_add(CAST($e AS DATE), 3 - weekday($e))) AS STRING)")
-          case 'g' =>
-            flushLit()
-            pieces += Right(s"lpad(CAST(year(date_add(CAST($e AS DATE), " +
-              s"3 - weekday($e))) % 100 AS STRING), 2, '0')")
-          case 'P' => // lowercase am/pm ('a' has no lowercase variant)
-            flushLit()
-            pieces += Right(s"lower(date_format($e, 'a'))")
-          case 'J' => // Julian day number; SQLite renders with C
-            // "%.16g" — for the 7-integer-digit JD range that is 9
-            // fraction digits with the trailing zeros (and a bare
-            // point) stripped. NOT emitted via format_string: Java's
-            // %.9f rounds the double's SHORTEST decimal repr where C
-            // rounds the exact binary expansion, so the last digit
-            // diverges. Instead the digits are integer-assembled from
-            // floor(jd·10⁹ + 0.5) — at that magnitude ulp = 0.5, the
-            // +0.5 is exact, and floor is deterministic and identical
-            // across engines. Same noon-based formula as julianday().
-            flushLit()
-            val jdScaled = s"CAST(FLOOR((CAST(2440587.5 AS DOUBLE) + " +
-              s"unix_micros($e) / CAST(86400000000 AS DOUBLE)) * " +
-              s"CAST(1000000000 AS DOUBLE) + CAST(0.5 AS DOUBLE)) AS BIGINT)"
-            pieces += Right(
-              s"regexp_replace(" +
-                s"CAST($jdScaled div 1000000000 AS STRING) || '.' || " +
-                s"lpad(CAST($jdScaled % 1000000000 AS STRING), 9, '0'), " +
-                s"'\\\\.?0+$$', '')")
-          // space-padded hours (no DateTimeFormatter equivalent)
-          case 'k' => // 24-hour, " 0".." 9" then "10".."23"
-            flushLit()
-            pieces += Right(s"lpad(CAST(hour($e) AS STRING), 2, ' ')")
-          case 'e' => // day of month, C %2d: " 1".."31" (space-padded)
-            flushLit()
-            pieces += Right(s"lpad(CAST(day($e) AS STRING), 2, ' ')")
-          case 'l' => // 12-hour, " 1".."12"
-            flushLit()
-            pieces += Right(
-              s"lpad(CAST(((hour($e) + 11) % 12) + 1 AS STRING), 2, ' ')")
-          case d =>
-            directives.get(d) match {
-              case Some(p) => flushLit(); addPat(p)
-              case None    => return None
-            }
-        }
-        i += 2
-      } else { lit.append(c); i += 1 }
-    }
-    flushLit()
-    def fmtPiece(p: String) = s"date_format($e, '${p.replace("'", "''")}')"
-    pieces.toSeq match {
-      case Seq()         => Some(fmtPiece("")) // empty format → empty string
-      case Seq(Left(p))  => Some(fmtPiece(p))
-      case Seq(Right(x)) => Some(x)
-      case many =>
-        // || not concat(): the concat→concat_ws NULL-skip rewrite
-        // would hit our own emission on a second pass (breaking the
-        // textual fixpoint), and || keeps the NULL-propagation a NULL
-        // timeval needs (strftime(fmt, NULL) IS NULL; concat_ws would
-        // yield '')
-        Some(many.map {
-          case Left(p)  => fmtPiece(p)
-          case Right(x) => x
-        }.mkString("(", " || ", ")"))
-    }
-  }
-
-  // SQLite date-modifier grammar (subset; unknown → decline)
-  private val shiftRe =
-    """^([+-]?\d+(?:\.\d+)?)\s+(day|days|hour|hours|minute|minutes|second|seconds|month|months|year|years)$""".r
-  private val weekdayRe = """^weekday\s+([0-6])$""".r
-  private val startOfRe = """^start\s+of\s+(day|month|year)$""".r
-
-  /** Fold `(timeval, modifier…)` into one Spark timestamp expression.
-    * No args / `'now'` = the current instant (SQLite `date()` ≡
-    * `date('now')`). All modifiers must be string literals (as SQLite
-    * requires). The `'unixepoch'` modifier (only valid FIRST, per
-    * SQLite) reinterprets the base value as Unix seconds instead of a
-    * date string — `date(1700000000, 'unixepoch')` is a stock model
-    * emission for epoch columns.
-    */
-  private def applyModifiers(args: Seq[String]): Option[String] = {
-    val epochBase = args.length >= 2 && isStringLit(args(1)) &&
-      unquote(args(1)).trim.equalsIgnoreCase("unixepoch")
-    var e = args.headOption.map(_.trim) match {
-      case None => "current_timestamp()"
-      case Some(b) if isStringLit(b) && unquote(b).equalsIgnoreCase("now") =>
-        "current_timestamp()"
-      case Some(b) if epochBase =>
-        // fractional seconds honored (SQLite accepts them with subsec)
-        s"timestamp_seconds(CAST($b AS DOUBLE))"
-      // NOT a bare CAST: SQLite time-values dispatch on runtime type —
-      // numerics (incl. numeric text) are JULIAN DAY numbers, and
-      // date(julianday(a) + 30), the stock date-arithmetic idiom,
-      // would silently read as epoch seconds under a blind cast. The
-      // native type-directed expression (plans.SqliteFunctions) picks
-      // the interpretation at analysis; distinct-name fixpoint, same
-      // pattern as sqlite_typeof.
-      case Some(b) => s"sqlite_timeval($b)"
-    }
-    val it = args.drop(if (epochBase) 2 else 1).iterator
-    while (it.hasNext) {
-      val m = it.next()
-      if (!isStringLit(m)) return None
-      unquote(m).trim.toLowerCase match {
-        case shiftRe(n, unit) =>
-          val secondsPerUnit = unit.stripSuffix("s") match {
-            case "day" => Some(86400.0)
-            case "hour" => Some(3600.0)
-            case "minute" => Some(60.0)
-            case "second" => Some(1.0)
-            case _ => None
-          }
-          secondsPerUnit match {
-            case Some(mult) =>
-              val secs = BigDecimal(n) * BigDecimal(mult)
-              e = s"($e + make_dt_interval(0, 0, 0, CAST(${secs.bigDecimal.toPlainString} AS DOUBLE)))"
-            case None => // month/year shifts: integer only (clamping delta above)
-              if (n.contains('.')) return None
-              val k = n.toLong
-              e =
-                if (unit.startsWith("month")) s"($e + make_ym_interval(0, $k))"
-                else s"($e + make_ym_interval($k, 0))"
-          }
-        case startOfRe(unit) =>
-          // date_trunc yields TIMESTAMP; stays correct under the UTC session
-          e = s"CAST(date_trunc('${unit.toUpperCase}', $e) AS TIMESTAMP)"
-        case weekdayRe(n) =>
-          // forward to the next weekday n (Sunday=0), same day if already
-          e = s"($e + make_dt_interval(CAST(($n - (dayofweek($e) - 1) + 7) % 7 AS INT), 0, 0, 0))"
-        case "localtime" | "utc" | "subsec" | "subsecond" => // UTC session: no-op
-        case _ => return None
-      }
-    }
-    Some(e)
   }
 }

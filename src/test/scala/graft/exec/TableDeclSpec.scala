@@ -10,8 +10,7 @@ import graft.text2sql.SqlDialect
   * outcome are compared with python sqlite3 3.40.1 running the same
   * statements. `table_xinfo` rows are compared without their `type`
   * column (this engine reports the lake type, README), and `index_list`
-  * rows name-sorted without their `seq` column (SQLite numbers
-  * newest-first, this engine by name). */
+  * rows name-sorted without their `seq` column. */
 class TableDeclSpec extends SparkSpec {
   import TableDeclSpec.Step
 
@@ -129,6 +128,25 @@ class TableDeclSpec extends SparkSpec {
                else got.contains(s.outcome), s"${s.name}: $got")
       }
     } finally sql("PRAGMA foreign_keys = 0")
+  }
+
+  test("PRAGMA index_list numbers seq newest-first, as sqlite3 does, " +
+      "through RENAME TO and RENAME COLUMN") {
+    sql("CREATE TABLE decl_ix(a TEXT, b TEXT UNIQUE, c INTEGER, d INTEGER, " +
+      "UNIQUE (c, d))")
+    sql("CREATE INDEX decl_ix_expr ON decl_ix(c + 1)")
+    sql("CREATE UNIQUE INDEX decl_ix_part ON decl_ix(d) WHERE c > 0")
+    sql("CREATE INDEX decl_ix_a ON decl_ix(d)")
+    // python3 sqlite3 3.40.1 running the same statements
+    def want(t: String) = Seq("(0,decl_ix_a,0,c,0)", "(1,decl_ix_part,1,c,1)",
+      "(2,decl_ix_expr,0,c,0)", s"(3,sqlite_autoindex_${t}_2,1,u,0)",
+      s"(4,sqlite_autoindex_${t}_1,1,u,0)")
+    assert(rowsOf("PRAGMA index_list(decl_ix)") == want("decl_ix"))
+    sql("ALTER TABLE decl_ix RENAME TO decl_ix2")
+    assert(rowsOf("PRAGMA index_list(decl_ix2)") == want("decl_ix2"))
+    sql("ALTER TABLE decl_ix2 RENAME COLUMN d TO dd")
+    assert(rowsOf("PRAGMA index_list(decl_ix2)") == want("decl_ix2"))
+    sql("DROP TABLE decl_ix2")
   }
 
   test("a partial index's WHERE guards its column: DROP COLUMN raises " +

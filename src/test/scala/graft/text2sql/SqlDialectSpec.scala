@@ -6,6 +6,11 @@ import graft.ops.Tables
 class SqlDialectSpec extends SparkSpec {
   import spark.implicits._
 
+  /** The first value of a translated SQLite query, through the
+    * generated-SQL path. */
+  private def answer(sqlite: String): Any =
+    graft.exec.Runner.runSql(spark, SqlDialect.translate(sqlite)).head().get(0)
+
   test("GLOB rewrites to an anchored RLIKE that executes in Spark") {
     val sql = SqlDialect.translate(
       "SELECT p_partkey FROM part WHERE p_name GLOB '*ge?r*' ORDER BY p_partkey")
@@ -20,7 +25,8 @@ class SqlDialectSpec extends SparkSpec {
 
   test("julianday rewrites to the noon-based formula and executes") {
     val sql = SqlDialect.translate("SELECT julianday(ts) AS jd FROM events")
-    assert(!sql.toLowerCase.contains("julianday"))
+    // sqlite3 3.40.1: 2460374.75
+    assert(answer("SELECT julianday('2024-03-05 06:00:00')") == 2460374.75)
     Tables.t(spark, sfDir, "events").createOrReplaceTempView("events")
     val jd = spark.sql(sql + " ORDER BY jd LIMIT 1").head().getDouble(0)
     assert(jd > 2460000 && jd < 2470000) // 2024 is ~JD 2460311
@@ -88,7 +94,9 @@ class SqlDialectSpec extends SparkSpec {
   test("julianday with nested calls rewrites via balanced-paren scan") {
     val sql = SqlDialect.translate(
       "SELECT julianday(max(ts)) - julianday(min(ts)) AS span FROM events")
-    assert(!sql.toLowerCase.contains("julianday"))
+    // sqlite3 3.40.1: 10.5
+    assert(answer("SELECT julianday(max(ts)) - julianday(min(ts)) FROM " +
+      "(SELECT '2024-03-01 00:00:00' AS ts UNION ALL SELECT '2024-03-11 12:00:00')") == 10.5)
     Tables.t(spark, sfDir, "events").createOrReplaceTempView("events")
     val span = spark.sql(sql).head().getDouble(0)
     assert(span > 0 && span < 60) // events span ~30 days
@@ -96,7 +104,7 @@ class SqlDialectSpec extends SparkSpec {
 
   test("random() becomes a 64-bit BIGINT draw; Spark-valid functions untouched") {
     val t = SqlDialect.translate("SELECT random()")
-    assert(t.contains("rand()") && t.contains("AS BIGINT"), t)
+    assert(answer("SELECT typeof(random())") == "integer") // sqlite3 3.40.1
     assert(SqlDialect.translate(t) == t) // fixpoint: rand never re-matches
     val passthrough = "SELECT ifnull(x, 0), instr(s, 'a'), substr(s, 1, 3) FROM t"
     assert(SqlDialect.translate(passthrough) == passthrough)
@@ -208,11 +216,9 @@ class SqlDialectSpec extends SparkSpec {
     assert(row.getString(4).length == 16 && row.getString(5).length == 16)
     assert(row.getString(4) != row.getString(5), "independent draws")
     assert(row.getString(6).startsWith("3."))
-    // non-literal / oversized N: left verbatim → visible error
-    assert(SqlDialect.translate("SELECT randomblob(x) FROM t")
-      == "SELECT randomblob(x) FROM t")
-    assert(SqlDialect.translate("SELECT randomblob(9999)")
-      == "SELECT randomblob(9999)")
+    // a column or a large N (sqlite3 3.40.1: 3 and 9999)
+    assert(answer("SELECT length(randomblob(x)) FROM (SELECT 3 AS x)") == 3)
+    assert(answer("SELECT length(randomblob(9999))") == 9999)
   }
 
   test("changes()/total_changes() report executed-DML row counts") {
@@ -253,7 +259,9 @@ class SqlDialectSpec extends SparkSpec {
     eventsView()
     val sql = SqlDialect.translate(
       "SELECT strftime('%Y-%m', ts) AS ym, strftime('%j', ts) AS doy FROM events ORDER BY event_id LIMIT 1")
-    assert(!sql.toLowerCase.contains("strftime"))
+    // sqlite3 3.40.1: '2024-03', '075'
+    assert(answer("SELECT strftime('%Y-%m', '2024-03-15 10:20:30')") == "2024-03")
+    assert(answer("SELECT strftime('%j', '2024-03-15 10:20:30')") == "075")
     val row = spark.sql(sql).head()
     assert(row.getString(0).matches("""\d{4}-\d{2}"""))
     assert(row.getString(1).matches("""\d{3}"""))
@@ -274,7 +282,11 @@ class SqlDialectSpec extends SparkSpec {
       """SELECT date(ts, 'start of month') AS som,
                 date(ts, 'start of month', '+7 days') AS plus7,
                 date(ts, 'weekday 1') AS mon, ts FROM events ORDER BY event_id LIMIT 1""")
-    assert(!sql.toLowerCase.contains("'start of"))
+    // sqlite3 3.40.1: '2024-03-01', '2024-03-08', '2024-03-18'
+    assert(answer("SELECT date('2024-03-15 10:20:30', 'start of month')") == "2024-03-01")
+    assert(answer("SELECT date('2024-03-15 10:20:30', 'start of month', '+7 days')")
+      == "2024-03-08")
+    assert(answer("SELECT date('2024-03-15 10:20:30', 'weekday 1')") == "2024-03-18")
     val row = spark.sql(sql).head()
     assert(row.getString(0).endsWith("-01"))
     assert(row.getString(1).endsWith("-08"))
@@ -298,7 +310,7 @@ class SqlDialectSpec extends SparkSpec {
   test("iif nests and executes as if()") {
     val sql = SqlDialect.translate(
       "SELECT iif(1 < 0, 'neg', iif(2 > 1, 'x', 'y')) AS v")
-    assert(!sql.toLowerCase.contains("iif"))
+    assert(answer("SELECT iif(NULL, 'a', 'b')") == "b") // sqlite3 3.40.1
     assert(spark.sql(sql).head().getString(0) == "x")
   }
 
@@ -307,7 +319,9 @@ class SqlDialectSpec extends SparkSpec {
       """SELECT g, group_concat(DISTINCT s) AS cs, group_concat(s, '|') AS ps
          FROM VALUES ('a','x'),('a','y'),('a','x'),('b',NULL) AS t(g, s)
          GROUP BY g ORDER BY g""")
-    assert(!sql.toLowerCase.contains("group_concat"))
+    // sqlite3 3.40.1: 'a,b'
+    assert(answer("SELECT group_concat(DISTINCT g) FROM " +
+      "(SELECT 'a' AS g UNION ALL SELECT 'a' UNION ALL SELECT 'b')") == "a,b")
     val rows = spark.sql(sql).collect()
     assert(rows(0).getString(1) == "x,y")
     assert(rows(0).getString(2) == "x|x|y")
@@ -329,8 +343,8 @@ class SqlDialectSpec extends SparkSpec {
   }
 
   test("unknown modifiers and quoted literals are left verbatim") {
-    val bogus = "SELECT date(ts, 'bogus mod') FROM t"
-    assert(SqlDialect.translate(bogus) == bogus)
+    // sqlite3 3.40.1 answers NULL for an unknown modifier
+    assert(answer("SELECT date(ts, 'bogus mod') FROM (SELECT '2024-01-01' AS ts)") == null)
     val lit = "SELECT 'date(x, ''start of month'')' AS s FROM t"
     assert(SqlDialect.translate(lit) == lit)
   }
@@ -339,8 +353,10 @@ class SqlDialectSpec extends SparkSpec {
     val sql = SqlDialect.translate(
       "SELECT custom_fn(iif(a, 1, 2), date(ts, 'start of day')) FROM t")
     assert(sql.contains("custom_fn("))
-    assert(!sql.toLowerCase.contains("iif"))
-    assert(sql.contains("date_trunc('DAY'"))
+    assert(sql.contains("sqlite_date(ts, 'start of day')"), sql)
+    // sqlite3 3.40.1: '1|2024-03-15'
+    assert(answer("SELECT iif(1, 1, 2) || '|' || " +
+      "date('2024-03-15 10:20', 'start of day')") == "1|2024-03-15")
   }
 
   test("CAST storage classes TEXT/REAL/BLOB/NUMERIC map to Spark types") {
@@ -359,7 +375,7 @@ class SqlDialectSpec extends SparkSpec {
   test("scalar min/max become least/greatest with SQLite NULL semantics") {
     val sql = SqlDialect.translate(
       "SELECT max(3, 7) AS m, min(3, 7, 5) AS n, max(1, NULL) AS mn")
-    assert(sql.contains("greatest") && sql.contains("least"))
+    assert(answer("SELECT max(2.5, 1)").toString == "2.5") // sqlite3 3.40.1
     val row = spark.sql(sql).head()
     assert(row.getInt(0) == 7 && row.getInt(1) == 3)
     assert(row.isNullAt(2)) // SQLite: NULL if any argument is NULL
@@ -383,7 +399,7 @@ class SqlDialectSpec extends SparkSpec {
 
   test("zero-argument date functions mean 'now'; quoted text is opaque") {
     val sql = SqlDialect.translate("SELECT date() AS today, unixepoch() AS now_s")
-    assert(sql.contains("current_timestamp()"))
+    assert(answer("SELECT date() = date('now')") == true) // sqlite3 3.40.1: 1
     val row = spark.sql(sql).head()
     assert(row.getString(0).matches("""\d{4}-\d{2}-\d{2}"""))
     assert(row.getLong(1) > 1500000000L)
@@ -405,7 +421,8 @@ class SqlDialectSpec extends SparkSpec {
   test("total() sums as DOUBLE with 0.0 on empty input") {
     val sql = SqlDialect.translate(
       "SELECT total(x) AS t FROM VALUES (1), (2) AS v(x) WHERE x > 10")
-    assert(!sql.toLowerCase.contains("total("))
+    // sqlite3 3.40.1: 3.0
+    assert(answer("SELECT total(x) FROM (SELECT 1 AS x UNION ALL SELECT 2)") == 3.0)
     assert(spark.sql(sql).head().getDouble(0) == 0.0)
   }
 
@@ -413,7 +430,8 @@ class SqlDialectSpec extends SparkSpec {
     eventsView()
     val sql = SqlDialect.translate(
       "SELECT unixepoch(ts, '+1 days') - unixepoch(ts) AS d FROM events LIMIT 1")
-    assert(!sql.toLowerCase.contains("unixepoch"))
+    // sqlite3 3.40.1: 1704067200
+    assert(answer("SELECT unixepoch('2024-01-01 00:00:00')") == 1704067200L)
     assert(spark.sql(sql).head().getLong(0) == 86400L)
   }
 
@@ -624,7 +642,8 @@ class SqlDialectSpec extends SparkSpec {
       val sql = SqlDialect.translate(
         s"SELECT strftime('%U', ts) AS u, strftime('%W', ts) AS w " +
           s"FROM VALUES (CAST('$d 12:00:00' AS TIMESTAMP)) AS t(ts)")
-      assert(!sql.toLowerCase.contains("strftime"), sql)
+      // the same week numbers from the text time value
+      assert(answer(s"SELECT strftime('%U|%W', '$d 12:00:00')") == s"$u|$w")
       val row = spark.sql(sql).head()
       assert(row.getString(0) == u && row.getString(1) == w,
         s"$d: got (${row.getString(0)}, ${row.getString(1)}), want ($u, $w)")
@@ -639,8 +658,8 @@ class SqlDialectSpec extends SparkSpec {
     assert(row.getString(0) == "2024-W11", row.getString(0))
     assert(row.getString(1) == "week 10 of 2024", row.getString(1))
     // genuinely exotic directives still decline the whole call
-    val exotic = "SELECT strftime('%c', ts) FROM t"
-    assert(SqlDialect.translate(exotic) == exotic)
+    // sqlite3 3.40.1 answers NULL for an unknown directive
+    assert(answer("SELECT strftime('%c', '2024-03-15')") == null)
   }
 
   test("strftime ISO directives %V/%G/%g/%u and C composites %F/%T/%R") {
@@ -654,7 +673,9 @@ class SqlDialectSpec extends SparkSpec {
       val sql = SqlDialect.translate(
         s"SELECT strftime('%V', ts), strftime('%G', ts), strftime('%g', ts), " +
           s"strftime('%u', ts) FROM VALUES (CAST('$d 06:00:00' AS TIMESTAMP)) AS t(ts)")
-      assert(!sql.toLowerCase.contains("strftime"), sql)
+      // the same answer from the text time value
+      assert(answer(s"SELECT strftime('%V|%G|%g|%u', '$d 06:00:00')")
+        == s"$v|$gy|$g2|$u")
       val r = spark.sql(sql).head()
       assert((r.getString(0), r.getString(1), r.getString(2), r.getString(3))
         == ((v, gy, g2, u)), s"$d")
@@ -671,9 +692,7 @@ class SqlDialectSpec extends SparkSpec {
       "SELECT format('%s-%d', 'a', 7) AS f, iif(1 > 2, 'x') AS n, " +
         "iif(2 > 1, 'y') AS y, strftime('%k|%l', ts) AS hrs " +
         "FROM VALUES (CAST('2024-03-15 06:07:08' AS TIMESTAMP)) AS t(ts)")
-    // bare format( must be gone (date_format( from %-directives stays)
-    assert(!sql.matches("(?is).*(?<![_a-z])format\\(.*") &&
-      sql.contains("format_string(") && !sql.toLowerCase.contains("iif"), sql)
+    assert(answer("SELECT format('%d items', 42.7)") == "42 items") // sqlite3 3.40.1
     val r = spark.sql(sql).head()
     assert(r.getString(0) == "a-7")
     assert(r.isNullAt(1) && r.getString(2) == "y")
@@ -724,9 +743,9 @@ class SqlDialectSpec extends SparkSpec {
     assert(one("""json_object('nested', json_array(1,2))""")
       == """{"nested":[1,2]}""")
     assert(one("""json_array(json('[1,2]'), '[3]')""") == """[[1,2],"[3]"]""")
-    // non-literal keys decline → left verbatim → visible analysis error
-    val declined = "SELECT json_object(k, v) FROM t"
-    assert(SqlDialect.translate(declined) == declined)
+    // column labels (sqlite3 3.40.1: '{"a":1}')
+    assert(answer("SELECT json_object(k, v) FROM (SELECT 'a' AS k, 1 AS v)")
+      == """{"a":1}""")
   }
 
   test("JSON -> and ->> operators: paths, bare keys, indexes, chains") {
@@ -786,12 +805,9 @@ class SqlDialectSpec extends SparkSpec {
     assert(r("printf('%Q', NULL)") == "NULL")
     assert(r("printf('%q', NULL)") == "") // Java Formatter would say "null"
     assert(r("""printf('%w', 'a"b')""") == "a\"\"b")
-    // the remaining SQLite-only conversions decline (left verbatim)
-    val q = "SELECT printf('%c', x) FROM t"
-    assert(SqlDialect.translate(q) == q)
-    // arg-count mismatch declines rather than guessing
-    val m = "SELECT printf('%d%d', x) FROM t"
-    assert(SqlDialect.translate(m) == m)
+    // %c and a missing argument (sqlite3 3.40.1: 'x', '50')
+    assert(r("printf('%c', 'xyz')") == "x")
+    assert(r("printf('%d%d', 5)") == "50")
   }
 
   test("glob() function form, concat NULL-skip, string_agg") {
@@ -842,7 +858,8 @@ class SqlDialectSpec extends SparkSpec {
       val sql = SqlDialect.translate(
         s"SELECT strftime('%I%p|%I%P', ts) AS s " +
           s"FROM VALUES (CAST('$t' AS TIMESTAMP)) AS t(ts)")
-      assert(!sql.toLowerCase.contains("strftime"), sql)
+      // the same markers from the text time value
+      assert(answer(s"SELECT strftime('%I%p|%I%P', '$t')") == want, t)
       assert(spark.sql(sql).head().getString(0) == want, t)
     }
   }
@@ -852,22 +869,23 @@ class SqlDialectSpec extends SparkSpec {
       "SELECT datetime(1700000123, 'unixepoch') AS dt, " +
         "date(1700000123, 'unixepoch', '+1 days') AS d1, " +
         "strftime('%Y', 1700000123, 'unixepoch') AS y")
-    assert(!sql.toLowerCase.contains("unixepoch'"), sql)
+    // sqlite3 3.40.1: '1700000123'
+    assert(answer("SELECT strftime('%s', 1700000123, 'unixepoch')") == "1700000123")
     val row = spark.sql(sql).head()
     assert(row.getString(0) == "2023-11-14 22:15:23", row.getString(0))
     assert(row.getString(1) == "2023-11-15")
     assert(row.getString(2) == "2023")
     // 'unixepoch' is only valid as the FIRST modifier (SQLite rule) —
-    // elsewhere it declines the whole call
-    val bad = "SELECT date(x, '+1 days', 'unixepoch') FROM t"
-    assert(SqlDialect.translate(bad) == bad)
+    // elsewhere sqlite3 3.40.1 answers NULL
+    assert(answer(
+      "SELECT date(x, '+1 days', 'unixepoch') FROM (SELECT 1700000000 AS x)") == null)
   }
 
   test("a line comment ending a rebuilt argument does not swallow its `)`") {
     // each site rebuilds an argument list and closes it after the
     // argument text, so the comment has to go with the rebuild
-    assert(SqlDialect.translate("SELECT iif(x, 1, 2 -- two\n) FROM t") ==
-      "SELECT if(x, 1, 2) FROM t")
+    // sqlite3 3.40.1: 2
+    assert(answer("SELECT iif(x, 1, 2 -- two\n) FROM (SELECT 0 AS x)") == 2)
     assert(SqlDialect.translate(
       "SELECT * FROM t WHERE x COLLATE NOCASE IN ('Apple' -- fruit\n)") ==
       "SELECT * FROM t WHERE lower(x) IN (lower('Apple'))")
@@ -889,5 +907,32 @@ class SqlDialectSpec extends SparkSpec {
       val t = SqlDialect.translate(q)
       assert(spark.sql(t).collect().map(_.getLong(0)).toSeq == Seq(1L), t)
     }
+  }
+
+  // ---- one builder per function: answers sqlite3 3.40.1 gives ------
+
+  test("unixepoch and strftime('%s') floor a pre-1970 fraction, as sqlite3 does") {
+    // sqlite3 3.40.1: -1 and '-1' (truncating toward zero gives 0)
+    assert(answer("SELECT unixepoch('1969-12-31 23:59:59.5')") == -1L)
+    assert(answer("SELECT strftime('%s', '1969-12-31 23:59:59.5')") == "-1")
+  }
+
+  test("json_array/json_object render booleans as 1/0, as the JSON editors do") {
+    // sqlite3 3.40.1: '[1,2.5,"a"]', '{"k":0}', '{"n":[1]}'
+    assert(answer("SELECT json_array(1=1, 2.5, 'a')") == "[1,2.5,\"a\"]")
+    assert(answer("SELECT json_object('k', 1>2)") == "{\"k\":0}")
+    assert(answer("SELECT json_object('n', json_array(1=1))") == "{\"n\":[1]}")
+    assert(answer("SELECT json_set('{}', '$.b', 1=1)") == "{\"b\":1}")
+  }
+
+  test("char and unicode beyond ASCII; unicode('') is NULL") {
+    // sqlite3 3.40.1: 'E282AC', 'C4AC', NULL, 8364, '410042', 'EFBFBD'
+    assert(answer("SELECT hex(char(8364))") == "E282AC")
+    assert(answer("SELECT hex(char(300))") == "C4AC")
+    assert(answer("SELECT char(8364)") == "\u20ac")
+    assert(answer("SELECT unicode('')") == null)
+    assert(answer("SELECT unicode('\u20ac')") == 8364)
+    assert(answer("SELECT hex(char(65, NULL, 66))") == "410042")
+    assert(answer("SELECT hex(char(-1))") == "EFBFBD")
   }
 }
